@@ -1,7 +1,52 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.MemoUtil
 
 object Bench {
+  /** One pass: wall seconds of each query that completed, the queries
+    * that threw (never timed: a failure must not read as fast), and
+    * memo family → the queries that looked it up during the pass. */
+  final case class Pass(times: Map[String, Double], failed: Set[String],
+                        families: Map[String, Set[String]])
+
+  /** Run every query once in map order, timing construction plus
+    * `toRdd.count()` and the scratch drop. Family membership is the
+    * difference of the per-family memo lookup counters around each
+    * query, read outside the timed span. */
+  def runPass(spark: SparkSession, sfDir: String,
+              queries: Map[String, (SparkSession, String) => DataFrame]): Pass = {
+    val times = Map.newBuilder[String, Double]
+    val failed = Set.newBuilder[String]
+    val families = scala.collection.mutable.Map.empty[String, Set[String]]
+    MemoUtil.memos.foreach(m => families(m.family) = Set.empty)
+    queries.foreach { case (name, fn) =>
+      val before = MemoUtil.familyLookups
+      val t0 = System.nanoTime()
+      // time toRdd.count(), NOT df.count(): a count() lets Catalyst
+      // re-optimize for counting — left joins with unique keys are
+      // eliminated, unread columns prune whole subtrees, and a bare scan
+      // becomes a metadata-only count-star — so composites measured 40×
+      // cheaper than the work their results require. toRdd executes the
+      // plan exactly as written, materializing every output column.
+      val ok =
+        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
+        catch { case _: Throwable => false }
+      // free the op's intra-query lineage-cut checkpoints NOW: the
+      // result is consumed, nothing references them (memos have their
+      // own lifecycle, reset between passes). Letting ~170 queries'
+      // scratch pile up in the block manager inflated the whole pass
+      // ~2x via heap pressure once the suite grew past ~160 ops.
+      MemoUtil.dropScratch()
+      val dt = (System.nanoTime() - t0) / 1e9
+      if (ok) times += name -> dt else failed += name
+      MemoUtil.familyLookups.foreach { case (f, n) =>
+        if (n > before.getOrElse(f, 0L))
+          families(f) = families.getOrElse(f, Set.empty) + name
+      }
+    }
+    Pass(times.result(), failed.result(), families.toMap)
+  }
+
   /** Foreign java JVMs running beside the bench — anything that is not
     * this process or an ancestor (the sbt shell that forked us is an
     * ancestor and doesn't count). A concurrent sbt test JVM adds a flat
@@ -22,6 +67,14 @@ object Bench {
     } catch { case _: Throwable => -1 } // count unavailable, not fatal
   }
 
+  /** Per-query minimum over the passes, and the failed set: a query
+    * that threw in ANY pass is reported failed and never timed. */
+  def minOf(passes: Seq[Pass]): (Map[String, Double], Set[String]) = {
+    val failed = passes.flatMap(_.failed).toSet
+    val ok = passes.flatMap(_.times.keys).toSet -- failed
+    (ok.map(n => n -> passes.flatMap(_.times.get(n)).min).toMap, failed)
+  }
+
   def main(args: Array[String]): Unit = {
     val contendedAtStart = foreignJvms()
     if (contendedAtStart > 0)
@@ -29,18 +82,8 @@ object Bench {
         s"[bench] WARNING: $contendedAtStart foreign java JVM(s) live — " +
           "timings will read ~+0.16 s/query high; rerun uncontended")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(4)
+    val spark = GraftSession.local(cpus)
     // untimed warmup: JVM/codegen/shuffle machinery boot otherwise lands
     // on whichever query the map iterates first (~5s of noise). The
     // one-time table STAGING (bucketed tables, partitioned dirs) is also
@@ -53,13 +96,6 @@ object Bench {
         try SparkEntry.queries(name)(spark, sfDir).count()
         catch { case _: Throwable => () }
       }
-    // time toRdd.count(), NOT df.count(): a count() lets Catalyst
-    // re-optimize for counting — left joins with unique keys are
-    // eliminated, unread columns prune whole subtrees, and a bare scan
-    // becomes a metadata-only count-star — so composites measured 40×
-    // cheaper than the work their results require. toRdd executes the
-    // plan exactly as written, materializing every output column.
-    //
     // min-of-N repeats: this VM's background load adds a ±2-3 s drift
     // that round-over-round made real regressions indistinguishable from
     // noise (r5: +2.3 s uniformly on unchanged streaming queries). The
@@ -73,22 +109,9 @@ object Bench {
     def elapsed: Double = (System.nanoTime() - benchT0) / 1e9
     def fmt0(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    def onePass(): Map[String, Double] =
-      SparkEntry.queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
-        // free the op's intra-query lineage-cut checkpoints NOW: the
-        // result is consumed, nothing references them (memos have their
-        // own lifecycle, reset between passes). Letting ~170 queries'
-        // scratch pile up in the block manager inflated the whole pass
-        // ~2x via heap pressure once the suite grew past ~160 ops.
-        graft.operators.MemoUtil.dropScratch()
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    def timedPass(): (Map[String, Double], Double) = {
+    def timedPass(): (Pass, Double) = {
       val t0 = System.nanoTime()
-      val r = onePass()
+      val r = runPass(spark, sfDir, SparkEntry.queries)
       (r, (System.nanoTime() - t0) / 1e9)
     }
     val (first, firstWall) = timedPass()
@@ -158,25 +181,15 @@ object Bench {
     }
 
     val all = scala.collection.mutable.ArrayBuffer(first)
-    def resetMemos(): Unit = {
-      graft.operators.LlmScale.resetLloydMemo()
-      graft.operators.Analytics.resetGraphMemo()
-      graft.operators.LlmOps.resetNearMemo()
-      graft.operators.Retrieval.resetFusedMemo()
-      graft.operators.LlmCuration.resetClfMemo()
-      // intra-op lineage-cut checkpoints registered during the pass:
-      // nothing is in flight between passes, so their blocks free now
-      graft.operators.MemoUtil.dropScratch()
-    }
     var nextEstimate = firstWall / 2.0
     // In a degraded window a full warm pass costs ~90% of cold and
     // recovers little (r14: 386 s cold + 358 s pass-2 left no budget for
     // the targeted reruns, which fix the same queries at ~1 s each).
     // When the cold pass reads heavily inflated vs the floors, skip the
     // full-pass repeats and let the rerun stage spend the budget.
-    val coldShared = first.keySet & records.keySet
+    val coldShared = first.times.keySet & records.keySet
     val coldInflated = records.nonEmpty && coldShared.nonEmpty && {
-      val r = coldShared.toSeq.map(first).sum /
+      val r = coldShared.toSeq.map(first.times).sum /
         math.max(1e-9, coldShared.toSeq.map(records).sum)
       r > 1.3
     }
@@ -185,15 +198,14 @@ object Bench {
         "skipping full repeats in favor of targeted reruns")
     while (all.size < passes && elapsed + nextEstimate < budgetSec &&
         !coldInflated) {
-      resetMemos()
+      MemoUtil.resetAll()
       val (r, wall) = timedPass()
       all += r
       nextEstimate = wall
       System.err.println(
         s"[bench] pass ${all.size}: ${fmt0(wall)} s wall, elapsed ${fmt0(elapsed)} s")
     }
-    val minOfPasses: Map[String, Double] =
-      first.keys.map(n => n -> all.map(_(n)).min).toMap
+    val (minOfPasses, failed) = minOf(all.toSeq)
 
     // Locale.ROOT: f"" uses the JVM default locale — a comma decimal
     // separator (e.g. de_DE) would make the JSON line unparseable.
@@ -267,25 +279,19 @@ object Bench {
         System.err.println(s"[bench] wave ${wave + 1}: ${order.size} " +
           "queries read over their 1.5x-floor bound — targeted reruns " +
           "while budget lasts")
-        resetMemos()
+        MemoUtil.resetAll()
         order.foreach { case (name, _) =>
           if (elapsed < budgetSec) {
-            val t0 = System.nanoTime()
             // record ONLY completed reruns (ADVICE r14): a fast-failing
             // query would otherwise log a spuriously small wall that can
             // undercut its floor and corrupt the artifact
-            val completed =
-              try {
-                SparkEntry.queries(name)(spark, sfDir)
-                  .queryExecution.toRdd.count(); true
-              } catch { case _: Throwable => false }
-            graft.operators.MemoUtil.dropScratch()
-            val dt = (System.nanoTime() - t0) / 1e9
-            if (completed)
-              rerun(name) = math.min(rerun.getOrElse(name, Double.MaxValue), dt)
-            else
-              System.err.println(s"[bench] rerun of $name FAILED after " +
-                s"${fmt0(dt)} s — not recorded")
+            runPass(spark, sfDir, Map(name -> SparkEntry.queries(name)))
+              .times.get(name) match {
+              case Some(dt) =>
+                rerun(name) = math.min(rerun.getOrElse(name, Double.MaxValue), dt)
+              case None =>
+                System.err.println(s"[bench] rerun of $name FAILED — not recorded")
+            }
           }
         }
         wave += 1
@@ -298,7 +304,7 @@ object Bench {
     val results: Map[String, Double] =
       minOfPasses.map { case (n, v) => n -> math.min(v, rerun.getOrElse(n, v)) }
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val coldTotal = first.values.sum
+    val coldTotal = first.times.values.sum
     val recordMeta: String = if (records.nonEmpty) {
       val shared = results.keySet & records.keySet
       val recTotal = shared.toSeq.map(records).sum
@@ -327,8 +333,11 @@ object Bench {
     // "cpus" names the core count this run ACTUALLY used (VERDICT r17
     // task 1: the artifact must say what master/local[N] measured it,
     // so the 8-vs-32 scaling comparison is self-describing)
+    val failedNames =
+      failed.toSeq.sorted.map(n => s""""$n"""").mkString("[", ",", "]")
+    val failedJson = s""""n_failed":${failed.size},"failed":$failedNames"""
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"cold_total":${fmt(coldTotal)},"contended":$contended,"cpus":$cpus$recordMeta,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$failedJson,"cold_total":${fmt(coldTotal)},"contended":$contended,"cpus":$cpus$recordMeta,"queries":$qs,"sf":"$sfDir"}"""
 
     val fullQs = sorted.map { case (k, v) => s""""$k":${fmt(v)}""" }
       .mkString("{", ",", "}")
@@ -337,36 +346,13 @@ object Bench {
     // order absorbs the shared cost, so per-query round-over-round
     // comparisons WITHIN a family are attribution-shifted, not
     // regressions. Totals stay honest (each pass re-pays every family
-    // build exactly once; memos reset between passes). Static map,
-    // maintained next to the memos it names.
-    val memoFamilies: Map[String, Seq[String]] = Map(
-      "graph_adjacency" -> Seq("graph_pagerank", "graph_ppr",
-        "graph_triangles", "graph_jaccard", "graph_components",
-        "graph_bfs", "graph_walk", "graph_kcore", "graph_degree_dist",
-        "graph_2hop", "graph_assortativity", "graph_sssp",
-        "graph_label_propagation"),
-      "lloyd_lattice" -> Seq("llm_kmeans", "llm_kmeans_twolevel",
-        "llm_semdedup", "llm_ann_ivf", "llm_ann_ivf_kmeans",
-        "llm_ann_ivf_incremental", "llm_ann_ivf_incremental_recall",
-        "llm_ann_ivf_rebalance", "llm_ann_ivf_rebalance_recall",
-        "llm_ann_ivf_delete", "llm_ann_graph", "llm_ann_graph_sweep",
-        "llm_ann_graph_filtered", "llm_ann_graph_delete",
-        "llm_ann_graph_incremental"),
-      "classifier" -> Seq("llm_quality_classifier", "llm_quality_gate",
-        "llm_quality_calibration", "llm_quality_holdout",
-        "llm_uncertainty_sample"),
-      "lsh_pairs" -> Seq("llm_dedup_near", "llm_dedup_cluster",
-        "llm_dedup_near_recall", "llm_cross_split_leakage"),
-      "fused_retrieval" -> Seq("llm_hybrid_rrf", "llm_rag_pack",
-        "llm_retrieval_metrics"),
-      "persisted_stores" -> Seq("llm_ann_graph_persisted",
-        "llm_ann_graph_persisted_filtered", "llm_ann_index_persisted",
-        "llm_ann_store_asof", "sink_stream_vector", "sink_stream_graph"))
-    val famJson = memoFamilies.toSeq.sortBy(_._1).map { case (f, ms) =>
-      s""""$f":${ms.sorted.map(m => s""""$m"""").mkString("[", ",", "]")}"""
+    // build exactly once; memos reset between passes). Observed in the
+    // cold pass from the memos' own lookup counters.
+    val famJson = first.families.toSeq.sortBy(_._1).map { case (f, ms) =>
+      s""""$f":${ms.toSeq.sorted.map(m => s""""$m"""").mkString("[", ",", "]")}"""
     }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_total":${fmt(coldTotal)},"contended":$contended,"cpus":$cpus$recordMeta,"memo_families":$famJson,"queries":$fullQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$failedJson,"cold_total":${fmt(coldTotal)},"contended":$contended,"cpus":$cpus$recordMeta,"memo_families":$famJson,"queries":$fullQs,"sf":"$sfDir"}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("target/bench_full.json"),
       full.getBytes("UTF-8"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev-only stage-timing probe (not part of the driver contract): times
   * named SparkEntry queries and prints their final adaptive plans, to
@@ -11,18 +11,7 @@ object DevProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus(32))
     // dev-only A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies session
     // confs before probing, to measure a knob without touching Bench
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kvs =>
@@ -363,8 +352,7 @@ object DevProbe {
       val ss = spark.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "2")
       (1 to 3).foreach { i =>
-        operators.LlmScale.resetLloydMemo()
-        operators.MemoUtil.dropScratch()
+        operators.MemoUtil.resetAll()
         val dir = java.nio.file.Files
           .createTempDirectory(s"sgraph_probe_$i").toString
         val t0 = System.nanoTime()
@@ -457,7 +445,7 @@ object DevProbe {
               col("new_id").as("dst")))
         }
         att(operators.LlmScale.annGraphSearchBatch(
-            adjBase, entBase, vecBase, queries, 8))
+            adjBase, entBase, vecBase, queries, 8)._1)
           .write.mode("overwrite").parquet(s"$dir/adjacency_probe")
         val t3 = System.nanoTime()
         operators.MemoUtil.dropScratch()
@@ -477,8 +465,7 @@ object DevProbe {
     // the bench-visible (memo-paying) time goes
     if (names == Seq("cc_parts")) {
       (1 to 3).foreach { i =>
-        operators.Analytics.resetGraphMemo()
-        operators.MemoUtil.dropScratch()
+        operators.MemoUtil.resetAll()
         val t0 = System.nanoTime()
         operators.Analytics.adjacencyProbe(spark, sfDir) // memoizes adj
         val tA = System.nanoTime()

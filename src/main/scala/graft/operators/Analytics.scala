@@ -260,11 +260,11 @@ object Analytics extends OpModule {
     * instead of each paying the corpus pass (r18, guide §1.2/§2.4:
     * graph_sssp duplicated this aggregation verbatim minus the weight
     * column). Bench resets this with the other graph memos. */
-  private val pairMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val pairMemo =
+    Memo.frame[(SparkSession, String)](this, "graph_adjacency")
 
   private def coSupplyWeighted(s: SparkSession, d: String): DataFrame =
-    MemoUtil.memoize(pairMemo, (s, d)) {
+    pairMemo((s, d)) {
       // ONE shuffle to co-locate each order's suppliers, then the ordered
       // pairs explode MAP-SIDE into the partial aggregate — the previous
       // distinct + self-join form shuffled the (order, supplier) set three
@@ -628,20 +628,13 @@ object Analytics extends OpModule {
     * LlmScale.lloyd): the lineitem aggregation is the shared expensive
     * subtree and whichever graph query runs first pays it. Bench resets
     * the memo between repeat passes. */
-  private val adjMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val adjMemo =
+    Memo.frame[(SparkSession, String)](this, "graph_adjacency")
 
   /** Drop the memoized adjacency + components (Bench calls this between
     * passes); the checkpoint blocks are unpersisted, not just
     * dereferenced. */
-  def resetGraphMemo(): Unit = {
-    adjMemo.values.foreach(MemoUtil.dropCheckpoint)
-    adjMemo.clear()
-    ccMemo.values.foreach(MemoUtil.dropCheckpoint)
-    ccMemo.clear()
-    pairMemo.values.foreach(MemoUtil.dropCheckpoint)
-    pairMemo.clear()
-  }
+  def resetGraphMemo(): Unit = MemoUtil.reset(this)
 
   /** Connected components of the co-supply graph — (id, cc) with cc =
     * the component's minimum node id — via the shared large-star/
@@ -655,11 +648,11 @@ object Analytics extends OpModule {
     * re-checkpointed eagerly and the loop's round checkpoints dropped
     * immediately — the memo holds exactly one checkpoint, as before.
     * Memoized beside the adjacency; Bench resets both between passes. */
-  private val ccMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val ccMemo =
+    Memo.frame[(SparkSession, String)](this, "graph_adjacency")
 
   private def coSupplyComponents(s: SparkSession, d: String): DataFrame =
-    MemoUtil.memoize(ccMemo, (s, d)) {
+    ccMemo((s, d)) {
       val adj = coSupplyAdjacency(s, d)
       // each undirected edge once, canonical u < v (the adjacency is
       // symmetric, so keeping nbr > id loses nothing — and every node
@@ -713,7 +706,7 @@ object Analytics extends OpModule {
     coSupplyAdjacency(s, d)
 
   private def coSupplyAdjacency(s: SparkSession, d: String): DataFrame =
-    MemoUtil.memoize(adjMemo, (s, d))(
+    adjMemo((s, d))(
       coSupplyEdges(s, d)
         .groupBy(col("src").as("id"))
         .agg(sort_array(collect_list(col("dst").cast("long"))).as("nbrs"),

@@ -182,16 +182,11 @@ object LlmCuration extends OpModule {
     * feature table also carries the masked-Knuth split bucket so
     * llm_quality_holdout derives its train/val sides from the same
     * checkpoint without a rebuild. */
-  private val clfFeatsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private val clfWtMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  def resetClfMemo(): Unit = {
-    clfFeatsMemo.values.foreach(MemoUtil.dropCheckpoint)
-    clfFeatsMemo.clear()
-    clfWtMemo.values.foreach(MemoUtil.dropCheckpoint)
-    clfWtMemo.clear()
-  }
+  private val clfFeatsMemo =
+    Memo.frame[(SparkSession, String)](this, "classifier")
+  private val clfWtMemo =
+    Memo.frame[(SparkSession, String)](this, "classifier")
+  def resetClfMemo(): Unit = MemoUtil.reset(this)
 
   /** The shared sparse feature table (doc_id, fid, cnt, y, b): hashed
     * bag-of-words dims + bias, teacher label y, split bucket b — one
@@ -260,11 +255,11 @@ object LlmCuration extends OpModule {
     * unchanged (every pass still trains each of the two weight sets
     * exactly once). */
   private def clfFeats(s: SparkSession, d: String): DataFrame =
-    MemoUtil.memoize(clfFeatsMemo, (s, d))(clfFeatsBuild(s, d))
+    clfFeatsMemo((s, d))(clfFeatsBuild(s, d))
 
   private def clfTrained(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val feats = clfFeats(s, d)
-    (feats, MemoUtil.memoize(clfWtMemo, (s, d))(perceptron(feats, ClfT)))
+    (feats, clfWtMemo((s, d))(perceptron(feats, ClfT)))
   }
 
   def qualityClassifier(s: SparkSession, d: String): DataFrame = {

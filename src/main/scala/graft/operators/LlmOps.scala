@@ -98,17 +98,13 @@ object LlmOps extends OpModule {
     * pair table is checkpointed, the staged-computation pattern shared
     * with LlmScale.lloyd and Analytics.coSupplyAdjacency. Bench resets
     * the memo between repeat passes. */
-  private val nearMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val nearMemo = Memo.frame[(SparkSession, String)](this, "lsh_pairs")
 
   /** Drop the memoized pair table (Bench calls this between passes). */
-  def resetNearMemo(): Unit = {
-    nearMemo.values.foreach(MemoUtil.dropCheckpoint)
-    nearMemo.clear()
-  }
+  def resetNearMemo(): Unit = MemoUtil.reset(this)
 
   def dedupNear(s: SparkSession, d: String): DataFrame =
-    MemoUtil.memoize(nearMemo, (s, d))(dedupNearBuild(s, d).localCheckpoint())
+    nearMemo((s, d))(dedupNearBuild(s, d).localCheckpoint())
 
   /** Empirical MinHash/LSH RECALL evaluation — the text-side twin of
     * llm_ann_recall: before trusting a banding configuration at 100 TB,

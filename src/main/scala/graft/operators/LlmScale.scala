@@ -277,67 +277,22 @@ object LlmScale extends OpModule {
     * share the identical assignment, so whichever runs first pays the
     * iteration cost and the other reads the checkpointed result — the
     * staged-fixture pattern (cf. the bucketed-join tables), applied to a
-    * derived computation. */
-  private val lloydMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]
+    * derived computation. `dims` is a plan over qv, not a checkpoint. */
+  private[graft] val lloydMemo =
+    new Memo[(SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)](
+      this, "lloyd_lattice")({ case (qv, _, a2, c2) => Seq(qv, a2, c2) })
 
-  /** Drop memoized Lloyd state (Bench calls this between repeat passes so
-    * every timed pass re-pays the shared computation exactly once). The
-    * checkpointed blocks are unpersisted explicitly — clearing the map
-    * alone would strand them in the block manager across passes. */
-  def resetLloydMemo(): Unit = {
-    lloydMemo.values.foreach { case (qv, _, a2, c2) =>
-      MemoUtil.dropCheckpoint(qv); MemoUtil.dropCheckpoint(a2)
-      MemoUtil.dropCheckpoint(c2)
-    }
-    lloydMemo.clear()
-    pqMemo.values.foreach(MemoUtil.dropCheckpoint)
-    pqMemo.clear()
-    pqResidualMemo.values.foreach(MemoUtil.dropCheckpoint)
-    pqResidualMemo.clear()
-    exactTop3Memo.values.foreach(MemoUtil.dropCheckpoint)
-    exactTop3Memo.clear()
-    graphMemo.values.foreach { case (adj, entries, _) =>
-      MemoUtil.dropCheckpoint(adj); MemoUtil.dropCheckpoint(entries)
-    }
-    graphMemo.clear()
-    beam8Memo.values.foreach { case (beam, visited) =>
-      MemoUtil.dropCheckpoint(beam); MemoUtil.dropCheckpoint(visited)
-    }
-    beam8Memo.clear()
-    ivfIndexMemo.values.foreach { case (cent, asg) =>
-      MemoUtil.dropCheckpoint(cent); MemoUtil.dropCheckpoint(asg)
-    }
-    ivfIndexMemo.clear()
-    ivfSplitMemo.values.foreach { case (_, _, seeds, routed) =>
-      MemoUtil.dropCheckpoint(seeds); MemoUtil.dropCheckpoint(routed)
-    }
-    ivfSplitMemo.clear()
-    deleteWalkMemo.values.foreach(MemoUtil.dropCheckpoint)
-    deleteWalkMemo.clear()
-    storeHeadMemo.values.foreach { case (a, e, v, b, vis) =>
-      Seq(a, e, v, b, vis).foreach(MemoUtil.dropCheckpoint)
-    }
-    storeHeadMemo.clear()
-    storeServeMemo.values.foreach(MemoUtil.dropCheckpoint)
-    storeServeMemo.clear()
-    storeFilteredMemo.values.foreach { case (a, e) =>
-      MemoUtil.dropCheckpoint(a); MemoUtil.dropCheckpoint(e)
-    }
-    storeFilteredMemo.clear()
-    ivfServeMemo.values.foreach(MemoUtil.dropCheckpoint)
-    ivfServeMemo.clear()
-    streamBaseMemo.values.foreach { case (a, _, v) =>
-      MemoUtil.dropCheckpoint(a); MemoUtil.dropCheckpoint(v)
-    }
-    streamBaseMemo.clear()
-  }
+  /** Drop every memo this module declares (Bench calls this between
+    * repeat passes so every timed pass re-pays the shared computation
+    * exactly once); each memo unpersists the checkpoints it owns. */
+  def resetLloydMemo(): Unit = MemoUtil.reset(this)
 
   /** Frozen v1 base frames of a STREAMED graph store, checkpointed once
     * per (session, store dir) instead of once per micro-batch (r17
     * review): the base is immutable across the stream by construction. */
-  private val streamBaseMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
+  private val streamBaseMemo =
+    new Memo[(SparkSession, String), (DataFrame, DataFrame, DataFrame)](
+      this, "persisted_stores")({ case (a, _, v) => Seq(a, v) })
 
   /** Drop every store memo keyed on `dir` — sink_stream_graph's store is
     * fresh per invocation, so its walk/serve/base memo entries can never
@@ -345,27 +300,9 @@ object LlmScale extends OpModule {
     * registers this via MemoUtil.onDrain so the blocks free at the same
     * safe point as per-query scratch. */
   private[graft] def releaseFreshStoreMemos(dir: String): Unit = {
-    storeHeadMemo.filterInPlace { case ((_, d, _), v) =>
-      val keep = d != dir
-      if (!keep) { val (a, e, vv, b, vis) = v
-        Seq(a, e, vv, b, vis).foreach(MemoUtil.dropCheckpoint) }
-      keep
-    }
-    storeServeMemo.filterInPlace { case ((_, d, _), v) =>
-      val keep = d != dir
-      if (!keep) MemoUtil.dropCheckpoint(v)
-      keep
-    }
-    storeFilteredMemo.filterInPlace { case ((_, d, _), v) =>
-      val keep = d != dir
-      if (!keep) { MemoUtil.dropCheckpoint(v._1); MemoUtil.dropCheckpoint(v._2) }
-      keep
-    }
-    streamBaseMemo.filterInPlace { case ((_, d), v) =>
-      val keep = d != dir
-      if (!keep) { MemoUtil.dropCheckpoint(v._1); MemoUtil.dropCheckpoint(v._3) }
-      keep
-    }
+    Seq(storeHeadMemo, storeServeMemo, storeFilteredMemo)
+      .foreach(_.releaseWhere(_._2 == dir))
+    streamBaseMemo.releaseWhere(_._2 == dir)
   }
 
   /** Head-resolved graph-store frames + the width-8 walk over them,
@@ -377,80 +314,80 @@ object LlmScale extends OpModule {
     * re-reading; a sweep changes the string and misses the memo by
     * construction. Values are memo-lifecycle checkpoints, freed by
     * resetLloydMemo like every other family memo. */
-  private val storeHeadMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String),
-      (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)]
+  private val storeHeadMemo = new Memo[(SparkSession, String, String),
+      (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)](
+      this, "persisted_stores")({ case (a, e, v, b, vis) => Seq(a, e, v, b, vis) })
 
   /** Memoized unfiltered disk-serve RESULT per (session, dir, head). */
-  private val storeServeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  private val storeServeMemo =
+    Memo.frame[(SparkSession, String, String)](this, "persisted_stores")
 
   /** Memoized filtered-serve parts (aware preds, filtered truth) per
     * (session, dir, head). */
-  private val storeFilteredMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (DataFrame, DataFrame)]
+  private val storeFilteredMemo =
+    new Memo[(SparkSession, String, String), (DataFrame, DataFrame)](
+      this, "persisted_stores")({ case (a, e) => Seq(a, e) })
 
   /** Memoized IVF-store serve result per (session, dir, head) — r17:
     * llm_ann_store_asof and llm_ann_index_persisted serve overlapping
     * logged heads (asof's v3/v4 ARE persisted's pre/post phases), each
     * previously recomputing the full probe + truth chain. */
-  private val ivfServeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  private val ivfServeMemo =
+    Memo.frame[(SparkSession, String, String)](this, "persisted_stores")
 
   /** Memoized split machinery (grown corpus/members, seeds, routing) —
     * shared by llm_ann_ivf_rebalance and its _recall row so the
     * 2-means seeding runs once per (session, sf-dir). */
-  private val ivfSplitMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (DataFrame, DataFrame, DataFrame, DataFrame)]
+  private val ivfSplitMemo =
+    new Memo[(SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)](
+      this, "lloyd_lattice")({ case (_, _, seeds, routed) => Seq(seeds, routed) })
 
   /** Memoized navigable-graph index (adjacency, entry sample, lattice) —
     * the shared expensive subtree of llm_ann_graph, llm_ann_graph_sweep
     * and llm_ann_graph_filtered (the lloydMemo pattern): the graph is
     * built once per (session, sf-dir); whichever op runs first pays it
     * (ADVICE r13: the pair owned the registry's two largest floors and
-    * duplicated ~4 s of identical construction). */
-  private val graphMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
+    * duplicated ~4 s of identical construction). The third frame is
+    * lloydMemo's qv: borrowed, so this memo never frees it. */
+  private[graft] val graphMemo =
+    new Memo[(SparkSession, String), (DataFrame, DataFrame, DataFrame)](
+      this, "lloyd_lattice")({ case (adj, entries, _) => Seq(adj, entries) })
 
   /** Memoized width-8 walk: (final beam, visited scored set) — the
     * sweep's beam-8 row and llm_ann_graph_filtered reuse llm_ann_graph's
     * walk instead of re-running the same 6 hops. */
-  private val beam8Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val beam8Memo =
+    new Memo[(SparkSession, String), (DataFrame, DataFrame)](
+      this, "lloyd_lattice")({ case (beam, visited) => Seq(beam, visited) })
 
   /** Memoized RETIRED-graph walk, keyed on the tombstone slice (VERDICT
     * r15 task 7): llm_ann_graph_delete's fresh build + width-8 walk over
     * the tombstone-filtered adjacency is paid once per (session, dir,
     * slice) instead of per call. */
-  private val deleteWalkMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  /** Build-count telemetry: how many times the Lloyd pipeline actually
-    * ran in this JVM — the zero-rebuild assert for disk-served indexes
-    * (a store serve that re-trains would tick this). */
-  private[graft] val lloydBuilds = new java.util.concurrent.atomic.AtomicLong
+  private val deleteWalkMemo =
+    Memo.frame[(SparkSession, String, String)](this, "lloyd_lattice")
 
   /** Memoized persisted IVF index (centroids, assignments) — the
     * "trained artifact" llm_ann_ivf_incremental ingests a delta against;
     * built from the shared Lloyd lattice, checkpointed on the memo
     * lifecycle so the incremental op's index-side work never re-runs. */
-  private val ivfIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val ivfIndexMemo =
+    new Memo[(SparkSession, String), (DataFrame, DataFrame)](
+      this, "lloyd_lattice")({ case (cent, asg) => Seq(cent, asg) })
 
   /** Memoized PQ ADC top-3 (qid, rank, cand_id, adist) — the shared
     * expensive subtree of llm_ann_pq and llm_ann_pq_recall (the
     * staged-fixture pattern, cf. lloyd): whichever runs first pays the
     * codebook train + encode + ADC ranking once per (session, sf-dir);
     * Bench resets this with the Lloyd memo between timing passes. */
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val pqMemo =
+    Memo.frame[(SparkSession, String)](this, "lloyd_lattice")
 
   /** Memoized residual-IVFPQ ADC top-3 — the shared expensive subtree
     * of llm_ann_pq_residual and llm_ann_pq_residual_recall (the pqMemo
     * pattern applied to the IVFADC construction). */
-  private val pqResidualMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val pqResidualMemo =
+    Memo.frame[(SparkSession, String)](this, "lloyd_lattice")
 
   /** Memoized EXACT brute top-3 on the 10⁶ quantized lattice (qid <
     * 10, squared distance, (dist, cand_id) total order) — the ground
@@ -458,11 +395,11 @@ object LlmScale extends OpModule {
     * llm_ann_pq_residual_recall rank the same original-space lattice),
     * so the 10-query × corpus brute pass runs once per (session,
     * sf-dir) instead of once per eval. */
-  private val exactTop3Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val exactTop3Memo =
+    Memo.frame[(SparkSession, String)](this, "lloyd_lattice")
 
   private def exactQTop3(s: SparkSession, d: String): DataFrame =
-    MemoUtil.memoize(exactTop3Memo, (s, d)) {
+    exactTop3Memo((s, d)) {
       graft.GraftExtensions.register(s)
       val qvec = Tables.embeddings(s, d)
         .select(col("vec_id"), expr(
@@ -491,11 +428,10 @@ object LlmScale extends OpModule {
     * across the family, each re-paying a dims⋈a2 corpus pass). */
   private[graft] def lloyd(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    MemoUtil.memoize(lloydMemo, (s, d))(lloydBuild(s, d))
+    lloydMemo((s, d))(lloydBuild(s, d))
 
   private def lloydBuild(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    lloydBuilds.incrementAndGet()
     graft.GraftExtensions.register(s)
     val emb = Tables.embeddings(s, d)
     val k = kFor(emb.count())
@@ -806,7 +742,7 @@ object LlmScale extends OpModule {
   private def ivfIndex(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val (_, _, a2, c2) = lloyd(s, d)
-    MemoUtil.memoize(ivfIndexMemo, (s, d))(
+    ivfIndexMemo((s, d))(
       (centroidArrays(c2).select(col("cid").as("cluster"), col("cv"))
         .localCheckpoint(), a2))
   }
@@ -886,7 +822,7 @@ object LlmScale extends OpModule {
     * post-split serving probe read them). */
   private def ivfSplit(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    MemoUtil.memoize(ivfSplitMemo, (s, d))(ivfSplitBuild(s, d))
+    ivfSplitMemo((s, d))(ivfSplitBuild(s, d))
 
   private def ivfSplitBuild(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -1339,7 +1275,7 @@ object LlmScale extends OpModule {
     * used to provide. */
   private def ivfStoreServeHead(s: SparkSession, dir: String,
       headRaw: String): DataFrame =
-      MemoUtil.memoize(ivfServeMemo, (s, dir, headRaw.trim)) {
+      ivfServeMemo((s, dir, headRaw.trim)) {
     ivfStoreServeHeadBuild(s, dir, ivfHeadParse(headRaw))
       .localCheckpoint()
   }
@@ -2763,7 +2699,7 @@ object LlmScale extends OpModule {
     * construction. Bench resets the memo with the Lloyd memo between
     * timing passes. */
   private def pqTop3(s: SparkSession, d: String): DataFrame =
-    MemoUtil.memoize(pqMemo, (s, d)) {
+    pqMemo((s, d)) {
       // quantized vector form — single reader (the subvector derivation;
       // the exact re-rank lives in annPq now), so no lineage cut needed
       pqTop3From(Tables.embeddings(s, d)
@@ -3057,7 +2993,7 @@ object LlmScale extends OpModule {
     * drop between the three ops that share them. */
   private def annGraphBeam8(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    MemoUtil.memoize(beam8Memo, (s, d)) {
+    beam8Memo((s, d)) {
       val (adj, entries, qv) = annGraphAdjacency(s, d)
       val (beam, visited) = annGraphSearchFull(adj, entries, qv, 8)
       (beam.localCheckpoint(), visited.localCheckpoint())
@@ -3072,70 +3008,14 @@ object LlmScale extends OpModule {
       .where(col("c") <= 3).select(col("qid"), col("node").as("cand_id"))
   }
 
-  /** The 6-hop beam search over a prebuilt graph, width-parameterized
-    * (shared by llm_ann_graph at width 8 and the sweep): monotone —
-    * each hop keeps the best `width` of beam ∪ expansion, so the final
-    * beam dominates the entry sample. Returns (final beam, VISITED) —
-    * visited is every (qid, node, dist) the walk ever scored (entry
-    * sample + all hop expansions, ≤ 16 + 6·width·22 rows per query),
-    * the set the filter-aware variant re-ranks: a filtered result can
-    * draw on everything the walk evaluated, not just the surviving
-    * beam, without widening the frontier. */
+  /** The beam walk over the 10 eval vectors (qid < 10), shared by
+    * llm_ann_graph at width 8 and the sweep: annGraphSearchBatch with
+    * the eval queries as its query side. */
   private def annGraphSearchFull(adj: DataFrame, entries: DataFrame,
                                  qv: DataFrame, width: Int)
-      : (DataFrame, DataFrame) = {
-    val q = qv.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    // FUSED hop mechanics, the annGraphSearchBatch shape (r18, guide
-    // §2.4): the beam rides between hops as one row per query holding a
-    // sorted (dist, node) struct array — the per-hop `union + distinct()
-    // + row_number window` pair of shuffles collapses into a single
-    // groupBy(qid) whose sort_array → array_distinct → slice reproduces
-    // the window's (dist ASC, node ASC) top-`width` exactly, and qq
-    // rides the beam row so the per-hop broadcast(q) join disappears.
-    // Intra-loop lineage cuts stay LAZY (r17, guide §1.2/§2.4): each
-    // hop's beam and expansion feed two consumers, the consumer's single
-    // action materializes the whole chain as one job.
-    val topW = slice(array_distinct(sort_array(
-      collect_list(struct(col("dist"), col("node"))))), 1, width)
-    def scored(cands: DataFrame): DataFrame =
-      cands.join(qv, cands("node") === qv("vec_id"))
-        .select(col("qid"), col("qq"), col("node"),
-          expr("squared_distance(qv, qq)").as("dist"))
-    val entryScored = MemoUtil.scratch(scored(
-        q.crossJoin(broadcast(entries.select(col("vec_id").as("node"))))
-          .where(col("node") =!= col("qid"))).localCheckpoint(false))
-    var visited = entryScored.select(col("qid"), col("node"), col("dist"))
-    var beamA = MemoUtil.scratch(entryScored
-      .groupBy(col("qid"))
-      .agg(first(col("qq")).as("qq"), topW.as("beam"))
-      .localCheckpoint(false))
-    for (_ <- 1 to 6) {
-      // no per-hop distinct on the expansion (r17): duplicate (qid, node)
-      // candidates are bounded by beam·degree, cost one extra scored row
-      // each, and both downstream consumers re-dedup (the beam merge via
-      // array_distinct, visited via its final distinct)
-      val expanded = beamA
-        .select(col("qid"), col("qq"), explode(col("beam.node")).as("node"))
-        .join(adj, col("node") === col("src"))
-        .select(col("qid"), col("qq"), col("dst").as("node"))
-        .where(col("node") =!= col("qid"))
-      val sc = MemoUtil.scratch(scored(expanded).localCheckpoint(false))
-      visited = visited.unionByName(
-        sc.select(col("qid"), col("node"), col("dist")))
-      val carried = beamA
-        .select(col("qid"), col("qq"), explode(col("beam")).as("b"))
-        .select(col("qid"), col("qq"), col("b.node").as("node"),
-          col("b.dist").as("dist"))
-      beamA = MemoUtil.scratch(carried.unionByName(sc)
-        .groupBy(col("qid"))
-        .agg(first(col("qq")).as("qq"), topW.as("beam"))
-        .localCheckpoint(false))
-    }
-    val beam = beamA.select(col("qid"), explode(col("beam")).as("b"))
-      .select(col("qid"), col("b.node").as("node"), col("b.dist").as("dist"))
-    (beam, visited.distinct())
-  }
+      : (DataFrame, DataFrame) =
+    annGraphSearchBatch(adj, entries, qv, qv.where(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("qv").as("qq")), width)
 
   // ── llm_ann_graph_incremental ─────────────────────────────────────────
 
@@ -3169,7 +3049,7 @@ object LlmScale extends OpModule {
     graft.GraftExtensions.register(s)
     val (adj, entries, qv) = annGraphAdjacency(s, d)
     val delta = graphDelta(qv)
-    val beam = annGraphSearchBatch(adj, entries, qv, delta, 8)
+    val (beam, _) = annGraphSearchBatch(adj, entries, qv, delta, 8)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("dist").asc, col("node").asc)
     beam.withColumn("rank", row_number().over(w))
@@ -3207,7 +3087,7 @@ object LlmScale extends OpModule {
     // changed — but it IS deterministic per (session, dir, slice), so
     // later delete-family consumers (and a replayed bench pass) pay
     // the fresh build + walk once, not per call
-    MemoUtil.memoize(deleteWalkMemo, (s, d, "mod23eq5")) {
+    deleteWalkMemo((s, d, "mod23eq5")) {
       graft.GraftExtensions.register(s)
       val (adj, entries, qv) = annGraphAdjacency(s, d)
       val adjd = adj.where(col("src") % 23 =!= 5 && col("dst") % 23 =!= 5)
@@ -3359,7 +3239,7 @@ object LlmScale extends OpModule {
     // a head flip between the serve-memo read and a second read here
     // would cache a new-head walk under the old head's key), mirroring
     // ivfStoreServeHead's single-read shape
-    MemoUtil.memoize(storeHeadMemo, (s, dir, raw)) {
+    storeHeadMemo((s, dir, raw)) {
       val (adjs, ents, vecDirs, dels) = graphHeadParse(raw)
       val adj0 = graphStoreRead(s, dir, adjs)
       val ent0 = graphStoreRead(s, dir, ents)
@@ -3431,7 +3311,7 @@ object LlmScale extends OpModule {
     // against the sidecar'd head, exactly as the previous per-call
     // localCheckpoint guaranteed
     val rawHead = graphStoreHeadRaw(dir)
-    MemoUtil.memoize(storeServeMemo, (s, dir, rawHead)) {
+    storeServeMemo((s, dir, rawHead)) {
       val (adj, _, vecsAll, beam, _) = graphStoreWalk(s, dir, rawHead)
       val pred = beamTop3(beam)
       // graph-defined liveness: a vector is live iff the head's edge set
@@ -3489,7 +3369,7 @@ object LlmScale extends OpModule {
     // head served by BOTH the filtered and unfiltered paths pays one
     // walk, not two
     val rawHead = graphStoreHeadRaw(dir)
-    MemoUtil.memoize(storeFilteredMemo, (s, dir, rawHead)) {
+    storeFilteredMemo((s, dir, rawHead)) {
       val (adj, _, vecsAll, _, visited) = graphStoreWalk(s, dir, rawHead)
       val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
       val wc = Window.partitionBy(col("qid"))
@@ -3643,7 +3523,7 @@ object LlmScale extends OpModule {
       // otherwise re-scanned the vector/adjacency parquet on every
       // hop's score join, once per micro-batch
       val (adjBase, entBase, vecBase) =
-        MemoUtil.memoize(streamBaseMemo, (s, dir)) {
+        streamBaseMemo((s, dir)) {
           (s.read.parquet(s"$dir/adjacency").localCheckpoint(),
             s.read.parquet(s"$dir/entries"),
             s.read.parquet(s"$dir/vectors").localCheckpoint())
@@ -3655,7 +3535,7 @@ object LlmScale extends OpModule {
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/$vGen")
       val queries = batch.select(col("new_id").as("qid"),
         col("dv").as("qq"))
-      val beam = annGraphSearchBatch(adjBase, entBase, vecBase, queries, 8)
+      val (beam, _) = annGraphSearchBatch(adjBase, entBase, vecBase, queries, 8)
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("dist").asc, col("node").asc)
       val att = beam.withColumn("rank", row_number().over(w))
@@ -3717,16 +3597,23 @@ object LlmScale extends OpModule {
         |FROM ex3 e LEFT JOIN pred p USING (qid, cand_id)
         |GROUP BY e.qid""".stripMargin
 
-  /** The width-`width` beam walk for an ARBITRARY query set (qid, qq)
-    * — the shard-sized twin of annGraphSearchFull (whose query side is
-    * the 10 eval vectors): the entry cross carries the ≤16-row entry
-    * sample as its broadcast side (the query side SCALES with the
-    * shard and streams), and the per-hop score joins are plain
-    * equi-joins with no broadcast pin, so Spark shuffles them once the
-    * shard outgrows a broadcast. Returns the final beam. */
+  /** The 6-hop, width-`width` beam walk for an ARBITRARY query set
+    * (qid, qq) over a prebuilt graph: monotone — each hop keeps the best
+    * `width` of beam ∪ expansion, so the final beam dominates the entry
+    * sample. The entry cross carries the ≤16-row entry sample as its
+    * broadcast side (the query side SCALES with the shard and streams),
+    * and the per-hop score joins are plain equi-joins with no broadcast
+    * pin, so Spark shuffles them once the shard outgrows a broadcast.
+    * Returns (final beam, VISITED) — visited is every (qid, node, dist)
+    * the walk ever scored (entry sample + all hop expansions, ≤ 16 +
+    * 6·width·22 rows per query), the set the filter-aware variant
+    * re-ranks: a filtered result can draw on everything the walk
+    * evaluated, not just the surviving beam, without widening the
+    * frontier. Callers that need only the beam never run visited's
+    * union. */
   private[graft] def annGraphSearchBatch(adj: DataFrame, entries: DataFrame,
                                          qv: DataFrame, queries: DataFrame,
-                                         width: Int): DataFrame = {
+                                         width: Int): (DataFrame, DataFrame) = {
     // FUSED hop mechanics (r18, guide §2.4): the beam rides between hops
     // as ONE ROW PER QUERY holding a sorted (dist, node) struct array —
     // the per-hop `union + distinct() + row_number window` pair of
@@ -3735,43 +3622,52 @@ object LlmScale extends OpModule {
     // (dist ASC, node ASC) top-`width` EXACTLY (struct sort is
     // lexicographic by field order; equal (dist, node) pairs are the
     // only duplicates possible since dist is a function of (qid, node)).
-    // The query vector qq rides the beam row, so the per-hop score join
-    // against `queries` disappears too. Per hop: explode, the adj
-    // equi-join, the qv score equi-join, ONE aggregate — no sorts, no
-    // distinct exchange, and the per-query state is width-bounded at
-    // any corpus size. Lazy checkpoints stay: each hop's beam feeds two
-    // consumers (expansion + merge-back) and the final action
-    // materializes the chain as one job (the r17 walk-mechanics cut).
+    // The query vector qq rides the beam row (max over one repeated
+    // value — first() is nondeterministic by contract), so the per-hop
+    // score join against `queries` disappears too. Per hop: explode,
+    // the adj equi-join, the qv score equi-join, ONE aggregate — no
+    // sorts, no distinct exchange, and the per-query state is
+    // width-bounded at any corpus size. Intra-loop lineage cuts stay
+    // LAZY (r17, guide §1.2/§2.4): each hop's beam and expansion feed
+    // two consumers, the consumer's single action materializes the
+    // whole chain as one job.
     val topW = slice(array_distinct(sort_array(
       collect_list(struct(col("dist"), col("node"))))), 1, width)
     def scored(cands: DataFrame): DataFrame =
       cands.join(qv, cands("node") === qv("vec_id"))
         .select(col("qid"), col("qq"), col("node"),
           expr("squared_distance(qv, qq)").as("dist"))
-    val entry = scored(queries
-        .crossJoin(broadcast(entries.select(col("vec_id").as("node"))))
-        .where(col("node") =!= col("qid")))
-    var beamA = MemoUtil.scratch(entry
+    def merged(cands: DataFrame): DataFrame = MemoUtil.scratch(cands
       .groupBy(col("qid"))
-      .agg(first(col("qq")).as("qq"), topW.as("beam"))
+      .agg(max(col("qq")).as("qq"), topW.as("beam"))
       .localCheckpoint(false))
+    val entryScored = MemoUtil.scratch(scored(queries
+        .crossJoin(broadcast(entries.select(col("vec_id").as("node"))))
+        .where(col("node") =!= col("qid"))).localCheckpoint(false))
+    var visited = entryScored.select(col("qid"), col("node"), col("dist"))
+    var beamA = merged(entryScored)
     for (_ <- 1 to 6) {
+      // no per-hop distinct on the expansion (r17): duplicate (qid, node)
+      // candidates are bounded by beam·degree, cost one extra scored row
+      // each, and both downstream consumers re-dedup (the beam merge via
+      // array_distinct, visited via its final distinct)
       val expanded = beamA
         .select(col("qid"), col("qq"), explode(col("beam.node")).as("node"))
         .join(adj, col("node") === col("src"))
         .select(col("qid"), col("qq"), col("dst").as("node"))
         .where(col("node") =!= col("qid"))
+      val sc = MemoUtil.scratch(scored(expanded).localCheckpoint(false))
+      visited = visited.unionByName(
+        sc.select(col("qid"), col("node"), col("dist")))
       val carried = beamA
         .select(col("qid"), col("qq"), explode(col("beam")).as("b"))
         .select(col("qid"), col("qq"), col("b.node").as("node"),
           col("b.dist").as("dist"))
-      beamA = MemoUtil.scratch(carried.unionByName(scored(expanded))
-        .groupBy(col("qid"))
-        .agg(first(col("qq")).as("qq"), topW.as("beam"))
-        .localCheckpoint(false))
+      beamA = merged(carried.unionByName(sc))
     }
-    beamA.select(col("qid"), explode(col("beam")).as("b"))
+    val beam = beamA.select(col("qid"), explode(col("beam")).as("b"))
       .select(col("qid"), col("b.node").as("node"), col("b.dist").as("dist"))
+    (beam, visited.distinct())
   }
 
   /** The (adjacency, entry sample, quantized lattice) behind
@@ -3780,7 +3676,7 @@ object LlmScale extends OpModule {
     * itself. Checkpointed scratch (multi-reader: 6 beam hops + spec). */
   private[graft] def annGraphAdjacency(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) =
-    MemoUtil.memoize(graphMemo, (s, d))(annGraphAdjacencyBuild(s, d))
+    graphMemo((s, d))(annGraphAdjacencyBuild(s, d))
 
   private def annGraphAdjacencyBuild(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -3999,7 +3895,7 @@ object LlmScale extends OpModule {
   }
 
   private def pqResidualTop3(s: SparkSession, d: String): DataFrame =
-    MemoUtil.memoize(pqResidualMemo, (s, d)) {
+    pqResidualMemo((s, d)) {
     graft.GraftExtensions.register(s)
     val M = 8
     val base = pqResidualBase(s, d)

@@ -332,16 +332,13 @@ object Retrieval extends OpModule {
     * (llm_hybrid_rrf returns it; llm_rag_pack packs it) — built once
     * per (session, sf-dir), 50 rows checkpointed; Bench resets the memo
     * between passes (the dedupNear staged-computation pattern). */
-  private val fusedMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val fusedMemo =
+    Memo.frame[(SparkSession, String)](this, "fused_retrieval")
 
-  def resetFusedMemo(): Unit = {
-    fusedMemo.values.foreach(MemoUtil.dropCheckpoint)
-    fusedMemo.clear()
-  }
+  def resetFusedMemo(): Unit = MemoUtil.reset(this)
 
   def hybridRrf(s: SparkSession, d: String): DataFrame =
-    MemoUtil.memoize(fusedMemo, (s, d))(hybridBuild(s, d).localCheckpoint())
+    fusedMemo((s, d))(hybridBuild(s, d).localCheckpoint())
 
   private def hybridBuild(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)

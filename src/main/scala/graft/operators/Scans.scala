@@ -939,8 +939,9 @@ object Scans extends OpModule {
     // pass per JVM. The write now runs once; instantiation is a flat
     // file copy of d1 plus a filename-keyed manifest rewrite — the
     // manifest stores absolute input_file_name URIs, so the copied
-    // files re-root onto `dir` (file names are preserved by copyDir,
-    // and input_file_name emits file://<abs-path>).
+    // files re-root onto `dir` (file names are preserved by copyDir).
+    // The prefix comes from Path.toUri, so it is percent-encoded exactly
+    // as input_file_name() encodes it.
     val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
     val tpl = StageUtil.staged(s"ttv1_$sfx") { base =>
       Tables.orders(s, d)
@@ -951,11 +952,11 @@ object Scans extends OpModule {
       manifestStats(s, s"$base/d1").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$base/m1")
     }
-    StageUtil.copyDir(java.nio.file.Paths.get(tpl, "d1"),
-      java.nio.file.Paths.get(dir, "d1"))
+    val d1 = java.nio.file.Paths.get(dir, "d1")
+    StageUtil.copyDir(java.nio.file.Paths.get(tpl, "d1"), d1)
     s.read.parquet(s"$tpl/m1")
       .withColumn("path",
-        concat(lit(s"file://$dir/d1/"),
+        concat(lit(d1.toUri.toString.stripSuffix("/") + "/"),
           element_at(split(col("path"), "/"), -1)))
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")

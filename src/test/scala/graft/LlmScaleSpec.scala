@@ -1378,10 +1378,10 @@ class LlmScaleSpec extends SparkSpec {
     // unchanged and the Lloyd pipeline never re-runs (the build counter
     // is the rebuild detector)
     operators.LlmScale.resetLloydMemo()
-    val builds0 = operators.LlmScale.lloydBuilds.get()
+    val builds0 = operators.LlmScale.lloydMemo.builds
     val cold = operators.LlmScale.graphStoreServe(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(operators.LlmScale.lloydBuilds.get() == builds0,
+    assert(operators.LlmScale.lloydMemo.builds == builds0,
       "serving from the persisted store must not rebuild the lattice")
     assert(cold == post.map(t => (t._2, t._3, t._4)).toSet,
       "a memo-cold session must serve the identical rows from disk")

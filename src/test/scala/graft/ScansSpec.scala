@@ -731,6 +731,19 @@ class ScansSpec extends SparkSpec {
     assert(mor == cow, s"MOR read must equal the COW merge state")
   }
 
+  test("scan_time_travel: the v1 manifest rewrite encodes paths as input_file_name does, under a space in the dir name") {
+    val dir = java.nio.file.Files.createTempDirectory("tt spec").toString
+    graft.operators.Scans.timeTravelWriteV1(spark, sf, dir)
+    val manifest = graft.operators.Scans.snapshotPaths(spark, s"$dir/m1").toSet
+    val read = spark.read.parquet(s"$dir/d1")
+      .select(org.apache.spark.sql.functions.input_file_name()).distinct()
+      .collect().map(_.getString(0)).toSet
+    // the manifest diffs (CDC, vacuum) compare these strings against
+    // later commits' input_file_name entries, so they must agree byte
+    // for byte
+    assert(manifest == read, s"manifest $manifest vs input_file_name $read")
+  }
+
   test("scan_time_travel: v1 resolves unchanged after the v2 commit; replaced files persist") {
     import org.apache.spark.sql.functions.{expr, sum => fsum}
     val dir = java.nio.file.Files.createTempDirectory("tt_spec").toString

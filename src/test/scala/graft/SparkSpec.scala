@@ -5,27 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared one-JVM SparkSession for all suites (sbt forks one test JVM). */
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // RocksDB state store: supports transformWithState's column families
-    // and is the at-scale choice (incremental checkpoints, off-heap state)
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkSpec.session
   /** Smallest fixture dir — unit tests stay fast. */
   val sf: String = "/root/testdata/sf0.001"
 
