@@ -1124,7 +1124,7 @@ object LlmScale extends OpModule {
   /** THE VECTOR INDEX AS A TABLE — the whole maintenance story
     * persisted to DISK under the repo's lakehouse commit discipline
     * (r15; closes the "the index artifact is memoized in-JVM" gap): a
-    * versioned index STORE whose `_HEAD` pointer (tmp + ATOMIC_MOVE)
+    * versioned index STORE whose TableLog head (README "Stores")
     * names the posting dirs and delete sidecars a reader serves from —
     * exactly how Milvus/Lance/an Iceberg-backed vector table commits.
     *
@@ -1178,7 +1178,7 @@ object LlmScale extends OpModule {
       val (qv, _, a2, _) = lloyd(s, d)
       // v1: the trained artifact (file-copied from the per-JVM template)
       copyIvfV1(s, d, base)
-      ivfStoreCommit(base, "postings;vectors;")
+      TableLog.publish(base, "postings;vectors;")
       // v2: the delta commit — appended dirs, v1 files untouched
       val (cent, _) = ivfIndex(s, d)
       val delta = ivfDeltaShard(qv)
@@ -1187,57 +1187,28 @@ object LlmScale extends OpModule {
         .write.parquet(s"$base/postings_d1")
       delta.select(col("new_id").as("vec_id"), col("dv").as("qv"))
         .write.parquet(s"$base/vectors_d1")
-      ivfStoreCommit(base, "postings,postings_d1;vectors,vectors_d1;")
+      TableLog.publish(base, "postings,postings_d1;vectors,vectors_d1;")
       // v3: the tombstone commit — a sidecar, postings untouched
       a2.select(col("vec_id")).where(col("vec_id") % 23 === 5)
         .write.parquet(s"$base/deletes")
-      ivfStoreCommit(base, "postings,postings_d1;vectors,vectors_d1;deletes")
+      TableLog.publish(base, "postings,postings_d1;vectors,vectors_d1;deletes")
     }
   }
 
-  /** One store commit (r16): append the new head to the commit LOG —
-    * the `version → head` sidecar AS OF resolves against, exactly
-    * scan_time_travel's versions discipline applied to the index store
-    * — then flip `_HEAD` atomically. Log first, pointer second: a crash
-    * between the two leaves a logged-but-unadopted version (harmless —
-    * `_HEAD` defines current), never an adopted version the log cannot
-    * resolve. */
-  private[graft] def ivfStoreCommit(dir: String, head: String): Unit = {
-    val log = java.nio.file.Paths.get(dir, "_LOG")
-    val n = if (java.nio.file.Files.exists(log))
-      java.nio.file.Files.readAllLines(log).size else 0
-    java.nio.file.Files.write(log, s"v${n + 1} $head\n".getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    Scans.atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), head)
-    ()
-  }
-
-  /** The commit log's (version, head) pairs, ascending. */
-  private[graft] def ivfStoreLog(dir: String): Seq[(Int, String)] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(dir, "_LOG")).asScala.toSeq
-      .filter(_.nonEmpty).map { line =>
-        val Array(v, h) = line.split(" ", 2)
-        (v.drop(1).toInt, h)
-      }.sortBy(_._1)
-  }
-
-  private[graft] def ivfHeadParse(head: String)
-      : (Seq[String], Seq[String], Seq[String]) = {
-    val parts = head.trim.split(';')
-    def seg(i: Int): Seq[String] =
-      if (parts.length > i && parts(i).nonEmpty)
-        parts(i).split(',').toSeq.filter(_.nonEmpty)
-      else Seq.empty
-    (seg(0), seg(1), seg(2))
+  /** A store head payload — `;`-separated segments, each a
+    * `,`-separated dir list — as its first n segments (absent ones
+    * empty). Shared by the IVF and graph stores. */
+  private[graft] def headSegments(payload: String, n: Int): Seq[Seq[String]] = {
+    val parts = payload.split(';')
+    Seq.tabulate(n)(i => parts.lift(i).toSeq.flatMap(_.split(',')).filter(_.nonEmpty))
   }
 
   /** head = "postDirs;vecDirs;delDirs" (comma-separated each). */
   private[graft] def ivfStoreHead(dir: String)
-      : (Seq[String], Seq[String], Seq[String]) =
-    ivfHeadParse(ivfStoreHeadRaw(dir))
+      : (Seq[String], Seq[String], Seq[String]) = {
+    val Seq(posts, vecs, dels) = headSegments(TableLog.head(dir), 3)
+    (posts, vecs, dels)
+  }
 
   /** The compaction sweep: fold live postings minus tombstones into
     * postings2/, flip the head to drop the sidecar. Idempotent — an
@@ -1251,7 +1222,7 @@ object LlmScale extends OpModule {
         .reduce(_ unionByName _)
       live.join(tomb, Seq("vec_id"), "left_anti")
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/postings2")
-      ivfStoreCommit(dir, s"postings2;${vecs.mkString(",")};")
+      TableLog.publish(dir, s"postings2;${vecs.mkString(",")};")
     }
   }
 
@@ -1259,12 +1230,8 @@ object LlmScale extends OpModule {
     * centroids, candidates from the head's postings anti-joined with
     * its delete sidecars, recall@3 vs exact truth over the live
     * vectors. Everything reads THE STORE — no source parquet. */
-  private def ivfStoreHeadRaw(dir: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_HEAD")), "UTF-8").trim
-
   private def ivfStoreServe(s: SparkSession, dir: String): DataFrame =
-    ivfStoreServeHead(s, dir, ivfStoreHeadRaw(dir))
+    ivfStoreServeHead(s, dir, TableLog.head(dir))
 
   /** Head-resolved IVF serve, memoized per (session, dir, RAW head
     * string) and eagerly checkpointed inside the build (r17): asof's
@@ -1275,14 +1242,13 @@ object LlmScale extends OpModule {
     * used to provide. */
   private def ivfStoreServeHead(s: SparkSession, dir: String,
       headRaw: String): DataFrame =
-      ivfServeMemo((s, dir, headRaw.trim)) {
-    ivfStoreServeHeadBuild(s, dir, ivfHeadParse(headRaw))
-      .localCheckpoint()
+      ivfServeMemo((s, dir, headRaw)) {
+    ivfStoreServeHeadBuild(s, dir, headRaw).localCheckpoint()
   }
 
   private def ivfStoreServeHeadBuild(s: SparkSession, dir: String,
-      head: (Seq[String], Seq[String], Seq[String])): DataFrame = {
-    val (posts, vecDirs, dels) = head
+      headRaw: String): DataFrame = {
+    val Seq(posts, vecDirs, dels) = headSegments(headRaw, 3)
     val inv0 = posts.map(p => s.read.parquet(s"$dir/$p"))
       .reduce(_ unionByName _)
     val inv = if (dels.isEmpty) inv0
@@ -1331,8 +1297,8 @@ object LlmScale extends OpModule {
 
   /** TIME TRAVEL over the index store (r16; closes the r15 nit "the
     * store keeps no commit LOG, so it cannot answer 'serve as of
-    * v2'"): every store commit now appends its head to a `_LOG`
-    * sidecar before the pointer flip — scan_time_travel's versions
+    * v2'"): every store commit is a TableLog publish, logged before
+    * the head flips — scan_time_travel's versions
     * discipline applied to the vector index — and this op serves the
     * SAME query set through EVERY logged version: v1 the trained base
     * (delta vectors absent from the corpus and the truth), v2 the
@@ -1346,9 +1312,9 @@ object LlmScale extends OpModule {
     graft.GraftExtensions.register(s)
     val dir = ivfStoreDir(s, d)
     ivfStoreSweep(s, dir) // idempotent: ensures the v4 entry is logged
-    ivfStoreLog(dir).map { case (v, head) =>
+    TableLog.versions(dir).map { case (v, head) =>
       ivfStoreServeHead(s, dir, head)
-        .select(lit(v).as("version"), col("qid"), col("n_hit"),
+        .select(lit(v.toInt).as("version"), col("qid"), col("n_hit"),
           col("recall_at_3"))
     }.reduce(_ unionByName _)
   }
@@ -1383,11 +1349,9 @@ object LlmScale extends OpModule {
     * batch: assignment against the PERSISTED centroids (the
     * no-retrain ivfDeltaAssign pass, O(|batch|·K) broadcast folds),
     * vectors_sN + postings_sN appended (v1 files never rewritten),
-    * one atomic head flip. Replay-idempotent by the sink_cdc_mv
-    * discipline: the batch-id-keyed generation short-circuits, and the
-    * head RE-CHECK closes the crash-between-write-and-flip window
-    * (vectors land before postings, postings' _SUCCESS is the
-    * replay marker, so a marker always implies complete data). The
+    * one head flip — a TableLog batch commit, replay-idempotent
+    * (README "Stores"; postings' _SUCCESS marks the generation, and
+    * vectors land before postings, so a marker implies complete data). The
     * drained store must serve the same top-3 as a batch rebuild of the
     * same corpus — exactly what the DuckDB oracle replays. */
   private[graft] def streamVectorStoreInit(s: SparkSession, d: String,
@@ -1396,8 +1360,7 @@ object LlmScale extends OpModule {
     // fresh store = file copy of the per-JVM v1 template (r17) — the
     // identical artifact the three Spark writes produced per invocation
     copyIvfV1(s, d, dir)
-    Scans.atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"),
-      "postings;vectors;")
+    TableLog.publish(dir, "postings;vectors;")
   }
 
   /** The ingest topic: the deterministic delta shard split into two
@@ -1425,36 +1388,31 @@ object LlmScale extends OpModule {
                                         batch: DataFrame, id: Long): Unit = {
     val pGen = s"postings_s$id"
     val vGen = s"vectors_s$id"
-    def flip(): Unit = {
-      val (posts, vecs, _) = ivfStoreHead(dir)
-      if (!posts.contains(pGen))
-        Scans.atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"),
-          s"${(posts :+ pGen).mkString(",")};" +
-            s"${(vecs :+ vGen).mkString(",")};")
+    def adopt(head: String): Option[String] = {
+      val Seq(posts, vecs, _) = headSegments(head, 3)
+      Option.when(!posts.contains(pGen))(
+        s"${(posts :+ pGen).mkString(",")};${(vecs :+ vGen).mkString(",")};")
     }
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, pGen, "_SUCCESS"))) {
-      // the write finished on a prior attempt but the COMMIT POINT is
-      // the head flip: re-issue it idempotently (the sinkCdcMv
-      // head-recheck) so a replayed batch can never strand its delta
-      flip()
-    } else if (!batch.isEmpty) {
-      val cents = centroidArrays(s.read.parquet(s"$dir/centroids"))
-        .select(col("cid").as("cluster"), col("cv"))
-      val delta = batch.select(col("new_id"), col("dv"))
-      // vectors FIRST, postings second: postings' _SUCCESS is the
-      // replay marker, so its existence implies the vectors landed.
-      // Overwrite, not ErrorIfExists (ADVICE r16): a crash after the
-      // vectors write starts but before postings' _SUCCESS lands
-      // leaves a partial vectors_sN dir with no marker — the replayed
-      // batch takes this branch again and must be able to REDO the
-      // generation, not fail permanently on 'path already exists'
-      delta.select(col("new_id").as("vec_id"), col("dv").as("qv"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$vGen")
-      ivfDeltaAssign(delta, cents)
-        .select(col("new_id").as("vec_id"), col("cluster"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$pGen")
-      flip()
+    // a replay re-issues the flip of a written generation (README
+    // "Stores"), never rewrites it
+    TableLog.commitBatch(dir, pGen, adopt) { _ =>
+      if (!batch.isEmpty) {
+        val cents = centroidArrays(s.read.parquet(s"$dir/centroids"))
+          .select(col("cid").as("cluster"), col("cv"))
+        val delta = batch.select(col("new_id"), col("dv"))
+        // vectors FIRST, postings second: postings' _SUCCESS is the
+        // replay marker, so its existence implies the vectors landed.
+        // Overwrite, not ErrorIfExists (ADVICE r16): a crash after the
+        // vectors write starts but before postings' _SUCCESS lands
+        // leaves a partial vectors_sN dir with no marker — the replayed
+        // batch takes this branch again and must be able to REDO the
+        // generation, not fail permanently on 'path already exists'
+        delta.select(col("new_id").as("vec_id"), col("dv").as("qv"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$vGen")
+        ivfDeltaAssign(delta, cents)
+          .select(col("new_id").as("vec_id"), col("cluster"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$pGen")
+      }
     }
   }
 
@@ -3123,8 +3081,8 @@ object LlmScale extends OpModule {
     * llm_ann_index_persisted gave the IVF family (VERDICT r15 task 1:
     * "the graph store is the missing second tenant"), applied to the
     * navigable graph: adjacency, entry lists, vectors, and the
-    * retirement sidecar live as parquet dirs named by an atomic `_HEAD`
-    * pointer (tmp + ATOMIC_MOVE), so a server restart loses NOTHING —
+    * retirement sidecar live as parquet dirs named by a TableLog head
+    * (README "Stores"), so a server restart loses NOTHING —
     * the width-8 walk serves straight from disk with zero rebuild
     * (spec-asserted via the Lloyd build counter).
     *
@@ -3185,7 +3143,7 @@ object LlmScale extends OpModule {
       val (_, _, qv) = annGraphAdjacency(s, d)
       // v1: the built graph (file-copied from the per-JVM template)
       copyGraphV1(s, d, base)
-      ivfStoreCommit(base, "adjacency;entries;vectors;")
+      TableLog.publish(base, "adjacency;entries;vectors;")
       // v2: the graft commit — the incremental shard's attachment
       // edges (forward + symmetric back-edges) and its vectors,
       // appended as new dirs
@@ -3196,33 +3154,21 @@ object LlmScale extends OpModule {
         .write.parquet(s"$base/adjacency_d1")
       graphDelta(qv).select(col("qid").as("vec_id"), col("qq").as("qv"))
         .write.parquet(s"$base/vectors_d1")
-      ivfStoreCommit(base,
+      TableLog.publish(base,
         "adjacency,adjacency_d1;entries;vectors,vectors_d1;")
       // v3: the retirement commit — a sidecar, adjacency untouched
       qv.select(col("vec_id")).where(col("vec_id") % 23 === 5)
         .write.parquet(s"$base/tombstones")
-      ivfStoreCommit(base,
+      TableLog.publish(base,
         "adjacency,adjacency_d1;entries;vectors,vectors_d1;tombstones")
     }
   }
 
   /** head = "adjDirs;entryDirs;vecDirs;delDirs" (comma-separated each). */
   private[graft] def graphStoreHead(dir: String)
-      : (Seq[String], Seq[String], Seq[String], Seq[String]) =
-    graphHeadParse(graphStoreHeadRaw(dir))
-
-  private def graphStoreHeadRaw(dir: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_HEAD")), "UTF-8").trim
-
-  private def graphHeadParse(raw: String)
       : (Seq[String], Seq[String], Seq[String], Seq[String]) = {
-    val parts = raw.split(';')
-    def seg(i: Int): Seq[String] =
-      if (parts.length > i && parts(i).nonEmpty)
-        parts(i).split(',').toSeq.filter(_.nonEmpty)
-      else Seq.empty
-    (seg(0), seg(1), seg(2), seg(3))
+    val Seq(adjs, ents, vecs, dels) = headSegments(TableLog.head(dir), 4)
+    (adjs, ents, vecs, dels)
   }
 
   /** Resolve the current head ONCE into checkpointed frames + the
@@ -3240,7 +3186,7 @@ object LlmScale extends OpModule {
     // would cache a new-head walk under the old head's key), mirroring
     // ivfStoreServeHead's single-read shape
     storeHeadMemo((s, dir, raw)) {
-      val (adjs, ents, vecDirs, dels) = graphHeadParse(raw)
+      val Seq(adjs, ents, vecDirs, dels) = headSegments(raw, 4)
       val adj0 = graphStoreRead(s, dir, adjs)
       val ent0 = graphStoreRead(s, dir, ents)
       // checkpoint only COMPUTED frames (r18): a tombstone-free head's
@@ -3294,7 +3240,7 @@ object LlmScale extends OpModule {
       graphStoreRead(s, dir, ents)
         .join(tomb, Seq("vec_id"), "left_anti")
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/entries2")
-      ivfStoreCommit(dir, s"adjacency2;entries2;${vecs.mkString(",")};")
+      TableLog.publish(dir, s"adjacency2;entries2;${vecs.mkString(",")};")
     }
   }
 
@@ -3310,7 +3256,7 @@ object LlmScale extends OpModule {
     // proof phases) rely on the pre read having physically happened
     // against the sidecar'd head, exactly as the previous per-call
     // localCheckpoint guaranteed
-    val rawHead = graphStoreHeadRaw(dir)
+    val rawHead = TableLog.head(dir)
     storeServeMemo((s, dir, rawHead)) {
       val (adj, _, vecsAll, beam, _) = graphStoreWalk(s, dir, rawHead)
       val pred = beamTop3(beam)
@@ -3368,7 +3314,7 @@ object LlmScale extends OpModule {
     // a caller sweeps) — and the walk itself rides graphStoreWalk, so a
     // head served by BOTH the filtered and unfiltered paths pays one
     // walk, not two
-    val rawHead = graphStoreHeadRaw(dir)
+    val rawHead = TableLog.head(dir)
     storeFilteredMemo((s, dir, rawHead)) {
       val (adj, _, vecsAll, _, visited) = graphStoreWalk(s, dir, rawHead)
       val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
@@ -3462,10 +3408,9 @@ object LlmScale extends OpModule {
     * of commits is bit-equal to a one-shot graft of the full shard,
     * which is exactly what the oracle replays), attaches to its beam's
     * 4 nearest with symmetric back-edges, and the edges + vectors land
-    * as appended generations under one atomic head flip. Replay
-    * idempotence is the sink_cdc_mv discipline: vectors first,
-    * adjacency's _SUCCESS is the replay marker, and the head RE-CHECK
-    * closes the crash-between-write-and-flip window. The drained
+    * as appended generations under one head flip — a TableLog batch
+    * commit (README "Stores"): vectors first, adjacency's _SUCCESS
+    * marks the generation. The drained
     * store serves through graphStoreServe — the same head-resolved
     * walk every store consumer uses. At 100 TB: per-batch cost is
     * O(|batch|) bounded beams (≤ 16 + 6·8·22 evals each) + two
@@ -3476,8 +3421,7 @@ object LlmScale extends OpModule {
     // fresh store = file copy of the per-JVM v1 template (r17) — the
     // identical artifact the three Spark writes produced per invocation
     copyGraphV1(s, d, dir)
-    Scans.atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"),
-      "adjacency;entries;vectors;")
+    TableLog.publish(dir, "adjacency;entries;vectors;")
   }
 
   /** The ingest topic: the graft shard split into two parity files —
@@ -3505,47 +3449,44 @@ object LlmScale extends OpModule {
                                        batch: DataFrame, id: Long): Unit = {
     val aGen = s"adjacency_s$id"
     val vGen = s"vectors_s$id"
-    def flip(): Unit = {
-      val (adjs, ents, vecs, dels) = graphStoreHead(dir)
-      if (!adjs.contains(aGen))
-        Scans.atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"),
-          s"${(adjs :+ aGen).mkString(",")};${ents.mkString(",")};" +
-            s"${(vecs :+ vGen).mkString(",")};${dels.mkString(",")}")
+    def adopt(head: String): Option[String] = {
+      val Seq(adjs, ents, vecs, dels) = headSegments(head, 4)
+      Option.when(!adjs.contains(aGen))(
+        s"${(adjs :+ aGen).mkString(",")};${ents.mkString(",")};" +
+          s"${(vecs :+ vGen).mkString(",")};${dels.mkString(",")}")
     }
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, aGen, "_SUCCESS"))) {
-      flip()
-    } else if (!batch.isEmpty) {
-      graft.GraftExtensions.register(s)
-      // the FROZEN base snapshot (v1 dirs are immutable): every batch
-      // searches the same graph, so stream ≡ one-shot graft. The base
-      // frames checkpoint ONCE per store (r17) — the 6-hop walk
-      // otherwise re-scanned the vector/adjacency parquet on every
-      // hop's score join, once per micro-batch
-      val (adjBase, entBase, vecBase) =
-        streamBaseMemo((s, dir)) {
-          (s.read.parquet(s"$dir/adjacency").localCheckpoint(),
-            s.read.parquet(s"$dir/entries"),
-            s.read.parquet(s"$dir/vectors").localCheckpoint())
-        }
-      // vectors FIRST, adjacency second: adjacency's _SUCCESS is the
-      // replay marker, so its existence implies the vectors landed;
-      // Overwrite lets a replayed batch redo a torn generation
-      batch.select(col("new_id").as("vec_id"), col("dv").as("qv"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$vGen")
-      val queries = batch.select(col("new_id").as("qid"),
-        col("dv").as("qq"))
-      val (beam, _) = annGraphSearchBatch(adjBase, entBase, vecBase, queries, 8)
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("dist").asc, col("node").asc)
-      val att = beam.withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 4)
-        .select(col("qid").as("new_id"), col("node").as("dst"))
-      att.select(col("new_id").as("src"), col("dst"))
-        .unionByName(att.select(col("dst").as("src"),
-          col("new_id").as("dst")))
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$aGen")
-      flip()
+    TableLog.commitBatch(dir, aGen, adopt) { _ =>
+      if (!batch.isEmpty) {
+        graft.GraftExtensions.register(s)
+        // the FROZEN base snapshot (v1 dirs are immutable): every batch
+        // searches the same graph, so stream ≡ one-shot graft. The base
+        // frames checkpoint ONCE per store (r17) — the 6-hop walk
+        // otherwise re-scanned the vector/adjacency parquet on every
+        // hop's score join, once per micro-batch
+        val (adjBase, entBase, vecBase) =
+          streamBaseMemo((s, dir)) {
+            (s.read.parquet(s"$dir/adjacency").localCheckpoint(),
+              s.read.parquet(s"$dir/entries"),
+              s.read.parquet(s"$dir/vectors").localCheckpoint())
+          }
+        // vectors FIRST, adjacency second: adjacency's _SUCCESS is the
+        // replay marker, so its existence implies the vectors landed;
+        // Overwrite lets a replayed batch redo a torn generation
+        batch.select(col("new_id").as("vec_id"), col("dv").as("qv"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$vGen")
+        val queries = batch.select(col("new_id").as("qid"),
+          col("dv").as("qq"))
+        val (beam, _) = annGraphSearchBatch(adjBase, entBase, vecBase, queries, 8)
+        val w = Window.partitionBy(col("qid"))
+          .orderBy(col("dist").asc, col("node").asc)
+        val att = beam.withColumn("rank", row_number().over(w))
+          .where(col("rank") <= 4)
+          .select(col("qid").as("new_id"), col("node").as("dst"))
+        att.select(col("new_id").as("src"), col("dst"))
+          .unionByName(att.select(col("dst").as("src"),
+            col("new_id").as("dst")))
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$aGen")
+      }
     }
   }
 

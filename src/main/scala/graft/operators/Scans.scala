@@ -261,7 +261,7 @@ object Scans extends OpModule {
     val files = s.read.parquet(s"$dir/manifest")
       .where(col("k_max") >= 200 && col("k_min") <= 450)
       .select(col("path")).collect().map(_.getString(0))
-    s.read.parquet(files.toIndexedSeq: _*)
+    readPaths(s, files.toIndexedSeq)
       .where(col("l_orderkey").between(200, 450))
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("l_suppkey")).as("n_suppliers"),
@@ -654,7 +654,7 @@ object Scans extends OpModule {
       .select(col("path")).collect().map(_.getString(0))
     val inHot = hot.map(h =>
       col("ts") >= lit(h) && col("ts") < lit(hourEnd(h))).reduce(_ || _)
-    s.read.parquet(files.toIndexedSeq: _*)
+    readPaths(s, files.toIndexedSeq)
       .where(inHot)
       .groupBy(date_trunc("hour", col("ts")).as("hr"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -970,7 +970,7 @@ object Scans extends OpModule {
       .collect().map(_.getString(0))
     // COW: only overlapping files are read; updated content lands as
     // NEW files — d1's replaced files are never touched
-    s.read.parquet(oldPaths.toIndexedSeq: _*)
+    readPaths(s, oldPaths.toIndexedSeq)
       .withColumn("o_totalprice",
         when(col("o_orderkey").between(100, 400), col("o_totalprice") * 2)
           .otherwise(col("o_totalprice")))
@@ -990,7 +990,7 @@ object Scans extends OpModule {
     val hit = col("k_max") >= 500 && col("k_min") <= 700
     val oldPaths = m2.where(hit).select(col("path"))
       .collect().map(_.getString(0))
-    s.read.parquet(oldPaths.toIndexedSeq: _*)
+    readPaths(s, oldPaths.toIndexedSeq)
       .withColumn("o_totalprice",
         when(col("o_orderkey").between(500, 700), col("o_totalprice") * 3)
           .otherwise(col("o_totalprice")))
@@ -1060,7 +1060,7 @@ object Scans extends OpModule {
         val hit2 = col("k_max") >= 100 && col("k_min") <= 400
         val p2 = m1.where(hit2).select(col("path"))
           .collect().map(_.getString(0))
-        s.read.parquet(p2.toIndexedSeq: _*)
+        readPaths(s, p2.toIndexedSeq)
           .withColumn("o_totalprice",
             when(col("o_orderkey").between(100, 400),
               col("o_totalprice") * 2).otherwise(col("o_totalprice")))
@@ -1072,7 +1072,7 @@ object Scans extends OpModule {
         val hit3 = col("k_max") >= 500 && col("k_min") <= 700
         val p3 = m2.where(hit3).select(col("path"))
           .collect().map(_.getString(0))
-        s.read.parquet(p3.toIndexedSeq: _*)
+        readPaths(s, p3.toIndexedSeq)
           .withColumn("o_orderkey",
             when(col("o_orderkey").between(500, 700),
               col("o_orderkey") + 500000000L).otherwise(col("o_orderkey")))
@@ -1088,7 +1088,7 @@ object Scans extends OpModule {
         val hit4 = col("k_max") >= 800 && col("k_min") <= 900
         val p4 = m3.where(hit4).select(col("path"))
           .collect().map(_.getString(0))
-        val base4 = s.read.parquet(p4.toIndexedSeq: _*)
+        val base4 = readPaths(s, p4.toIndexedSeq)
         base4.where(!(col("o_orderkey").between(800, 900) &&
             col("o_orderkey") % 2 === 1))
           .unionByName(base4
@@ -1129,7 +1129,7 @@ object Scans extends OpModule {
         "2024-03-15T00:00:00Z").map { probe =>
       val at = java.time.Instant.parse(probe)
       val v = commits.filter(!_._2.isAfter(at)).map(_._1).max
-      s.read.parquet(snapshotPaths(s, s"$dir/m$v"): _*)
+      readPaths(s, snapshotPaths(s, s"$dir/m$v"))
         .agg(count(lit(1)).as("n_rows"), sum(cents).as("cents"),
           sum(col("o_orderkey")).cast("bigint").as("key_sum"))
         .select(lit(probe).as("asof"), lit(v).as("version"),
@@ -1142,6 +1142,82 @@ object Scans extends OpModule {
     s.read.parquet(mDir).select(col("path"))
       .collect().map(_.getString(0)).toIndexedSeq.sorted
 
+  /** Read data files a manifest names. Manifest paths are
+    * input_file_name() URIs, percent-encoded, and Spark's reader does
+    * not decode them (a directory with a space in its name would not
+    * resolve), so they are decoded here, at the read. Set comparisons
+    * of manifest entries (OCC, vacuum, CDC diffs) keep the encoded
+    * strings: decoding one side only would empty every intersection. */
+  private[graft] def readPaths(s: SparkSession, paths: Seq[String]): DataFrame =
+    s.read.parquet(paths.map(localPath): _*)
+
+  /** A manifest path as a reader opens it: `file:` URIs decoded. */
+  private[graft] def localPath(p: String): String =
+    if (p.startsWith("file:"))
+      java.nio.file.Paths.get(java.net.URI.create(p)).toString
+    else p
+
+  /** Stage one writer's COW rewrite against its base manifest: returns
+    * the touched original paths (the writer's replace set). */
+  private def occStage(s: SparkSession, dir: String, baseV: Long,
+                       lo: Long, hi: Long, mult: Double,
+                       dataDir: String): Seq[String] = {
+    val m = s.read.parquet(s"$dir/m$baseV")
+    val touched = m.where(col("k_max") >= lo && col("k_min") <= hi)
+      .select(col("path")).collect().map(_.getString(0)).toSeq.sorted
+    readPaths(s, touched)
+      .withColumn("o_totalprice",
+        when(col("o_orderkey").between(lo, hi), col("o_totalprice") * mult)
+          .otherwise(col("o_totalprice")))
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$dataDir")
+    touched
+  }
+
+  /** OCC publish of a manifest table: version v is manifest `m{v}`, and
+    * the conflict rule compares manifests' file sets. */
+  private def occPublish(s: SparkSession, dir: String, baseV: Long,
+                         guarded: Seq[String],
+                         check: (Long, Set[String]) => Unit = (_, _) => ())
+                        (stage: Long => Unit): (Long, String) =
+    TableLog.occPublish(dir, baseV, guarded.toSet,
+      v => snapshotPaths(s, s"$dir/m$v").toSet, check) { v =>
+      stage(v); s"m$v"
+    }
+
+  /** The COW writer's publish: `m{v}` = the head's manifest minus the
+    * touched files plus the new data files, the head's pending delta
+    * log (if any) carried through. With `readRange`, the serializable
+    * flavor: a file an intervening commit ADDED whose key stats overlap
+    * the declared read range aborts the commit too (write skew). Throws
+    * on an unrebasable conflict — the caller must surface it; the head
+    * is untouched (abort leaves no trace but orphan data files). */
+  private[graft] def cowCommit(s: SparkSession, dir: String, baseV: Long,
+                               touched: Seq[String], dataDir: String,
+                               readRange: Option[(Long, Long)] = None)
+      : (Long, String) = {
+    def readCheck(head: Long, added: Set[String]): Unit =
+      readRange.foreach { case (lo, hi) =>
+        // |files|-row driver predicate over the head manifest's stats
+        val overlap = s.read.parquet(s"$dir/m$head")
+          .where(col("path").isin(added.toSeq: _*))
+          .where(col("k_max") >= lo && col("k_min") <= hi)
+          .count()
+        if (overlap > 0) throw new IllegalStateException(
+          s"serializable conflict: $overlap intervening file(s) " +
+            s"overlap the declared read range [$lo, $hi] — " +
+            "write skew; re-plan against the current head")
+      }
+    occPublish(s, dir, baseV, touched, readCheck) { v =>
+      s.read.parquet(s"$dir/m${v - 1}").where(!col("path").isin(touched: _*))
+        .unionByName(manifestStats(s, s"$dir/$dataDir")).coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$v")
+      val lines = wapLogRead(dir, s"log${v - 1}")
+      if (lines.nonEmpty)
+        TableLog.atomicWrite(java.nio.file.Paths.get(dir, s"log$v"),
+          lines.mkString("\n"))
+    }
+  }
+
   /** OPTIMISTIC CONCURRENCY CONTROL — the two-writer commit protocol
     * (VERDICT r15 task 2): every pointer flip in this repo is atomic,
     * but atomicity alone only serializes the FLIP — it cannot stop a
@@ -1152,14 +1228,11 @@ object Scans extends OpModule {
     *  - a writer captures the table's base version at PLAN time, reads
     *    that manifest, rewrites only its touched files (the COW
     *    discipline of scan_time_travel), and stages the new data files;
-    *  - at PUBLISH it re-reads `_HEAD` under the commit lock. Unmoved →
-    *    fast path: flip to base+1. Moved → compare its touched file set
-    *    against the files REPLACED by the intervening commits (base
-    *    manifest entries absent from the head manifest — a |files|-row
-    *    driver diff). Disjoint → REBASE: rebuild the new manifest from
-    *    the CURRENT head (which still carries the writer's untouched
-    *    originals) and flip; overlapping → ABORT with an error — the
-    *    conflict surfaces, never silent data loss.
+    *  - at PUBLISH, TableLog.occPublish validates against the head
+    *    under its lock: disjoint from the files the intervening
+    *    commits replaced → REBASE onto the CURRENT head (which still
+    *    carries the writer's untouched originals); overlapping → ABORT
+    *    with an error — the conflict surfaces, never silent data loss.
     *
     * The staged interleaving is the textbook one: writers A and B BOTH
     * plan against v1 (A rewrites the low key range [100, 400] ×2, B the
@@ -1178,96 +1251,40 @@ object Scans extends OpModule {
     * lock held for two driver metadata operations — no data I/O inside
     * the critical section, which is what lets thousand-writer fleets
     * share one table. */
-  private[graft] def occHead(dir: String): Long =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_HEAD")), "UTF-8").trim.toLong
-
-  /** Stage one writer's COW rewrite against its base manifest: returns
-    * the touched original paths (the writer's replace set). */
-  private def occStage(s: SparkSession, dir: String, baseV: Long,
-                       lo: Long, hi: Long, mult: Double,
-                       dataDir: String): Seq[String] = {
-    val m = s.read.parquet(s"$dir/m$baseV")
-    val touched = m.where(col("k_max") >= lo && col("k_min") <= hi)
-      .select(col("path")).collect().map(_.getString(0)).toSeq.sorted
-    s.read.parquet(touched: _*)
-      .withColumn("o_totalprice",
-        when(col("o_orderkey").between(lo, hi), col("o_totalprice") * mult)
-          .otherwise(col("o_totalprice")))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$dataDir")
-    touched
-  }
-
-  /** The publish step. Returns (new head version, outcome); throws on
-    * an unrebasable conflict — the caller must surface it, and `_HEAD`
-    * is untouched (abort leaves no trace but orphan data files). */
-  private[graft] def occCommit(s: SparkSession, dir: String, baseV: Long,
-                               touched: Seq[String], dataDir: String)
-      : (Long, String) = ioLock.synchronized {
-    val head = occHead(dir)
-    val (mBase, outcome) =
-      if (head == baseV) (s.read.parquet(s"$dir/m$head"), "committed")
-      else {
-        val basePaths = snapshotPaths(s, s"$dir/m$baseV").toSet
-        val headPaths = snapshotPaths(s, s"$dir/m$head").toSet
-        val replaced = basePaths -- headPaths
-        val clash = touched.toSet.intersect(replaced)
-        if (clash.nonEmpty) throw new IllegalStateException(
-          s"occ conflict: base v$baseV is stale and commits up to " +
-            s"v$head replaced ${clash.size} file(s) this writer also " +
-            "rewrote — rebase impossible, aborting")
-        (s.read.parquet(s"$dir/m$head"), "rebased")
-      }
-    val newV = head + 1
-    mBase.where(!col("path").isin(touched: _*))
-      .unionByName(manifestStats(s, s"$dir/$dataDir")).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$newV")
-    atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), newV.toString)
-    (newV, outcome)
-  }
-
-  private[graft] def occDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/merge_occ_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_COMMITTED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        timeTravelWriteV1(s, d, dir)
-        atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), "1")
-        val maxKey = s.read.parquet(s"$dir/d1")
-          .agg(max(col("o_orderkey"))).collect()(0).getLong(0)
-        // BOTH writers plan against v1 before either publishes — the
-        // interleaving OCC exists for
-        val aBase = occHead(dir)
-        val aTouched = occStage(s, dir, aBase, 100L, 400L, 2.0, "d2")
-        val bBase = occHead(dir)
-        val bTouched =
-          occStage(s, dir, bBase, maxKey - 300L, maxKey, 3.0, "d3")
-        val (av, aOut) = occCommit(s, dir, aBase, aTouched, "d2")
-        val (bv, bOut) = occCommit(s, dir, bBase, bTouched, "d3")
-        // C: stale plan whose touched files v2 replaced — must abort,
-        // and the head must not move
-        val cTouched = occStage(s, dir, 1L, 150L, 350L, 10.0, "d4")
-        val (cv, cOut) =
-          try occCommit(s, dir, 1L, cTouched, "d4")
-          catch { case _: IllegalStateException => (occHead(dir), "aborted") }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, "outcomes"),
-          Seq(s"A $aOut $av", s"B $bOut $bv", s"C $cOut $cv")
-            .mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def occDir(s: SparkSession, d: String): String =
+    StageUtil.staged("merge_occ_" + d.replaceAll("[^A-Za-z0-9]", "_") +
+      "_" + math.abs(d.hashCode)) { dir =>
+      timeTravelWriteV1(s, d, dir)
+      TableLog.publish(dir, "m1")
+      val maxKey = s.read.parquet(s"$dir/d1")
+        .agg(max(col("o_orderkey"))).collect()(0).getLong(0)
+      // BOTH writers plan against v1 before either publishes — the
+      // interleaving OCC exists for
+      val aBase = TableLog.version(dir)
+      val aTouched = occStage(s, dir, aBase, 100L, 400L, 2.0, "d2")
+      val bBase = TableLog.version(dir)
+      val bTouched =
+        occStage(s, dir, bBase, maxKey - 300L, maxKey, 3.0, "d3")
+      val (av, aOut) = cowCommit(s, dir, aBase, aTouched, "d2")
+      val (bv, bOut) = cowCommit(s, dir, bBase, bTouched, "d3")
+      // C: stale plan whose touched files v2 replaced — must abort,
+      // and the head must not move
+      val cTouched = occStage(s, dir, 1L, 150L, 350L, 10.0, "d4")
+      val (cv, cOut) =
+        try cowCommit(s, dir, 1L, cTouched, "d4")
+        catch { case _: IllegalStateException => (TableLog.version(dir), "aborted") }
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, "outcomes"),
+        Seq(s"A $aOut $av", s"B $bOut $bv", s"C $cOut $cv")
+          .mkString("\n").getBytes("UTF-8"))
     }
-    dir
-  }
 
   def sinkMergeOcc(s: SparkSession, d: String): DataFrame = {
     val dir = occDir(s, d)
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
     wapLogRead(dir, "outcomes").map { line =>
       val Array(w, o, v) = line.split(" ")
-      s.read.parquet(snapshotPaths(s, s"$dir/m$v"): _*)
+      readPaths(s, snapshotPaths(s, s"$dir/m$v"))
         .agg(count(lit(1)).as("n_rows"), sum(cents).as("cents"),
           sum(col("o_orderkey")).cast("bigint").as("key_sum"))
         .select(lit(w).as("writer"), lit(o).as("outcome"),
@@ -1292,7 +1309,7 @@ object Scans extends OpModule {
     *    is valid against ANY head — publish rebases by carrying the
     *    current head's base manifest and appending to its log.
     *  - COW REWRITE (writer rewrites base files): sink_merge_occ's
-    *    occCommit semantics + the log carried through unchanged.
+    *    cowCommit, which carries the log through unchanged.
     *  - COMPACTION (the maintenance fold): captures base m{v} + the
     *    log entries at plan time, folds those entries into new base
     *    files, and at publish must detect intervening commits — if
@@ -1324,7 +1341,7 @@ object Scans extends OpModule {
     * post-image per key (seq order — last writer wins). */
   private[graft] def compactOccRead(s: SparkSession, dir: String,
                                     v: Long): DataFrame = {
-    val base = s.read.parquet(snapshotPaths(s, s"$dir/m$v"): _*)
+    val base = readPaths(s, snapshotPaths(s, s"$dir/m$v"))
       .select(col("o_orderkey"), col("o_totalprice"))
     val entries = compactOccLogEntries(dir, v)
     if (entries.isEmpty) base
@@ -1344,89 +1361,6 @@ object Scans extends OpModule {
           coalesce(col("p_post"), col("o_totalprice")).as("o_totalprice"))
     }
   }
-
-  /** ROW DELTA publish: append a post-image log entry. Key-addressed,
-    * so it is valid against any base — always rebases onto the head. */
-  private def compactOccRowDelta(s: SparkSession, dir: String,
-                                 seq: Long, entry: String): Long =
-    ioLock.synchronized {
-      val head = occHead(dir)
-      val newV = head + 1
-      s.read.parquet(s"$dir/m$head").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$newV")
-      val lines = wapLogRead(dir, s"log$head") :+ s"$seq $entry"
-      atomicWrite(java.nio.file.Paths.get(dir, s"log$newV"),
-        lines.mkString("\n"))
-      atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), newV.toString)
-      newV
-    }
-
-  /** COW publish with the log carried through — occCommit's conflict
-    * rules (abort iff an intervening commit replaced a touched file),
-    * plus the head's pending log entries survive unchanged. */
-  private def compactOccCowCommit(s: SparkSession, dir: String,
-                                  baseV: Long, touched: Seq[String],
-                                  dataDir: String): (Long, String) =
-    ioLock.synchronized {
-      val head = occHead(dir)
-      val (mBase, outcome) =
-        if (head == baseV) (s.read.parquet(s"$dir/m$head"), "committed")
-        else {
-          val replaced = snapshotPaths(s, s"$dir/m$baseV").toSet --
-            snapshotPaths(s, s"$dir/m$head").toSet
-          val clash = touched.toSet.intersect(replaced)
-          if (clash.nonEmpty) throw new IllegalStateException(
-            s"occ conflict: commits up to v$head replaced " +
-              s"${clash.size} file(s) this writer also rewrote")
-          (s.read.parquet(s"$dir/m$head"), "rebased")
-        }
-      val newV = head + 1
-      mBase.where(!col("path").isin(touched: _*))
-        .unionByName(manifestStats(s, s"$dir/$dataDir")).coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$newV")
-      val lines = wapLogRead(dir, s"log$head")
-      if (lines.nonEmpty)
-        atomicWrite(java.nio.file.Paths.get(dir, s"log$newV"),
-          lines.mkString("\n"))
-      atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), newV.toString)
-      (newV, outcome)
-    }
-
-  /** COMPACTION publish: REBASE onto the head when no intervening
-    * commit replaced a folded base file (new manifest = head's base ∖
-    * inputs ∪ folded files; new log = head's log ∖ folded seqs);
-    * ABORT otherwise — the fold read files that no longer exist. */
-  private def compactOccCompactCommit(s: SparkSession, dir: String,
-                                      baseV: Long, foldedSeqs: Set[Long],
-                                      inputPaths: Seq[String],
-                                      cbDir: String): (Long, String) =
-    ioLock.synchronized {
-      val head = occHead(dir)
-      val outcome =
-        if (head == baseV) "committed"
-        else {
-          val replaced = snapshotPaths(s, s"$dir/m$baseV").toSet --
-            snapshotPaths(s, s"$dir/m$head").toSet
-          val clash = inputPaths.toSet.intersect(replaced)
-          if (clash.nonEmpty) throw new IllegalStateException(
-            s"compaction conflict: commits up to v$head replaced " +
-              s"${clash.size} file(s) the fold read — stale fold")
-          "rebased"
-        }
-      val newV = head + 1
-      s.read.parquet(s"$dir/m$head")
-        .where(!col("path").isin(inputPaths: _*))
-        .unionByName(manifestStats(s, s"$dir/$cbDir")).coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$newV")
-      val keep = wapLogRead(dir, s"log$head").filter { l =>
-        !foldedSeqs.contains(l.split(" ")(0).toLong)
-      }
-      if (keep.nonEmpty)
-        atomicWrite(java.nio.file.Paths.get(dir, s"log$newV"),
-          keep.mkString("\n"))
-      atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), newV.toString)
-      (newV, outcome)
-    }
 
   /** Stage a post-image log entry: keys matching `o_orderkey % 10 ==
     * rem` at snapshot v, price × mult. */
@@ -1453,60 +1387,106 @@ object Scans extends OpModule {
     (seqs, inputs)
   }
 
-  private[graft] def compactOccDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/compact_occ_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_COMMITTED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        timeTravelWriteV1(s, d, dir)
-        atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), "1")
-        // v1 ships with one pending log entry so the fold has real work
-        compactOccStageDelta(s, dir, 1L, 3, 2.0, "e1")
-        atomicWrite(java.nio.file.Paths.get(dir, "log1"), "1 e1")
-        // ── interleaving A: writer lands mid-fold, compactor rebases ──
-        val (foldSeqs, foldIn) = compactOccFold(s, dir, 1L, "cb2")
-        compactOccStageDelta(s, dir, 1L, 7, 3.0, "e2")
-        val v2 = compactOccRowDelta(s, dir, 2L, "e2") // writer first
-        val (v3, c1Out) =
-          compactOccCompactCommit(s, dir, 1L, foldSeqs, foldIn, "cb2")
-        // ── interleaving B: compactor first, stale COW writer aborts ──
-        val w2Base = occHead(dir) // = v3
-        val w2Touched = {
-          val m = s.read.parquet(s"$dir/m$w2Base")
-          m.where(col("k_max") >= 100 && col("k_min") <= 400)
-            .select(col("path")).collect().map(_.getString(0)).toSeq.sorted
+  private[graft] def compactOccDir(s: SparkSession, d: String): String =
+    StageUtil.staged("compact_occ_" + d.replaceAll("[^A-Za-z0-9]", "_") +
+      "_" + math.abs(d.hashCode)) { dir =>
+      // the delta log of version v rides beside its manifest: `log{v}`
+      def writeLog(v: Long, lines: Seq[String]): Unit =
+        if (lines.nonEmpty) TableLog.atomicWrite(
+          java.nio.file.Paths.get(dir, s"log$v"), lines.mkString("\n"))
+      // COMPACTION publish: REBASE onto the head when no intervening
+      // commit replaced a folded base file (new manifest = head's base ∖
+      // inputs ∪ folded files; new log = head's log ∖ folded seqs);
+      // ABORT otherwise — the fold read files that no longer exist
+      def publishFold(baseV: Long, folded: Set[Long], inputs: Seq[String],
+                      cbDir: String): (Long, String) =
+        occPublish(s, dir, baseV, inputs) { v =>
+          s.read.parquet(s"$dir/m${v - 1}")
+            .where(!col("path").isin(inputs: _*))
+            .unionByName(manifestStats(s, s"$dir/$cbDir")).coalesce(1)
+            .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$v")
+          writeLog(v, wapLogRead(dir, s"log${v - 1}")
+            .filterNot(l => folded.contains(l.split(" ")(0).toLong)))
         }
-        val (foldSeqs2, foldIn2) = compactOccFold(s, dir, w2Base, "cb4")
-        occStage(s, dir, w2Base, 100L, 400L, 2.0, "d5")
-        val (v4, c2Out) =
-          compactOccCompactCommit(s, dir, w2Base, foldSeqs2, foldIn2, "cb4")
-        val w2First =
-          try { compactOccCowCommit(s, dir, w2Base, w2Touched, "d5"); "lost" }
-          catch { case _: IllegalStateException => "aborted" }
-        // the abort surfaces; the writer re-plans against the fold
-        val retryBase = occHead(dir) // = v4
-        val retryTouched =
-          occStage(s, dir, retryBase, 100L, 400L, 2.0, "d6")
-        val (v5, w2Out) =
-          compactOccCowCommit(s, dir, retryBase, retryTouched, "d6")
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, "outcomes"),
-          Seq(s"v2_writer_first committed $v2",
-            s"v3_compact_rebased $c1Out $v3",
-            s"v4_compact_committed $c2Out $v4",
-            s"w2_stale $w2First ${occHead(dir) min v4}",
-            s"v5_writer_retry $w2Out $v5")
-            .mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.createFile(marker)
+      timeTravelWriteV1(s, d, dir)
+      TableLog.publish(dir, "m1")
+      // v1 ships with one pending log entry so the fold has real work
+      compactOccStageDelta(s, dir, 1L, 3, 2.0, "e1")
+      writeLog(1L, Seq("1 e1"))
+      // ── interleaving A: writer lands mid-fold, compactor rebases ──
+      val (foldSeqs, foldIn) = compactOccFold(s, dir, 1L, "cb2")
+      compactOccStageDelta(s, dir, 1L, 7, 3.0, "e2")
+      // writer first: a ROW DELTA appends a post-image log entry; key-
+      // addressed, so it is valid against any base and never conflicts
+      val v2 = TableLog.commit(dir) { v =>
+        s.read.parquet(s"$dir/m${v - 1}").coalesce(1)
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$v")
+        writeLog(v, wapLogRead(dir, s"log${v - 1}") :+ "2 e2")
+        s"m$v"
       }
+      val (v3, c1Out) = publishFold(1L, foldSeqs, foldIn, "cb2")
+      // ── interleaving B: compactor first, stale COW writer aborts ──
+      val w2Base = TableLog.version(dir) // = v3
+      val w2Touched = {
+        val m = s.read.parquet(s"$dir/m$w2Base")
+        m.where(col("k_max") >= 100 && col("k_min") <= 400)
+          .select(col("path")).collect().map(_.getString(0)).toSeq.sorted
+      }
+      val (foldSeqs2, foldIn2) = compactOccFold(s, dir, w2Base, "cb4")
+      occStage(s, dir, w2Base, 100L, 400L, 2.0, "d5")
+      val (v4, c2Out) = publishFold(w2Base, foldSeqs2, foldIn2, "cb4")
+      val w2First =
+        try { cowCommit(s, dir, w2Base, w2Touched, "d5"); "lost" }
+        catch { case _: IllegalStateException => "aborted" }
+      // the abort surfaces; the writer re-plans against the fold
+      val retryBase = TableLog.version(dir) // = v4
+      val retryTouched =
+        occStage(s, dir, retryBase, 100L, 400L, 2.0, "d6")
+      val (v5, w2Out) = cowCommit(s, dir, retryBase, retryTouched, "d6")
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, "outcomes"),
+        Seq(s"v2_writer_first committed $v2",
+          s"v3_compact_rebased $c1Out $v3",
+          s"v4_compact_committed $c2Out $v4",
+          s"w2_stale $w2First ${TableLog.version(dir) min v4}",
+          s"v5_writer_retry $w2Out $v5")
+          .mkString("\n").getBytes("UTF-8"))
     }
-    dir
+
+  /** B's read: rows in [100, 400] above 100 000.00, counted through
+    * the manifest-pruned snapshot at `v` — the value its write edits
+    * depend on. */
+  private def serOccReadCount(s: SparkSession, dir: String,
+                              v: Long): Long = {
+    val m = s.read.parquet(s"$dir/m$v")
+    val paths = m.where(col("k_max") >= 100 && col("k_min") <= 400)
+      .select(col("path")).collect().map(_.getString(0)).toSeq
+    if (paths.isEmpty) 0L
+    else readPaths(s, paths)
+      .where(col("o_orderkey").between(100, 400) &&
+        expr("CAST(round(o_totalprice * 100) AS BIGINT)") > 10000000L)
+      .count()
+  }
+
+  /** Stage B's value-dependent rewrite: top-of-table range ×3 plus
+    * (cnt mod 97) cents, where cnt came from the declared read. */
+  private def serOccStageB(s: SparkSession, dir: String, baseV: Long,
+                           lo: Long, hi: Long, cnt: Long,
+                           dataDir: String): Seq[String] = {
+    val m = s.read.parquet(s"$dir/m$baseV")
+    val touched = m.where(col("k_max") >= lo && col("k_min") <= hi)
+      .select(col("path")).collect().map(_.getString(0)).toSeq.sorted
+    readPaths(s, touched)
+      .withColumn("o_totalprice",
+        when(col("o_orderkey").between(lo, hi),
+          col("o_totalprice") * 3 + lit((cnt % 97) / 100.0))
+          .otherwise(col("o_totalprice")))
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$dataDir")
+    touched
   }
 
   /** READ-SET VALIDATION — serializable-flavor OCC (VERDICT r16 task
-    * 3): occCommit validates only the WRITE set (snapshot isolation),
+    * 3): cowCommit validates only the WRITE set (snapshot isolation),
     * so WRITE SKEW is representable — two writers each read the
     * other's key range, write disjoint files, and both publish; the
     * final state matches NO serial order because the second writer's
@@ -1536,137 +1516,59 @@ object Scans extends OpModule {
     * manifest's (k_min, k_max) — the same stats the scan planner
     * already maintains; declared read predicates are how Serializable
     * Snapshot Isolation ships in real lakehouse engines. */
-  private[graft] def serOccCommit(s: SparkSession, dir: String,
-                                  baseV: Long, touched: Seq[String],
-                                  dataDir: String, readLo: Long,
-                                  readHi: Long, serializable: Boolean)
-      : (Long, String) = ioLock.synchronized {
-    val head = occHead(dir)
-    val (mBase, outcome) =
-      if (head == baseV) (s.read.parquet(s"$dir/m$head"), "committed")
-      else {
-        val basePaths = snapshotPaths(s, s"$dir/m$baseV").toSet
-        val headPaths = snapshotPaths(s, s"$dir/m$head").toSet
-        val clash = (basePaths -- headPaths).intersect(touched.toSet)
-        if (clash.nonEmpty) throw new IllegalStateException(
-          s"occ conflict: commits up to v$head replaced ${clash.size} " +
-            "file(s) this writer also rewrote")
-        if (serializable) {
-          // read-set validation: any file an intervening commit ADDED
-          // whose key stats overlap this writer's declared read range
-          // invalidates the read — |files|-row driver predicate
-          val overlap = s.read.parquet(s"$dir/m$head")
-            .where(!col("path").isin(basePaths.toSeq: _*))
-            .where(col("k_max") >= readLo && col("k_min") <= readHi)
-            .count()
-          if (overlap > 0) throw new IllegalStateException(
-            s"serializable conflict: $overlap intervening file(s) " +
-              s"overlap the declared read range [$readLo, $readHi] — " +
-              "write skew; re-plan against the current head")
-        }
-        (s.read.parquet(s"$dir/m$head"), "rebased")
+  private[graft] def serOccDir(s: SparkSession, d: String): String =
+    StageUtil.staged("ser_occ_" + d.replaceAll("[^A-Za-z0-9]", "_") +
+      "_" + math.abs(d.hashCode)) { dir =>
+      timeTravelWriteV1(s, d, dir)
+      val maxKey = s.read.parquet(s"$dir/d1")
+        .agg(max(col("o_orderkey"))).collect()(0).getLong(0)
+      val (bLo, bHi) = (maxKey - 300L, maxKey)
+      // one base staging, two manifest chains: the anomaly needs the
+      // same v1 under both isolation levels
+      Seq("si", "ser").foreach { br =>
+        java.nio.file.Files.createDirectories(
+          java.nio.file.Paths.get(dir, br))
+        s.read.parquet(s"$dir/m1").coalesce(1)
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$br/m1")
+        TableLog.publish(s"$dir/$br", "m1")
       }
-    val newV = head + 1
-    mBase.where(!col("path").isin(touched: _*))
-      .unionByName(manifestStats(s, s"$dir/$dataDir")).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$newV")
-    atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), newV.toString)
-    (newV, outcome)
-  }
-
-  /** B's read: rows in [100, 400] above 100 000.00, counted through
-    * the manifest-pruned snapshot at `v` — the value its write edits
-    * depend on. */
-  private def serOccReadCount(s: SparkSession, dir: String,
-                              v: Long): Long = {
-    val m = s.read.parquet(s"$dir/m$v")
-    val paths = m.where(col("k_max") >= 100 && col("k_min") <= 400)
-      .select(col("path")).collect().map(_.getString(0)).toSeq
-    if (paths.isEmpty) 0L
-    else s.read.parquet(paths: _*)
-      .where(col("o_orderkey").between(100, 400) &&
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)") > 10000000L)
-      .count()
-  }
-
-  /** Stage B's value-dependent rewrite: top-of-table range ×3 plus
-    * (cnt mod 97) cents, where cnt came from the declared read. */
-  private def serOccStageB(s: SparkSession, dir: String, baseV: Long,
-                           lo: Long, hi: Long, cnt: Long,
-                           dataDir: String): Seq[String] = {
-    val m = s.read.parquet(s"$dir/m$baseV")
-    val touched = m.where(col("k_max") >= lo && col("k_min") <= hi)
-      .select(col("path")).collect().map(_.getString(0)).toSeq.sorted
-    s.read.parquet(touched: _*)
-      .withColumn("o_totalprice",
-        when(col("o_orderkey").between(lo, hi),
-          col("o_totalprice") * 3 + lit((cnt % 97) / 100.0))
-          .otherwise(col("o_totalprice")))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$dataDir")
-    touched
-  }
-
-  private[graft] def serOccDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/ser_occ_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_COMMITTED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        timeTravelWriteV1(s, d, dir)
-        val maxKey = s.read.parquet(s"$dir/d1")
-          .agg(max(col("o_orderkey"))).collect()(0).getLong(0)
-        val (bLo, bHi) = (maxKey - 300L, maxKey)
-        // one base staging, two manifest chains: the anomaly needs the
-        // same v1 under both isolation levels
-        Seq("si", "ser").foreach { br =>
-          java.nio.file.Files.createDirectories(
-            java.nio.file.Paths.get(dir, br))
-          s.read.parquet(s"$dir/m1").coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(s"$dir/$br/m1")
-          atomicWrite(java.nio.file.Paths.get(dir, br, "_HEAD"), "1")
+      def runBranch(br: String, serializable: Boolean): Seq[String] = {
+        val bd = s"$dir/$br"
+        def range(lo: Long, hi: Long) = Option.when(serializable)((lo, hi))
+        // BOTH writers plan against v1 — B's cnt reads pre-A prices
+        val aTouched = occStage(s, bd, 1L, 100L, 400L, 2.0, "d2")
+        val cnt1 = serOccReadCount(s, bd, 1L)
+        val bTouched = serOccStageB(s, bd, 1L, bLo, bHi, cnt1, "d3")
+        val (av, _) = cowCommit(s, bd, 1L, aTouched, "d2", range(bLo, bHi))
+        try {
+          val (bv, bOut) =
+            cowCommit(s, bd, 1L, bTouched, "d3", range(100L, 400L))
+          Seq(s"$br A committed $av", s"$br B $bOut $bv")
+        } catch {
+          case _: IllegalStateException =>
+            // serializable abort: re-plan against the head, re-read,
+            // restage with the post-A count, publish the serial result
+            val head = TableLog.version(bd)
+            val cnt2 = serOccReadCount(s, bd, head)
+            val retry = serOccStageB(s, bd, head, bLo, bHi, cnt2, "d4")
+            val (bv, _) =
+              cowCommit(s, bd, head, retry, "d4", range(100L, 400L))
+            Seq(s"$br A committed $av", s"$br B aborted_retry $bv")
         }
-        def runBranch(br: String, serializable: Boolean): Seq[String] = {
-          val bd = s"$dir/$br"
-          // BOTH writers plan against v1 — B's cnt reads pre-A prices
-          val aTouched = occStage(s, bd, 1L, 100L, 400L, 2.0, "d2")
-          val cnt1 = serOccReadCount(s, bd, 1L)
-          val bTouched = serOccStageB(s, bd, 1L, bLo, bHi, cnt1, "d3")
-          val (av, _) = serOccCommit(s, bd, 1L, aTouched, "d2",
-            bLo, bHi, serializable)
-          try {
-            val (bv, bOut) = serOccCommit(s, bd, 1L, bTouched, "d3",
-              100L, 400L, serializable)
-            Seq(s"$br A committed $av", s"$br B $bOut $bv")
-          } catch {
-            case _: IllegalStateException =>
-              // serializable abort: re-plan against the head, re-read,
-              // restage with the post-A count, publish the serial result
-              val head = occHead(bd)
-              val cnt2 = serOccReadCount(s, bd, head)
-              val retry = serOccStageB(s, bd, head, bLo, bHi, cnt2, "d4")
-              val (bv, _) = serOccCommit(s, bd, head, retry, "d4",
-                100L, 400L, serializable)
-              Seq(s"$br A committed $av", s"$br B aborted_retry $bv")
-          }
-        }
-        val lines = runBranch("si", serializable = false) ++
-          runBranch("ser", serializable = true)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, "outcomes"),
-          lines.mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.createFile(marker)
       }
+      val lines = runBranch("si", serializable = false) ++
+        runBranch("ser", serializable = true)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, "outcomes"),
+        lines.mkString("\n").getBytes("UTF-8"))
     }
-    dir
-  }
 
   def sinkMergeOccSerializable(s: SparkSession, d: String): DataFrame = {
     val dir = serOccDir(s, d)
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
     wapLogRead(dir, "outcomes").map { line =>
       val Array(br, w, o, v) = line.split(" ")
-      s.read.parquet(snapshotPaths(s, s"$dir/$br/m$v"): _*)
+      readPaths(s, snapshotPaths(s, s"$dir/$br/m$v"))
         .agg(count(lit(1)).as("n_rows"), sum(cents).as("cents"),
           sum(col("o_orderkey")).cast("bigint").as("key_sum"))
         .select(lit(br).as("mode"), lit(w).as("writer"),
@@ -1726,7 +1628,7 @@ object Scans extends OpModule {
       .forall(p => !new java.io.File(new java.net.URI(p)).exists())
     val liveIntact =
       p2.forall(p => new java.io.File(new java.net.URI(p)).exists())
-    s.read.parquet(p2: _*)
+    readPaths(s, p2)
       .agg(count(lit(1)).as("n_rows"),
         sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),
         sum(col("o_orderkey")).cast("bigint").as("key_sum"))
@@ -1795,30 +1697,29 @@ object Scans extends OpModule {
       if (!java.nio.file.Files.exists(marker)) {
         wipeDir(dir)
         timeTravelWriteV1(s, d, dir)
-        wapSetHead(dir, "m1")
-        wapLogAppend(dir, "published", "m1")
+        TableLog.publish(dir, "m1")
         wapLogAppend(dir, "refs", "m2")
         timeTravelWriteV2(s, dir)
         if (wapAudit(s, dir, "m2")) {
-          wapSetHead(dir, "m2"); wapLogAppend(dir, "published", "m2")
+          TableLog.publish(dir, "m2")
         }
         wapLogAppend(dir, "refs", "m3")
         wapWriteBadBranch(s, dir)
         if (wapAudit(s, dir, "m3")) {
-          wapSetHead(dir, "m3"); wapLogAppend(dir, "published", "m3")
+          TableLog.publish(dir, "m3")
         }
         wapOrphanSweep(s, dir)
         java.nio.file.Files.createFile(marker)
       }
     }
-    val head = wapHead(dir)
+    val head = TableLog.head(dir)
     val orphansGone = wapSweptPaths(dir)
       .forall(p => !new java.io.File(new java.net.URI(p)).exists())
     val live = snapshotPaths(s, s"$dir/$head")
     val liveIntact =
       live.forall(p => new java.io.File(new java.net.URI(p)).exists())
     val branchGone = !new java.io.File(s"$dir/m3").exists()
-    s.read.parquet(live: _*)
+    readPaths(s, live)
       .agg(count(lit(1)).as("n_rows"),
         sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),
         sum(col("o_orderkey")).cast("bigint").as("key_sum"))
@@ -1851,7 +1752,7 @@ object Scans extends OpModule {
     wapLogRead(dir, "_ORPHANS_SWEPT")
 
   private[graft] def wapOrphanSweep(s: SparkSession, dir: String): Unit = {
-    val published = wapLogRead(dir, "published").toSet
+    val published = TableLog.versions(dir).map(_._2).toSet
     val orphanBranches = wapLogRead(dir, "refs").filterNot(published)
       .filter(b => new java.io.File(s"$dir/$b").exists())
     if (orphanBranches.isEmpty) return
@@ -1882,16 +1783,16 @@ object Scans extends OpModule {
     val p2 = snapshotPaths(s, s"$dir/m2")
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
     def summary(tag: String, paths: Seq[String]): DataFrame =
-      s.read.parquet(paths: _*)
+      readPaths(s, paths)
         .agg(count(lit(1)).as("n_rows"), sum(cents).as("cents"),
           sum(col("o_orderkey")).cast("bigint").as("key_sum"))
         .select(lit(tag).as("snapshot"), col("n_rows"), col("cents"),
           col("key_sum"))
     // manifest-diff CDC: changed rows live ONLY in files the two
     // manifests disagree on — the diff read is O(changed files)
-    val oldSide = s.read.parquet((p1.toSet -- p2.toSet).toSeq.sorted: _*)
+    val oldSide = readPaths(s, (p1.toSet -- p2.toSet).toSeq.sorted)
       .select(col("o_orderkey"), cents.as("c1"))
-    val newSide = s.read.parquet((p2.toSet -- p1.toSet).toSeq.sorted: _*)
+    val newSide = readPaths(s, (p2.toSet -- p1.toSet).toSeq.sorted)
       .select(col("o_orderkey"), cents.as("c2"))
     val cdc = oldSide.join(newSide, "o_orderkey")
       .where(col("c1") =!= col("c2"))
@@ -2413,20 +2314,6 @@ object Scans extends OpModule {
     if (d.exists()) rm(d)
   }
 
-  /** Atomic small-file publish (the pointer-flip contract): write to a
-    * temp sibling, then ATOMIC_MOVE over the target — a reader can
-    * never observe a torn/partial pointer, and a crash leaves either
-    * the old state or the new, nothing between. */
-  private[graft] def atomicWrite(path: java.nio.file.Path,
-                                 content: String): Unit = {
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, path,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
   /** MOR LOG COMPACTION — the maintenance job sink_merge_mor defers to
     * ("the read side pays the reconstruction ... until a compaction
     * folds the log back"): materialize the merge into new base files
@@ -2502,8 +2389,8 @@ object Scans extends OpModule {
       .mode(SaveMode.Overwrite).parquet(s"$path/base2")
     // pointer flip = the atomic commit; the marker records the touched
     // set because post-GC readers can no longer derive it from the log
-    // (temp + ATOMIC_MOVE — a torn marker would duplicate partitions)
-    atomicWrite(java.nio.file.Paths.get(path, "_COMPACTED"),
+    // (an atomic write — a torn marker would duplicate partitions)
+    TableLog.atomicWrite(java.nio.file.Paths.get(path, "_COMPACTED"),
       touched.mkString("\n"))
     // post-commit GC: the log is superseded by the marker
     wipeDir(s"$path/deletes")
@@ -2679,7 +2566,7 @@ object Scans extends OpModule {
   private def plannedRead(s: SparkSession, schemaDir: String,
                           paths: Seq[String]): DataFrame =
     if (paths.isEmpty) s.read.parquet(schemaDir).where(lit(false))
-    else s.read.parquet(paths: _*)
+    else readPaths(s, paths)
 
   /** The aligned 64×64 box (custkey 64..127 × epoch-days 9216..9279 —
     * spring 1995): one contiguous z-block. */
@@ -2792,49 +2679,41 @@ object Scans extends OpModule {
     * Readout: the probe-key lookup THROUGH the refreshed index — it
     * must see the post-merge prices; the oracle replays the update
     * relationally from `orders`. */
-  private[graft] def indexRefreshDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/index_refresh_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_REFRESHED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        // v1: range-clustered data + manifest + custkey posting index
-        Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .repartitionByRange(8, col("o_orderkey"))
-          .sortWithinPartitions(col("o_orderkey"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/d1")
-        manifestStats(s, s"$dir/d1").coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")
-        indexPostings(s.read.parquet(s"$dir/d1"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/index1")
-        // publish v1: ONE pointer names the (manifest, postings) PAIR —
-        // the atomic cross-artifact commit (VERDICT r14 task 6): a
-        // reader resolves snapshot AND index from a single atomic read,
-        // so no interleaving can pair a new HEAD with stale postings
-        atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), "m1 index1")
-        // the COW commit (timeTravel write contract: d2 + m2) — staged,
-        // NOT yet visible: readers still resolve (m1, index1)
-        timeTravelWriteV2(s, dir)
-        // the refresh: drop stale postings, build new-file postings,
-        // share the rest — O(rewritten files); staged beside the live
-        // index, invisible until the flip
-        val p1 = snapshotPaths(s, s"$dir/m1").toSet
-        val p2 = snapshotPaths(s, s"$dir/m2").toSet
-        val stale = (p1 -- p2).toSeq.sorted
-        val freshPaths = (p2 -- p1).toSeq.sorted
-        s.read.parquet(s"$dir/index1")
-          .where(!col("file_path").isin(stale: _*))
-          .unionByName(indexPostings(s.read.parquet(freshPaths: _*)))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/index2")
-        // the commit: flip snapshot and postings TOGETHER
-        atomicWrite(java.nio.file.Paths.get(dir, "_HEAD"), "m2 index2")
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def indexRefreshDir(s: SparkSession, d: String): String =
+    StageUtil.staged("index_refresh_" + d.replaceAll("[^A-Za-z0-9]", "_") +
+      "_" + math.abs(d.hashCode)) { dir =>
+      // v1: range-clustered data + manifest + custkey posting index
+      Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+        .repartitionByRange(8, col("o_orderkey"))
+        .sortWithinPartitions(col("o_orderkey"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/d1")
+      manifestStats(s, s"$dir/d1").coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")
+      indexPostings(s.read.parquet(s"$dir/d1"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/index1")
+      // publish v1: ONE head payload names the (manifest, postings)
+      // PAIR — the atomic cross-artifact commit (VERDICT r14 task 6): a
+      // reader resolves snapshot AND index from a single head read, so
+      // no interleaving can pair a new manifest with stale postings
+      TableLog.publish(dir, "m1 index1")
+      // the COW commit (timeTravel write contract: d2 + m2) — staged,
+      // NOT yet visible: readers still resolve (m1, index1)
+      timeTravelWriteV2(s, dir)
+      // the refresh: drop stale postings, build new-file postings,
+      // share the rest — O(rewritten files); staged beside the live
+      // index, invisible until the flip
+      val p1 = snapshotPaths(s, s"$dir/m1").toSet
+      val p2 = snapshotPaths(s, s"$dir/m2").toSet
+      val stale = (p1 -- p2).toSeq.sorted
+      val freshPaths = (p2 -- p1).toSeq.sorted
+      s.read.parquet(s"$dir/index1")
+        .where(!col("file_path").isin(stale: _*))
+        .unionByName(indexPostings(readPaths(s, freshPaths)))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/index2")
+      // the commit: flip snapshot and postings TOGETHER
+      TableLog.publish(dir, "m2 index2")
     }
-    dir
-  }
 
   /** The posting-list build: one distributed pass over the given files
     * → (o_custkey, file_path, n_rows). */
@@ -2842,21 +2721,12 @@ object Scans extends OpModule {
     data.groupBy(col("o_custkey"), input_file_name().as("file_path"))
       .agg(count(lit(1)).as("n_rows"))
 
-  /** Resolve the (manifest, postings) pair the index table currently
-    * serves — ONE atomic pointer read, so snapshot and index can never
-    * be observed mismatched. */
-  private[graft] def indexHead(dir: String): (String, String) = {
-    val Array(m, idx) = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_HEAD")), "UTF-8").trim.split(' ')
-    (m, idx)
-  }
-
   def scanIndexRefresh(s: SparkSession, d: String): DataFrame = {
     val dir = indexRefreshDir(s, d)
-    // lookup THROUGH the head-resolved index: one atomic pointer read
-    // names the (snapshot, postings) pair, then postings → planned
-    // files → key-filtered read (the scanSecondaryIndex shape)
-    val (_, idx) = indexHead(dir)
+    // lookup THROUGH the head-resolved index: one head read names the
+    // (snapshot, postings) pair, then postings → planned files →
+    // key-filtered read (the scanSecondaryIndex shape)
+    val Array(_, idx) = TableLog.head(dir).split(' ')
     val paths = s.read.parquet(s"$dir/$idx")
       .where(col("o_custkey").isin(secIndexProbeKeys: _*))
       .select(col("file_path")).distinct()
@@ -2970,7 +2840,7 @@ object Scans extends OpModule {
     }
     if (stale.nonEmpty || vanished.nonEmpty) {
       // the backfill audit, recorded while the stale set is knowable
-      atomicWrite(java.nio.file.Paths.get(dir, "_BACKFILLED"),
+      TableLog.atomicWrite(java.nio.file.Paths.get(dir, "_BACKFILLED"),
         (stale ++ vanished).mkString("\n"))
     }
     (stale ++ vanished).toIndexedSeq
@@ -3040,7 +2910,7 @@ object Scans extends OpModule {
         val hit = col("k_max") >= 100 && col("k_min") <= 400
         val oldPaths = m1.where(hit).select(col("path"))
           .collect().map(_.getString(0))
-        s.read.parquet(oldPaths.toIndexedSeq: _*)
+        readPaths(s, oldPaths.toIndexedSeq)
           .withColumn("o_orderkey",
             when(col("o_orderkey").between(100, 400),
               col("o_orderkey") + 500000000L)
@@ -3061,13 +2931,13 @@ object Scans extends OpModule {
     val p1 = snapshotPaths(s, s"$dir/m1")
     val p2 = snapshotPaths(s, s"$dir/m2")
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-    val v1 = s.read.parquet(p1: _*)
-    val v2 = s.read.parquet(p2: _*)
+    val v1 = readPaths(s, p1)
+    val v2 = readPaths(s, p2)
     // manifest-diff CDC inputs: only files the versions disagree on
-    val oldSide = s.read.parquet((p1.toSet -- p2.toSet).toSeq.sorted: _*)
+    val oldSide = readPaths(s, (p1.toSet -- p2.toSet).toSeq.sorted)
       .select(col("row_id"), col("o_orderkey").as("k_old"),
         cents.as("c_old"))
-    val newSide = s.read.parquet((p2.toSet -- p1.toSet).toSeq.sorted: _*)
+    val newSide = readPaths(s, (p2.toSet -- p1.toSet).toSeq.sorted)
       .select(col("row_id"), col("o_orderkey").as("k_new"),
         cents.as("c_new"))
     // row-id CDC: the migration is UPDATES with stable prices
@@ -3207,45 +3077,29 @@ object Scans extends OpModule {
     * still resolves v1 exactly (branches never mutate a live
     * snapshot) and that the bad branch's data is reachable from m3
     * (orphaned, not lost — vacuum's jurisdiction). */
-  private[graft] def wapDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/wap_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_WAP_DONE")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        timeTravelWriteV1(s, d, dir)
-        wapSetHead(dir, "m1")
-        // good branch: write → audit → publish
-        timeTravelWriteV2(s, dir)
-        if (wapAudit(s, dir, "m2")) wapSetHead(dir, "m2")
-        // bad branch: write → audit → (no publish)
-        wapWriteBadBranch(s, dir)
-        if (wapAudit(s, dir, "m3")) wapSetHead(dir, "m3")
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def wapDir(s: SparkSession, d: String): String =
+    StageUtil.staged("wap_" + d.replaceAll("[^A-Za-z0-9]", "_") +
+      "_" + math.abs(d.hashCode)) { dir =>
+      timeTravelWriteV1(s, d, dir)
+      TableLog.publish(dir, "m1")
+      // good branch: write → audit → publish
+      timeTravelWriteV2(s, dir)
+      if (wapAudit(s, dir, "m2")) TableLog.publish(dir, "m2")
+      // bad branch: write → audit → (no publish)
+      wapWriteBadBranch(s, dir)
+      if (wapAudit(s, dir, "m3")) TableLog.publish(dir, "m3")
     }
-    dir
-  }
-
-  private[graft] def wapSetHead(dir: String, m: String): Unit =
-    // the publish IS this write — torn HEADs must be impossible
-    atomicWrite(java.nio.file.Paths.get(dir, "HEAD"), m)
-
-  private[graft] def wapHead(dir: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "HEAD")), "UTF-8").trim
 
   /** The buggy writer: a COW rewrite of the [500,900]-overlapping files
     * that silently drops every key%100==0 row, committed as branch
     * manifest m3. Built from the HEAD snapshot (m2) like a real
     * follow-on batch would be. */
   private[graft] def wapWriteBadBranch(s: SparkSession, dir: String): Unit = {
-    val head = s.read.parquet(s"$dir/${wapHead(dir)}")
+    val head = s.read.parquet(s"$dir/${TableLog.head(dir)}")
     val hit = col("k_max") >= 500 && col("k_min") <= 900
     val oldPaths = head.where(hit).select(col("path"))
       .collect().map(_.getString(0))
-    s.read.parquet(oldPaths.toIndexedSeq: _*)
+    readPaths(s, oldPaths.toIndexedSeq)
       .where(col("o_orderkey") % 100 =!= 0) // the bug under audit
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/d3")
     head.where(!hit)
@@ -3262,8 +3116,8 @@ object Scans extends OpModule {
   private[graft] def wapAudit(s: SparkSession, dir: String,
                               branch: String): Boolean = {
     val headN = s.read.parquet(
-        snapshotPaths(s, s"$dir/${wapHead(dir)}"): _*).count()
-    val row = s.read.parquet(snapshotPaths(s, s"$dir/$branch"): _*)
+        snapshotPaths(s, s"$dir/${TableLog.head(dir)}"): _*).count()
+    val row = readPaths(s, snapshotPaths(s, s"$dir/$branch"))
       .agg(count(lit(1)).as("n"),
         count_distinct(col("o_orderkey")).as("nk"),
         min(col("o_totalprice")).as("pmin"))
@@ -3274,10 +3128,10 @@ object Scans extends OpModule {
 
   def sinkWap(s: SparkSession, d: String): DataFrame = {
     val dir = wapDir(s, d)
-    val head = wapHead(dir)
+    val head = TableLog.head(dir)
     val badUnpublished =
       new java.io.File(s"$dir/m3").exists() && head != "m3"
-    s.read.parquet(snapshotPaths(s, s"$dir/$head"): _*)
+    readPaths(s, snapshotPaths(s, s"$dir/$head"))
       .agg(count(lit(1)).as("n_rows"),
         sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),
         sum(col("o_orderkey")).cast("bigint").as("key_sum"))

@@ -691,65 +691,54 @@ object StreamIO extends OpModule {
     val bootDir = java.nio.file.Paths.get(tblDir, "gen_boot")
     java.nio.file.Files.createDirectories(bootDir)
     Scans.snapshotPaths(s, s"$src/m1").zipWithIndex.foreach { case (p, i) =>
-      // manifest paths are file: URIs today (input_file_name()), but a
-      // scheme-less path would make URI.create-based resolution throw
-      // (ADVICE r17) — fall back to the plain filesystem path
-      val srcPath =
-        if (p.startsWith("file:")) java.nio.file.Paths.get(java.net.URI.create(p))
-        else java.nio.file.Paths.get(p)
-      java.nio.file.Files.copy(srcPath,
+      java.nio.file.Files.copy(java.nio.file.Paths.get(Scans.localPath(p)),
         bootDir.resolve(f"boot_$i%03d.parquet"))
     }
-    Scans.atomicWrite(java.nio.file.Paths.get(tblDir, "_HEAD"), "gen_boot")
-    def head(): String = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(tblDir, "_HEAD")), "UTF-8").trim
+    TableLog.publish(tblDir, "gen_boot")
     val q = s.readStream.format("graft-manifest-cdc")
       .option("path", src).option("lineage", "true").load()
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val gen = s"gen_$id"
-        val done = java.nio.file.Paths.get(tblDir, gen, "_SUCCESS")
-        if (java.nio.file.Files.exists(done)) {
-          if (head() != gen)
-            Scans.atomicWrite(java.nio.file.Paths.get(tblDir, "_HEAD"), gen)
-        } else if (!batch.isEmpty) {
-          // the ± pivot reads the batch twice — checkpoint it once
-          val b = MemoUtil.scratch(batch.localCheckpoint())
-          // the row_id pairing below is only correct because
-          // ManifestCdcStream admits exactly ONE manifest version per
-          // micro-batch — rows touched in consecutive commits would
-          // cross-join into duplicate pre/post images. Guard the
-          // implicit coupling (ADVICE r16): if batch pacing ever
-          // changes (e.g. honoring ReadLimit to drain several
-          // versions), fail loudly instead of corrupting the target.
-          val nVersions = b.select(col("version")).distinct().count()
-          require(nVersions == 1L,
-            s"cdc batch $id spans $nVersions manifest versions; the " +
-              "row_id pairing assumes one commit per micro-batch")
-          val pre = b.where(col("sign") === -1)
-            .select(col("row_id"), lit(1).as("was"))
-          val post = b.where(col("sign") === 1)
-            .select(col("row_id"), col("o_orderkey").as("k_post"),
-              col("o_totalprice").as("p_post"))
-          s.read.parquet(s"$tblDir/${head()}")
-            .join(pre.join(post, Seq("row_id"), "full_outer"),
-              Seq("row_id"), "full_outer")
-            // a pre-only id is a DELETE; any post image wins (U or I);
-            // untouched rows carry — MERGE INTO, keyed on lineage
-            .where(col("was").isNull || col("k_post").isNotNull)
-            .select(col("row_id"),
-              coalesce(col("k_post"), col("o_orderkey")).as("o_orderkey"),
-              coalesce(col("p_post"), col("o_totalprice"))
-                .as("o_totalprice"))
-            .write.mode("overwrite").parquet(s"$tblDir/$gen")
-          Scans.atomicWrite(java.nio.file.Paths.get(tblDir, "_HEAD"), gen)
+        // a batch-id-keyed generation (README "Stores": replay re-check)
+        TableLog.commitBatch(tblDir, gen, h => Option.when(h != gen)(gen)) { head =>
+          if (!batch.isEmpty) {
+            // the ± pivot reads the batch twice — checkpoint it once
+            val b = MemoUtil.scratch(batch.localCheckpoint())
+            // the row_id pairing below is only correct because
+            // ManifestCdcStream admits exactly ONE manifest version per
+            // micro-batch — rows touched in consecutive commits would
+            // cross-join into duplicate pre/post images. Guard the
+            // implicit coupling (ADVICE r16): if batch pacing ever
+            // changes (e.g. honoring ReadLimit to drain several
+            // versions), fail loudly instead of corrupting the target.
+            val nVersions = b.select(col("version")).distinct().count()
+            require(nVersions == 1L,
+              s"cdc batch $id spans $nVersions manifest versions; the " +
+                "row_id pairing assumes one commit per micro-batch")
+            val pre = b.where(col("sign") === -1)
+              .select(col("row_id"), lit(1).as("was"))
+            val post = b.where(col("sign") === 1)
+              .select(col("row_id"), col("o_orderkey").as("k_post"),
+                col("o_totalprice").as("p_post"))
+            s.read.parquet(s"$tblDir/$head")
+              .join(pre.join(post, Seq("row_id"), "full_outer"),
+                Seq("row_id"), "full_outer")
+              // a pre-only id is a DELETE; any post image wins (U or I);
+              // untouched rows carry — MERGE INTO, keyed on lineage
+              .where(col("was").isNull || col("k_post").isNotNull)
+              .select(col("row_id"),
+                coalesce(col("k_post"), col("o_orderkey")).as("o_orderkey"),
+                coalesce(col("p_post"), col("o_totalprice"))
+                  .as("o_totalprice"))
+              .write.mode("overwrite").parquet(s"$tblDir/$gen")
+          }
         }
-        ()
       }
       .option("checkpointLocation", fresh("ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     runToEnd(q)
-    s.read.parquet(s"$tblDir/${head()}")
+    s.read.parquet(s"$tblDir/${TableLog.head(tblDir)}")
       .groupBy(when(col("o_orderkey") >= 700000000L, "inserted")
         .when(col("o_orderkey") >= 500000000L, "migrated")
         .otherwise("base").as("bucket"))
@@ -784,56 +773,41 @@ object StreamIO extends OpModule {
     val bucket = expr("o_orderkey DIV 100").as("bucket")
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
     // bootstrap: one aggregate over the v1 snapshot
-    s.read.parquet(Scans.snapshotPaths(s, s"$src/m1"): _*)
+    Scans.readPaths(s, Scans.snapshotPaths(s, s"$src/m1"))
       .groupBy(bucket)
       .agg(count(lit(1)).as("n_rows"), sum(cents).as("cents"))
       .write.mode("overwrite").parquet(s"$mvDir/gen_boot")
-    Scans.atomicWrite(java.nio.file.Paths.get(mvDir, "_HEAD"), "gen_boot")
-    def head(): String = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(mvDir, "_HEAD")), "UTF-8").trim
+    TableLog.publish(mvDir, "gen_boot")
     val q = s.readStream.format("graft-manifest-cdc")
       .option("path", src).load()
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val gen = s"gen_$id"
-        val done = java.nio.file.Paths.get(mvDir, gen, "_SUCCESS")
-        if (java.nio.file.Files.exists(done)) {
-          // the parquet write finished on a previous attempt, but the
-          // COMMIT POINT is the _HEAD flip, not _SUCCESS: a crash
-          // between the two leaves a completed generation that the
-          // head never adopted. Re-issue the (idempotent) flip so a
-          // replayed batch can never strand its delta behind a stale
-          // head — later batches would otherwise merge into the old
-          // generation and this commit's delta would be lost forever.
-          if (head() != gen)
-            Scans.atomicWrite(java.nio.file.Paths.get(mvDir, "_HEAD"), gen)
-        } else if (!batch.isEmpty) {
-          val delta = batch.groupBy(expr("o_orderkey DIV 100").as("bucket"))
-            .agg(sum(col("sign")).cast("bigint").as("dn"),
-              sum(col("sign") *
-                expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("dc"))
-          s.read.parquet(s"$mvDir/${head()}")
-            .join(delta, Seq("bucket"), "full_outer")
-            .select(col("bucket"),
-              (coalesce(col("n_rows"), lit(0L)) +
-                coalesce(col("dn"), lit(0L))).as("n_rows"),
-              (coalesce(col("cents"), lit(0L)) +
-                coalesce(col("dc"), lit(0L))).as("cents"))
-            .where(col("n_rows") > 0)
-            .write.mode("overwrite").parquet(s"$mvDir/$gen")
-          // the pointer flip is the commit (tmp + ATOMIC_MOVE like the
-          // lakehouse HEADs — a torn pointer must be impossible); a
-          // replayed batch that finds _SUCCESS re-checks the head above
-          // rather than skipping blindly — idempotent INCLUDING the
-          // crash-between-write-and-flip window
-          Scans.atomicWrite(java.nio.file.Paths.get(mvDir, "_HEAD"), gen)
+        // the commit point is the head flip, not _SUCCESS: a replayed
+        // batch whose generation exists re-issues the flip instead of
+        // stranding its delta (README "Stores": replay re-check)
+        TableLog.commitBatch(mvDir, gen, h => Option.when(h != gen)(gen)) { head =>
+          if (!batch.isEmpty) {
+            val delta = batch.groupBy(expr("o_orderkey DIV 100").as("bucket"))
+              .agg(sum(col("sign")).cast("bigint").as("dn"),
+                sum(col("sign") *
+                  expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("dc"))
+            s.read.parquet(s"$mvDir/$head")
+              .join(delta, Seq("bucket"), "full_outer")
+              .select(col("bucket"),
+                (coalesce(col("n_rows"), lit(0L)) +
+                  coalesce(col("dn"), lit(0L))).as("n_rows"),
+                (coalesce(col("cents"), lit(0L)) +
+                  coalesce(col("dc"), lit(0L))).as("cents"))
+              .where(col("n_rows") > 0)
+              .write.mode("overwrite").parquet(s"$mvDir/$gen")
+          }
         }
-        ()
       }
       .option("checkpointLocation", fresh("ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     runToEnd(q)
-    s.read.parquet(s"$mvDir/${head()}")
+    s.read.parquet(s"$mvDir/${TableLog.head(mvDir)}")
   }
 
   /** STREAMING MAINTENANCE OF THE PERSISTED VECTOR STORE (VERDICT r15
@@ -841,7 +815,7 @@ object StreamIO extends OpModule {
     * embeddings into the `_HEAD`-versioned IVF store as a delta commit
     * — assignment against the PERSISTED centroids, postings/vectors
     * appended, one atomic pointer flip per batch, idempotent under
-    * replay via the sink_cdc_mv head-recheck. The commit protocol and
+    * replay (a TableLog batch commit). The commit protocol and
     * serving live in LlmScale (streamVectorCommit/Serve — the store
     * discipline is the vector family's); this op wires them to a real
     * two-micro-batch ingest stream and serves the drained store. The

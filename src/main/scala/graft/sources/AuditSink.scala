@@ -144,44 +144,21 @@ private class AuditBatchWrite(schema: StructType, path: String,
   // file set, never a torn mix.
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     new File(path).mkdirs()
-    val manifest = new File(path, "_MANIFEST")
-    val prior =
-      if (truncate) Seq.empty else AuditManifest.lines(manifest)
-    val tmp = new File(path, "_MANIFEST.tmp")
-    val w = new BufferedWriter(new FileWriter(tmp))
-    try {
-      prior.foreach { l => w.write(l); w.newLine() }
-      messages.foreach { case m: AuditCommit =>
-        w.write(AuditManifest.encode(m)); w.newLine()
-      }
-    } finally w.close()
-    // ATOMIC_MOVE replaces the target in one rename (POSIX semantics) —
-    // the prior delete-then-rename opened a window where a concurrent
-    // reader found no _MANIFEST and saw a false-empty table
-    java.nio.file.Files.move(tmp.toPath, manifest.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val committed = messages.toSeq.collect { case m: AuditCommit => m }
+    // append keeps the prior lines; the write replaces the file in one
+    // rename, so a concurrent reader never finds it missing or torn
+    def publish(name: String, fresh: Seq[String]): Unit = {
+      val file = new File(path, name)
+      val prior = if (truncate) Seq.empty else AuditManifest.lines(file)
+      graft.operators.TableLog.atomicWrite(file.toPath,
+        (prior ++ fresh).map(_ + "\n").mkString)
+    }
+    publish("_MANIFEST", committed.map(AuditManifest.encode))
     // clustered writes additionally publish the per-file key ranges —
     // `part,rows,kmin,kmax` — the zone-map metadata readers prune by
-    if (rangeCol.isDefined) {
-      val ranges = new File(path, "_RANGES")
-      val priorR =
-        if (truncate) Seq.empty else AuditManifest.lines(ranges)
-      val tmpR = new File(path, "_RANGES.tmp")
-      val wr = new BufferedWriter(new FileWriter(tmpR))
-      try {
-        priorR.foreach { l => wr.write(l); wr.newLine() }
-        messages.foreach { case m: AuditCommit =>
-          if (m.rows > 0) {
-            wr.write(s"${m.part},${m.rows},${m.kMin},${m.kMax}")
-            wr.newLine()
-          }
-        }
-      } finally wr.close()
-      java.nio.file.Files.move(tmpR.toPath, ranges.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (rangeCol.isDefined)
+      publish("_RANGES", committed.filter(_.rows > 0)
+        .map(m => s"${m.part},${m.rows},${m.kMin},${m.kMax}"))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

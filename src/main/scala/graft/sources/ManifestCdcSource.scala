@@ -215,7 +215,7 @@ private class CdcReaderFactory extends PartitionReaderFactory {
     new PartitionReader[InternalRow] {
       private val reader = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(p.path))
+          new org.apache.hadoop.fs.Path(graft.operators.Scans.localPath(p.path)))
         .withConf(new org.apache.hadoop.conf.Configuration())
         .build()
       private var cur: org.apache.parquet.example.data.Group = _

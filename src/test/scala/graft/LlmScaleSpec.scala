@@ -1260,17 +1260,15 @@ class LlmScaleSpec extends SparkSpec {
   test("ann_store_asof: the commit log resolves every version, the sweep proof replays through it, replay stable") {
     val dir = operators.LlmScale.ivfStoreDir(spark, sf)
     operators.LlmScale.ivfStoreSweep(spark, dir)
-    val log = operators.LlmScale.ivfStoreLog(dir)
+    val log = operators.TableLog.versions(dir)
     assert(log.map(_._1) == Seq(1, 2, 3, 4), s"four logged commits: $log")
     // the log's last entry IS the current head — AS OF latest ≡ the
     // plain head read
-    assert(operators.LlmScale.ivfHeadParse(log.last._2) ==
-      operators.LlmScale.ivfStoreHead(dir))
+    assert(log.last._2 == operators.TableLog.head(dir))
     // intermediate heads resolve dirs that still exist on disk —
     // immutable commits, nothing a later version deleted
     log.foreach { case (_, h) =>
-      val (p, v, dl) = operators.LlmScale.ivfHeadParse(h)
-      (p ++ v ++ dl).foreach(sub => assert(
+      operators.LlmScale.headSegments(h, 3).flatten.foreach(sub => assert(
         new java.io.File(s"$dir/$sub").isDirectory, s"missing $sub"))
     }
     val out = operators.LlmScale.annStoreAsof(spark, sf).collect()
@@ -1363,7 +1361,7 @@ class LlmScaleSpec extends SparkSpec {
     // the graph store shares the commit-LOG discipline (r16): four
     // logged versions, last entry ≡ the current head, every logged
     // head's dirs still on disk — immutable commits, time-travel-ready
-    val log = operators.LlmScale.ivfStoreLog(dir)
+    val log = operators.TableLog.versions(dir)
     assert(log.map(_._1) == Seq(1, 2, 3, 4), s"graph store log: $log")
     assert(log.last._2.trim ==
       "adjacency2;entries2;vectors,vectors_d1;",

@@ -742,6 +742,27 @@ class ScansSpec extends SparkSpec {
     // later commits' input_file_name entries, so they must agree byte
     // for byte
     assert(manifest == read, s"manifest $manifest vs input_file_name $read")
+    // ...and the snapshot READS through them: the reader decodes
+    val S = graft.operators.Scans
+    val n = spark.read.parquet(s"$dir/d1").count()
+    assert(n > 0 && S.readPaths(spark, manifest.toSeq.sorted).count() == n)
+    // OCC under the same dir: A commits over [100, 400]; C, planned at
+    // v1 and overlapping A, must still abort — the conflict rule
+    // compares encoded strings on both sides
+    graft.operators.TableLog.publish(dir, "m1")
+    val m1 = spark.read.parquet(s"$dir/m1")
+    def touched(lo: Long, hi: Long): Seq[String] =
+      m1.where(col("k_max") >= lo && col("k_min") <= hi)
+        .select("path").collect().map(_.getString(0)).toSeq.sorted
+    def stage(paths: Seq[String], sub: String): Unit =
+      S.readPaths(spark, paths).write.parquet(s"$dir/$sub")
+    val (aT, cT) = (touched(100L, 400L), touched(150L, 350L))
+    stage(aT, "d2"); stage(cT, "d3")
+    assert(S.cowCommit(spark, dir, 1L, aT, "d2") == (2L, "committed"))
+    intercept[IllegalStateException](S.cowCommit(spark, dir, 1L, cT, "d3"))
+    assert(graft.operators.TableLog.version(dir) == 2L,
+      "the stale overlapping writer must not move the head")
+    assert(S.readPaths(spark, S.snapshotPaths(spark, s"$dir/m2")).count() == n)
   }
 
   test("scan_time_travel: v1 resolves unchanged after the v2 commit; replaced files persist") {
@@ -788,7 +809,7 @@ class ScansSpec extends SparkSpec {
 
   test("sink_merge_occ: rebase keeps both deltas, stale overlapping writer aborts, head immovable on abort") {
     val dir = graft.operators.Scans.occDir(spark, sf)
-    assert(graft.operators.Scans.occHead(dir) == 3L)
+    assert(graft.operators.TableLog.version(dir) == 3L)
     assert(graft.operators.Scans.wapLogRead(dir, "outcomes") ==
       Seq("A committed 2", "B rebased 3", "C aborted 3"))
     // NO LOST UPDATE: the rebased head manifest carries BOTH writers'
@@ -825,9 +846,9 @@ class ScansSpec extends SparkSpec {
     val cTouched = m1.where(col("k_max") >= 150 && col("k_min") <= 350)
       .select("path").collect().map(_.getString(0)).toSeq
     intercept[IllegalStateException] {
-      graft.operators.Scans.occCommit(spark, dir, 1L, cTouched, "d4")
+      graft.operators.Scans.cowCommit(spark, dir, 1L, cTouched, "d4")
     }
-    assert(graft.operators.Scans.occHead(dir) == 3L,
+    assert(graft.operators.TableLog.version(dir) == 3L,
       "an aborted commit must leave the head untouched")
     assert(!new java.io.File(s"$dir/m4").exists(),
       "an aborted commit must publish no manifest")
@@ -836,7 +857,7 @@ class ScansSpec extends SparkSpec {
   test("maintenance_compact_occ: both interleavings — rebase preserves content exactly, stale COW writer aborts against the fold") {
     val S = graft.operators.Scans
     val dir = S.compactOccDir(spark, sf)
-    assert(S.occHead(dir) == 5L)
+    assert(graft.operators.TableLog.version(dir) == 5L)
     assert(S.wapLogRead(dir, "outcomes") == Seq(
       "v2_writer_first committed 2",
       "v3_compact_rebased rebased 3",
@@ -863,11 +884,11 @@ class ScansSpec extends SparkSpec {
     val w2Touched = m3.where(col("k_max") >= 100 && col("k_min") <= 400)
       .select("path").collect().map(_.getString(0)).toSeq
     intercept[IllegalStateException] {
-      // the same private publish path w2 used, replayed via the public
-      // occCommit twin (identical conflict rule) against the live head
-      S.occCommit(spark, dir, 3L, w2Touched, "d5")
+      // the same publish path w2 used, replayed against the live head
+      S.cowCommit(spark, dir, 3L, w2Touched, "d5")
     }
-    assert(S.occHead(dir) == 5L, "aborts must leave the head untouched")
+    assert(graft.operators.TableLog.version(dir) == 5L,
+      "aborts must leave the head untouched")
     // the retry landed on the folded head: v5 differs from v4 exactly
     // on the [100, 400] range, by exactly ×2
     val v5 = rows(5)
@@ -895,12 +916,12 @@ class ScansSpec extends SparkSpec {
       .where(col("k_max") >= mk - 300 && col("k_min") <= mk)
       .select("path").collect().map(_.getString(0)).toSeq
     intercept[IllegalStateException] {
-      S.serOccCommit(spark, s"$dir/ser", 1L, bTouched, "d3",
-        100L, 400L, serializable = true)
+      S.cowCommit(spark, s"$dir/ser", 1L, bTouched, "d3",
+        readRange = Some((100L, 400L)))
     }
     // ...and the identical publish under SI would NOT have (the write
     // sets really are disjoint — this is write skew, not a lost update)
-    assert(S.occHead(s"$dir/ser") == 3L)
+    assert(graft.operators.TableLog.version(s"$dir/ser") == 3L)
     def snap(br: String, v: Long): Map[Long, Double] =
       spark.read.parquet(S.snapshotPaths(spark, s"$dir/$br/m$v"): _*)
         .collect().map(r => (r.getAs[Long]("o_orderkey"),
@@ -961,10 +982,10 @@ class ScansSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("vac_wap_spec").toString
     val S = graft.operators.Scans
     S.timeTravelWriteV1(spark, sf, dir)
-    S.wapSetHead(dir, "m1"); S.wapLogAppend(dir, "published", "m1")
+    graft.operators.TableLog.publish(dir, "m1")
     S.wapLogAppend(dir, "refs", "m2")
     S.timeTravelWriteV2(spark, dir)
-    S.wapSetHead(dir, "m2"); S.wapLogAppend(dir, "published", "m2")
+    graft.operators.TableLog.publish(dir, "m2")
     S.wapLogAppend(dir, "refs", "m3")
     S.wapWriteBadBranch(spark, dir)
     val p1 = S.snapshotPaths(spark, s"$dir/m1").toSet
@@ -1027,10 +1048,10 @@ class ScansSpec extends SparkSpec {
     // ATOMIC CROSS-ARTIFACT PUBLISH (VERDICT r14 task 6): one pointer
     // names the (manifest, postings) pair; because both committed
     // states satisfy postings-files == manifest-files and the flip is
-    // tmp+ATOMIC_MOVE, NO interleaving can expose a new snapshot with
-    // stale postings — a reader sees (m1,index1) or (m2,index2), never
-    // a cross
-    assert(S.indexHead(dir) == ("m2", "index2"),
+    // atomic, NO interleaving can expose a new snapshot with stale
+    // postings — a reader sees (m1,index1) or (m2,index2), never a
+    // cross
+    assert(graft.operators.TableLog.head(dir) == "m2 index2",
       "head must name the committed pair")
     val idx1Paths = idx1.select("file_path").distinct()
       .collect().map(_.getString(0)).toSet
@@ -1422,7 +1443,7 @@ class ScansSpec extends SparkSpec {
   test("sink_wap: audit gates the pointer flip; branches never mutate live snapshots") {
     val dir = graft.operators.Scans.wapDir(spark, sf)
     // the good branch published, the bad one exists but never did
-    assert(graft.operators.Scans.wapHead(dir) == "m2")
+    assert(graft.operators.TableLog.head(dir) == "m2")
     assert(new java.io.File(s"$dir/m3").exists(),
       "failed branch's manifest must exist (orphaned, vacuum's job)")
     // audit verdicts, replayed directly against each branch

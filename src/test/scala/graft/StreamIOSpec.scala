@@ -426,8 +426,7 @@ class StreamIOSpec extends SparkSpec {
     assert(head()._1 == Seq("postings", "postings_s0", "postings_s1"))
     // crash-between-write-and-flip window: stale head + finished files
     // → the head-recheck re-issues the flip instead of stranding s1
-    graft.operators.Scans.atomicWrite(
-      java.nio.file.Paths.get(dir, "_HEAD"),
+    graft.operators.TableLog.publish(dir,
       "postings,postings_s0;vectors,vectors_s0;")
     LlmScale.streamVectorCommit(spark, dir, b1, 1L)
     assert(head()._1 == Seq("postings", "postings_s0", "postings_s1"),
@@ -485,8 +484,7 @@ class StreamIOSpec extends SparkSpec {
     assert(head()._1 == Seq("adjacency", "adjacency_s0", "adjacency_s1"))
     // crash-between-write-and-flip window: stale head + finished files
     // → the head-recheck re-issues the flip instead of stranding s1
-    graft.operators.Scans.atomicWrite(
-      java.nio.file.Paths.get(dir, "_HEAD"),
+    graft.operators.TableLog.publish(dir,
       "adjacency,adjacency_s0;entries;vectors,vectors_s0;")
     LlmScale.streamGraphCommit(spark, dir, b1, 1L)
     assert(head()._1 == Seq("adjacency", "adjacency_s0", "adjacency_s1"),
