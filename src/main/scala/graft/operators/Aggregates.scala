@@ -740,21 +740,16 @@ object Aggregates extends OpModule {
     * counts. AggregatesSpec asserts the delta scan's pushed filter and
     * full-table equality; the oracle is the plain full-table rollup. */
   def aggMvStaleCompensate(spark: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(dir.hashCode)
-    val mvDir = new java.io.File(s"$mvIoDir/mv_stale_$sfx")
     val li = Tables.lineitem(spark, dir)
     val hw = li.agg(expr("max(l_orderkey) * 4 div 5")).head.getLong(0)
-    mvLock.synchronized {
-      if (!new java.io.File(mvDir, "_SUCCESS").exists()) {
-        li.where(col("l_orderkey") < hw)
-          .groupBy(col("l_returnflag"), col("l_linestatus"))
-          .agg(sum(col("l_quantity")).as("mv_sum_qty"),
-            count(lit(1)).as("mv_cnt"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(mvDir.toString)
-      }
-    }
-    val mv = spark.read.parquet(mvDir.toString)
+    val mv = spark.read.parquet(StageUtil.staged("mv_stale", dir) { mvDir =>
+      li.where(col("l_orderkey") < hw)
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(sum(col("l_quantity")).as("mv_sum_qty"),
+          count(lit(1)).as("mv_cnt"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(mvDir)
+    })
     val delta = li.where(col("l_orderkey") >= hw)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(sum(col("l_quantity")).as("mv_sum_qty"),
@@ -768,36 +763,22 @@ object Aggregates extends OpModule {
 
   // ── agg_mv_autorewrite ──────────────────────────────────────────────
 
-  /** Per-JVM scratch for the staged MV (the Scans ioDir discipline:
-    * concurrent Verify/Bench runs must not share roundtrip paths). */
-  private lazy val mvIoDir: String =
-    java.nio.file.Files.createTempDirectory("graft_mv").toString
-  private val mvLock = new Object
-
   /** Staged materialized view: lineitem pre-aggregated by
     * (l_returnflag, l_linestatus, l_linenumber) — 3·2·7 = 42 rows at any
     * SF — carrying the decomposable partials (sum/min/max of l_quantity
-    * plus the group count). Completion gated on the committer's own
-    * _SUCCESS, never dir.exists() (the existence latch flips when the
-    * write STARTS — ADVICE r12's staging discipline). */
-  private[graft] def stagedMvDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = new java.io.File(s"$mvIoDir/mv_li_$sfx")
-    mvLock.synchronized {
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
-        Tables.lineitem(s, d)
-          .groupBy(col("l_returnflag"), col("l_linestatus"),
-            col("l_linenumber"))
-          .agg(sum(col("l_quantity")).as("mv_sum_qty"),
-            min(col("l_quantity")).as("mv_min_qty"),
-            max(col("l_quantity")).as("mv_max_qty"),
-            count(lit(1)).as("mv_cnt"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(dir.toString)
-      }
+    * plus the group count). */
+  private[graft] def stagedMvDir(s: SparkSession, d: String): String =
+    StageUtil.staged("mv_li", d) { dir =>
+      Tables.lineitem(s, d)
+        .groupBy(col("l_returnflag"), col("l_linestatus"),
+          col("l_linenumber"))
+        .agg(sum(col("l_quantity")).as("mv_sum_qty"),
+          min(col("l_quantity")).as("mv_min_qty"),
+          max(col("l_quantity")).as("mv_max_qty"),
+          count(lit(1)).as("mv_cnt"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(dir)
     }
-    dir.toString
-  }
 
   /** The NAIVE rollup aggregate — a plain groupBy over the base table,
     * exactly what a user writes with no idea an MV exists — rescued by

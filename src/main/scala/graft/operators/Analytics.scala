@@ -193,13 +193,9 @@ object Analytics extends OpModule {
     * The O(all customers) window of dim_scd2 never re-runs. */
   private[graft] def stagedScd2(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    // marker-gated StageUtil discipline (VERDICT r14 task 7): one
-    // staging per (fixture, version) per JVM under the shared stage
-    // root — no leaked temp dir per process, no Spark write jobs run
-    // inside a hash-map bin lock
-    val name = "scd2_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + java.lang.Long.toHexString(tableVersion(d, "orders"))
-    val dir = StageUtil.staged(name) { base =>
+    // one staging per (fixture, version) per JVM (README "Staging")
+    val version = java.lang.Long.toHexString(tableVersion(d, "orders"))
+    val dir = StageUtil.staged(s"scd2_$version", d) { base =>
       val od = Tables.orders(s, d)
       od.agg(expr("date_trunc('day', max(o_orderdate)) - interval 90 days")
           .as("cutoff"))
@@ -1309,11 +1305,8 @@ object Analytics extends OpModule {
 
   private[graft] def stagedMv(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    // marker-gated StageUtil discipline (VERDICT r14 task 7) — same
-    // migration as stagedScd2 above
-    val name = "mv_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + java.lang.Long.toHexString(eventsVersion(d))
-    val dir = StageUtil.staged(name) { base =>
+    val version = java.lang.Long.toHexString(eventsVersion(d))
+    val dir = StageUtil.staged(s"mv_$version", d) { base =>
       val ev = Tables.events(s, d)
       ev.agg(expr("date_trunc('day', max(ts)) - interval 4 days").as("cutoff"))
         .write.mode("overwrite").parquet(s"$base/meta")
@@ -1453,8 +1446,7 @@ object Analytics extends OpModule {
     * themselves, so it also catches producers that bypass the
     * registry. */
   def dqSchemaDrift(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val base = StageUtil.staged(s"schema_drift_$sfx") { p =>
+    val base = StageUtil.staged("schema_drift", d) { p =>
       val src = Tables.orders(s, d).where(col("o_orderkey") < 100)
       src.select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderpriority"))

@@ -312,23 +312,20 @@ object Joins extends OpModule {
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   def joinBucketed(s: SparkSession, d: String): DataFrame = {
-    // staged once per sfDir per JVM; the suffix is derived from the full
-    // path (not hashCode) so distinct sfDirs can never collide in the
-    // catalog, and the temp dir is only created when staging actually runs
+    // staged once per sfDir per JVM, gated on the catalog (it is
+    // SharedState-wide); table names and paths follow the staging key
+    // rule (README "Staging"), so two data dirs never share a table
     val (liTbl, oTbl) = bucketedTables.computeIfAbsent(d, { _ =>
-      val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-      val li = s"graft_li_$sfx"
-      val o = s"graft_o_$sfx"
+      val (li, o) = (StageUtil.key("graft_li", d), StageUtil.key("graft_o", d))
       if (!s.catalog.tableExists(li)) {
-        val base = java.nio.file.Files.createTempDirectory("graft_buckets").toString
         Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
           .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$base/$li").saveAsTable(li)
+          .option("path", s"${StageUtil.root}/$li").saveAsTable(li)
         Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority"))
           .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .option("path", s"$base/$o").saveAsTable(o)
+          .option("path", s"${StageUtil.root}/$o").saveAsTable(o)
       }
       (li, o)
     })
@@ -349,8 +346,6 @@ object Joins extends OpModule {
     * broadcast) — the fact reads only the partitions the filtered dim
     * actually joins to. At 100 TB this is how a star-schema query avoids
     * scanning the fact table for dimension-filtered slices. */
-  private val dppDim = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def joinDpp(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val factPath = Scans.partitionedOrders(s, d)
@@ -360,14 +355,12 @@ object Joins extends OpModule {
     // predicate shape matters too: DPP's isLikelySelective matcher wants
     // a comparison/IN/LIKE — a bare boolean attribute (or urgent = true,
     // which BooleanSimplification reduces to one) does not qualify
-    val dimPath = dppDim.computeIfAbsent(d, { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft_dpp").toString + "/dim"
+    val dimPath = StageUtil.staged("graft_dpp", d) { p =>
       Seq(
         ("1-URGENT", "urgent"), ("2-HIGH", "urgent"), ("3-MEDIUM", "normal"),
         ("4-NOT SPECIFIED", "normal"), ("5-LOW", "normal")
-      ).toDF("priority", "svc_class").write.parquet(p)
-      p
-    })
+      ).toDF("priority", "svc_class").write.mode("overwrite").parquet(p)
+    }
     s.read.parquet(factPath)
       .join(broadcast(s.read.parquet(dimPath)
           .where(col("svc_class") === "urgent")),
@@ -1147,9 +1140,8 @@ object Joins extends OpModule {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions",
       s0.conf.get("spark.sql.shuffle.partitions"))
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val (li, ord, cust) =
-      (s"graft_cbo_li_$sfx", s"graft_cbo_ord_$sfx", s"graft_cbo_cust_$sfx")
+    val Seq(li, ord, cust) =
+      Seq("graft_cbo_li", "graft_cbo_ord", "graft_cbo_cust").map(StageUtil.key(_, d))
     // the catalog is SharedState-wide: stage once per (JVM, dir)
     cboLock.synchronized {
       if (!s.catalog.tableExists(li)) {

@@ -240,23 +240,20 @@ object LlmOps extends OpModule {
     * lives on storage and is updated per ingest, never rebuilt. Keyed by
     * (path, snapshot fingerprint): parquet part names are UUID-fresh per
     * rewrite, so the name/mtime/length fold detects any corpus rewrite
-    * (the LlmOpsSpec fixture dir is rewritten between tests). */
-  private val dedupIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-
-  private def corpusVersion(d: String): Long = {
+    * (the LlmOpsSpec fixture dir is rewritten between tests). The
+    * fingerprint goes into the staging prefix. */
+  private def corpusVersion(d: String): String = {
     val f = new java.io.File(s"$d/documents.parquet")
     val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq(f))
-    kids.map(k => k.getName.hashCode.toLong ^ k.lastModified() ^ (k.length << 13))
-      .foldLeft(f.lastModified())(_ ^ _)
+    java.lang.Long.toHexString(kids
+      .map(k => k.getName.hashCode.toLong ^ k.lastModified() ^ (k.length << 13))
+      .foldLeft(f.lastModified())(_ ^ _))
   }
 
   private[graft] def stagedDedupIndex(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     graft.GraftExtensions.register(s)
-    val dir = dedupIndexDirs.computeIfAbsent((d, corpusVersion(d)), { _ =>
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_dedup_index").toString
+    val dir = StageUtil.staged(s"graft_dedup_index_${corpusVersion(d)}", d) { base =>
       val isNew = pmod(col("doc_id"), lit(10)) === 0
       Tables.documents(s, d).where(!isNew)
         .withColumn("toks", split(col("text"), " "))
@@ -270,8 +267,7 @@ object LlmOps extends OpModule {
         .select(col("doc_id"), explode(expr(bandsExpr)).as("b"))
         .select(col("doc_id"), col("b.band"), col("b.bh"))
         .write.mode("overwrite").parquet(s"$base/bands")
-      base
-    })
+    }
     (s.read.parquet(s"$dir/bands"), s.read.parquet(s"$dir/shingles"))
   }
 
@@ -350,15 +346,10 @@ object LlmOps extends OpModule {
     * to parquet; docs in no verified pair label themselves. This is the
     * production layout — cluster membership lives WITH the index and is
     * updated per ingest, never re-derived from the corpus. */
-  private val indexLabelDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-
   private[graft] def stagedIndexLabels(s: SparkSession, d: String): DataFrame = {
     val (idxBands, idxSh) = stagedDedupIndex(s, d)
-    val dir = indexLabelDirs.computeIfAbsent((d, corpusVersion(d)), { _ =>
+    val dir = StageUtil.staged(s"graft_dedup_labels_${corpusVersion(d)}", d) { base =>
       val tau = 0.8
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_dedup_labels").toString
       val cands = idxBands.as("x").join(idxBands.as("y"),
           col("x.band") === col("y.band") && col("x.bh") === col("y.bh")
             && col("x.doc_id") < col("y.doc_id"))
@@ -382,8 +373,7 @@ object LlmOps extends OpModule {
           coalesce(col("cc"), col("doc_id")).as("cluster_id"))
         .write.mode("overwrite").parquet(s"$base/labels")
       (edges +: res.live).foreach(MemoUtil.dropCheckpoint)
-      base
-    })
+    }
     s.read.parquet(s"$dir/labels")
   }
 

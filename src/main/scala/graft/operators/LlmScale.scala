@@ -1153,8 +1153,7 @@ object LlmScale extends OpModule {
     * same three Spark writes (r17, the graphV1Template twin). */
   private def ivfV1Template(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
-    StageUtil.staged("ivfv1_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { base =>
+    StageUtil.staged("ivfv1", d) { base =>
       val (qv, _, a2, c2) = lloyd(s, d)
       c2.write.parquet(s"$base/centroids")
       a2.select(col("vec_id"), col("cluster"))
@@ -1173,8 +1172,7 @@ object LlmScale extends OpModule {
 
   private[graft] def ivfStoreDir(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
-    StageUtil.staged("ivfstore_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { base =>
+    StageUtil.staged("ivfstore", d) { base =>
       val (qv, _, a2, _) = lloyd(s, d)
       // v1: the trained artifact (file-copied from the per-JVM template)
       copyIvfV1(s, d, base)
@@ -1368,8 +1366,7 @@ object LlmScale extends OpModule {
     * maxFilesPerTrigger=1. Staged once per JVM. */
   private[graft] def streamVectorTopic(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
-    StageUtil.staged("vecstream_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { base =>
+    StageUtil.staged("vecstream", d) { base =>
       val (qv, _, _, _) = lloyd(s, d)
       val delta = ivfDeltaShard(qv)
       delta.where(col("new_id") % 2 === 0).coalesce(1)
@@ -3119,8 +3116,7 @@ object LlmScale extends OpModule {
     * once per JVM and instantiation is a flat file copy. */
   private def graphV1Template(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
-    StageUtil.staged("graphv1_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { base =>
+    StageUtil.staged("graphv1", d) { base =>
       val (adj, entries, qv) = annGraphAdjacency(s, d)
       adj.write.parquet(s"$base/adjacency")
       entries.write.parquet(s"$base/entries")
@@ -3138,8 +3134,7 @@ object LlmScale extends OpModule {
 
   private[graft] def graphStoreDir(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
-    StageUtil.staged("graphstore_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { base =>
+    StageUtil.staged("graphstore", d) { base =>
       val (_, _, qv) = annGraphAdjacency(s, d)
       // v1: the built graph (file-copied from the per-JVM template)
       copyGraphV1(s, d, base)
@@ -3428,8 +3423,7 @@ object LlmScale extends OpModule {
     * two REAL offset-tracked micro-batches under maxFilesPerTrigger=1. */
   private[graft] def streamGraphTopic(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
-    StageUtil.staged("graphstream_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { base =>
+    StageUtil.staged("graphstream", d) { base =>
       val (_, _, qv) = annGraphAdjacency(s, d)
       val delta = graphDelta(qv)
         .select(col("qid").as("new_id"), col("qq").as("dv"))

@@ -16,26 +16,23 @@ import graft.pipeline.{FileTopic, Pipeline}
   * asserted in PipelineSpec. */
 object PipelineOps extends OpModule {
 
-  private lazy val scratch: String =
-    java.nio.file.Files.createTempDirectory("graft_pipeline").toString
+  private def fresh(tag: String): String =
+    s"${StageUtil.root}/$tag-${UUID.randomUUID()}"
 
   /** Stage the fixture (single file or part-file directory — ScaleProbe
     * clone tiers are directory-shaped) into a directory topic (file
     * sources watch directories), once per (JVM, sfDir). Shared
     * part-aware copy: StageUtil (ADVICE r10 — a bare Files.copy on a
     * directory-shaped dataset stages a silently EMPTY topic). */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def eventsTopicDir(d: String): String =
-    staged.computeIfAbsent(d, { dir =>
-      val t = java.nio.file.Paths.get(s"$scratch/events-${UUID.randomUUID()}")
-      StageUtil.stageTopic(
-        java.nio.file.Paths.get(s"$dir/events.parquet"), t, "events")
-      t.toString
-    })
+  private def topicDir(d: String, table: String): String =
+    StageUtil.staged(s"${table}_topic", d) { t =>
+      StageUtil.stageTopic(java.nio.file.Paths.get(s"$d/$table.parquet"),
+        java.nio.file.Paths.get(t), table)
+    }
 
   /** The declared pipeline: three systems over the events topic. */
   private[graft] def revenuePipeline(d: String): Pipeline =
-    Pipeline.from("purchase-revenue", FileTopic(eventsTopicDir(d)))
+    Pipeline.from("purchase-revenue", FileTopic(topicDir(d, "events")))
       // system 1: decode topic payload (raw event time → µs TimestampType)
       .stage(graft.Tables.normalizeTs)
       // system 2: keep revenue-bearing events
@@ -48,19 +45,11 @@ object PipelineOps extends OpModule {
           .otherwise("low").as("band")))
 
   def pipelineE2e(s: SparkSession, d: String): DataFrame = {
-    val out = s"$scratch/out-${UUID.randomUUID()}"
-    val q = revenuePipeline(d).start(s, out, s"$scratch/ckpt-${UUID.randomUUID()}")
+    val out = fresh("out")
+    val q = revenuePipeline(d).start(s, out, fresh("ckpt"))
     if (!q.awaitTermination(180000L)) q.stop()
     s.read.parquet(out)
   }
-
-  private def documentsTopicDir(d: String): String =
-    staged.computeIfAbsent(s"docs:$d", { _ =>
-      val t = java.nio.file.Paths.get(s"$scratch/docs-${UUID.randomUUID()}")
-      StageUtil.stageTopic(
-        java.nio.file.Paths.get(s"$d/documents.parquet"), t, "documents")
-      t.toString
-    })
 
   /** The CURATION pipeline as a declared streaming job — the C4-style
     * ingest path run incrementally instead of as a batch sweep: token
@@ -76,7 +65,7 @@ object PipelineOps extends OpModule {
     * once documents carry event time; the gate and projection are
     * stateless per-row systems. */
   private[graft] def curationPipeline(d: String): Pipeline =
-    Pipeline.from("doc-curation", FileTopic(documentsTopicDir(d)))
+    Pipeline.from("doc-curation", FileTopic(topicDir(d, "documents")))
       // system 1: token-count quality gate (the llm_quality_filter bound)
       .stage(_.withColumn("n_tokens", size(split(col("text"), " ")))
         .where(col("n_tokens") >= 10 && col("n_tokens") <= 5000))
@@ -92,8 +81,8 @@ object PipelineOps extends OpModule {
       .stage(_.select(col("content_hash"), col("n_tokens")))
 
   def pipelineCuration(s: SparkSession, d: String): DataFrame = {
-    val out = s"$scratch/cur-${UUID.randomUUID()}"
-    val q = curationPipeline(d).start(s, out, s"$scratch/cur-ckpt-${UUID.randomUUID()}")
+    val out = fresh("cur")
+    val q = curationPipeline(d).start(s, out, fresh("cur-ckpt"))
     if (!q.awaitTermination(180000L)) q.stop()
     s.read.parquet(out)
   }

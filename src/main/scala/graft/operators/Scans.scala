@@ -19,10 +19,7 @@ import graft.Tables
   */
 object Scans extends OpModule {
 
-  /** Per-JVM scratch dir — concurrent Verify/Bench runs must not share
-    * roundtrip paths (a fixed /tmp path corrupts under two sessions). */
-  private lazy val ioDir: String =
-    java.nio.file.Files.createTempDirectory("graft_io").toString
+  /** Serializes scan_malformed's write-then-plant (README "Staging"). */
   private val ioLock = new Object
 
   /** Full columnar scan. Deliberately sort-free: a scan is a bag, and at
@@ -42,7 +39,7 @@ object Scans extends OpModule {
     * an explicit schema (no inference job at scale). Doubles excluded —
     * text roundtrip of binary floats is not oracle-exact. */
   def scanCsv(s: SparkSession, d: String): DataFrame = {
-    val path = s"$ioDir/part_csv"
+    val path = s"${StageUtil.root}/part_csv"
     Tables.part(s, d)
       .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_size"))
       .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
@@ -97,8 +94,8 @@ object Scans extends OpModule {
     * each task decodes its own files, which is why this beats a
     * driver-side loop at any scale). The fixture corpus has no media
     * blobs, so a deterministic 50-doc slice of `documents` is staged as
-    * individual .txt files (bytes = UTF-8 text; staged once per JVM in
-    * the per-process scratch dir) and read back through the REAL
+    * individual .txt files (bytes = UTF-8 text; staged once per JVM,
+    * README "Staging") and read back through the REAL
     * binaryFile source; the op emits doc_id parsed from the file name,
     * the byte length, and the decoded content. The oracle never sees
     * the staged files: it replays the round trip from `documents`
@@ -109,29 +106,18 @@ object Scans extends OpModule {
   /** Staged 50-doc binary fixture dir — fixture construction ONLY
     * (bounded 50-row collect): production media files already exist on
     * storage; there is no staging step at scale, just the binaryFile
-    * scan. Synchronized: suites share the JVM and may race the
-    * check-then-create. Keyed by the data dir (like scan_evolving /
-    * scan_partitioned): a second call with a different d (ScaleProbe
-    * tier clone, planted-fixture spec) must stage ITS documents, not
-    * silently reuse the first dir's files. Exposed package-private so
-    * the dhash front-door spec can scan the same staged blobs. */
-  private[graft] def stagedBinDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = new java.io.File(s"$ioDir/bin_docs_$sfx")
-    ioLock.synchronized {
-      if (!dir.exists()) {
-        dir.mkdirs()
-        Tables.documents(s, d).where(col("doc_id") < 50)
-          .select(col("doc_id"), col("text")).collect()
-          .foreach { r =>
-            java.nio.file.Files.write(
-              dir.toPath.resolve(s"doc_${r.getLong(0)}.txt"),
-              r.getString(1).getBytes("UTF-8"))
-          }
-      }
+    * scan. Exposed package-private so the dhash front-door spec can
+    * scan the same staged blobs. */
+  private[graft] def stagedBinDir(s: SparkSession, d: String): String =
+    StageUtil.staged("bin_docs", d) { dir =>
+      Tables.documents(s, d).where(col("doc_id") < 50)
+        .select(col("doc_id"), col("text")).collect()
+        .foreach { r =>
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(dir, s"doc_${r.getLong(0)}.txt"),
+            r.getString(1).getBytes("UTF-8"))
+        }
     }
-    dir.toString
-  }
 
   /** Staged SORT-CLUSTERED lineitem slice with deliberately small
     * parquet row groups (64 KB block size → dozens of groups instead of
@@ -143,25 +129,15 @@ object Scans extends OpModule {
     * 100 % of the table for a keyed slice. Staged once per (JVM, data
     * dir), 4 range partitions sorted within (the production write
     * shape). */
-  private[graft] def stagedSortedDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = new java.io.File(s"$ioDir/sorted_li_$sfx")
-    ioLock.synchronized {
-      // gate on the committer's _SUCCESS, not the dir: the dir exists the
-      // moment the write STARTS, so an interrupted run would latch a
-      // half-staged layout for the rest of the JVM (the
-      // sink_dynamic_overwrite marker discipline)
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
-        Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-          .repartitionByRange(4, col("l_orderkey"))
-          .sortWithinPartitions(col("l_orderkey"))
-          .write.option("parquet.block.size", "65536")
-          .mode("overwrite").parquet(dir.toString)
-      }
+  private[graft] def stagedSortedDir(s: SparkSession, d: String): String =
+    StageUtil.staged("sorted_li", d) { dir =>
+      Tables.lineitem(s, d)
+        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
+        .repartitionByRange(4, col("l_orderkey"))
+        .sortWithinPartitions(col("l_orderkey"))
+        .write.option("parquet.block.size", "65536")
+        .mode("overwrite").parquet(dir)
     }
-    dir.toString
-  }
 
   /** Keyed slice over the sort-clustered layout: the range predicate
     * reaches the scan (PushedFilters) and min/max footer stats skip
@@ -191,27 +167,18 @@ object Scans extends OpModule {
     * `spec` stages the no-bloom control beside it (same layout, blooms
     * off) so the pruning delta is attributable to the bloom alone. */
   private[graft] def stagedBloomDir(s: SparkSession, d: String,
-                                    bloom: Boolean = true): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val tag = if (bloom) "b1" else "b0"
-    val dir = new java.io.File(s"$ioDir/bloom_ord_${tag}_$sfx")
-    ioLock.synchronized {
-      // completion-marker gate (the committer's own _SUCCESS), not
-      // dir.exists(): the existence latch flips when the write STARTS
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
-        Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .repartition(16, col("o_orderkey"))
-          .write
-          .option("parquet.bloom.filter.enabled#o_orderkey", bloom.toString)
-          .option("parquet.bloom.filter.expected.ndv#o_orderkey", "65536")
-          .option("parquet.enable.dictionary#o_orderkey", "false")
-          .option("parquet.block.size", "65536")
-          .mode("overwrite").parquet(dir.toString)
-      }
+                                    bloom: Boolean = true): String =
+    StageUtil.staged(if (bloom) "bloom_ord_b1" else "bloom_ord_b0", d) { dir =>
+      Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+        .repartition(16, col("o_orderkey"))
+        .write
+        .option("parquet.bloom.filter.enabled#o_orderkey", bloom.toString)
+        .option("parquet.bloom.filter.expected.ndv#o_orderkey", "65536")
+        .option("parquet.enable.dictionary#o_orderkey", "false")
+        .option("parquet.block.size", "65536")
+        .mode("overwrite").parquet(dir)
     }
-    dir.toString
-  }
 
   /** Staged 16-way range-clustered lineitem slice plus a MANIFEST — a
     * sidecar parquet recording per data file its key min/max and row
@@ -220,31 +187,21 @@ object Scans extends OpModule {
     * bottleneck ABOVE row groups is planning — listing a million files
     * and reading a million footers — and a manifest answers both with
     * one small scan. Keyed by data dir like every staged layout. */
-  private[graft] def stagedManifestDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = new java.io.File(s"$ioDir/manifest_li_$sfx")
-    ioLock.synchronized {
-      // TWO writes stage here (data, then manifest) — the gate is the
-      // LAST write's _SUCCESS: gating on dir.exists() would latch after
-      // the first write begins, and an interrupted run would serve a
-      // manifest-less layout forever (ADVICE r12)
-      if (!new java.io.File(s"$dir/manifest/_SUCCESS").exists()) {
-        Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity"))
-          .repartitionByRange(16, col("l_orderkey"))
-          .sortWithinPartitions(col("l_orderkey"))
-          .write.mode("overwrite").parquet(s"$dir/data")
-        s.read.parquet(s"$dir/data")
-          .groupBy(input_file_name().as("path"))
-          .agg(min(col("l_orderkey")).as("k_min"),
-            max(col("l_orderkey")).as("k_max"),
-            count(lit(1)).as("n_rows"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/manifest")
-      }
+  private[graft] def stagedManifestDir(s: SparkSession, d: String): String =
+    StageUtil.staged("manifest_li", d) { dir =>
+      Tables.lineitem(s, d)
+        .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity"))
+        .repartitionByRange(16, col("l_orderkey"))
+        .sortWithinPartitions(col("l_orderkey"))
+        .write.mode("overwrite").parquet(s"$dir/data")
+      s.read.parquet(s"$dir/data")
+        .groupBy(input_file_name().as("path"))
+        .agg(min(col("l_orderkey")).as("k_min"),
+          max(col("l_orderkey")).as("k_max"),
+          count(lit(1)).as("n_rows"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/manifest")
     }
-    dir.toString
-  }
 
   /** Keyed slice planned FROM THE MANIFEST: the driver reads the
     * |files|-row sidecar (bounded by layout — the planner-metadata
@@ -305,7 +262,7 @@ object Scans extends OpModule {
     * scan_json). The oracle is the source table: the check spans
     * serialize → distributed line scan → parse. */
   def scanText(s: SparkSession, d: String): DataFrame = {
-    val path = s"$ioDir/docs_text"
+    val path = s"${StageUtil.root}/docs_text"
     Tables.documents(s, d)
       .select(concat(col("doc_id"), lit("\t"), col("text")).as("value"))
       .write.mode(SaveMode.Overwrite).text(path)
@@ -317,7 +274,7 @@ object Scans extends OpModule {
 
   /** JSON-lines roundtrip on `nation` (ints + strings only). */
   def scanJson(s: SparkSession, d: String): DataFrame = {
-    val path = s"$ioDir/nation_json"
+    val path = s"${StageUtil.root}/nation_json"
     Tables.nation(s, d).write.mode(SaveMode.Overwrite).json(path)
     val schema = StructType(Seq(
       StructField("n_nationkey", IntegerType), StructField("n_name", StringType),
@@ -341,7 +298,7 @@ object Scans extends OpModule {
     * The planted lines are deterministic constants, so the oracle
     * replays the audit from the source table + the plant. */
   def scanMalformed(s: SparkSession, d: String): DataFrame = {
-    val path = s"$ioDir/nation_badcsv"
+    val path = s"${StageUtil.root}/nation_badcsv"
     ioLock.synchronized {
       Tables.nation(s, d)
         .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
@@ -383,7 +340,7 @@ object Scans extends OpModule {
     * rule). Like all text sources the read is splittable per file and
     * schema-explicit, so no inference job runs at scale. */
   def scanXml(s: SparkSession, d: String): DataFrame = {
-    val path = s"$ioDir/nation_xml"
+    val path = s"${StageUtil.root}/nation_xml"
     Tables.nation(s, d)
       .write.mode(SaveMode.Overwrite).format("xml")
       .option("rootTag", "nations").option("rowTag", "nation")
@@ -398,7 +355,7 @@ object Scans extends OpModule {
   /** Materialize-then-rescan: the write path Verify itself exercises, made
     * an explicit operator (write agg → parquet → read back). */
   def sinkParquet(s: SparkSession, d: String): DataFrame = {
-    val path = s"$ioDir/sink_parquet"
+    val path = s"${StageUtil.root}/sink_parquet"
     Tables.orders(s, d)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -424,47 +381,33 @@ object Scans extends OpModule {
     * swaps; the audit aggregate is per-priority (n, exact cents, id
     * checksum). */
   def sinkDynamicOverwrite(s: SparkSession, d: String): DataFrame = {
-    // d-keyed like every staged path (stagedBinDir's rule): a second
-    // call with a different data dir must stage ITS dataset, never
-    // silently read back the first one's
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val path = s"$ioDir/sink_dynamic_overwrite_$sfx"
     val cutoff = "1997-01-01"
-    // the gate is a COMPLETION marker written after BOTH writes commit
-    // (underscore-prefixed → invisible to the parquet reader): gating on
-    // the directory's existence would latch after the FIRST write, and a
-    // failed delta write would then serve uncorrected data forever
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_STAGED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(path)
+    val path = StageUtil.staged("sink_dynamic_overwrite", d) { path =>
+      Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          col("o_orderdate"), col("o_orderpriority"))
+        .write.partitionBy("o_orderpriority")
+        .mode(SaveMode.Overwrite).parquet(path)
+      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      try {
+        // the delta touches ONLY the urgent/high partitions — the
+        // other three must come through with their original files
+        // (under STATIC mode this write would wipe them: the classic
+        // data-loss mix-up this op pins)
         Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_totalprice"),
+          .where(col("o_orderdate") >= lit(cutoff) &&
+            col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
+          .select(col("o_orderkey"),
+            (col("o_totalprice") * 2).as("o_totalprice"),
             col("o_orderdate"), col("o_orderpriority"))
           .write.partitionBy("o_orderpriority")
           .mode(SaveMode.Overwrite).parquet(path)
-        val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          // the delta touches ONLY the urgent/high partitions — the
-          // other three must come through with their original files
-          // (under STATIC mode this write would wipe them: the classic
-          // data-loss mix-up this op pins)
-          Tables.orders(s, d)
-            .where(col("o_orderdate") >= lit(cutoff) &&
-              col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
-            .select(col("o_orderkey"),
-              (col("o_totalprice") * 2).as("o_totalprice"),
-              col("o_orderdate"), col("o_orderpriority"))
-            .write.partitionBy("o_orderpriority")
-            .mode(SaveMode.Overwrite).parquet(path)
-        } finally prev match {
-          case Some(v) =>
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None =>
-            s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-        java.nio.file.Files.createFile(marker)
+      } finally prev match {
+        case Some(v) =>
+          s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+        case None =>
+          s.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
     }
     s.read.parquet(path)
@@ -596,28 +539,21 @@ object Scans extends OpModule {
   /** Ingest-time-clustered events + manifest — the 100 TB time-series
     * layout (facts land ordered by event time; every file covers a
     * narrow ts band). Same sidecar discipline as stagedManifestDir:
-    * per-file (ts_min, ts_max, n_rows), completion gated on the LAST
-    * write's _SUCCESS. */
-  private[graft] def stagedTsManifestDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = new java.io.File(s"$ioDir/manifest_ev_$sfx")
-    ioLock.synchronized {
-      if (!new java.io.File(s"$dir/manifest/_SUCCESS").exists()) {
-        Tables.events(s, d)
-          .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-          .repartitionByRange(16, col("ts"))
-          .sortWithinPartitions(col("ts"))
-          .write.mode("overwrite").parquet(s"$dir/data")
-        s.read.parquet(s"$dir/data")
-          .groupBy(input_file_name().as("path"))
-          .agg(min(col("ts")).as("ts_min"), max(col("ts")).as("ts_max"),
-            count(lit(1)).as("n_rows"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/manifest")
-      }
+    * per-file (ts_min, ts_max, n_rows). */
+  private[graft] def stagedTsManifestDir(s: SparkSession, d: String): String =
+    StageUtil.staged("manifest_ev", d) { dir =>
+      Tables.events(s, d)
+        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+        .repartitionByRange(16, col("ts"))
+        .sortWithinPartitions(col("ts"))
+        .write.mode("overwrite").parquet(s"$dir/data")
+      s.read.parquet(s"$dir/data")
+        .groupBy(input_file_name().as("path"))
+        .agg(min(col("ts")).as("ts_min"), max(col("ts")).as("ts_max"),
+          count(lit(1)).as("n_rows"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/manifest")
     }
-    dir.toString
-  }
 
   /** DYNAMIC file pruning — scan_manifest_prune's literal range becomes
     * a RUNTIME-derived predicate, the "incident investigation" shape: a
@@ -669,31 +605,24 @@ object Scans extends OpModule {
     * order month, the spec the access pattern actually wants. A spec
     * SIDECAR (epoch → path + partition column, the manifest-file role)
     * is what makes the union readable: the reader dispatches each
-    * epoch's pruning from ITS OWN spec. Completion gated on the LAST
-    * write's _SUCCESS. */
-  private[graft] def stagedEvolvedPartsDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = new java.io.File(s"$ioDir/evolve_parts_$sfx")
-    ioLock.synchronized {
-      if (!new java.io.File(s"$dir/spec/_SUCCESS").exists()) {
-        val ord = Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_totalprice"),
-            col("o_orderdate"), col("o_orderpriority"))
-        ord.where(col("o_orderdate") < lit("1998-01-01"))
-          .write.partitionBy("o_orderpriority")
-          .mode("overwrite").parquet(s"$dir/epoch1")
-        ord.where(col("o_orderdate") >= lit("1998-01-01"))
-          .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-          .write.partitionBy("o_month")
-          .mode("overwrite").parquet(s"$dir/epoch2")
-        import s.implicits._
-        Seq(("epoch1", "o_orderpriority"), ("epoch2", "o_month"))
-          .toDF("epoch", "part_col")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/spec")
-      }
+    * epoch's pruning from ITS OWN spec. */
+  private[graft] def stagedEvolvedPartsDir(s: SparkSession, d: String): String =
+    StageUtil.staged("evolve_parts", d) { dir =>
+      val ord = Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          col("o_orderdate"), col("o_orderpriority"))
+      ord.where(col("o_orderdate") < lit("1998-01-01"))
+        .write.partitionBy("o_orderpriority")
+        .mode("overwrite").parquet(s"$dir/epoch1")
+      ord.where(col("o_orderdate") >= lit("1998-01-01"))
+        .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
+        .write.partitionBy("o_month")
+        .mode("overwrite").parquet(s"$dir/epoch2")
+      import s.implicits._
+      Seq(("epoch1", "o_orderpriority"), ("epoch2", "o_month"))
+        .toDF("epoch", "part_col")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/spec")
     }
-    dir.toString
-  }
 
   /** Query across the evolved specs: a winter slice (1997-11 .. 1998-02,
     * straddling the spec change) of the URGENT/HIGH priorities. Each
@@ -780,19 +709,9 @@ object Scans extends OpModule {
   }
 
   def sinkMergeCow(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val path = s"$ioDir/merge_cow_$sfx"
-    // completion marker AFTER the merge commits (the dynamic-overwrite
-    // staging discipline): an interrupted run restages from scratch
-    // instead of serving a half-merged table forever
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_MERGED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(path)
-        mergeCowStageTarget(s, d, path)
-        mergeCowApply(s, d, path)
-        java.nio.file.Files.createFile(marker)
-      }
+    val path = StageUtil.staged("merge_cow", d) { path =>
+      mergeCowStageTarget(s, d, path)
+      mergeCowApply(s, d, path)
     }
     s.read.parquet(path)
       .groupBy(col("o_orderpriority"))
@@ -856,16 +775,9 @@ object Scans extends OpModule {
           col("o_orderpriority")))
 
   def sinkMergeMor(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val path = s"$ioDir/merge_mor_$sfx"
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_MERGED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(path)
-        mergeMorStageBase(s, d, path)
-        mergeMorCommit(s, d, path)
-        java.nio.file.Files.createFile(marker)
-      }
+    val path = StageUtil.staged("merge_mor", d) { path =>
+      mergeMorStageBase(s, d, path)
+      mergeMorCommit(s, d, path)
     }
     mergeMorRead(s, path)
       .groupBy(col("o_orderpriority"))
@@ -906,20 +818,11 @@ object Scans extends OpModule {
     * time-travel claim) plus the CDC row (changed-row count, cents
     * delta, changed-key checksum). The oracle replays all three from
     * `orders` alone: versioning changes file lifecycle, never results. */
-  private[graft] def timeTravelDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/time_travel_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_COMMITTED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        timeTravelWriteV1(s, d, dir)
-        timeTravelWriteV2(s, dir)
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def timeTravelDir(s: SparkSession, d: String): String =
+    StageUtil.staged("time_travel", d) { dir =>
+      timeTravelWriteV1(s, d, dir)
+      timeTravelWriteV2(s, dir)
     }
-    dir
-  }
 
   /** Per-file (path, k_min, k_max, n_rows) stats — one distributed
     * read-back pass grouped on input_file_name, coalesced to the single
@@ -942,8 +845,7 @@ object Scans extends OpModule {
     // files re-root onto `dir` (file names are preserved by copyDir).
     // The prefix comes from Path.toUri, so it is percent-encoded exactly
     // as input_file_name() encodes it.
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val tpl = StageUtil.staged(s"ttv1_$sfx") { base =>
+    val tpl = StageUtil.staged("ttv1", d) { base =>
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
         .repartitionByRange(8, col("o_orderkey"))
@@ -1004,29 +906,20 @@ object Scans extends OpModule {
   /** Staged v1→v2→v3 manifest chain for the streaming CDC source —
     * its own copy (the source must be free to see a longer history
     * than scan_time_travel's fixture pins). */
-  private[graft] def manifestStreamDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/manifest_stream_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_COMMITTED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        timeTravelWriteV1(s, d, dir)
-        timeTravelWriteV2(s, dir)
-        timeTravelWriteV3(s, dir)
-        // the commit log sidecar (version → commit timestamp): what AS
-        // OF <timestamp> resolves against. Fixed deterministic stamps —
-        // a lakehouse stores the wall-clock of each commit; the fixture
-        // pins them so the oracle can replay the resolution
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, "commits"),
-          Seq("1 2024-01-01T00:00:00Z", "2 2024-02-01T00:00:00Z",
-            "3 2024-03-01T00:00:00Z").mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def manifestStreamDir(s: SparkSession, d: String): String =
+    StageUtil.staged("manifest_stream", d) { dir =>
+      timeTravelWriteV1(s, d, dir)
+      timeTravelWriteV2(s, dir)
+      timeTravelWriteV3(s, dir)
+      // the commit log sidecar (version → commit timestamp): what AS
+      // OF <timestamp> resolves against. Fixed deterministic stamps —
+      // a lakehouse stores the wall-clock of each commit; the fixture
+      // pins them so the oracle can replay the resolution
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, "commits"),
+        Seq("1 2024-01-01T00:00:00Z", "2 2024-02-01T00:00:00Z",
+          "3 2024-03-01T00:00:00Z").mkString("\n").getBytes("UTF-8"))
     }
-    dir
-  }
 
   /** Staged v1→v2→v3→v4 chain whose data files CARRY ROW LINEAGE
     * (VERDICT r15 task 6): `row_id` is assigned at v1 ingest and
@@ -1040,71 +933,62 @@ object Scans extends OpModule {
     * [800, 900] dropped, fresh rows with NEW ids appended) — the
     * commit class that must classify as D and I, never U. The
     * streaming CDC source reads this chain in lineage mode. */
-  private[graft] def lineageStreamDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/lineage_stream_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_COMMITTED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        Tables.orders(s, d)
-          .select(col("o_orderkey").as("row_id"), col("o_orderkey"),
-            col("o_totalprice"))
-          .repartitionByRange(8, col("o_orderkey"))
-          .sortWithinPartitions(col("o_orderkey"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/d1")
-        manifestStats(s, s"$dir/d1").coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")
-        // v2: COW price update — row ids carried through the rewrite
-        val m1 = s.read.parquet(s"$dir/m1")
-        val hit2 = col("k_max") >= 100 && col("k_min") <= 400
-        val p2 = m1.where(hit2).select(col("path"))
-          .collect().map(_.getString(0))
-        readPaths(s, p2.toIndexedSeq)
-          .withColumn("o_totalprice",
-            when(col("o_orderkey").between(100, 400),
-              col("o_totalprice") * 2).otherwise(col("o_totalprice")))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/d2")
-        m1.where(!hit2).unionByName(manifestStats(s, s"$dir/d2"))
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/m2")
-        // v3: KEY MIGRATION — the key changes, the row id does not
-        val m2 = s.read.parquet(s"$dir/m2")
-        val hit3 = col("k_max") >= 500 && col("k_min") <= 700
-        val p3 = m2.where(hit3).select(col("path"))
-          .collect().map(_.getString(0))
-        readPaths(s, p3.toIndexedSeq)
-          .withColumn("o_orderkey",
-            when(col("o_orderkey").between(500, 700),
-              col("o_orderkey") + 500000000L).otherwise(col("o_orderkey")))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/d3")
-        m2.where(!hit3).unionByName(manifestStats(s, s"$dir/d3"))
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/m3")
-        // v4: DELETE + INSERT through one COW rewrite (r16) — the
-        // files overlapping keys [800, 900] drop their odd keys and
-        // gain one NEW row per even key (fresh row ids and keys offset
-        // +7·10⁸, price +500) — the commit classes a changelog consumer
-        // must see as D and I, never as U
-        val m3 = s.read.parquet(s"$dir/m3")
-        val hit4 = col("k_max") >= 800 && col("k_min") <= 900
-        val p4 = m3.where(hit4).select(col("path"))
-          .collect().map(_.getString(0))
-        val base4 = readPaths(s, p4.toIndexedSeq)
-        base4.where(!(col("o_orderkey").between(800, 900) &&
-            col("o_orderkey") % 2 === 1))
-          .unionByName(base4
-            .where(col("o_orderkey").between(800, 900) &&
-              col("o_orderkey") % 2 === 0)
-            .select((col("row_id") + 700000000L).as("row_id"),
-              (col("o_orderkey") + 700000000L).as("o_orderkey"),
-              (col("o_totalprice") + 500.0).as("o_totalprice")))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/d4")
-        m3.where(!hit4).unionByName(manifestStats(s, s"$dir/d4"))
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/m4")
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def lineageStreamDir(s: SparkSession, d: String): String =
+    StageUtil.staged("lineage_stream", d) { dir =>
+      Tables.orders(s, d)
+        .select(col("o_orderkey").as("row_id"), col("o_orderkey"),
+          col("o_totalprice"))
+        .repartitionByRange(8, col("o_orderkey"))
+        .sortWithinPartitions(col("o_orderkey"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/d1")
+      manifestStats(s, s"$dir/d1").coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")
+      // v2: COW price update — row ids carried through the rewrite
+      val m1 = s.read.parquet(s"$dir/m1")
+      val hit2 = col("k_max") >= 100 && col("k_min") <= 400
+      val p2 = m1.where(hit2).select(col("path"))
+        .collect().map(_.getString(0))
+      readPaths(s, p2.toIndexedSeq)
+        .withColumn("o_totalprice",
+          when(col("o_orderkey").between(100, 400),
+            col("o_totalprice") * 2).otherwise(col("o_totalprice")))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/d2")
+      m1.where(!hit2).unionByName(manifestStats(s, s"$dir/d2"))
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/m2")
+      // v3: KEY MIGRATION — the key changes, the row id does not
+      val m2 = s.read.parquet(s"$dir/m2")
+      val hit3 = col("k_max") >= 500 && col("k_min") <= 700
+      val p3 = m2.where(hit3).select(col("path"))
+        .collect().map(_.getString(0))
+      readPaths(s, p3.toIndexedSeq)
+        .withColumn("o_orderkey",
+          when(col("o_orderkey").between(500, 700),
+            col("o_orderkey") + 500000000L).otherwise(col("o_orderkey")))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/d3")
+      m2.where(!hit3).unionByName(manifestStats(s, s"$dir/d3"))
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/m3")
+      // v4: DELETE + INSERT through one COW rewrite (r16) — the
+      // files overlapping keys [800, 900] drop their odd keys and
+      // gain one NEW row per even key (fresh row ids and keys offset
+      // +7·10⁸, price +500) — the commit classes a changelog consumer
+      // must see as D and I, never as U
+      val m3 = s.read.parquet(s"$dir/m3")
+      val hit4 = col("k_max") >= 800 && col("k_min") <= 900
+      val p4 = m3.where(hit4).select(col("path"))
+        .collect().map(_.getString(0))
+      val base4 = readPaths(s, p4.toIndexedSeq)
+      base4.where(!(col("o_orderkey").between(800, 900) &&
+          col("o_orderkey") % 2 === 1))
+        .unionByName(base4
+          .where(col("o_orderkey").between(800, 900) &&
+            col("o_orderkey") % 2 === 0)
+          .select((col("row_id") + 700000000L).as("row_id"),
+            (col("o_orderkey") + 700000000L).as("o_orderkey"),
+            (col("o_totalprice") + 500.0).as("o_totalprice")))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/d4")
+      m3.where(!hit4).unionByName(manifestStats(s, s"$dir/d4"))
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/m4")
     }
-    dir
-  }
 
   /** TIME TRAVEL `AS OF <timestamp>` — the calendar face of
     * scan_time_travel's version reads (Iceberg/Delta's
@@ -1252,8 +1136,7 @@ object Scans extends OpModule {
     * the critical section, which is what lets thousand-writer fleets
     * share one table. */
   private[graft] def occDir(s: SparkSession, d: String): String =
-    StageUtil.staged("merge_occ_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { dir =>
+    StageUtil.staged("merge_occ", d) { dir =>
       timeTravelWriteV1(s, d, dir)
       TableLog.publish(dir, "m1")
       val maxKey = s.read.parquet(s"$dir/d1")
@@ -1388,8 +1271,7 @@ object Scans extends OpModule {
   }
 
   private[graft] def compactOccDir(s: SparkSession, d: String): String =
-    StageUtil.staged("compact_occ_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { dir =>
+    StageUtil.staged("compact_occ", d) { dir =>
       // the delta log of version v rides beside its manifest: `log{v}`
       def writeLog(v: Long, lines: Seq[String]): Unit =
         if (lines.nonEmpty) TableLog.atomicWrite(
@@ -1517,8 +1399,7 @@ object Scans extends OpModule {
     * already maintains; declared read predicates are how Serializable
     * Snapshot Isolation ships in real lakehouse engines. */
   private[graft] def serOccDir(s: SparkSession, d: String): String =
-    StageUtil.staged("ser_occ_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { dir =>
+    StageUtil.staged("ser_occ", d) { dir =>
       timeTravelWriteV1(s, d, dir)
       val maxKey = s.read.parquet(s"$dir/d1")
         .agg(max(col("o_orderkey"))).collect()(0).getLong(0)
@@ -1611,17 +1492,10 @@ object Scans extends OpModule {
     * (must be untouched by GC) + the two lifecycle booleans the spec
     * also asserts (expired files gone, every live file intact). */
   def maintenanceVacuum(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/vacuum_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_VACUUMED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        timeTravelWriteV1(s, d, dir)
-        timeTravelWriteV2(s, dir)
-        vacuumExpire(s, dir)
-        java.nio.file.Files.createFile(marker)
-      }
+    val dir = StageUtil.staged("vacuum", d) { dir =>
+      timeTravelWriteV1(s, d, dir)
+      timeTravelWriteV2(s, dir)
+      vacuumExpire(s, dir)
     }
     val p2 = snapshotPaths(s, s"$dir/m2")
     val expiredGone = vacuumExpiredPaths(s, dir)
@@ -1690,27 +1564,20 @@ object Scans extends OpModule {
     * byte-stable through the sweep) + the lifecycle booleans the spec
     * re-derives from disk. */
   def maintenanceVacuumOrphans(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/vacuum_wap_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_SWEPT")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        timeTravelWriteV1(s, d, dir)
-        TableLog.publish(dir, "m1")
-        wapLogAppend(dir, "refs", "m2")
-        timeTravelWriteV2(s, dir)
-        if (wapAudit(s, dir, "m2")) {
-          TableLog.publish(dir, "m2")
-        }
-        wapLogAppend(dir, "refs", "m3")
-        wapWriteBadBranch(s, dir)
-        if (wapAudit(s, dir, "m3")) {
-          TableLog.publish(dir, "m3")
-        }
-        wapOrphanSweep(s, dir)
-        java.nio.file.Files.createFile(marker)
+    val dir = StageUtil.staged("vacuum_wap", d) { dir =>
+      timeTravelWriteV1(s, d, dir)
+      TableLog.publish(dir, "m1")
+      wapLogAppend(dir, "refs", "m2")
+      timeTravelWriteV2(s, dir)
+      if (wapAudit(s, dir, "m2")) {
+        TableLog.publish(dir, "m2")
       }
+      wapLogAppend(dir, "refs", "m3")
+      wapWriteBadBranch(s, dir)
+      if (wapAudit(s, dir, "m3")) {
+        TableLog.publish(dir, "m3")
+      }
+      wapOrphanSweep(s, dir)
     }
     val head = TableLog.head(dir)
     val orphansGone = wapSweptPaths(dir)
@@ -1820,22 +1687,14 @@ object Scans extends OpModule {
   /** Staged embedded-newline CSV dir (package-private: the spec also
     * reads it through the DEFAULT line-split parser to demonstrate the
     * misparse multiLine exists to fix). */
-  private[graft] def stagedMultilineDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val path = s"$ioDir/part_csv_multiline_$sfx"
-    ioLock.synchronized {
-      // _SUCCESS is the committer's own completion marker — staging is
-      // re-done unless the one write fully committed
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        Tables.part(s, d)
-          .select(col("p_partkey"),
-            concat(col("p_name"), lit("\n"), col("p_brand")).as("addr"),
-            col("p_size"))
-          .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-      }
+  private[graft] def stagedMultilineDir(s: SparkSession, d: String): String =
+    StageUtil.staged("part_csv_multiline", d) { path =>
+      Tables.part(s, d)
+        .select(col("p_partkey"),
+          concat(col("p_name"), lit("\n"), col("p_brand")).as("addr"),
+          col("p_size"))
+        .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
     }
-    path
-  }
 
   def scanCsvMultiline(s: SparkSession, d: String): DataFrame = {
     val schema = StructType(Seq(
@@ -1851,7 +1710,7 @@ object Scans extends OpModule {
     * gets the same vectorized reader + predicate pushdown treatment as
     * parquet. */
   def scanOrc(s: SparkSession, d: String): DataFrame = {
-    val path = s"$ioDir/supplier_orc"
+    val path = s"${StageUtil.root}/supplier_orc"
     Tables.supplier(s, d)
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
         col("s_acctbal"))
@@ -1867,17 +1726,12 @@ object Scans extends OpModule {
     * packing) to 4 and re-reads. The gate checks data preservation
     * (counts/bounds/sums vs the source table); the file-count drop is
     * asserted in ScansSpec. */
-  private val compactState =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private[graft] def compactDirs(s: SparkSession, d: String): (String, String) =
-    compactState.computeIfAbsent(d, { _ =>
-      val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-      val src = s"$ioDir/compact_src_$sfx"
+    (StageUtil.staged("compact_src", d) { src =>
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value"))
         .repartition(64).write.mode(SaveMode.Overwrite).parquet(src)
-      (src, s"$ioDir/compact_out_$sfx")
-    })
+    }, s"${StageUtil.root}/${StageUtil.key("compact_out", d)}")
 
   def maintenanceCompact(s: SparkSession, d: String): DataFrame = {
     val (src, out) = compactDirs(s, d)
@@ -1894,19 +1748,15 @@ object Scans extends OpModule {
     * schemas (a column added between ingestion generations) unified by
     * mergeSchema — old rows surface the new column as NULL. Staged once
     * per (JVM, sfDir). */
-  private val evolvingDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def scanEvolving(s: SparkSession, d: String): DataFrame = {
-    val p = evolvingDirs.computeIfAbsent(d, { _ =>
-      val path = s"$ioDir/evolving_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+    val p = StageUtil.staged("evolving", d) { path =>
       val n = Tables.nation(s, d)
       n.select(lit(1).as("batch"), col("n_nationkey"), col("n_name"))
         .write.mode(SaveMode.Overwrite).parquet(path)
       n.select(lit(2).as("batch"), col("n_nationkey"), col("n_name"),
           col("n_regionkey"))
         .write.mode(SaveMode.Append).parquet(path)
-      path
-    })
+    }
     s.read.option("mergeSchema", "true").parquet(p)
       .select(col("batch"), col("n_nationkey"), col("n_name"),
         col("n_regionkey"))
@@ -1917,15 +1767,11 @@ object Scans extends OpModule {
     * 100 TB, partitioning on a low-cardinality pruning column is the
     * first line of defense: a predicate on it never touches excluded
     * directories. */
-  private val partitionedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def partitionedOrders(s: SparkSession, d: String): String =
-    partitionedDirs.computeIfAbsent(d, { dir =>
-      val path = s"$ioDir/orders_part_${math.abs(dir.hashCode)}"
-      Tables.orders(s, dir).write.mode(SaveMode.Overwrite)
+    StageUtil.staged("orders_part", d) { path =>
+      Tables.orders(s, d).write.mode(SaveMode.Overwrite)
         .partitionBy("o_orderpriority").parquet(path)
-      path
-    })
+    }
 
   /** Hidden `_metadata` file-metadata columns (the lineage surface a
     * lakehouse audit leans on — "which file did this row come from"
@@ -2417,16 +2263,9 @@ object Scans extends OpModule {
   }
 
   def maintenanceMorCompact(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val path = s"$ioDir/mor_compact_$sfx"
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_DONE")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(path)
-        morCompactStage(s, d, path)
-        morCompactRun(s, path)
-        java.nio.file.Files.createFile(marker)
-      }
+    val path = StageUtil.staged("mor_compact", d) { path =>
+      morCompactStage(s, d, path)
+      morCompactRun(s, path)
     }
     morCompactRead(s, path)
       .groupBy(col("o_orderpriority"))
@@ -2456,29 +2295,20 @@ object Scans extends OpModule {
     * that a keyless read FAILS (no silent downgrade), and the exact
     * roundtrip. The oracle replays the slice from `orders` — crypto
     * changes bytes at rest, never results. */
-  private[graft] def encryptedDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/encrypted_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_ENCRYPTED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        val src = Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_totalprice"),
-            col("o_orderpriority"))
-        src.write
-          .options(cryptoOpts)
-          .option("parquet.encryption.column.keys",
-            "kdata:o_totalprice,o_orderpriority")
-          .option("parquet.encryption.footer.key", "kfooter")
-          .mode(SaveMode.Overwrite).parquet(s"$dir/enc")
-        // the unencrypted control the spec greps for plaintext
-        src.write.mode(SaveMode.Overwrite).parquet(s"$dir/plain")
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def encryptedDir(s: SparkSession, d: String): String =
+    StageUtil.staged("encrypted", d) { dir =>
+      val src = Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          col("o_orderpriority"))
+      src.write
+        .options(cryptoOpts)
+        .option("parquet.encryption.column.keys",
+          "kdata:o_totalprice,o_orderpriority")
+        .option("parquet.encryption.footer.key", "kfooter")
+        .mode(SaveMode.Overwrite).parquet(s"$dir/enc")
+      // the unencrypted control the spec greps for plaintext
+      src.write.mode(SaveMode.Overwrite).parquet(s"$dir/plain")
     }
-    dir
-  }
 
   /** The crypto factory + KMS client wiring, scoped PER read/write via
     * datasource options (Spark merges them into that relation's Hadoop
@@ -2518,44 +2348,35 @@ object Scans extends OpModule {
     * table; the file counts stay OUT of the registered readout because
     * range-partitioner sampling makes file boundaries run-varying —
     * layout changes I/O, never results. */
-  private[graft] def zorderPruneDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/zorder_prune_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_ZORDERED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        val interleave =
-          """aggregate(sequence(0, 15), 0L, (acc, b) -> acc
-            |  + shiftleft((x >> b) & 1, 2 * b)
-            |  + shiftleft((y >> b) & 1, 2 * b + 1))""".stripMargin
-        val base = Tables.orders(s, d)
-          .withColumn("x", col("o_custkey").bitwiseAND(lit(65535L)))
-          .withColumn("y",
-            datediff(col("o_orderdate").cast("date"),
-              lit("1970-01-01").cast("date")).cast("long")
-              .bitwiseAND(lit(65535L)))
-          .select(col("o_orderkey"), col("o_totalprice"), col("x"),
-            col("y"), expr(interleave).as("zval"))
-        def stage(df: DataFrame, sortCol: String, sub: String): Unit = {
-          df.repartitionByRange(16, col(sortCol))
-            .sortWithinPartitions(col(sortCol))
-            .write.mode(SaveMode.Overwrite).parquet(s"$dir/$sub/data")
-          // the 2-D zonemap: per file, min/max of BOTH dimensions
-          s.read.parquet(s"$dir/$sub/data")
-            .groupBy(input_file_name().as("path"))
-            .agg(min(col("x")).as("x_min"), max(col("x")).as("x_max"),
-              min(col("y")).as("y_min"), max(col("y")).as("y_max"))
-            .coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(s"$dir/$sub/manifest")
-        }
-        stage(base, "zval", "zorder")
-        stage(base, "x", "linear")
-        java.nio.file.Files.createFile(marker)
+  private[graft] def zorderPruneDir(s: SparkSession, d: String): String =
+    StageUtil.staged("zorder_prune", d) { dir =>
+      val interleave =
+        """aggregate(sequence(0, 15), 0L, (acc, b) -> acc
+          |  + shiftleft((x >> b) & 1, 2 * b)
+          |  + shiftleft((y >> b) & 1, 2 * b + 1))""".stripMargin
+      val base = Tables.orders(s, d)
+        .withColumn("x", col("o_custkey").bitwiseAND(lit(65535L)))
+        .withColumn("y",
+          datediff(col("o_orderdate").cast("date"),
+            lit("1970-01-01").cast("date")).cast("long")
+            .bitwiseAND(lit(65535L)))
+        .select(col("o_orderkey"), col("o_totalprice"), col("x"),
+          col("y"), expr(interleave).as("zval"))
+      def stage(df: DataFrame, sortCol: String, sub: String): Unit = {
+        df.repartitionByRange(16, col(sortCol))
+          .sortWithinPartitions(col(sortCol))
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$sub/data")
+        // the 2-D zonemap: per file, min/max of BOTH dimensions
+        s.read.parquet(s"$dir/$sub/data")
+          .groupBy(input_file_name().as("path"))
+          .agg(min(col("x")).as("x_min"), max(col("x")).as("x_max"),
+            min(col("y")).as("y_min"), max(col("y")).as("y_max"))
+          .coalesce(1)
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$sub/manifest")
       }
+      stage(base, "zval", "zorder")
+      stage(base, "x", "linear")
     }
-    dir
-  }
 
   /** Varargs parquet read that tolerates an empty planned-file set: a
     * probe whose keys match no postings/zonemaps must return an EMPTY
@@ -2611,27 +2432,18 @@ object Scans extends OpModule {
     * replaces a million-file planning problem with one index-partition
     * scan. ScansSpec asserts the data read plans ≤ the posting count
     * (≪ 16 files) and row equality with the raw lookup. */
-  private[graft] def secondaryIndexDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/sec_index_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_INDEXED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .repartition(16, col("o_orderkey"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/data")
-        // the index build: one distributed read-back pass → posting list
-        s.read.parquet(s"$dir/data")
-          .groupBy(col("o_custkey"), input_file_name().as("file_path"))
-          .agg(count(lit(1)).as("n_rows"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/index")
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def secondaryIndexDir(s: SparkSession, d: String): String =
+    StageUtil.staged("sec_index", d) { dir =>
+      Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+        .repartition(16, col("o_orderkey"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/data")
+      // the index build: one distributed read-back pass → posting list
+      s.read.parquet(s"$dir/data")
+        .groupBy(col("o_custkey"), input_file_name().as("file_path"))
+        .agg(count(lit(1)).as("n_rows"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/index")
     }
-    dir
-  }
 
   private[graft] val secIndexProbeKeys = Seq(7L, 23L, 61L, 102L, 137L)
 
@@ -2680,8 +2492,7 @@ object Scans extends OpModule {
     * must see the post-merge prices; the oracle replays the update
     * relationally from `orders`. */
   private[graft] def indexRefreshDir(s: SparkSession, d: String): String =
-    StageUtil.staged("index_refresh_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { dir =>
+    StageUtil.staged("index_refresh", d) { dir =>
       // v1: range-clustered data + manifest + custkey posting index
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -2756,22 +2567,13 @@ object Scans extends OpModule {
     * O(stale months), never the table. The backfilled-months audit is
     * recorded at backfill time (the _EXPIRED discipline) because the
     * post-state sidecar can no longer show what was stale. */
-  private[graft] def backfillDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/backfill_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_BACKFILLED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        backfillBuild(s, backfillT1(s, d), dir, SaveMode.Overwrite)
-        // T2: the full source has arrived; the planner must now find
-        // exactly {1996-06} ∪ {2001-01..} stale and rebuild only those
-        backfillRun(s, d, dir)
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def backfillDir(s: SparkSession, d: String): String =
+    StageUtil.staged("backfill", d) { dir =>
+      backfillBuild(s, backfillT1(s, d), dir, SaveMode.Overwrite)
+      // T2: the full source has arrived; the planner must now find
+      // exactly {1996-06} ∪ {2001-01..} stale and rebuild only those
+      backfillRun(s, d, dir)
     }
-    dir
-  }
 
   /** T1: the tail months have not arrived; 1996-06 is missing its late
     * rows (o_orderkey % 10 == 0). */
@@ -2886,45 +2688,36 @@ object Scans extends OpModule {
     * rowid-sum invariance across the commit, update classification,
     * price stability under row-id CDC, and the delete+insert illusion
     * under key CDC. */
-  private[graft] def rowLineageDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/row_lineage_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_COMMITTED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        // v1: row_id assigned at first commit (any unique deterministic
-        // value works; after this instant it is IDENTITY, not data —
-        // the business key may drift, row_id never does)
-        Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_totalprice"),
-            (col("o_orderkey") + 1000000000L).as("row_id"))
-          .repartitionByRange(8, col("o_orderkey"))
-          .sortWithinPartitions(col("o_orderkey"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/d1")
-        manifestStats(s, s"$dir/d1").coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")
-        // v2: the key migration — a COW rewrite of the overlapping
-        // files; row_id rides through untouched
-        val m1 = s.read.parquet(s"$dir/m1")
-        val hit = col("k_max") >= 100 && col("k_min") <= 400
-        val oldPaths = m1.where(hit).select(col("path"))
-          .collect().map(_.getString(0))
-        readPaths(s, oldPaths.toIndexedSeq)
-          .withColumn("o_orderkey",
-            when(col("o_orderkey").between(100, 400),
-              col("o_orderkey") + 500000000L)
-              .otherwise(col("o_orderkey")))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/d2")
-        m1.where(!hit)
-          .unionByName(manifestStats(s, s"$dir/d2"))
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/m2")
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def rowLineageDir(s: SparkSession, d: String): String =
+    StageUtil.staged("row_lineage", d) { dir =>
+      // v1: row_id assigned at first commit (any unique deterministic
+      // value works; after this instant it is IDENTITY, not data —
+      // the business key may drift, row_id never does)
+      Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          (col("o_orderkey") + 1000000000L).as("row_id"))
+        .repartitionByRange(8, col("o_orderkey"))
+        .sortWithinPartitions(col("o_orderkey"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/d1")
+      manifestStats(s, s"$dir/d1").coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")
+      // v2: the key migration — a COW rewrite of the overlapping
+      // files; row_id rides through untouched
+      val m1 = s.read.parquet(s"$dir/m1")
+      val hit = col("k_max") >= 100 && col("k_min") <= 400
+      val oldPaths = m1.where(hit).select(col("path"))
+        .collect().map(_.getString(0))
+      readPaths(s, oldPaths.toIndexedSeq)
+        .withColumn("o_orderkey",
+          when(col("o_orderkey").between(100, 400),
+            col("o_orderkey") + 500000000L)
+            .otherwise(col("o_orderkey")))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/d2")
+      m1.where(!hit)
+        .unionByName(manifestStats(s, s"$dir/d2"))
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/m2")
     }
-    dir
-  }
 
   def scanRowLineage(s: SparkSession, d: String): DataFrame = {
     val dir = rowLineageDir(s, d)
@@ -3030,16 +2823,9 @@ object Scans extends OpModule {
   }
 
   def sinkMergePositional(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val path = s"$ioDir/merge_pos_$sfx"
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_MERGED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(path)
-        mergeMorStageBase(s, d, path)
-        mergePosCommit(s, d, path)
-        java.nio.file.Files.createFile(marker)
-      }
+    val path = StageUtil.staged("merge_pos", d) { path =>
+      mergeMorStageBase(s, d, path)
+      mergePosCommit(s, d, path)
     }
     mergePosRead(s, path)
       .groupBy(col("o_orderpriority"))
@@ -3078,8 +2864,7 @@ object Scans extends OpModule {
     * snapshot) and that the bad branch's data is reachable from m3
     * (orphaned, not lost — vacuum's jurisdiction). */
   private[graft] def wapDir(s: SparkSession, d: String): String =
-    StageUtil.staged("wap_" + d.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + math.abs(d.hashCode)) { dir =>
+    StageUtil.staged("wap", d) { dir =>
       timeTravelWriteV1(s, d, dir)
       TableLog.publish(dir, "m1")
       // good branch: write → audit → publish
@@ -3159,21 +2944,12 @@ object Scans extends OpModule {
     * LOGICAL schema it exposes (the rename made observable to the hash
     * gate) and the same summary (a rename never changes data). Oracle:
     * two literal-schema rows over `orders`. */
-  private[graft] def colMapDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/colmap_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_MAPPED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        colMapWriteData(s, d, dir)
-        colMapWriteV1(s, dir)
-        colMapWriteV2(s, dir)
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def colMapDir(s: SparkSession, d: String): String =
+    StageUtil.staged("colmap", d) { dir =>
+      colMapWriteData(s, d, dir)
+      colMapWriteV1(s, dir)
+      colMapWriteV2(s, dir)
     }
-    dir
-  }
 
   private[graft] def colMapWriteData(s: SparkSession, d: String,
                                      dir: String): Unit =
@@ -3254,20 +3030,11 @@ object Scans extends OpModule {
     * (flagged exactly where the commit rewrote). ScansSpec additionally
     * pins that a query over pre-evolution columns PRUNES c_4 from the
     * read schema. */
-  private[graft] def evolveDir(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val dir = s"$ioDir/evolve_$sfx"
-    val marker = java.nio.file.Paths.get(dir, "_GRAFT_EVOLVED")
-    ioLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        wipeDir(dir)
-        evolveStage(s, d, dir)
-        evolveCommit(s, d, dir)
-        java.nio.file.Files.createFile(marker)
-      }
+  private[graft] def evolveDir(s: SparkSession, d: String): String =
+    StageUtil.staged("evolve", d) { dir =>
+      evolveStage(s, d, dir)
+      evolveCommit(s, d, dir)
     }
-    dir
-  }
 
   private[graft] def evolveStage(s: SparkSession, d: String,
                                  dir: String): Unit = {

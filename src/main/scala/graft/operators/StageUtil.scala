@@ -2,15 +2,18 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-/** Shared fixture→topic staging (ADVICE r10): every file-source "topic"
-  * dir is fed by copying a parquet dataset that is EITHER a single file
-  * (the driver fixture) OR a directory of part files (ScaleProbe clone
-  * tiers, planted spec fixtures). A bare `Files.copy` on the directory
-  * shape silently creates an EMPTY topic — the bug class StreamIO fixed
-  * twice (r8 dupEventsDir, r10 eventsDir) before PipelineOps copied the
-  * broken form. One helper, used by every topic-staging site.
+/** The one staging module (README "Staging"): every dir an operator
+  * stages once per JVM goes through `staged`, under one root.
+  *
+  * It also holds the fixture→topic copy (ADVICE r10): every file-source
+  * "topic" dir is fed by copying a parquet dataset that is EITHER a
+  * single file (the driver fixture) OR a directory of part files
+  * (ScaleProbe clone tiers, planted spec fixtures). A bare `Files.copy`
+  * on the directory shape silently creates an EMPTY topic — the bug
+  * class StreamIO fixed twice (r8 dupEventsDir, r10 eventsDir) before
+  * PipelineOps copied the broken form.
   */
-private[operators] object StageUtil {
+private[graft] object StageUtil {
 
   /** The parquet payload files of `src`: itself if a plain file, else
     * its `*.parquet` children (part files). Fails loudly on an empty
@@ -61,20 +64,31 @@ private[operators] object StageUtil {
       s"no parquet payload files to copy under $src (got: $copied)")
   }
 
-  /** One per-JVM root for marker-gated stagings (the Scans ioDir
-    * discipline, shared): `staged(name)(build)` runs `build` at most
-    * once per name per JVM under a plain lock — never inside a hash-map
-    * bin lock (ADVICE r13: dqSchemaDrift ran Spark write jobs while
-    * holding its ConcurrentHashMap bin) — and a crash between build and
-    * marker leaves no half-staged dir behind: the next caller wipes and
-    * rebuilds. */
+  /** The one per-JVM root every operator path resolves under (README
+    * "Staging"): once-per-JVM stagings and fixed per-call paths alike,
+    * so concurrent JVMs never share a path and no pass leaks a dir. */
   private lazy val stageRoot: java.nio.file.Path =
     java.nio.file.Files.createTempDirectory("graft_stage")
   private val stageLock = new Object
 
-  def staged(name: String)(build: String => Unit): String =
+  def root: String = stageRoot.toString
+
+  /** The staging key of data dir `d`: `prefix_<d, non-alphanumerics as
+    * _>_<abs hash of d>`. Sanitizing alone maps `/t/a_b` and `/t/a/b`
+    * to one name and the hash alone maps `Aa` and `BB` to one; the pair
+    * tells them apart. */
+  def key(prefix: String, d: String): String =
+    s"${prefix}_${d.replaceAll("[^A-Za-z0-9]", "_")}_${math.abs(d.hashCode)}"
+
+  /** The dir `key(prefix, d)` under the root, filled by `build` at most
+    * once per JVM. Every build runs under one reentrant lock: a build may
+    * call `staged` again, but must never wait on another thread that
+    * does. The dir is complete only once `_GRAFT_STAGED` exists, written
+    * after `build` returns; without it the dir is wiped and rebuilt, so
+    * an interrupted build never latches half-staged data. */
+  def staged(prefix: String, d: String)(build: String => Unit): String =
     stageLock.synchronized {
-      val dir = stageRoot.resolve(name)
+      val dir = stageRoot.resolve(key(prefix, d))
       val marker = dir.resolve("_GRAFT_STAGED")
       if (!java.nio.file.Files.exists(marker)) {
         if (java.nio.file.Files.exists(dir)) {

@@ -33,9 +33,6 @@ import graft.Tables
   */
 object StreamIO extends OpModule {
 
-  private lazy val scratch: String =
-    java.nio.file.Files.createTempDirectory("graft_stream").toString
-
   /** Streaming queries run on a derived session whose shuffle-partition
     * count is sized to STATE, not CPUs. The state-store layout is pinned
     * by the first checkpoint write, and every state partition carries a
@@ -86,7 +83,8 @@ object StreamIO extends OpModule {
     ss
   }
 
-  private def fresh(tag: String): String = s"$scratch/$tag-${UUID.randomUUID()}"
+  private def fresh(tag: String): String =
+    s"${StageUtil.root}/$tag-${UUID.randomUUID()}"
 
   /** Bounded wait: AvailableNow terminates on its own; the timeout is a
     * backstop so a misbehaving source can never wedge the Verify run. */
@@ -96,20 +94,12 @@ object StreamIO extends OpModule {
 
   /** The file-stream source watches a DIRECTORY (new files appear as the
     * unbounded "topic"); the fixture is a single file, so stage it into a
-    * scratch dir once per (JVM, sfDir). */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * topic dir once per (JVM, sfDir). */
   private def eventsDir(d: String): String =
-    stagedDirs.computeIfAbsent(d, { dir =>
-      val target = java.nio.file.Paths.get(fresh("events_src"))
-      // part-aware copy (StageUtil): directory-shaped datasets
-      // (ScaleProbe clones) contribute their PART files — Files.copy on
-      // the dir itself stages an empty topic (the dupEventsDir r8 fix,
-      // shared with PipelineOps since r11)
-      StageUtil.stageTopic(
-        java.nio.file.Paths.get(s"$dir/events.parquet"), target, "events")
-      target.toString
-    })
+    StageUtil.staged("events_src", d) { target =>
+      StageUtil.stageTopic(java.nio.file.Paths.get(s"$d/events.parquet"),
+        java.nio.file.Paths.get(target), "events")
+    }
 
   /** events.parquet as an unbounded file-source table (ns→µs like
     * Tables.events). The file-source schema must be supplied up front;
@@ -128,18 +118,12 @@ object StreamIO extends OpModule {
   /** Staged dir holding TWO copies of events.parquet — a topic where
     * every event is delivered twice (the at-least-once upstream the
     * dedup operators exist for). */
-  private val dupDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dupEventsDir(d: String): String =
-    dupDirs.computeIfAbsent(d, { dir =>
-      val target = java.nio.file.Paths.get(fresh("events_dup"))
-      // two part-aware copies of the same dataset (StageUtil — the r8
-      // directory-shape fix, shared): every event delivered twice
-      val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-      StageUtil.stageTopic(src, target, "events_a")
-      StageUtil.stageTopic(src, target, "events_b")
-      target.toString
-    })
+    StageUtil.staged("events_dup", d) { dir =>
+      val src = java.nio.file.Paths.get(s"$d/events.parquet")
+      StageUtil.stageTopic(src, java.nio.file.Paths.get(dir), "events_a")
+      StageUtil.stageTopic(src, java.nio.file.Paths.get(dir), "events_b")
+    }
 
   /** Staged TWO-BATCH topic for the event-time-timer surface: all event
     * part files carry one (older) modification time and a single
@@ -150,13 +134,11 @@ object StreamIO extends OpModule {
     * watermark is max(event time of batch1), so exactly the sessions
     * whose close time (last + gap) is ≤ that watermark fire their
     * timers — an oracle-expressible condition. Returns (dir, nParts). */
-  private val timerDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
-  private def timerEventsDir(s: SparkSession, d: String): (String, Int) =
-    timerDirs.computeIfAbsent(d, { dir =>
-      val target = java.nio.file.Paths.get(fresh("events_timer"))
+  private def timerEventsDir(s: SparkSession, d: String): (String, Int) = {
+    val dir = StageUtil.staged("events_timer", d) { dir =>
+      val target = java.nio.file.Paths.get(dir)
       StageUtil.stageTopic(
-        java.nio.file.Paths.get(s"$dir/events.parquet"), target, "events")
+        java.nio.file.Paths.get(s"$d/events.parquet"), target, "events")
       // sentinel: one row, event time far beyond the fixture era — its
       // only job is to BE batch2 (its own timer never fires)
       val sentinelSrc = java.nio.file.Paths.get(fresh("sentinel_build"))
@@ -172,17 +154,17 @@ object StreamIO extends OpModule {
       // modification time, oldest first)
       val t0 = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
       val t1 = java.nio.file.attribute.FileTime.fromMillis(1000000060000L)
-      var n = 0
       // close the directory stream (ADVICE r11 handle-leak class)
       scala.util.Using.resource(java.nio.file.Files.list(target)) { st =>
         st.iterator.asScala.foreach { p =>
-          if (p.getFileName.toString.startsWith("events")) {
-            java.nio.file.Files.setLastModifiedTime(p, t0); n += 1
-          } else java.nio.file.Files.setLastModifiedTime(p, t1)
+          java.nio.file.Files.setLastModifiedTime(p,
+            if (p.getFileName.toString.startsWith("events")) t0 else t1)
         }
       }
-      (target.toString, n)
-    })
+    }
+    (dir, StageUtil.parquetParts(java.nio.file.Paths.get(dir))
+      .count(_.getFileName.toString.startsWith("events")))
+  }
 
   /** Event-time TIMER surface through a real micro-batch run (VERDICT
     * r10 task 3 — the one built transformWithState feature without a
@@ -270,15 +252,12 @@ object StreamIO extends OpModule {
     * no-data micro-batch finalizes and emits all real windows; the
     * sentinel's own window stays above the watermark and never emits
     * (and the readout filters its type defensively). */
-  private val chainDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def chainEventsDir(s: SparkSession, d: String): String =
-    chainDirs.computeIfAbsent(d, { dir =>
-      val target = java.nio.file.Paths.get(fresh("events_chain"))
-      val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-      StageUtil.stageTopic(src, target, "events_a")
-      StageUtil.stageTopic(src, target, "events_b")
-      val ev = graft.Tables.events(s, dir)
+    StageUtil.staged("events_chain", d) { target =>
+      val src = java.nio.file.Paths.get(s"$d/events.parquet")
+      StageUtil.stageTopic(src, java.nio.file.Paths.get(target), "events_a")
+      StageUtil.stageTopic(src, java.nio.file.Paths.get(target), "events_b")
+      val ev = graft.Tables.events(s, d)
       val maxTs = ev.agg(max(col("ts"))).collect().head.getTimestamp(0)
       ev.limit(1)
         .select(lit(-1L).as("event_id"),
@@ -287,9 +266,8 @@ object StreamIO extends OpModule {
           lit("zzz_sentinel").as("event_type"),
           lit(0.0).as("value"))
         .coalesce(1)
-        .write.mode("append").parquet(target.toString)
-      target.toString
-    })
+        .write.mode("append").parquet(target)
+    }
 
   /** The chained dedup→window query (Streaming.chainedStateful) driven
     * through a real micro-batch run over the doubled+sentinel topic —
@@ -323,14 +301,11 @@ object StreamIO extends OpModule {
     * event; the mismatched user ids keep the sentinels out of the join
     * output entirely (they die at the join, so the readout needs no
     * filter — no pair, no window row). */
-  private val joinChainDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def joinChainEventsDir(s: SparkSession, d: String): String =
-    joinChainDirs.computeIfAbsent(d, { dir =>
-      val target = java.nio.file.Paths.get(fresh("events_jchain"))
-      StageUtil.stageTopic(
-        java.nio.file.Paths.get(s"$dir/events.parquet"), target, "events")
-      val ev = graft.Tables.events(s, dir)
+    StageUtil.staged("events_jchain", d) { target =>
+      StageUtil.stageTopic(java.nio.file.Paths.get(s"$d/events.parquet"),
+        java.nio.file.Paths.get(target), "events")
+      val ev = graft.Tables.events(s, d)
       val maxTs = ev.agg(max(col("ts"))).collect().head.getTimestamp(0)
       val far = new java.sql.Timestamp(maxTs.getTime + 7200000L)
       def sentinel(id: Long, tpe: String) = ev.limit(1)
@@ -339,9 +314,8 @@ object StreamIO extends OpModule {
           lit(0.0).as("value"))
       sentinel(-1L, "click").unionByName(sentinel(-2L, "purchase"))
         .coalesce(1)
-        .write.mode("append").parquet(target.toString)
-      target.toString
-    })
+        .write.mode("append").parquet(target)
+    }
 
   /** CHAINED stream-stream join → windowed aggregation in ONE streaming
     * query (one checkpoint, THREE stateful stores: two join sides + the
@@ -1020,58 +994,48 @@ object StreamIO extends OpModule {
     * completion within one JVM. */
   def sinkStreamUpsert(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + math.abs(d.hashCode)
-    val tablePath = s"$scratch/upsert_tbl_$sfx"
-    val marker = java.nio.file.Paths.get(tablePath, "_GRAFT_MERGED")
-    upsertLock.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    // one staged dir holds the table, its merge stage and the topic
+    val dir = StageUtil.staged("upsert_tbl", d) { dir =>
+      graft.Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          col("o_orderpriority"))
+        .write.partitionBy("o_orderpriority")
+        .mode("overwrite").parquet(s"$dir/table")
+      // stage the 2-file topic; mtimes 60 s apart fix the batch order
+      val (b1, b2) = Scans.streamUpsertBatches(s, d)
+      val topic = java.nio.file.Paths.get(dir, "topic")
+      val t0 = java.nio.file.attribute.FileTime.fromMillis(1717200000000L)
+      val t1 = java.nio.file.attribute.FileTime.fromMillis(1717200060000L)
+      Seq((b1, "b1", t0), (b2, "b2", t1)).foreach { case (df, tag, t) =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$tag")
+        StageUtil.stageTopic(java.nio.file.Paths.get(dir, tag), topic, tag)
+        scala.util.Using.resource(
+          java.nio.file.Files.list(topic)) { st =>
+          st.iterator.asScala
+            .filter(_.getFileName.toString.startsWith(tag))
+            .foreach(java.nio.file.Files.setLastModifiedTime(_, t))
         }
-        rm(new java.io.File(tablePath))
-        graft.Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_totalprice"),
-            col("o_orderpriority"))
-          .write.partitionBy("o_orderpriority")
-          .mode("overwrite").parquet(tablePath)
-        // stage the 2-file topic; mtimes 60 s apart fix the batch order
-        val (b1, b2) = Scans.streamUpsertBatches(s, d)
-        val topic = java.nio.file.Paths.get(s"$scratch/upsert_topic_$sfx")
-        rm(topic.toFile)
-        val t0 = java.nio.file.attribute.FileTime.fromMillis(1717200000000L)
-        val t1 = java.nio.file.attribute.FileTime.fromMillis(1717200060000L)
-        Seq((b1, "b1", t0), (b2, "b2", t1)).foreach { case (df, tag, t) =>
-          val tmp = fresh(s"upsert_$tag")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          StageUtil.stageTopic(java.nio.file.Paths.get(tmp), topic, tag)
-          scala.util.Using.resource(
-            java.nio.file.Files.list(topic)) { st =>
-            st.iterator.asScala
-              .filter(_.getFileName.toString.startsWith(tag))
-              .foreach(java.nio.file.Files.setLastModifiedTime(_, t))
-          }
-        }
-        val schema = s.read.parquet(topic.toString).schema
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(topic.toString)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            Scans.applyChangeBatch(batch.sparkSession, batch, tablePath)
-          }
-          .option("checkpointLocation", fresh("ckpt"))
-          .trigger(Trigger.AvailableNow()).start()
-        runToEnd(q)
-        java.nio.file.Files.createFile(marker)
       }
+      // the batches apply on the stream thread, which never stages:
+      // this build holds the staging lock while it waits
+      val schema = s.read.parquet(topic.toString).schema
+      val q = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(topic.toString)
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          Scans.applyChangeBatch(batch.sparkSession, batch, s"$dir/table")
+        }
+        .option("checkpointLocation", s"$dir/ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+      runToEnd(q)
     }
-    s.read.parquet(tablePath)
+    s.read.parquet(s"$dir/table")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),
         sum(col("o_orderkey")).cast("bigint").as("key_sum"))
   }
-  private val upsertLock = new Object
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sink_stream_upsert" -> sinkStreamUpsert _,
