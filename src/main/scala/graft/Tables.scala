@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders (TESTDATA.md: TPC-H-ish star schema + `events`
   * stream table + `documents`/`embeddings` LLM tables).
@@ -30,8 +34,64 @@ object Tables {
       else d
     }
 
+  /** Session confs that change the type a parquet column infers to. */
+  private val schemaConfs = Seq(
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  /** What a set of paths holds, from a driver listing that runs no job:
+    * each leaf file's path, length and mtime, plus the session's
+    * `schemaConfs`. Spark names part files by a fresh UUID and a
+    * rewrite in place changes length or mtime, so changed data gets a
+    * new key. None when nothing lists (a missing path, an empty dir). */
+  private def contentKey(s: SparkSession,
+                         paths: Seq[String]): Option[Seq[Any]] = {
+    // Spark's own listing rule: `_`/`.` names hold no data
+    def hidden(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    }
+    def leaves(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).toSeq.filterNot(hidden).flatMap(leaves(fs, _))
+      else Seq(st)
+    val files = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+      Option(fs.globStatus(path)).toSeq.flatten.flatMap(leaves(fs, _))
+    }.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    Option.when(files.nonEmpty)(
+      schemaConfs.map(s.conf.getOption) ++ files.distinct.sorted)
+  }
+
+  /** Metadata of immutable files, cached under `contentKey`: it holds
+    * what files are, never what a pass derived from them, so it is not
+    * a `Memo` and no pass resets it (README "Reads"). */
+  private[graft] final class FileCache[V] {
+    private val map = new ConcurrentHashMap[Seq[Any], V]()
+    def apply(s: SparkSession, paths: Seq[String])(compute: => V): V =
+      contentKey(s, paths) match {
+        case None => compute
+        case Some(k) => Option(map.get(k)).getOrElse {
+          val v = compute
+          map.putIfAbsent(k, v)
+          v
+        }
+      }
+  }
+
+  private val schemas = new FileCache[StructType]
+
+  /** THE parquet read: the schema Spark would infer, inferred once per
+    * content key, then pinned with `.schema`, so reading data already
+    * read launches no inference job. Reads whose options change or
+    * supply the schema bypass it and say why at the site. */
+  def read(s: SparkSession, paths: String*): DataFrame =
+    s.read.schema(schemas(s, paths)(s.read.parquet(paths: _*).schema))
+      .parquet(paths: _*)
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    instantTyped(spark.read.parquet(s"$sfDir/$name.parquet"))
+    instantTyped(read(spark, s"$sfDir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

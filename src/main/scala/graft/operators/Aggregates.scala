@@ -742,7 +742,7 @@ object Aggregates extends OpModule {
   def aggMvStaleCompensate(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val hw = li.agg(expr("max(l_orderkey) * 4 div 5")).head.getLong(0)
-    val mv = spark.read.parquet(StageUtil.staged("mv_stale", dir) { mvDir =>
+    val mv = Tables.read(spark, StageUtil.staged("mv_stale", dir) { mvDir =>
       li.where(col("l_orderkey") < hw)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("mv_sum_qty"),

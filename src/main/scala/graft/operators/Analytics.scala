@@ -202,12 +202,12 @@ object Analytics extends OpModule {
         .write.mode("overwrite").parquet(s"$base/meta")
       // the snapshot derives from the WRITTEN meta — dimension and
       // high-water mark are consistent by construction
-      val meta = s.read.parquet(s"$base/meta")
+      val meta = Tables.read(s, s"$base/meta")
       scd2Build(od.crossJoin(broadcast(meta))
           .where(col("o_orderdate") < col("cutoff")))
         .write.mode("overwrite").parquet(s"$base/dim")
     }
-    (s.read.parquet(s"$dir/dim"), s.read.parquet(s"$dir/meta"))
+    (Tables.read(s, s"$dir/dim"), Tables.read(s, s"$dir/meta"))
   }
 
   def dimScd2Incremental(s: SparkSession, d: String): DataFrame = {
@@ -1312,12 +1312,12 @@ object Analytics extends OpModule {
         .write.mode("overwrite").parquet(s"$base/meta")
       // snapshot partials derive from the WRITTEN meta — view and
       // high-water mark are consistent by construction
-      val meta = s.read.parquet(s"$base/meta")
+      val meta = Tables.read(s, s"$base/meta")
       ev.crossJoin(broadcast(meta)).where(col("ts") < col("cutoff"))
         .transform(mvPartials)
         .write.mode("overwrite").parquet(s"$base/view")
     }
-    (s.read.parquet(s"$dir/view"), s.read.parquet(s"$dir/meta"))
+    (Tables.read(s, s"$dir/view"), Tables.read(s, s"$dir/meta"))
   }
 
   def mvIncremental(s: SparkSession, d: String): DataFrame = {
@@ -1457,10 +1457,10 @@ object Analytics extends OpModule {
         .write.mode("overwrite").parquet(s"$p/gen2")
     }
     import s.implicits._
-    val g1 = s.read.parquet(s"$base/gen1").schema.fields
+    val g1 = Tables.read(s, s"$base/gen1").schema.fields
       .map(f => (f.name, f.dataType.simpleString)).toSeq
       .toDF("col_name", "t1")
-    val g2 = s.read.parquet(s"$base/gen2").schema.fields
+    val g2 = Tables.read(s, s"$base/gen2").schema.fields
       .map(f => (f.name, f.dataType.simpleString)).toSeq
       .toDF("col_name", "t2")
     g1.join(g2, Seq("col_name"), "full")

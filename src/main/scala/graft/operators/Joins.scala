@@ -361,8 +361,8 @@ object Joins extends OpModule {
         ("4-NOT SPECIFIED", "normal"), ("5-LOW", "normal")
       ).toDF("priority", "svc_class").write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(factPath)
-      .join(broadcast(s.read.parquet(dimPath)
+    Tables.read(s, factPath)
+      .join(broadcast(Tables.read(s, dimPath)
           .where(col("svc_class") === "urgent")),
         col("o_orderpriority") === col("priority"))
       .groupBy(col("o_orderpriority"))

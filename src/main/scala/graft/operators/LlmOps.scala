@@ -262,13 +262,13 @@ object LlmOps extends OpModule {
         .write.mode("overwrite").parquet(s"$base/shingles")
       // bands derive from the WRITTEN shingles — the index is consistent
       // by construction (both tables come from one corpus snapshot)
-      signatureFromHashes(s.read.parquet(s"$base/shingles"), "hs")
+      signatureFromHashes(Tables.read(s, s"$base/shingles"), "hs")
         .select(col("doc_id"), col("sig"))
         .select(col("doc_id"), explode(expr(bandsExpr)).as("b"))
         .select(col("doc_id"), col("b.band"), col("b.bh"))
         .write.mode("overwrite").parquet(s"$base/bands")
     }
-    (s.read.parquet(s"$dir/bands"), s.read.parquet(s"$dir/shingles"))
+    (Tables.read(s, s"$dir/bands"), Tables.read(s, s"$dir/shingles"))
   }
 
   /** One shard ingest against the staged index: only the DELTA is
@@ -374,7 +374,7 @@ object LlmOps extends OpModule {
         .write.mode("overwrite").parquet(s"$base/labels")
       (edges +: res.live).foreach(MemoUtil.dropCheckpoint)
     }
-    s.read.parquet(s"$dir/labels")
+    Tables.read(s, s"$dir/labels")
   }
 
   /** INCREMENTAL cluster maintenance — the step after dedupIncremental

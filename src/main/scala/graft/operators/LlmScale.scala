@@ -1214,9 +1214,9 @@ object LlmScale extends OpModule {
   private[graft] def ivfStoreSweep(s: SparkSession, dir: String): Unit = {
     val (posts, vecs, dels) = ivfStoreHead(dir)
     if (dels.nonEmpty) {
-      val live = posts.map(p => s.read.parquet(s"$dir/$p"))
+      val live = posts.map(p => Tables.read(s, s"$dir/$p"))
         .reduce(_ unionByName _)
-      val tomb = dels.map(p => s.read.parquet(s"$dir/$p"))
+      val tomb = dels.map(p => Tables.read(s, s"$dir/$p"))
         .reduce(_ unionByName _)
       live.join(tomb, Seq("vec_id"), "left_anti")
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/postings2")
@@ -1247,12 +1247,12 @@ object LlmScale extends OpModule {
   private def ivfStoreServeHeadBuild(s: SparkSession, dir: String,
       headRaw: String): DataFrame = {
     val Seq(posts, vecDirs, dels) = headSegments(headRaw, 3)
-    val inv0 = posts.map(p => s.read.parquet(s"$dir/$p"))
+    val inv0 = posts.map(p => Tables.read(s, s"$dir/$p"))
       .reduce(_ unionByName _)
     val inv = if (dels.isEmpty) inv0
-      else inv0.join(dels.map(p => s.read.parquet(s"$dir/$p"))
+      else inv0.join(dels.map(p => Tables.read(s, s"$dir/$p"))
         .reduce(_ unionByName _), Seq("vec_id"), "left_anti")
-    val vecsAll = vecDirs.map(p => s.read.parquet(s"$dir/$p"))
+    val vecsAll = vecDirs.map(p => Tables.read(s, s"$dir/$p"))
       .reduce(_ unionByName _)
     // live vectors: a store's vector files are swept lazily — liveness
     // is defined by the postings, so truth anti-joins the same sidecar
@@ -1260,7 +1260,7 @@ object LlmScale extends OpModule {
         vecsAll.join(inv0.select(col("vec_id")), Seq("vec_id"), "left_semi")
       else vecsAll.join(inv.select(col("vec_id")), Seq("vec_id"),
         "left_semi")
-    val cents = centroidArrays(s.read.parquet(s"$dir/centroids"))
+    val cents = centroidArrays(Tables.read(s, s"$dir/centroids"))
       .select(col("cid").as("cluster"), col("cv"))
     val q = vecsAll.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("qv").as("qq"))
@@ -1394,7 +1394,7 @@ object LlmScale extends OpModule {
     // "Stores"), never rewrites it
     TableLog.commitBatch(dir, pGen, adopt) { _ =>
       if (!batch.isEmpty) {
-        val cents = centroidArrays(s.read.parquet(s"$dir/centroids"))
+        val cents = centroidArrays(Tables.read(s, s"$dir/centroids"))
           .select(col("cid").as("cluster"), col("cv"))
         val delta = batch.select(col("new_id"), col("dv"))
         // vectors FIRST, postings second: postings' _SUCCESS is the
@@ -1420,12 +1420,12 @@ object LlmScale extends OpModule {
                                        dir: String): DataFrame = {
     graft.GraftExtensions.register(s)
     val (posts, vecDirs, _) = ivfStoreHead(dir)
-    val inv = posts.map(p => s.read.parquet(s"$dir/$p"))
+    val inv = posts.map(p => Tables.read(s, s"$dir/$p"))
       .reduce(_ unionByName _)
     val vecsAll = MemoUtil.scratch(vecDirs
-      .map(p => s.read.parquet(s"$dir/$p"))
+      .map(p => Tables.read(s, s"$dir/$p"))
       .reduce(_ unionByName _).localCheckpoint())
-    val cents = centroidArrays(s.read.parquet(s"$dir/centroids"))
+    val cents = centroidArrays(Tables.read(s, s"$dir/centroids"))
       .select(col("cid").as("cluster"), col("cv"))
     val q = vecsAll.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("qv").as("qq"))
@@ -3218,7 +3218,7 @@ object LlmScale extends OpModule {
 
   private def graphStoreRead(s: SparkSession, dir: String,
                              ps: Seq[String]): DataFrame =
-    ps.map(p => s.read.parquet(s"$dir/$p")).reduce(_ unionByName _)
+    ps.map(p => Tables.read(s, s"$dir/$p")).reduce(_ unionByName _)
 
   /** The edge-sweep compaction: drop every tombstone-incident edge
     * (both directions), filter the entry sample, flip the head to drop
@@ -3459,9 +3459,9 @@ object LlmScale extends OpModule {
         // hop's score join, once per micro-batch
         val (adjBase, entBase, vecBase) =
           streamBaseMemo((s, dir)) {
-            (s.read.parquet(s"$dir/adjacency").localCheckpoint(),
-              s.read.parquet(s"$dir/entries"),
-              s.read.parquet(s"$dir/vectors").localCheckpoint())
+            (Tables.read(s, s"$dir/adjacency").localCheckpoint(),
+              Tables.read(s, s"$dir/entries"),
+              Tables.read(s, s"$dir/vectors").localCheckpoint())
           }
         // vectors FIRST, adjacency second: adjacency's _SUCCESS is the
         // replay marker, so its existence implies the vectors landed;

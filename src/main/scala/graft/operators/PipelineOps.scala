@@ -5,6 +5,7 @@ import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.pipeline.{FileTopic, Pipeline}
 
 /** The declared-pipeline surface (graft.pipeline) exercised end-to-end
@@ -48,7 +49,7 @@ object PipelineOps extends OpModule {
     val out = fresh("out")
     val q = revenuePipeline(d).start(s, out, fresh("ckpt"))
     if (!q.awaitTermination(180000L)) q.stop()
-    s.read.parquet(out)
+    Tables.read(s, out)
   }
 
   /** The CURATION pipeline as a declared streaming job — the C4-style
@@ -84,7 +85,7 @@ object PipelineOps extends OpModule {
     val out = fresh("cur")
     val q = curationPipeline(d).start(s, out, fresh("cur-ckpt"))
     if (!q.awaitTermination(180000L)) q.stop()
-    s.read.parquet(out)
+    Tables.read(s, out)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

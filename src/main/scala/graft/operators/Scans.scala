@@ -147,7 +147,7 @@ object Scans extends OpModule {
     * replays the same slice on the unsorted fixture: layout changes
     * I/O, never results. */
   def scanRowgroupPrune(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(stagedSortedDir(s, d))
+    Tables.read(s, stagedSortedDir(s, d))
       .where(col("l_orderkey").between(100, 300))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("l_quantity")).cast("bigint").as("sum_qty"),
@@ -194,7 +194,7 @@ object Scans extends OpModule {
         .repartitionByRange(16, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
         .write.mode("overwrite").parquet(s"$dir/data")
-      s.read.parquet(s"$dir/data")
+      Tables.read(s, s"$dir/data")
         .groupBy(input_file_name().as("path"))
         .agg(min(col("l_orderkey")).as("k_min"),
           max(col("l_orderkey")).as("k_max"),
@@ -215,7 +215,7 @@ object Scans extends OpModule {
     * (min/max make file exclusion exact — no false negatives). */
   def scanManifestPrune(s: SparkSession, d: String): DataFrame = {
     val dir = stagedManifestDir(s, d)
-    val files = s.read.parquet(s"$dir/manifest")
+    val files = Tables.read(s, s"$dir/manifest")
       .where(col("k_max") >= 200 && col("k_min") <= 450)
       .select(col("path")).collect().map(_.getString(0))
     readPaths(s, files.toIndexedSeq)
@@ -236,7 +236,7 @@ object Scans extends OpModule {
     * groups, its no-false-NEGATIVE guarantee is what makes the pruned
     * answer exact. */
   def scanBloomPrune(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(stagedBloomDir(s, d))
+    Tables.read(s, stagedBloomDir(s, d))
       .where(col("o_orderkey").isin(7L, 611L, 1021L, 1223L, 1379L))
       .select(col("o_orderkey"), col("o_custkey"),
         round(col("o_totalprice"), 4).as("price"))
@@ -361,7 +361,7 @@ object Scans extends OpModule {
       .agg(count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice")), 4).as("sum_price"))
       .write.mode(SaveMode.Overwrite).parquet(path)
-    s.read.parquet(path).orderBy(col("o_orderstatus"))
+    Tables.read(s, path).orderBy(col("o_orderstatus"))
   }
 
   /** DYNAMIC partition overwrite — the production incremental-writer
@@ -410,7 +410,7 @@ object Scans extends OpModule {
           s.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),
@@ -498,7 +498,7 @@ object Scans extends OpModule {
     if (touched.isEmpty) return
     // partition-pruned target read — the predicate on the partition
     // column eliminates untouched directories at planning time
-    val tgtTouched = s.read.parquet(path)
+    val tgtTouched = Tables.read(s, path)
       .where(col("o_orderpriority").isin(touched.toIndexedSeq: _*))
     val keyed = src.where(col("op").isin("U", "D"))
       .select(col("o_orderkey"), col("op"),
@@ -526,7 +526,7 @@ object Scans extends OpModule {
     val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try
-      s.read.parquet(stage).write.partitionBy("o_orderpriority")
+      Tables.read(s, stage).write.partitionBy("o_orderpriority")
         .mode(SaveMode.Overwrite).parquet(path)
     finally prev match {
       case Some(v) =>
@@ -547,7 +547,7 @@ object Scans extends OpModule {
         .repartitionByRange(16, col("ts"))
         .sortWithinPartitions(col("ts"))
         .write.mode("overwrite").parquet(s"$dir/data")
-      s.read.parquet(s"$dir/data")
+      Tables.read(s, s"$dir/data")
         .groupBy(input_file_name().as("path"))
         .agg(min(col("ts")).as("ts_min"), max(col("ts")).as("ts_max"),
           count(lit(1)).as("n_rows"))
@@ -582,7 +582,7 @@ object Scans extends OpModule {
       .select(col("hr")).collect().map(_.getTimestamp(0))
     def hourEnd(h: java.sql.Timestamp) =
       new java.sql.Timestamp(h.getTime + 3600000L)
-    val man = s.read.parquet(s"$dir/manifest")
+    val man = Tables.read(s, s"$dir/manifest")
     val overlap = hot.map(h =>
       col("ts_max") >= lit(h) && col("ts_min") < lit(hourEnd(h)))
       .reduce(_ || _)
@@ -638,11 +638,11 @@ object Scans extends OpModule {
     * carries a partitionFilter on ITS spec's column. */
   def scanPartitionEvolution(s: SparkSession, d: String): DataFrame = {
     val dir = stagedEvolvedPartsDir(s, d)
-    val spec = s.read.parquet(s"$dir/spec").collect()
+    val spec = Tables.read(s, s"$dir/spec").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val prios = Seq("1-URGENT", "2-HIGH")
     def epochRead(epoch: String): DataFrame = {
-      val df = s.read.parquet(s"$dir/$epoch")
+      val df = Tables.read(s, s"$dir/$epoch")
       spec(epoch) match {
         case "o_orderpriority" =>
           df.where(col("o_orderpriority").isin(prios: _*))   // partition
@@ -713,7 +713,7 @@ object Scans extends OpModule {
       mergeCowStageTarget(s, d, path)
       mergeCowApply(s, d, path)
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),
@@ -766,11 +766,11 @@ object Scans extends OpModule {
   /** The MOR read path: base ⟕ anti-join the delete sidecar, union the
     * delta — the per-query reconstruction. */
   private[graft] def mergeMorRead(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"$path/base")
-      .join(broadcast(s.read.parquet(s"$path/deletes")),
+    Tables.read(s, s"$path/base")
+      .join(broadcast(Tables.read(s, s"$path/deletes")),
         Seq("o_orderkey"), "left_anti")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      .unionByName(s.read.parquet(s"$path/delta")
+      .unionByName(Tables.read(s, s"$path/delta")
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderpriority")))
 
@@ -828,7 +828,7 @@ object Scans extends OpModule {
     * read-back pass grouped on input_file_name, coalesced to the single
     * small sidecar file a manifest is. */
   private def manifestStats(s: SparkSession, dataGlob: String): DataFrame =
-    s.read.parquet(dataGlob)
+    Tables.read(s, dataGlob)
       .groupBy(input_file_name().as("path"))
       .agg(min(col("o_orderkey")).as("k_min"),
         max(col("o_orderkey")).as("k_max"),
@@ -856,7 +856,7 @@ object Scans extends OpModule {
     }
     val d1 = java.nio.file.Paths.get(dir, "d1")
     StageUtil.copyDir(java.nio.file.Paths.get(tpl, "d1"), d1)
-    s.read.parquet(s"$tpl/m1")
+    Tables.read(s, s"$tpl/m1")
       .withColumn("path",
         concat(lit(d1.toUri.toString.stripSuffix("/") + "/"),
           element_at(split(col("path"), "/"), -1)))
@@ -865,7 +865,7 @@ object Scans extends OpModule {
   }
 
   private[graft] def timeTravelWriteV2(s: SparkSession, dir: String): Unit = {
-    val m1 = s.read.parquet(s"$dir/m1")
+    val m1 = Tables.read(s, s"$dir/m1")
     val hit = col("k_max") >= 100 && col("k_min") <= 400
     // |files|-bounded driver metadata: the lakehouse planner's read
     val oldPaths = m1.where(hit).select(col("path"))
@@ -888,7 +888,7 @@ object Scans extends OpModule {
     * streaming manifest-CDC consumer a REAL multi-step chain to tail
     * (two offset-tracked micro-batches, v1→v2 and v2→v3). */
   private[graft] def timeTravelWriteV3(s: SparkSession, dir: String): Unit = {
-    val m2 = s.read.parquet(s"$dir/m2")
+    val m2 = Tables.read(s, s"$dir/m2")
     val hit = col("k_max") >= 500 && col("k_min") <= 700
     val oldPaths = m2.where(hit).select(col("path"))
       .collect().map(_.getString(0))
@@ -944,7 +944,7 @@ object Scans extends OpModule {
       manifestStats(s, s"$dir/d1").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")
       // v2: COW price update — row ids carried through the rewrite
-      val m1 = s.read.parquet(s"$dir/m1")
+      val m1 = Tables.read(s, s"$dir/m1")
       val hit2 = col("k_max") >= 100 && col("k_min") <= 400
       val p2 = m1.where(hit2).select(col("path"))
         .collect().map(_.getString(0))
@@ -956,7 +956,7 @@ object Scans extends OpModule {
       m1.where(!hit2).unionByName(manifestStats(s, s"$dir/d2"))
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/m2")
       // v3: KEY MIGRATION — the key changes, the row id does not
-      val m2 = s.read.parquet(s"$dir/m2")
+      val m2 = Tables.read(s, s"$dir/m2")
       val hit3 = col("k_max") >= 500 && col("k_min") <= 700
       val p3 = m2.where(hit3).select(col("path"))
         .collect().map(_.getString(0))
@@ -972,7 +972,7 @@ object Scans extends OpModule {
       // gain one NEW row per even key (fresh row ids and keys offset
       // +7·10⁸, price +500) — the commit classes a changelog consumer
       // must see as D and I, never as U
-      val m3 = s.read.parquet(s"$dir/m3")
+      val m3 = Tables.read(s, s"$dir/m3")
       val hit4 = col("k_max") >= 800 && col("k_min") <= 900
       val p4 = m3.where(hit4).select(col("path"))
         .collect().map(_.getString(0))
@@ -1021,10 +1021,17 @@ object Scans extends OpModule {
     }.reduce(_ unionByName _)
   }
 
-  /** All rows a manifest resolves — the snapshot read. */
+  private val manifests = new Tables.FileCache[Seq[String]]
+
+  /** All rows a manifest resolves — the snapshot read. Cached under the
+    * manifest dir's own content key: a published manifest is never
+    * rewritten, and a stranded one the next publish overwrites has new
+    * part files, so a key is never served stale. */
   private[graft] def snapshotPaths(s: SparkSession, mDir: String): Seq[String] =
-    s.read.parquet(mDir).select(col("path"))
-      .collect().map(_.getString(0)).toIndexedSeq.sorted
+    manifests(s, Seq(mDir)) {
+      Tables.read(s, mDir).select(col("path"))
+        .collect().map(_.getString(0)).toIndexedSeq.sorted
+    }
 
   /** Read data files a manifest names. Manifest paths are
     * input_file_name() URIs, percent-encoded, and Spark's reader does
@@ -1033,7 +1040,7 @@ object Scans extends OpModule {
     * of manifest entries (OCC, vacuum, CDC diffs) keep the encoded
     * strings: decoding one side only would empty every intersection. */
   private[graft] def readPaths(s: SparkSession, paths: Seq[String]): DataFrame =
-    s.read.parquet(paths.map(localPath): _*)
+    Tables.read(s, paths.map(localPath): _*)
 
   /** A manifest path as a reader opens it: `file:` URIs decoded. */
   private[graft] def localPath(p: String): String =
@@ -1046,7 +1053,7 @@ object Scans extends OpModule {
   private def occStage(s: SparkSession, dir: String, baseV: Long,
                        lo: Long, hi: Long, mult: Double,
                        dataDir: String): Seq[String] = {
-    val m = s.read.parquet(s"$dir/m$baseV")
+    val m = Tables.read(s, s"$dir/m$baseV")
     val touched = m.where(col("k_max") >= lo && col("k_min") <= hi)
       .select(col("path")).collect().map(_.getString(0)).toSeq.sorted
     readPaths(s, touched)
@@ -1082,7 +1089,7 @@ object Scans extends OpModule {
     def readCheck(head: Long, added: Set[String]): Unit =
       readRange.foreach { case (lo, hi) =>
         // |files|-row driver predicate over the head manifest's stats
-        val overlap = s.read.parquet(s"$dir/m$head")
+        val overlap = Tables.read(s, s"$dir/m$head")
           .where(col("path").isin(added.toSeq: _*))
           .where(col("k_max") >= lo && col("k_min") <= hi)
           .count()
@@ -1092,7 +1099,7 @@ object Scans extends OpModule {
             "write skew; re-plan against the current head")
       }
     occPublish(s, dir, baseV, touched, readCheck) { v =>
-      s.read.parquet(s"$dir/m${v - 1}").where(!col("path").isin(touched: _*))
+      Tables.read(s, s"$dir/m${v - 1}").where(!col("path").isin(touched: _*))
         .unionByName(manifestStats(s, s"$dir/$dataDir")).coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$v")
       val lines = wapLogRead(dir, s"log${v - 1}")
@@ -1139,7 +1146,7 @@ object Scans extends OpModule {
     StageUtil.staged("merge_occ", d) { dir =>
       timeTravelWriteV1(s, d, dir)
       TableLog.publish(dir, "m1")
-      val maxKey = s.read.parquet(s"$dir/d1")
+      val maxKey = Tables.read(s, s"$dir/d1")
         .agg(max(col("o_orderkey"))).collect()(0).getLong(0)
       // BOTH writers plan against v1 before either publishes — the
       // interleaving OCC exists for
@@ -1230,7 +1237,7 @@ object Scans extends OpModule {
     if (entries.isEmpty) base
     else {
       val posts = entries.map { case (seq, e) =>
-        s.read.parquet(s"$dir/$e")
+        Tables.read(s, s"$dir/$e")
           .select(col("o_orderkey"), col("o_totalprice"),
             lit(seq).as("seq"))
       }.reduce(_ unionByName _)
@@ -1283,7 +1290,7 @@ object Scans extends OpModule {
       def publishFold(baseV: Long, folded: Set[Long], inputs: Seq[String],
                       cbDir: String): (Long, String) =
         occPublish(s, dir, baseV, inputs) { v =>
-          s.read.parquet(s"$dir/m${v - 1}")
+          Tables.read(s, s"$dir/m${v - 1}")
             .where(!col("path").isin(inputs: _*))
             .unionByName(manifestStats(s, s"$dir/$cbDir")).coalesce(1)
             .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$v")
@@ -1301,7 +1308,7 @@ object Scans extends OpModule {
       // writer first: a ROW DELTA appends a post-image log entry; key-
       // addressed, so it is valid against any base and never conflicts
       val v2 = TableLog.commit(dir) { v =>
-        s.read.parquet(s"$dir/m${v - 1}").coalesce(1)
+        Tables.read(s, s"$dir/m${v - 1}").coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/m$v")
         writeLog(v, wapLogRead(dir, s"log${v - 1}") :+ "2 e2")
         s"m$v"
@@ -1310,7 +1317,7 @@ object Scans extends OpModule {
       // ── interleaving B: compactor first, stale COW writer aborts ──
       val w2Base = TableLog.version(dir) // = v3
       val w2Touched = {
-        val m = s.read.parquet(s"$dir/m$w2Base")
+        val m = Tables.read(s, s"$dir/m$w2Base")
         m.where(col("k_max") >= 100 && col("k_min") <= 400)
           .select(col("path")).collect().map(_.getString(0)).toSeq.sorted
       }
@@ -1340,7 +1347,7 @@ object Scans extends OpModule {
     * depend on. */
   private def serOccReadCount(s: SparkSession, dir: String,
                               v: Long): Long = {
-    val m = s.read.parquet(s"$dir/m$v")
+    val m = Tables.read(s, s"$dir/m$v")
     val paths = m.where(col("k_max") >= 100 && col("k_min") <= 400)
       .select(col("path")).collect().map(_.getString(0)).toSeq
     if (paths.isEmpty) 0L
@@ -1355,7 +1362,7 @@ object Scans extends OpModule {
   private def serOccStageB(s: SparkSession, dir: String, baseV: Long,
                            lo: Long, hi: Long, cnt: Long,
                            dataDir: String): Seq[String] = {
-    val m = s.read.parquet(s"$dir/m$baseV")
+    val m = Tables.read(s, s"$dir/m$baseV")
     val touched = m.where(col("k_max") >= lo && col("k_min") <= hi)
       .select(col("path")).collect().map(_.getString(0)).toSeq.sorted
     readPaths(s, touched)
@@ -1401,7 +1408,7 @@ object Scans extends OpModule {
   private[graft] def serOccDir(s: SparkSession, d: String): String =
     StageUtil.staged("ser_occ", d) { dir =>
       timeTravelWriteV1(s, d, dir)
-      val maxKey = s.read.parquet(s"$dir/d1")
+      val maxKey = Tables.read(s, s"$dir/d1")
         .agg(max(col("o_orderkey"))).collect()(0).getLong(0)
       val (bLo, bHi) = (maxKey - 300L, maxKey)
       // one base staging, two manifest chains: the anomaly needs the
@@ -1409,7 +1416,7 @@ object Scans extends OpModule {
       Seq("si", "ser").foreach { br =>
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(dir, br))
-        s.read.parquet(s"$dir/m1").coalesce(1)
+        Tables.read(s, s"$dir/m1").coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/$br/m1")
         TableLog.publish(s"$dir/$br", "m1")
       }
@@ -1735,9 +1742,9 @@ object Scans extends OpModule {
 
   def maintenanceCompact(s: SparkSession, d: String): DataFrame = {
     val (src, out) = compactDirs(s, d)
-    s.read.parquet(src).coalesce(4)
+    Tables.read(s, src).coalesce(4)
       .write.mode(SaveMode.Overwrite).parquet(out)
-    s.read.parquet(out).agg(
+    Tables.read(s, out).agg(
       count(lit(1)).as("n_rows"),
       min(col("event_id")).as("min_id"),
       max(col("event_id")).as("max_id"),
@@ -1757,6 +1764,7 @@ object Scans extends OpModule {
           col("n_regionkey"))
         .write.mode(SaveMode.Append).parquet(path)
     }
+    // not Tables.read: the merged schema is what this read tests
     s.read.option("mergeSchema", "true").parquet(p)
       .select(col("batch"), col("n_nationkey"), col("n_name"),
         col("n_regionkey"))
@@ -1787,7 +1795,7 @@ object Scans extends OpModule {
     * already holds — zero extra I/O; the audit is one map-side-combined
     * aggregate per partition value. */
   def scanMetadataCols(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(partitionedOrders(s, d))
+    Tables.read(s, partitionedOrders(s, d))
       .select(col("o_orderpriority"),
         regexp_extract(col("_metadata.file_path"),
           "o_orderpriority=([^/]+)/", 1).as("from_path"))
@@ -1806,7 +1814,7 @@ object Scans extends OpModule {
     * in the scan — asserted in ScansSpec), so only ~2/5 of the data is
     * read. */
   def scanPartitioned(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(partitionedOrders(s, d))
+    Tables.read(s, partitionedOrders(s, d))
       .where(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"),
@@ -2205,7 +2213,7 @@ object Scans extends OpModule {
     // base join makes that a non-assumption rather than a latent bug.)
     src.where(col("op").isin("U", "D"))
       .select(col("o_orderkey"))
-      .join(s.read.parquet(s"$path/base")
+      .join(Tables.read(s, s"$path/base")
         .select(col("o_orderkey"), col("o_orderpriority")), "o_orderkey")
       .write.mode(SaveMode.Overwrite).parquet(s"$path/deletes")
     src.where(col("op").isin("U", "I"))
@@ -2216,19 +2224,19 @@ object Scans extends OpModule {
   /** The compactor: merged files for the touched partitions → base2,
     * marker flip, log GC. */
   private[graft] def morCompactRun(s: SparkSession, path: String): Unit = {
-    val touched = s.read.parquet(s"$path/deletes")
+    val touched = Tables.read(s, s"$path/deletes")
       .select(col("o_orderpriority"))
-      .unionByName(s.read.parquet(s"$path/delta")
+      .unionByName(Tables.read(s, s"$path/delta")
         .select(col("o_orderpriority")))
       .distinct().collect().map(_.getString(0)).sorted
     // the reconstruction, restricted to the log's partition scope —
     // identical to the per-query MOR read it retires, run once
-    s.read.parquet(s"$path/base")
+    Tables.read(s, s"$path/base")
       .where(col("o_orderpriority").isin(touched.toIndexedSeq: _*))
-      .join(broadcast(s.read.parquet(s"$path/deletes")
+      .join(broadcast(Tables.read(s, s"$path/deletes")
         .select(col("o_orderkey"))), Seq("o_orderkey"), "left_anti")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      .unionByName(s.read.parquet(s"$path/delta")
+      .unionByName(Tables.read(s, s"$path/delta")
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderpriority")))
       .write.partitionBy("o_orderpriority")
@@ -2252,11 +2260,11 @@ object Scans extends OpModule {
       import scala.jdk.CollectionConverters._
       val touched = java.nio.file.Files.readAllLines(marker)
         .asScala.toSeq.filter(_.nonEmpty)
-      s.read.parquet(s"$path/base")
+      Tables.read(s, s"$path/base")
         .where(!col("o_orderpriority").isin(touched: _*))
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderpriority"))
-        .unionByName(s.read.parquet(s"$path/base2")
+        .unionByName(Tables.read(s, s"$path/base2")
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderpriority")))
     } else mergeMorRead(s, path)
@@ -2325,6 +2333,7 @@ object Scans extends OpModule {
 
   def scanEncrypted(s: SparkSession, d: String): DataFrame = {
     val dir = encryptedDir(s, d)
+    // not Tables.read: the encrypted footer needs the decryption options
     s.read.options(cryptoOpts).parquet(s"$dir/enc")
       .where(col("o_orderkey") < 500)
       .groupBy(col("o_orderpriority"))
@@ -2367,7 +2376,7 @@ object Scans extends OpModule {
           .sortWithinPartitions(col(sortCol))
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/$sub/data")
         // the 2-D zonemap: per file, min/max of BOTH dimensions
-        s.read.parquet(s"$dir/$sub/data")
+        Tables.read(s, s"$dir/$sub/data")
           .groupBy(input_file_name().as("path"))
           .agg(min(col("x")).as("x_min"), max(col("x")).as("x_max"),
             min(col("y")).as("y_min"), max(col("y")).as("y_max"))
@@ -2386,7 +2395,7 @@ object Scans extends OpModule {
     * empty LocalRelation, no data scanned. */
   private def plannedRead(s: SparkSession, schemaDir: String,
                           paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) s.read.parquet(schemaDir).where(lit(false))
+    if (paths.isEmpty) Tables.read(s, schemaDir).where(lit(false))
     else readPaths(s, paths)
 
   /** The aligned 64×64 box (custkey 64..127 × epoch-days 9216..9279 —
@@ -2398,7 +2407,7 @@ object Scans extends OpModule {
   private[graft] def zorderBoxRead(s: SparkSession, dir: String,
                                    sub: String): DataFrame = {
     val (x0, x1, y0, y1) = zBox
-    val paths = s.read.parquet(s"$dir/$sub/manifest")
+    val paths = Tables.read(s, s"$dir/$sub/manifest")
       .where(col("x_max") >= x0 && col("x_min") <= x1 &&
         col("y_max") >= y0 && col("y_min") <= y1)
       .select(col("path")).collect().map(_.getString(0)).sorted
@@ -2439,7 +2448,7 @@ object Scans extends OpModule {
         .repartition(16, col("o_orderkey"))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/data")
       // the index build: one distributed read-back pass → posting list
-      s.read.parquet(s"$dir/data")
+      Tables.read(s, s"$dir/data")
         .groupBy(col("o_custkey"), input_file_name().as("file_path"))
         .agg(count(lit(1)).as("n_rows"))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/index")
@@ -2457,7 +2466,7 @@ object Scans extends OpModule {
   private[graft] def secIndexLookup(s: SparkSession, dir: String,
                                     keys: Seq[Long]): DataFrame = {
     // index read: small pruned scan → |keys|·|postings| driver metadata
-    val paths = s.read.parquet(s"$dir/index")
+    val paths = Tables.read(s, s"$dir/index")
       .where(col("o_custkey").isin(keys: _*))
       .select(col("file_path")).distinct()
       .collect().map(_.getString(0)).sorted
@@ -2501,7 +2510,7 @@ object Scans extends OpModule {
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/d1")
       manifestStats(s, s"$dir/d1").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")
-      indexPostings(s.read.parquet(s"$dir/d1"))
+      indexPostings(Tables.read(s, s"$dir/d1"))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/index1")
       // publish v1: ONE head payload names the (manifest, postings)
       // PAIR — the atomic cross-artifact commit (VERDICT r14 task 6): a
@@ -2518,7 +2527,7 @@ object Scans extends OpModule {
       val p2 = snapshotPaths(s, s"$dir/m2").toSet
       val stale = (p1 -- p2).toSeq.sorted
       val freshPaths = (p2 -- p1).toSeq.sorted
-      s.read.parquet(s"$dir/index1")
+      Tables.read(s, s"$dir/index1")
         .where(!col("file_path").isin(stale: _*))
         .unionByName(indexPostings(readPaths(s, freshPaths)))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/index2")
@@ -2538,7 +2547,7 @@ object Scans extends OpModule {
     // (snapshot, postings) pair, then postings → planned files →
     // key-filtered read (the scanSecondaryIndex shape)
     val Array(_, idx) = TableLog.head(dir).split(' ')
-    val paths = s.read.parquet(s"$dir/$idx")
+    val paths = Tables.read(s, s"$dir/$idx")
       .where(col("o_custkey").isin(secIndexProbeKeys: _*))
       .select(col("file_path")).distinct()
       .collect().map(_.getString(0)).sorted
@@ -2622,7 +2631,7 @@ object Scans extends OpModule {
       .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
     val fresh = cur.groupBy(col("o_month"))
       .agg(count(lit(1)).as("n_now"))
-    val wm = s.read.parquet(s"$dir/watermark")
+    val wm = Tables.read(s, s"$dir/watermark")
       .select(col("o_month"), col("n_src"))
     val diff = fresh.join(wm, Seq("o_month"), "full")
       .select(col("o_month"), col("n_now"), col("n_src")).collect()
@@ -2659,7 +2668,7 @@ object Scans extends OpModule {
         java.nio.file.Files.readAllLines(auditPath)
           .asScala.toSeq.filter(_.nonEmpty).toSet
       else Set.empty[String]
-    s.read.parquet(s"$dir/target")
+    Tables.read(s, s"$dir/target")
       .groupBy(col("o_month"))
       .agg(sum(col("n")).cast("bigint").as("n"),
         sum(col("cents")).cast("bigint").as("cents"))
@@ -2703,7 +2712,7 @@ object Scans extends OpModule {
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/m1")
       // v2: the key migration — a COW rewrite of the overlapping
       // files; row_id rides through untouched
-      val m1 = s.read.parquet(s"$dir/m1")
+      val m1 = Tables.read(s, s"$dir/m1")
       val hit = col("k_max") >= 100 && col("k_min") <= 400
       val oldPaths = m1.where(hit).select(col("path"))
         .collect().map(_.getString(0))
@@ -2792,7 +2801,7 @@ object Scans extends OpModule {
       .collect().map(_.getString(0)).sorted
     // the writer's position-finding pass: partition-pruned scan of the
     // touched files with the metadata ordinal riding along
-    s.read.parquet(s"$path/base")
+    Tables.read(s, s"$path/base")
       .where(col("o_orderpriority").isin(touched.toIndexedSeq: _*))
       .select(col("o_orderkey"),
         col("_metadata.file_path").as("file_path"),
@@ -2810,14 +2819,14 @@ object Scans extends OpModule {
     * (file, ordinal) is recorded — the logical key never participates
     * in the delete application. */
   private[graft] def mergePosRead(s: SparkSession, path: String): DataFrame = {
-    val base = s.read.parquet(s"$path/base")
+    val base = Tables.read(s, s"$path/base")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"),
         col("_metadata.file_path").as("file_path"),
         col("_metadata.row_index").as("pos"))
-    base.join(broadcast(s.read.parquet(s"$path/pos_deletes")),
+    base.join(broadcast(Tables.read(s, s"$path/pos_deletes")),
         Seq("file_path", "pos"), "left_anti")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      .unionByName(s.read.parquet(s"$path/delta")
+      .unionByName(Tables.read(s, s"$path/delta")
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderpriority")))
   }
@@ -2880,7 +2889,7 @@ object Scans extends OpModule {
     * manifest m3. Built from the HEAD snapshot (m2) like a real
     * follow-on batch would be. */
   private[graft] def wapWriteBadBranch(s: SparkSession, dir: String): Unit = {
-    val head = s.read.parquet(s"$dir/${TableLog.head(dir)}")
+    val head = Tables.read(s, s"$dir/${TableLog.head(dir)}")
     val hit = col("k_max") >= 500 && col("k_min") <= 900
     val oldPaths = head.where(hit).select(col("path"))
       .collect().map(_.getString(0))
@@ -2900,7 +2909,7 @@ object Scans extends OpModule {
     * why WAP costs one extra scan and saves the quarter. */
   private[graft] def wapAudit(s: SparkSession, dir: String,
                               branch: String): Boolean = {
-    val headN = s.read.parquet(
+    val headN = Tables.read(s, 
         snapshotPaths(s, s"$dir/${TableLog.head(dir)}"): _*).count()
     val row = readPaths(s, snapshotPaths(s, s"$dir/$branch"))
       .agg(count(lit(1)).as("n"),
@@ -2983,10 +2992,10 @@ object Scans extends OpModule {
     * driver metadata — the catalog read every table format does. */
   private[graft] def colMapRead(s: SparkSession, dir: String,
                                 ver: String): DataFrame = {
-    val m = s.read.parquet(s"$dir/map_$ver")
+    val m = Tables.read(s, s"$dir/map_$ver")
       .orderBy(col("fid")).collect()
       .map(r => (r.getString(1), r.getString(2)))
-    s.read.parquet(s"$dir/data")
+    Tables.read(s, s"$dir/data")
       .select(m.map { case (p, l) => col(p).as(l) }.toIndexedSeq: _*)
   }
 
@@ -3088,11 +3097,12 @@ object Scans extends OpModule {
     * version's logical names. */
   private[graft] def evolveRead(s: SparkSession, dir: String,
                                 ver: String): DataFrame = {
-    val m = s.read.parquet(s"$dir/map_$ver")
+    val m = Tables.read(s, s"$dir/map_$ver")
       .orderBy(col("fid")).collect()
       .map(r => (r.getString(1), r.getString(2), r.getString(3)))
     val ddl = (m.map { case (p, _, t) => s"$p $t" } :+ "pr STRING")
       .mkString(", ")
+    // not Tables.read: the mapped schema is given, nothing is inferred
     s.read.schema(ddl).parquet(s"$dir/data")
       .select(m.map { case (p, l, _) => col(p).as(l) }.toIndexedSeq: _*)
   }

@@ -103,16 +103,12 @@ object StreamIO extends OpModule {
 
   /** events.parquet as an unbounded file-source table (ns→µs like
     * Tables.events). The file-source schema must be supplied up front;
-    * inferring it costs a directory listing + footer read per call, so
-    * it is cached per staged dir — ~10 streaming queries each saved
-    * ~0.15 s of identical inference (the schema of a staged fixture
-    * cannot change under the JVM). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    * `Tables.read` gives it without an inference job once the staged
+    * dir has been read. */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     val path = eventsDir(d)
-    val schema = schemaCache.computeIfAbsent(path, p => s.read.parquet(p).schema)
-    graft.Tables.normalizeTs(s.readStream.schema(schema).parquet(path))
+    graft.Tables.normalizeTs(
+      s.readStream.schema(Tables.read(s, path).schema).parquet(path))
   }
 
   /** Staged dir holding TWO copies of events.parquet — a topic where
@@ -192,8 +188,7 @@ object StreamIO extends OpModule {
     // batches, timers checked once against batch1's max event time
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val (src, nParts) = timerEventsDir(s, d)
-    val schema = schemaCache.computeIfAbsent(src,
-      p => s.read.parquet(p).schema)
+    val schema = Tables.read(s, src).schema
     val name = s"sclose_${UUID.randomUUID().toString.replace("-", "")}"
     val stream = graft.Tables.normalizeTs(
       s.readStream.schema(schema)
@@ -226,10 +221,12 @@ object StreamIO extends OpModule {
     * distinct count. */
   def streamDedupWithinWm(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
+    // one micro-batch: append mode emits each row when first seen, so a
+    // trailing no-data batch would only evict state
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val name = s"ddw_${UUID.randomUUID().toString.replace("-", "")}"
     val src = dupEventsDir(d)
-    val schema = schemaCache.computeIfAbsent(src,
-      p => s.read.parquet(p).schema)
+    val schema = Tables.read(s, src).schema
     val q = graft.Tables.normalizeTs(
         s.readStream.schema(schema).parquet(src))
       .withWatermark("ts", "10 minutes")
@@ -279,8 +276,7 @@ object StreamIO extends OpModule {
     val s = streamSession(s0)
     val name = s"chain_${UUID.randomUUID().toString.replace("-", "")}"
     val src = chainEventsDir(s, d)
-    val schema = schemaCache.computeIfAbsent(src,
-      p => s.read.parquet(p).schema)
+    val schema = Tables.read(s, src).schema
     val q = Streaming.chainedStateful(graft.Tables.normalizeTs(
         s.readStream.schema(schema).parquet(src))
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -333,8 +329,7 @@ object StreamIO extends OpModule {
   def streamChainedJoinAgg(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
     val src = joinChainEventsDir(s, d)
-    val schema = schemaCache.computeIfAbsent(src,
-      p => s.read.parquet(p).schema)
+    val schema = Tables.read(s, src).schema
     val ev = graft.Tables.normalizeTs(
       s.readStream.schema(schema).parquet(src))
     val name = s"jchain_${UUID.randomUUID().toString.replace("-", "")}"
@@ -428,7 +423,7 @@ object StreamIO extends OpModule {
       .option("checkpointLocation", fresh("ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     runToEnd(q)
-    s.read.parquet(out)
+    Tables.read(s, out)
   }
 
   /** Exactly-once resume: run a checkpointed job to completion, then
@@ -449,7 +444,7 @@ object StreamIO extends OpModule {
     }
     runOnce()
     runOnce() // restart from checkpoint: no-op, output must not double
-    s.read.parquet(out)
+    Tables.read(s, out)
   }
 
   /** Complete-output-mode demonstrator (append is exercised by the
@@ -695,7 +690,7 @@ object StreamIO extends OpModule {
             val post = b.where(col("sign") === 1)
               .select(col("row_id"), col("o_orderkey").as("k_post"),
                 col("o_totalprice").as("p_post"))
-            s.read.parquet(s"$tblDir/$head")
+            Tables.read(s, s"$tblDir/$head")
               .join(pre.join(post, Seq("row_id"), "full_outer"),
                 Seq("row_id"), "full_outer")
               // a pre-only id is a DELETE; any post image wins (U or I);
@@ -712,7 +707,7 @@ object StreamIO extends OpModule {
       .option("checkpointLocation", fresh("ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     runToEnd(q)
-    s.read.parquet(s"$tblDir/${TableLog.head(tblDir)}")
+    Tables.read(s, s"$tblDir/${TableLog.head(tblDir)}")
       .groupBy(when(col("o_orderkey") >= 700000000L, "inserted")
         .when(col("o_orderkey") >= 500000000L, "migrated")
         .otherwise("base").as("bucket"))
@@ -766,7 +761,7 @@ object StreamIO extends OpModule {
               .agg(sum(col("sign")).cast("bigint").as("dn"),
                 sum(col("sign") *
                   expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("dc"))
-            s.read.parquet(s"$mvDir/$head")
+            Tables.read(s, s"$mvDir/$head")
               .join(delta, Seq("bucket"), "full_outer")
               .select(col("bucket"),
                 (coalesce(col("n_rows"), lit(0L)) +
@@ -781,7 +776,7 @@ object StreamIO extends OpModule {
       .option("checkpointLocation", fresh("ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     runToEnd(q)
-    s.read.parquet(s"$mvDir/${TableLog.head(mvDir)}")
+    Tables.read(s, s"$mvDir/${TableLog.head(mvDir)}")
   }
 
   /** STREAMING MAINTENANCE OF THE PERSISTED VECTOR STORE (VERDICT r15
@@ -967,7 +962,7 @@ object StreamIO extends OpModule {
       .option("checkpointLocation", fresh("ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     runToEnd(q)
-    s.read.parquet(out).select(col("event_id"), col("user_id"), col("value"))
+    Tables.read(s, out).select(col("event_id"), col("user_id"), col("value"))
   }
 
   /** STREAMING UPSERT — continuous CDC apply into the lakehouse table,
@@ -1018,7 +1013,7 @@ object StreamIO extends OpModule {
       }
       // the batches apply on the stream thread, which never stages:
       // this build holds the staging lock while it waits
-      val schema = s.read.parquet(topic.toString).schema
+      val schema = Tables.read(s, topic.toString).schema
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(topic.toString)
@@ -1030,7 +1025,7 @@ object StreamIO extends OpModule {
         .trigger(Trigger.AvailableNow()).start()
       runToEnd(q)
     }
-    s.read.parquet(s"$dir/table")
+    Tables.read(s, s"$dir/table")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),

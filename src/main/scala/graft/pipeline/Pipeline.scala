@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.Tables
+
 /** The reference's framework surface re-expressed Spark-first
   * (/root/reference/README.md:2 — "Stream processing framework with
   * ECS"): pipelines are declared as source → stages → sink graphs where
@@ -32,11 +34,11 @@ sealed trait Topic {
 final case class FileTopic(path: String, schema: Option[StructType] = None)
     extends Topic {
   private def resolvedSchema(spark: SparkSession): StructType =
-    schema.getOrElse(spark.read.parquet(path).schema)
+    schema.getOrElse(Tables.read(spark, path).schema)
   override def readStream(spark: SparkSession): DataFrame =
     spark.readStream.schema(resolvedSchema(spark)).parquet(path)
   override def readBatch(spark: SparkSession): DataFrame =
-    spark.read.parquet(path)
+    Tables.read(spark, path)
 }
 
 /** Pipeline builder. Stages compose left to right; the declaration is

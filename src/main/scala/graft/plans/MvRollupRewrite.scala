@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Proj
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import graft.Tables
+
 /** Optimizer extension bringing the rescue-rule family
   * ([[CosineLshRewrite]], [[JaccardLshRewrite]], [[RangeBucketRewrite]],
   * [[SpatialGridRewrite]] — all JOIN rescues) to the AGGREGATE side:
@@ -130,7 +132,7 @@ object MvRollupRewrite extends Rule[LogicalPlan] {
                       ms: Measures): Option[LogicalPlan] = {
     // the MV relation, analyzed once per rewrite — a fresh QueryExecution,
     // never re-entering THIS optimization (analysis does not optimize)
-    val mvPlan = SparkSession.active.read.parquet(mvPath)
+    val mvPlan = Tables.read(SparkSession.active, mvPath)
       .queryExecution.analyzed
     val mvAttr: Map[String, Attribute] = mvPlan.output.map(a => a.name -> a).toMap
     val groupAttrs = agg.groupingExpressions

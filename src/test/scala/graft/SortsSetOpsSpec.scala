@@ -11,6 +11,26 @@ class SortsSetOpsSpec extends SparkSpec {
       s"expected TakeOrderedAndProject, got:\n$plan")
   }
 
+  test("sort_partition: each partition is sorted on (l_orderkey, l_linenumber) and owns its keys") {
+    // the fixture is stored in key order; a shuffled copy makes the
+    // sort do the work
+    val d = java.nio.file.Files.createTempDirectory("sort_partition").toString
+    graft.Tables.lineitem(spark, sf).orderBy(org.apache.spark.sql.functions.rand(7))
+      .repartition(3).write.parquet(s"$d/lineitem.parquet")
+    val parts = graft.operators.SortsSetOps.sortPartition(spark, d).rdd
+      .mapPartitions(it => Iterator(it.map(r => (r.getLong(0), r.getInt(1))).toVector))
+      .collect().toSeq
+    assert(parts.map(_.size).sum ==
+      graft.Tables.lineitem(spark, sf).count())
+    parts.foreach { p =>
+      assert(p == p.sorted, "a partition is out of order")
+    }
+    val owners = parts.zipWithIndex
+      .flatMap { case (p, i) => p.map(_._1).distinct.map(_ -> i) }
+      .groupBy(_._1)
+    assert(owners.values.forall(_.size == 1), "an l_orderkey spans two partitions")
+  }
+
   test("topk returns the 10 highest-balance customers in order") {
     val rows = graft.operators.SortsSetOps.topk(spark, sf).collect()
     assert(rows.length == 10)

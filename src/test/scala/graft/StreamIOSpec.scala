@@ -1,9 +1,34 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+
 import graft.operators.StreamIO
 
 class StreamIOSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The progress of every micro-batch `f` runs in queries whose name
+    * starts with `prefix` — the entries of their `recentProgress`. */
+  private def progressOf(prefix: String)(f: => Unit): Seq[StreamingQueryProgress] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: StreamingQueryListener.QueryProgressEvent
+            if Option(p.progress.name).exists(_.startsWith(prefix)) =>
+          seen.add(p.progress); ()
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try f
+    finally { ListenerDrain(sc); sc.removeSparkListener(listener) }
+    seen.asScala.toSeq
+  }
 
   test("checkpoint recovery does not double output on restart") {
     val out = StreamIO.checkpointRecovery(spark, sf)
@@ -19,6 +44,32 @@ class StreamIOSpec extends SparkSpec {
     val r = StreamIO.sourceRate(spark, sf).collect().head
     assert(r.getAs[Long]("n_rows") >= 100)
     assert(r.getAs[Long]("min_v") == 0L)
+  }
+
+  test("source_rate: every trigger carries exactly rowsPerBatch rows, and the total is rowsPerBatch × batches") {
+    var r: org.apache.spark.sql.Row = null
+    val batches = progressOf("src_rate_") {
+      r = StreamIO.sourceRate(spark, sf).collect().head
+    }
+    assert(batches.nonEmpty)
+    assert(batches.map(_.numInputRows).toSet == Set(100L),
+      s"rows per trigger: ${batches.map(_.numInputRows)}")
+    val n = 100L * batches.size
+    assert(r.getAs[Long]("n_rows") == n)
+    assert((r.getAs[Long]("min_v"), r.getAs[Long]("max_v")) == ((0L, n - 1)))
+  }
+
+  test("stream_dedup_within_wm: one micro-batch, per-type counts equal the distinct events") {
+    var rows: Map[String, Long] = Map.empty
+    val batches = progressOf("ddw_") {
+      rows = StreamIO.streamDedupWithinWm(spark, sf).as[(String, Long)]
+        .collect().toMap
+    }
+    assert(batches.map(_.batchId) == Seq(0L),
+      s"batches: ${batches.map(b => (b.batchId, b.numInputRows))}")
+    val expected = graft.Tables.events(spark, sf).groupBy($"event_type").count()
+      .as[(String, Long)].collect().toMap
+    assert(rows == expected)
   }
 
   test("memory-source replay equals its VALUES oracle shape") {
