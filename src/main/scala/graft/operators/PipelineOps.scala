@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,8 +15,13 @@ import graft.pipeline.{FileTopic, Pipeline}
   * asserted in PipelineSpec. */
 object PipelineOps extends OpModule {
 
-  private def fresh(tag: String): String =
-    s"${StageUtil.root}/$tag-${UUID.randomUUID()}"
+  /** Run `p` to completion into a fresh parquet sink topic, then read
+    * the topic back. */
+  private def runToTopic(s: SparkSession, p: Pipeline, tag: String): DataFrame = {
+    val out = StreamRunner.fresh(tag)
+    StreamRunner.await(p.start(s, out, StreamRunner.fresh(s"$tag-ckpt")))
+    Tables.read(s, out)
+  }
 
   /** Stage the fixture (single file or part-file directory — ScaleProbe
     * clone tiers are directory-shaped) into a directory topic (file
@@ -45,12 +48,8 @@ object PipelineOps extends OpModule {
           .when(col("value") >= 40, "mid")
           .otherwise("low").as("band")))
 
-  def pipelineE2e(s: SparkSession, d: String): DataFrame = {
-    val out = fresh("out")
-    val q = revenuePipeline(d).start(s, out, fresh("ckpt"))
-    if (!q.awaitTermination(180000L)) q.stop()
-    Tables.read(s, out)
-  }
+  def pipelineE2e(s: SparkSession, d: String): DataFrame =
+    runToTopic(s, revenuePipeline(d), "out")
 
   /** The CURATION pipeline as a declared streaming job — the C4-style
     * ingest path run incrementally instead of as a batch sweep: token
@@ -81,12 +80,8 @@ object PipelineOps extends OpModule {
       // the surviving row racy — content-derived fields only)
       .stage(_.select(col("content_hash"), col("n_tokens")))
 
-  def pipelineCuration(s: SparkSession, d: String): DataFrame = {
-    val out = fresh("cur")
-    val q = curationPipeline(d).start(s, out, fresh("cur-ckpt"))
-    if (!q.awaitTermination(180000L)) q.stop()
-    Tables.read(s, out)
-  }
+  def pipelineCuration(s: SparkSession, d: String): DataFrame =
+    runToTopic(s, curationPipeline(d), "cur")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipeline_e2e" -> pipelineE2e _,

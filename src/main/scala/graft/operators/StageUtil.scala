@@ -65,13 +65,23 @@ private[graft] object StageUtil {
   }
 
   /** The one per-JVM root every operator path resolves under (README
-    * "Staging"): once-per-JVM stagings and fixed per-call paths alike,
-    * so concurrent JVMs never share a path and no pass leaks a dir. */
+    * "Staging"): once-per-JVM stagings and per-call dirs alike, so
+    * concurrent JVMs never share a path. Stagings stay for the JVM's
+    * life; per-call dirs (`StreamRunner.fresh`) are deleted at drain. */
   private lazy val stageRoot: java.nio.file.Path =
     java.nio.file.Files.createTempDirectory("graft_stage")
   private val stageLock = new Object
 
   def root: String = stageRoot.toString
+
+  /** Delete `dir` and everything under it; a missing dir is a no-op. */
+  def wipe(dir: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(dir)) {
+      scala.util.Using.resource(java.nio.file.Files.walk(dir)) { w =>
+        w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .iterator.asScala.foreach(java.nio.file.Files.delete)
+      }
+    }
 
   /** The staging key of data dir `d`: `prefix_<d, non-alphanumerics as
     * _>_<abs hash of d>`. Sanitizing alone maps `/t/a_b` and `/t/a/b`
@@ -91,12 +101,7 @@ private[graft] object StageUtil {
       val dir = stageRoot.resolve(key(prefix, d))
       val marker = dir.resolve("_GRAFT_STAGED")
       if (!java.nio.file.Files.exists(marker)) {
-        if (java.nio.file.Files.exists(dir)) {
-          scala.util.Using.resource(java.nio.file.Files.walk(dir)) { w =>
-            w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .iterator.asScala.foreach(java.nio.file.Files.delete)
-          }
-        }
+        wipe(dir)
         java.nio.file.Files.createDirectories(dir)
         build(dir.toString)
         java.nio.file.Files.createFile(marker)

@@ -1,15 +1,13 @@
 package graft.operators
 
-import java.util.UUID
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
+import StreamRunner.{drain, fresh, run}
 
 /** Streaming sources, sinks, and stream joins (SURVEY.md §2.1 streaming
   * rows + §2.3 stream joins). The ECS reference's "topic" abstraction
@@ -19,10 +17,11 @@ import graft.Tables
   * memory, and rate connectors — the same DataSource V2 API a Kafka
   * connector plugs into.
   *
-  * Every query here RUNS a real streaming query (Trigger.AvailableNow →
-  * runs to completion, then returns the materialized result), so the
-  * driver's correctness gate checks actual micro-batch execution, not a
-  * batch stand-in. Checkpoint/output dirs are UUID-fresh per call;
+  * Every query here RUNS a real streaming query through StreamRunner
+  * (AvailableNow: it runs to completion, then the materialized result
+  * is returned), so the driver's correctness gate checks actual
+  * micro-batch execution, not a batch stand-in. Checkpoint/output dirs
+  * are fresh per call and deleted at drain (README "Streams");
   * exactly-once recovery reuses one checkpoint deliberately.
   *
   * At-scale notes: the file source lists + splits files across executors
@@ -81,15 +80,6 @@ object StreamIO extends OpModule {
       "true")
     ss.conf.set("spark.sql.streaming.metricsEnabled", "false")
     ss
-  }
-
-  private def fresh(tag: String): String =
-    s"${StageUtil.root}/$tag-${UUID.randomUUID()}"
-
-  /** Bounded wait: AvailableNow terminates on its own; the timeout is a
-    * backstop so a misbehaving source can never wedge the Verify run. */
-  private def runToEnd(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    if (!q.awaitTermination(180000L)) q.stop()
   }
 
   /** The file-stream source watches a DIRECTORY (new files appear as the
@@ -189,18 +179,12 @@ object StreamIO extends OpModule {
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val (src, nParts) = timerEventsDir(s, d)
     val schema = Tables.read(s, src).schema
-    val name = s"sclose_${UUID.randomUUID().toString.replace("-", "")}"
     val stream = graft.Tables.normalizeTs(
       s.readStream.schema(schema)
         .option("maxFilesPerTrigger", nParts.toString)
         .parquet(src))
-    val q = Streaming.sessionClose(s, stream)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name).select(col("user_id"), col("n_events"), col("last_ms"))
+    drain(Streaming.sessionClose(s, stream), "append", "sclose_")
+      .select(col("user_id"), col("n_events"), col("last_ms"))
   }
 
   /** Watermark-bounded exactly-once dedup through a real micro-batch
@@ -224,19 +208,11 @@ object StreamIO extends OpModule {
     // one micro-batch: append mode emits each row when first seen, so a
     // trailing no-data batch would only evict state
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = s"ddw_${UUID.randomUUID().toString.replace("-", "")}"
     val src = dupEventsDir(d)
     val schema = Tables.read(s, src).schema
-    val q = graft.Tables.normalizeTs(
-        s.readStream.schema(schema).parquet(src))
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+    drain(graft.Tables.normalizeTs(s.readStream.schema(schema).parquet(src))
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark("event_id"), "append", "ddw_")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
   }
@@ -274,19 +250,13 @@ object StreamIO extends OpModule {
     * inside the delay — so the within-watermark dedup is exact). */
   def streamChainedStateful(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val name = s"chain_${UUID.randomUUID().toString.replace("-", "")}"
     val src = chainEventsDir(s, d)
     val schema = Tables.read(s, src).schema
-    val q = Streaming.chainedStateful(graft.Tables.normalizeTs(
+    drain(Streaming.chainedStateful(graft.Tables.normalizeTs(
         s.readStream.schema(schema).parquet(src))
         .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value")))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name).where(col("event_type") =!= "zzz_sentinel")
+          col("event_type"), col("value"))), "append", "chain_")
+      .where(col("event_type") =!= "zzz_sentinel")
   }
 
   /** Staged topic for the JOIN→AGG chain: events once plus TWO
@@ -332,31 +302,17 @@ object StreamIO extends OpModule {
     val schema = Tables.read(s, src).schema
     val ev = graft.Tables.normalizeTs(
       s.readStream.schema(schema).parquet(src))
-    val name = s"jchain_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = Streaming.chainedJoinAgg(ev)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+    drain(Streaming.chainedJoinAgg(ev), "append", "jchain_")
   }
 
   /** Directory-watch ingestion: stream the events table through a real
     * micro-batch file source into a memory sink, then aggregate. */
   def sourceFileStream(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val name = s"src_file_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = eventsStream(s, d)
+    drain(eventsStream(s, d)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 4).as("sum_value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+        round(sum(col("value")), 4).as("sum_value")), "complete", "src_file_")
   }
 
   /** Deterministic replay source: a literal event sequence through
@@ -378,51 +334,39 @@ object StreamIO extends OpModule {
       Streaming.Event(4L, at(70), 2L, "click", 0.5),
       Streaming.Event(5L, at(125), 1L, "view", 4.0))
     val input = MemoryStream[Streaming.Event]
-    val name = s"src_mem_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = Streaming.tumbling(input.toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    input.addData(events.take(3))
-    q.processAllAvailable()
-    input.addData(events.drop(3))
-    q.processAllAvailable()
-    q.stop()
-    s.table(name)
+    drain(Streaming.tumbling(input.toDF()), "complete", "src_mem_", { w =>
+      val q = w.start()
+      input.addData(events.take(3))
+      q.processAllAvailable()
+      input.addData(events.drop(3))
+      q.processAllAvailable()
+      q.stop()
+    })
   }
 
   /** Synthetic unbounded source: deterministic rate-micro-batch (fixed
     * rows per micro-batch, monotone timestamps). Rows-only check — the
     * generated timestamps are configured but the batch count depends on
     * when AvailableNow snapshots the clock is avoided by rowsPerBatch. */
-  def sourceRate(s: SparkSession, d: String): DataFrame = {
-    val name = s"src_rate_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = s.readStream.format("rate-micro-batch")
+  def sourceRate(s: SparkSession, d: String): DataFrame =
+    drain(s.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", 100)
       .option("numPartitions", 4)
       .option("startTimestamp", 0)
       .load()
-      .select(col("value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name).agg(count(lit(1)).as("n_rows"),
-      min(col("value")).as("min_v"), max(col("value")).as("max_v"))
-  }
+      .select(col("value")), "append", "src_rate_")
+      .agg(count(lit(1)).as("n_rows"),
+        min(col("value")).as("min_v"), max(col("value")).as("max_v"))
 
   /** Streaming parquet sink with checkpointed exactly-once commit:
     * filter the event stream, write through the streaming committer,
     * read the result back. */
   def sinkStream(s: SparkSession, d: String): DataFrame = {
     val out = fresh("sink_out")
-    val q = eventsStream(s, d)
+    run(eventsStream(s, d)
       .where(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("value"))
-      .writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
+      .writeStream.format("parquet").option("path", out))
     Tables.read(s, out)
   }
 
@@ -432,16 +376,11 @@ object StreamIO extends OpModule {
   def checkpointRecovery(s: SparkSession, d: String): DataFrame = {
     val out = fresh("recov_out")
     val ckpt = fresh("recov_ckpt")
-    def runOnce(): Unit = {
-      val q = eventsStream(s, d)
+    def runOnce(): Unit =
+      run(eventsStream(s, d)
         .where(col("event_type") === "signup")
         .select(col("event_id"), col("user_id"), col("value"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      runToEnd(q)
-    }
+        .writeStream.format("parquet").option("path", out), ckpt)
     runOnce()
     runOnce() // restart from checkpoint: no-op, output must not double
     Tables.read(s, out)
@@ -451,15 +390,9 @@ object StreamIO extends OpModule {
     * sinks above, update by StreamingSpec): running totals per type. */
   def outputModes(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val name = s"modes_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = eventsStream(s, d)
+    drain(eventsStream(s, d)
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+      .agg(count(lit(1)).as("n_events")), "complete", "modes_")
   }
 
   /** Stream-stream join: purchases within 30 minutes before each click,
@@ -495,19 +428,12 @@ object StreamIO extends OpModule {
     // covered by the outer ops and the multi-batch MemoryStream specs.
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val (clicks, purchases) = clickPurchaseStreams(s, d)
-    val name = s"ss_join_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = clicks.join(purchases,
+    drain(clicks.join(purchases,
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") - expr("INTERVAL 30 MINUTES") &&
           col("p_ts") <= col("c_ts"))
       .select(col("c_user").as("user_id"), col("click_id"),
-        col("purchase_id"), col("p_value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+        col("purchase_id"), col("p_value")), "append", "ss_join_")
   }
 
   /** Streaming read through the custom DataSource V2 connector
@@ -518,17 +444,11 @@ object StreamIO extends OpModule {
     * end through a custom source rather than a builtin. */
   def sourceCustomStream(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val name = s"src_seq_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = s.readStream.format("graft-seq")
+    drain(s.readStream.format("graft-seq")
       .option("rows", "20000").option("parts", "4").load()
       .groupBy(col("tag"))
-      .agg(count(lit(1)).as("n"), sum(col("val")).as("sum_val"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+      .agg(count(lit(1)).as("n"), sum(col("val")).as("sum_val")),
+      "complete", "src_seq_")
   }
 
 
@@ -551,18 +471,12 @@ object StreamIO extends OpModule {
   def sourceManifestStream(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
     val dir = Scans.manifestStreamDir(s, d)
-    val name = s"man_cdc_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = s.readStream.format("graft-manifest-cdc")
-      .option("path", dir).load()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
+    val drained = drain(s.readStream.format("graft-manifest-cdc")
+      .option("path", dir).load(), "append", "man_cdc_")
     // materialize the drained changelog (CDC rows only — bounded by the
     // commits' changed files): MemoryPlan can't self-join (no relation
     // dedup), and the ± pivot below reads it twice
-    val t = MemoUtil.scratch(s.table(name).localCheckpoint())
+    val t = MemoUtil.scratch(drained.localCheckpoint())
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
     val olds = t.where(col("sign") === -1)
       .select(col("version"), col("o_orderkey"), cents.as("c1"))
@@ -597,15 +511,9 @@ object StreamIO extends OpModule {
   def sourceCdcUpdates(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
     val dir = Scans.lineageStreamDir(s, d)
-    val name = s"cdc_upd_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = s.readStream.format("graft-manifest-cdc")
-      .option("path", dir).option("lineage", "true").load()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    val t = MemoUtil.scratch(s.table(name).localCheckpoint())
+    val t = MemoUtil.scratch(drain(s.readStream.format("graft-manifest-cdc")
+      .option("path", dir).option("lineage", "true").load(),
+      "append", "cdc_upd_").localCheckpoint())
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
     val pre = t.where(col("sign") === -1)
       .select(col("version"), col("row_id"),
@@ -664,7 +572,7 @@ object StreamIO extends OpModule {
         bootDir.resolve(f"boot_$i%03d.parquet"))
     }
     TableLog.publish(tblDir, "gen_boot")
-    val q = s.readStream.format("graft-manifest-cdc")
+    run(s.readStream.format("graft-manifest-cdc")
       .option("path", src).option("lineage", "true").load()
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -703,10 +611,7 @@ object StreamIO extends OpModule {
               .write.mode("overwrite").parquet(s"$tblDir/$gen")
           }
         }
-      }
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
+      })
     Tables.read(s, s"$tblDir/${TableLog.head(tblDir)}")
       .groupBy(when(col("o_orderkey") >= 700000000L, "inserted")
         .when(col("o_orderkey") >= 500000000L, "migrated")
@@ -747,7 +652,7 @@ object StreamIO extends OpModule {
       .agg(count(lit(1)).as("n_rows"), sum(cents).as("cents"))
       .write.mode("overwrite").parquet(s"$mvDir/gen_boot")
     TableLog.publish(mvDir, "gen_boot")
-    val q = s.readStream.format("graft-manifest-cdc")
+    run(s.readStream.format("graft-manifest-cdc")
       .option("path", src).load()
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -772,10 +677,7 @@ object StreamIO extends OpModule {
               .write.mode("overwrite").parquet(s"$mvDir/$gen")
           }
         }
-      }
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
+      })
     Tables.read(s, s"$mvDir/${TableLog.head(mvDir)}")
   }
 
@@ -800,15 +702,12 @@ object StreamIO extends OpModule {
       .add("new_id", org.apache.spark.sql.types.LongType)
       .add("dv", org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.LongType))
-    val q = s.readStream.schema(schema)
+    run(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(topic)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         LlmScale.streamVectorCommit(s, dir, batch, id)
-      }
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
+      })
     LlmScale.streamVectorServe(s, dir)
   }
 
@@ -827,15 +726,12 @@ object StreamIO extends OpModule {
       .add("new_id", org.apache.spark.sql.types.LongType)
       .add("dv", org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.LongType))
-    val q = s.readStream.schema(schema)
+    run(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(topic)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         LlmScale.streamGraphCommit(s, dir, batch, id)
-      }
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
+      })
     // this store is fresh per invocation — its walk/serve/base memo
     // entries can never hit again; free them once the result drains
     MemoUtil.onDrain(() => LlmScale.releaseFreshStoreMemos(dir))
@@ -852,19 +748,12 @@ object StreamIO extends OpModule {
     val s = streamSession(s0)
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val (clicks, purchases) = clickPurchaseStreams(s, d)
-    val name = s"ss_semi_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = clicks.join(purchases,
+    drain(clicks.join(purchases,
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") - expr("INTERVAL 30 MINUTES") &&
           col("p_ts") <= col("c_ts"),
         "leftSemi")
-      .select(col("c_user").as("user_id"), col("click_id"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+      .select(col("c_user").as("user_id"), col("click_id")), "append", "ss_semi_")
   }
 
   /** LEFT-OUTER stream-stream join: same interval condition as
@@ -883,20 +772,13 @@ object StreamIO extends OpModule {
   def joinStreamOuter(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
     val (clicks, purchases) = clickPurchaseStreams(s, d)
-    val name = s"ss_louter_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = clicks.join(purchases,
+    drain(clicks.join(purchases,
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") - expr("INTERVAL 30 MINUTES") &&
           col("p_ts") <= col("c_ts"),
         "leftOuter")
       .select(col("c_user").as("user_id"), col("click_id"),
-        col("purchase_id"), col("p_value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+        col("purchase_id"), col("p_value")), "append", "ss_louter_")
   }
 
   /** FULL-OUTER stream-stream join: join_stream_outer's expiry rule on
@@ -908,20 +790,14 @@ object StreamIO extends OpModule {
   def joinStreamFull(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
     val (clicks, purchases) = clickPurchaseStreams(s, d)
-    val name = s"ss_fouter_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = clicks.join(purchases,
+    drain(clicks.join(purchases,
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") - expr("INTERVAL 30 MINUTES") &&
           col("p_ts") <= col("c_ts"),
         "fullOuter")
       .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
-        col("click_id"), col("purchase_id"), col("p_value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+        col("click_id"), col("purchase_id"), col("p_value")),
+      "append", "ss_fouter_")
   }
 
   /** Stream enriched by a static (broadcast) dimension — the streaming
@@ -932,17 +808,11 @@ object StreamIO extends OpModule {
     val bands = Seq(
       (0, 0.0, 25.0), (1, 25.0, 50.0), (2, 50.0, 75.0), (3, 75.0, 1e9)
     ).toDF("band_id", "lo", "hi")
-    val name = s"st_join_${UUID.randomUUID().toString.replace("-", "")}"
-    val q = eventsStream(s, d)
+    drain(eventsStream(s, d)
       .join(broadcast(bands),
         col("value") >= col("lo") && col("value") < col("hi"))
       .groupBy(col("band_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
-    s.table(name)
+      .agg(count(lit(1)).as("n_events")), "complete", "st_join_")
   }
 
   /** foreachBatch: the arbitrary-sink escape hatch — per-micro-batch
@@ -951,17 +821,14 @@ object StreamIO extends OpModule {
     * recipe for sinks without a transactional commit protocol). */
   def sinkForeachBatch(s: SparkSession, d: String): DataFrame = {
     val out = fresh("feb_out")
-    val q = eventsStream(s, d)
+    run(eventsStream(s, d)
       .where(col("event_type") === "error")
       .select(col("event_id"), col("user_id"), col("value"))
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // idempotent: a replayed batch overwrites its own directory
         batch.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-      }
-      .option("checkpointLocation", fresh("ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    runToEnd(q)
+      })
     Tables.read(s, out).select(col("event_id"), col("user_id"), col("value"))
   }
 
@@ -1014,16 +881,13 @@ object StreamIO extends OpModule {
       // the batches apply on the stream thread, which never stages:
       // this build holds the staging lock while it waits
       val schema = Tables.read(s, topic.toString).schema
-      val q = s.readStream.schema(schema)
+      run(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(topic.toString)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           Scans.applyChangeBatch(batch.sparkSession, batch, s"$dir/table")
-        }
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      runToEnd(q)
+        }, s"$dir/ckpt")
     }
     Tables.read(s, s"$dir/table")
       .groupBy(col("o_orderpriority"))

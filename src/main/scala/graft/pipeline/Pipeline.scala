@@ -1,10 +1,11 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.operators.StreamRunner
 
 /** The reference's framework surface re-expressed Spark-first
   * (/root/reference/README.md:2 — "Stream processing framework with
@@ -60,26 +61,11 @@ final class Pipeline private (
     apply(source.readBatch(spark))
 
   /** Run incrementally: write to a parquet sink topic with checkpointed
-    * exactly-once commits; AvailableNow processes the backlog and
-    * terminates (use ProcessingTime triggers for continuous runs). */
-  def start(spark: SparkSession, sinkPath: String, checkpoint: String,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    apply(source.readStream(spark))
-      .writeStream.format("parquet")
-      .option("path", sinkPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** Run incrementally into a named in-memory sink (tests/inspection). */
-  def startToMemory(spark: SparkSession, queryName: String,
-                    outputMode: String = "append",
-                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    apply(source.readStream(spark))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(outputMode)
-      .trigger(trigger)
-      .start()
+    * exactly-once commits, started by the stream runner (AvailableNow:
+    * it processes the backlog and terminates). */
+  def start(spark: SparkSession, sinkPath: String, checkpoint: String): StreamingQuery =
+    StreamRunner.start(apply(source.readStream(spark))
+      .writeStream.format("parquet").option("path", sinkPath), checkpoint)
 }
 
 object Pipeline {
