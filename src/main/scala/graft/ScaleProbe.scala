@@ -250,9 +250,9 @@ object ScaleProbe {
       // bpe encode: same rounds + one (lang, word) corpus collapse and
       // a type-keyed join — must stay scan-bound like the trainer
       "llm_bpe_apply",
-      // hybrid fusion: both arms broadcast the 10-query side and stream
-      // the candidate universe once; the fusion join is ≤ 100 rows per
-      // query at any N — growth must be the two corpus passes
+      // hybrid fusion: one pass of the universe × the broadcast 10
+      // queries, shuffled once by qid; the per-query windows run after
+      // it on ≤ 10 keys — growth must be that one pair pass
       "llm_hybrid_rrf",
       // leakage audit rides the memoized LSH pair table (~450× pairs on
       // the clone corpus) + one map-side split tag — growth must track
@@ -270,7 +270,7 @@ object ScaleProbe {
       // variant path extraction is per-row scan work
       "fn_variant",
       // packing rides the memoized fused table (k-bounded per query)
-      // after the hybrid arms' corpus passes
+      // after the fused build's one pair pass
       "llm_rag_pack",
       // CDC chunking: the clone corpus is its best case (every chunk
       // ×copies duplicated) — one shingle pass + one chunk-key

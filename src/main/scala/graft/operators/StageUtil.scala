@@ -67,9 +67,14 @@ private[graft] object StageUtil {
   /** The one per-JVM root every operator path resolves under (README
     * "Staging"): once-per-JVM stagings and per-call dirs alike, so
     * concurrent JVMs never share a path. Stagings stay for the JVM's
-    * life; per-call dirs (`StreamRunner.fresh`) are deleted at drain. */
-  private lazy val stageRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_stage")
+    * life and the root is wiped when the JVM exits; per-call dirs
+    * (`StreamRunner.fresh`) are deleted at drain. The exit wipe is best
+    * effort: a task still writing under the root can make it fail. */
+  private lazy val stageRoot: java.nio.file.Path = {
+    val r = java.nio.file.Files.createTempDirectory("graft_stage")
+    sys.addShutdownHook(scala.util.Try(wipe(r)))
+    r
+  }
   private val stageLock = new Object
 
   def root: String = stageRoot.toString

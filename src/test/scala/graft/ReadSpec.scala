@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -19,27 +16,6 @@ class ReadSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String = Files.createTempDirectory("read_spec").toString
-
-  /** Jobs this thread launches while `f` runs. */
-  private def jobsDuring(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.read.spec") == tag))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.read.spec", tag)
-    try f
-    finally {
-      sc.setLocalProperty("graft.read.spec", null)
-      ListenerDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   test("job count: after one warm-up, sink_merge_occ's DataFrame and Tables.lineitem build with 0 jobs") {
     val warm = Scans.sinkMergeOcc(spark, sf).collect()

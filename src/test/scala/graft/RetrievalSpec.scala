@@ -208,6 +208,68 @@ class RetrievalSpec extends SparkSpec {
     }
   }
 
+  test("llm_hybrid_rrf: the 50 fused rows equal a brute-force replay of both arms") {
+    val texts = Tables.documents(spark, sf).select($"doc_id", $"text")
+      .as[(Long, Option[String])].collect()
+    val embs = Tables.embeddings(spark, sf).select($"vec_id", $"embedding")
+      .as[(Long, Seq[Float])].collect()
+    // the fused build groups by (qid, id): ids must be unique on both sides
+    assert(texts.map(_._1).distinct.length == texts.length)
+    assert(embs.map(_._1).distinct.length == embs.length)
+    val emb = embs.toMap
+    val uni = texts.collect { case (id, t) if emb.contains(id) =>
+      id -> t.toSeq.flatMap(_.split(" ", -1)).filter(_.nonEmpty).distinct.toSet
+    }.toMap
+    val n = uni.size.toDouble
+    def round(x: Double, k: Int): Double =
+      BigDecimal(x).setScale(k, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      val dot = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
+      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
+      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
+      round(dot / (na * nb), 4) + 0.0
+    }
+    val idf = uni.values.toSeq.flatten.groupBy(identity).map { case (t, ds) =>
+      t -> round(StrictMath.log(n / ds.length) * 1e6, 0).toLong
+    }.filter(_._2 > 0)
+    def top50[S](scored: Seq[(Long, S)])(desc: Ordering[S]): Map[Long, (Int, S)] =
+      scored.sortBy { case (id, s) => (s, id) }(Ordering.Tuple2(desc.reverse,
+        Ordering.Long)).take(50).zipWithIndex
+        .map { case ((id, s), i) => id -> ((i + 1, s)) }.toMap
+    val want = uni.keySet.filter(_ < 10).toSeq.flatMap { q =>
+      val others = uni.keySet.filter(_ != q).toSeq
+      val sem = top50(others.map(id => id -> cos(emb(q), emb(id))))(
+        Ordering.Double.TotalOrdering)
+      val qtoks = uni(q).filter(idf.contains)
+      val lex = top50(others.flatMap { id =>
+        val shared = uni(id).intersect(qtoks)
+        if (shared.isEmpty) None else Some(id -> shared.toSeq.map(idf).sum)
+      })(Ordering.Long)
+      def rrf(r: Option[(Int, _)]): Long = r.fold(0L)(x => 1000000000L / (60 + x._1))
+      (sem.keySet ++ lex.keySet).toSeq
+        .map(id => (id, rrf(sem.get(id)) + rrf(lex.get(id))))
+        .sortBy { case (id, f) => (-f, id) }.take(5).zipWithIndex
+        .map { case ((id, f), i) =>
+          (q, i + 1, id, f, sem.get(id).map(_._1), lex.get(id).map(_._1),
+            sem.get(id).map(_._2), lex.get(id).map(_._2))
+        }
+    }.toSet
+    val got = Retrieval.hybridRrf(spark, sf)
+      .select($"qid", $"rank", $"id", $"rrf_fp", $"r_sem", $"r_lex", $"cos",
+        $"lex_fp").as[(Long, Int, Long, Long, Option[Int], Option[Int],
+          Option[Double], Option[Long])].collect().toSet
+    assert(want.size == 50)
+    assert(got == want, s"\nonly spark: ${got -- want}\nonly replay: ${want -- got}")
+  }
+
+  test("llm_hybrid_rrf: the fused build runs in at most 6 jobs and rag_pack then builds with none") {
+    Tables.documents(spark, sf); Tables.embeddings(spark, sf)
+    Retrieval.resetFusedMemo()
+    val build = jobsDuring(Retrieval.hybridRrf(spark, sf))
+    assert(build <= 6, s"the fused build ran $build jobs")
+    assert(jobsDuring(Retrieval.ragPack(spark, sf)) == 0)
+  }
+
   test("llm_dedup_cdc: a shifted duplicate passage re-produces the same chunks") {
     import spark.implicits._
     // doc 2 = 7-token prefix + doc 1's full text: content-defined cuts

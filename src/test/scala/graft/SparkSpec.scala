@@ -13,6 +13,29 @@ trait SparkSpec extends AnyFunSuite {
   /** Smallest fixture dir — unit tests stay fast. */
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Jobs this thread launches while `f` runs. */
+  def jobsDuring(f: => Any): Int = {
+    import org.apache.spark.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.jobs") == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.jobs", tag)
+    try f
+    finally {
+      sc.setLocalProperty("graft.spec.jobs", null)
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
   /** Execute, then collect over the FINAL adaptive plan — AQE wraps the
     * executed plan and query stages are leaf nodes, so a plain collect
     * stops at their boundary. */

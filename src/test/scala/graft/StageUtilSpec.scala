@@ -121,6 +121,21 @@ class StageUtilSpec extends SparkSpec {
     assert(Scans.scanBinaryFile(spark, d).count() == want)
   }
 
+  test("the per-JVM root is deleted when the JVM exits") {
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java")
+    val child = new ProcessBuilder(java.toString, "-Xmx64m", "-cp",
+        System.getProperty("java.class.path"), "graft.StageUtilSpecChild")
+      .redirectErrorStream(true).start()
+    val out = Future(new String(child.getInputStream.readAllBytes()).trim)
+    val exited = try child.waitFor(60, SECONDS) finally child.destroyForcibly()
+    assert(exited, "the child JVM did not exit")
+    val printed = Await.result(out, 10.seconds)
+    assert(child.exitValue() == 0, printed)
+    val dir = Paths.get(printed.linesIterator.toSeq.last)
+    assert(dir.getParent.getFileName.toString.startsWith("graft_stage"), printed)
+    assert(!Files.exists(dir.getParent), s"the root outlived its JVM: ${dir.getParent}")
+  }
+
   test("source lint: only StageUtil creates temp dirs, writes markers or builds staging keys") {
     val root = Paths.get("src/main/scala/graft/operators")
     val banned = Seq("createTempDirectory", "\"_GRAFT_", "_SUCCESS\").exists",
@@ -137,5 +152,16 @@ class StageUtilSpec extends SparkSpec {
         }
     }
     assert(offenders.isEmpty, s"staging outside StageUtil: $offenders")
+  }
+}
+
+/** Stages one dir in a fresh JVM, prints its path and exits. */
+object StageUtilSpecChild {
+  def main(args: Array[String]): Unit = {
+    val dir = StageUtil.staged("exit", "/spec/exit") { d =>
+      Files.writeString(Paths.get(d, "payload"), "x"); ()
+    }
+    require(Files.exists(Paths.get(dir, "payload")))
+    println(dir)
   }
 }
