@@ -251,8 +251,9 @@ object ScaleProbe {
       // a type-keyed join — must stay scan-bound like the trainer
       "llm_bpe_apply",
       // hybrid fusion: one pass of the universe × the broadcast 10
-      // queries, shuffled once by qid; the per-query windows run after
-      // it on ≤ 10 keys — growth must be that one pair pass
+      // queries, shuffled once by qid into the session's partition
+      // count; the per-query windows run after it on ≤ 10 keys —
+      // growth must be that one pair pass
       "llm_hybrid_rrf",
       // leakage audit rides the memoized LSH pair table (~450× pairs on
       // the clone corpus) + one map-side split tag — growth must track
@@ -269,8 +270,9 @@ object ScaleProbe {
       "llm_pca_power",
       // variant path extraction is per-row scan work
       "fn_variant",
-      // packing rides the memoized fused table (k-bounded per query)
-      // after the fused build's one pair pass
+      // packing is one window over the memoized fused table's top-5
+      // rows (token counts included) after the fused build's one pair
+      // pass — no corpus rescan
       "llm_rag_pack",
       // CDC chunking: the clone corpus is its best case (every chunk
       // ×copies duplicated) — one shingle pass + one chunk-key

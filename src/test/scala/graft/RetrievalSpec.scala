@@ -268,6 +268,13 @@ class RetrievalSpec extends SparkSpec {
     val build = jobsDuring(Retrieval.hybridRrf(spark, sf))
     assert(build <= 6, s"the fused build ran $build jobs")
     assert(jobsDuring(Retrieval.ragPack(spark, sf)) == 0)
+    // AQE must not coalesce the qid shuffle: the per-query stage runs
+    // one task per shuffle partition
+    assert(Retrieval.hybridRrf(spark, sf).rdd.getNumPartitions ==
+      spark.sessionState.conf.numShufflePartitions)
+    // the readers run no second documents scan, broadcast or exchange
+    assert(jobsDuring(Retrieval.ragPack(spark, sf).collect()) == 1)
+    assert(jobsDuring(Retrieval.retrievalMetrics(spark, sf).collect()) == 1)
   }
 
   test("llm_dedup_cdc: a shifted duplicate passage re-produces the same chunks") {
