@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Aggregation operators (SURVEY.md §2.4).
   *
@@ -797,18 +797,14 @@ object Aggregates extends OpModule {
   def aggMvAutorewrite(s0: SparkSession, d: String): DataFrame = {
     import graft.plans.MvRollupRewrite
     val mv = stagedMvDir(s0, d)
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
+    val s = GraftSession.derived(s0, GraftSession.partitionsOf(s0),
+      MvRollupRewrite.Flag -> "true",
+      MvRollupRewrite.PathConf -> mv,
+      MvRollupRewrite.BaseConf -> "/lineitem.parquet",
+      MvRollupRewrite.KeysConf -> "l_returnflag,l_linestatus,l_linenumber",
+      MvRollupRewrite.MeasuresConf -> ("sum:l_quantity=mv_sum_qty," +
+        "min:l_quantity=mv_min_qty,max:l_quantity=mv_max_qty,count=mv_cnt"))
     graft.GraftExtensions.installOptimizations(s)
-    s.conf.set(MvRollupRewrite.Flag, "true")
-    s.conf.set(MvRollupRewrite.PathConf, mv)
-    s.conf.set(MvRollupRewrite.BaseConf, "/lineitem.parquet")
-    s.conf.set(MvRollupRewrite.KeysConf,
-      "l_returnflag,l_linestatus,l_linenumber")
-    s.conf.set(MvRollupRewrite.MeasuresConf,
-      "sum:l_quantity=mv_sum_qty,min:l_quantity=mv_min_qty," +
-        "max:l_quantity=mv_max_qty,count=mv_cnt")
     Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(round(sum(col("l_quantity")), 4).as("sum_qty"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Join matrix (SURVEY.md §2.3).
   *
@@ -394,17 +394,14 @@ object Joins extends OpModule {
     * the shuffle the split acts on. sum(l_quantity) is integer-valued
     * double → exact in 64-bit float, CAST to BIGINT on both engines. */
   def joinSkewAqe(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "65536")
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    val s = GraftSession.derived(s0, GraftSession.partitionsOf(s0),
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "65536",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_quantity"))
     // the replica index rides as a DISTINCT payload: skew detection
@@ -450,14 +447,12 @@ object Joins extends OpModule {
     * weekly, runtime sizes never do. JoinsSpec asserts static-off plan
     * = SMJ, adaptive final plan = BroadcastHashJoin, rows identical. */
   def joinBroadcastAqe(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    // the stale-stats stand-in: static planning must NOT broadcast...
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // ...while the runtime re-planner may, from actual sizes
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
+    val s = GraftSession.derived(s0, GraftSession.partitionsOf(s0),
+      "spark.sql.adaptive.enabled" -> "true",
+      // the stale-stats stand-in: static planning must NOT broadcast...
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      // ...while the runtime re-planner may, from actual sizes
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10485760")
     val custByNation = Tables.customer(s, d)
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_cust"),
@@ -487,17 +482,19 @@ object Joins extends OpModule {
     * gate-proven: the oracle REPLAYS THE JOIN. CustomSurfaceSpec pins
     * plan shape (no join, one scan), rule-off row equality, the
     * dim-column-referenced bail, and idempotence. */
-  def joinEliminateAutorewrite(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
+  def joinEliminateAutorewrite(s0: SparkSession, d: String): DataFrame =
+    joinEliminateQuery(eliminationSession(s0), d)
+
+  /** The derived session both RELY-declaration ops plan on: the rule
+    * installed, its flag on, customer.c_custkey declared the key
+    * orders.o_custkey references. */
+  private def eliminationSession(s0: SparkSession): SparkSession = {
+    import graft.plans.JoinEliminationRewrite._
+    val s = GraftSession.derived(s0, GraftSession.partitionsOf(s0),
+      Flag -> "true", DimConf -> "customer.parquet", PkConf -> "c_custkey",
+      FkConf -> "o_custkey", FactConf -> "orders.parquet")
     graft.GraftExtensions.installOptimizations(s)
-    s.conf.set(graft.plans.JoinEliminationRewrite.Flag, "true")
-    s.conf.set(graft.plans.JoinEliminationRewrite.DimConf, "customer.parquet")
-    s.conf.set(graft.plans.JoinEliminationRewrite.PkConf, "c_custkey")
-    s.conf.set(graft.plans.JoinEliminationRewrite.FkConf, "o_custkey")
-    s.conf.set(graft.plans.JoinEliminationRewrite.FactConf, "orders.parquet")
-    joinEliminateQuery(s, d)
+    s
   }
 
   /** DISTINCT ELIMINATION demonstrator — the uniqueness declaration's
@@ -508,18 +505,8 @@ object Joins extends OpModule {
     * every dimension picker / filter dropdown; at 100 TB each is a
     * needless table-wide exchange. Same conf surface, same RELY trust
     * model, oracle replays the DISTINCT verbatim. */
-  def aggDistinctAutorewrite(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
-    graft.GraftExtensions.installOptimizations(s)
-    s.conf.set(graft.plans.JoinEliminationRewrite.Flag, "true")
-    s.conf.set(graft.plans.JoinEliminationRewrite.DimConf, "customer.parquet")
-    s.conf.set(graft.plans.JoinEliminationRewrite.PkConf, "c_custkey")
-    s.conf.set(graft.plans.JoinEliminationRewrite.FkConf, "o_custkey")
-    s.conf.set(graft.plans.JoinEliminationRewrite.FactConf, "orders.parquet")
-    aggDistinctQuery(s, d)
-  }
+  def aggDistinctAutorewrite(s0: SparkSession, d: String): DataFrame =
+    aggDistinctQuery(eliminationSession(s0), d)
 
   private[graft] def aggDistinctQuery(s: SparkSession, d: String): DataFrame =
     Tables.customer(s, d)
@@ -541,11 +528,9 @@ object Joins extends OpModule {
     * The spec pins the plan shape (an aggregate BELOW the join/chain)
     * and rule-off-equal results; the oracle replays the naive join. */
   def joinAggpushAutorewrite(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
+    val s = GraftSession.derived(s0, GraftSession.partitionsOf(s0),
+      graft.plans.AggPushdownRewrite.Flag -> "true")
     graft.GraftExtensions.installOptimizations(s)
-    s.conf.set(graft.plans.AggPushdownRewrite.Flag, "true")
     joinAggpushQuery(s, d)
   }
 
@@ -918,12 +903,11 @@ object Joins extends OpModule {
     * broadcastable). Plan-asserted in JoinsSpec (`might_contain` on the
     * fact scan's filter). */
   def joinRuntimeFilter(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "0")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = GraftSession.derived(s0,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" ->
+        "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val dim = Tables.orders(s, d).where(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderpriority"))
     Tables.lineitem(s, d)
@@ -987,12 +971,10 @@ object Joins extends OpModule {
     * plans). CustomSurfaceSpec asserts the rescued plan (equi-join +
     * explode, no BNLJ) and flag-on/flag-off row equivalence. */
   def joinRangeAutorewrite(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
+    val s = GraftSession.derived(s0, GraftSession.partitionsOf(s0),
+      graft.plans.RangeBucketRewrite.Flag -> "true",
+      graft.plans.RangeBucketRewrite.WidthConf -> "256")
     graft.GraftExtensions.installOptimizations(s)
-    s.conf.set(graft.plans.RangeBucketRewrite.Flag, "true")
-    s.conf.set(graft.plans.RangeBucketRewrite.WidthConf, "256")
     val pts = Tables.events(s, d).select(col("event_id"), col("user_id"))
     val iv = Tables.orders(s, d).where(col("o_orderkey") % 97 === 0)
       .select(col("o_orderkey"),
@@ -1103,11 +1085,9 @@ object Joins extends OpModule {
     * CartesianProduct/BNLJ and row-matches the hand-written op. Runs on
     * a derived session so the opt-in flag never leaks to other ops. */
   def joinSpatialAutorewrite(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
+    val s = GraftSession.derived(s0, GraftSession.partitionsOf(s0),
+      graft.plans.SpatialGridRewrite.Flag -> "true")
     graft.GraftExtensions.installOptimizations(s)
-    s.conf.set(graft.plans.SpatialGridRewrite.Flag, "true")
     val pts = spatialPoints(s, d)
     val b = pts.select(col("id").as("rid"), col("x").as("rx"),
       col("y").as("ry"))
@@ -1137,9 +1117,9 @@ object Joins extends OpModule {
     * lineitem ⋈ orders with it off) with identical rows either way.
     * Reorder changes plan shape, never results: plain-SQL oracle. */
   def joinCboReorder(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
+    val s = GraftSession.derived(s0, GraftSession.partitionsOf(s0),
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true")
     val Seq(li, ord, cust) =
       Seq("graft_cbo_li", "graft_cbo_ord", "graft_cbo_cust").map(StageUtil.key(_, d))
     // the catalog is SharedState-wide: stage once per (JVM, dir)
@@ -1155,8 +1135,6 @@ object Joins extends OpModule {
         s.sql(s"ANALYZE TABLE $cust COMPUTE STATISTICS FOR COLUMNS c_custkey")
       }
     }
-    s.conf.set("spark.sql.cbo.enabled", "true")
-    s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
     s.sql(
       s"""SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS n,
          |  round(sum(l.l_extendedprice), 4) AS revenue

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Extended LLM-training-data operators beyond SURVEY §2.10: SimHash and
   * n-gram dedup variants, embedding near-dup, IVF-style ANN, language ID,
@@ -677,6 +677,16 @@ object LlmExtended extends OpModule {
         (coalesce(col("n_hits"), lit(0L)) > 0L).as("contaminated"))
   }
 
+  /** The derived session the three LSH rewrite ops plan on: the graft
+    * functions registered, the rules installed, the opt-in flag on. */
+  private def lshSession(s0: SparkSession): SparkSession = {
+    val s = GraftSession.derived(s0, GraftSession.partitionsOf(s0),
+      graft.plans.CosineLshRewrite.Flag -> "true")
+    graft.GraftExtensions.register(s)
+    graft.GraftExtensions.installOptimizations(s)
+    s
+  }
+
   /** llm_dedup_embed written the way a USER writes it — a brute-force
     * cosine-threshold self-join with no join key — and rescued by the
     * CosineLshRewrite optimizer rule (plans/CosineLshRewrite.scala, the
@@ -692,12 +702,7 @@ object LlmExtended extends OpModule {
     * CustomSurfaceSpec asserts the plan shape both with and without the
     * flag. */
   def lshAutoRewrite(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
-    graft.GraftExtensions.register(s)
-    graft.GraftExtensions.installOptimizations(s)
-    s.conf.set(graft.plans.CosineLshRewrite.Flag, "true")
+    val s = lshSession(s0)
     val emb = Tables.embeddings(s, d)
     val a = emb.select(col("vec_id").as("ida"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("idb"), col("embedding").as("eb"))
@@ -719,12 +724,7 @@ object LlmExtended extends OpModule {
     * verbatim. Derived session for the same isolation reason as
     * lshAutoRewrite. */
   def lshAutoRewriteTopk(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
-    graft.GraftExtensions.register(s)
-    graft.GraftExtensions.installOptimizations(s)
-    s.conf.set(graft.plans.CosineLshRewrite.Flag, "true")
+    val s = lshSession(s0)
     val emb = Tables.embeddings(s, d)
     val q = emb.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -755,12 +755,7 @@ object LlmExtended extends OpModule {
     * lshAutoRewrite; CustomSurfaceSpec asserts the plan has no
     * BNLJ/Cartesian under the flag and row-equality vs llm_dedup_near. */
   def lshAutoRewriteJaccard(s0: SparkSession, d: String): DataFrame = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      s0.conf.get("spark.sql.shuffle.partitions"))
-    graft.GraftExtensions.register(s)
-    graft.GraftExtensions.installOptimizations(s)
-    s.conf.set(graft.plans.CosineLshRewrite.Flag, "true")
+    val s = lshSession(s0)
     val base = Tables.documents(s, d)
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"),

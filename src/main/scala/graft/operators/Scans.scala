@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Source / sink operators (SURVEY.md §2.1).
   *
@@ -1901,27 +1901,9 @@ object Scans extends OpModule {
     * metadata answer. At 100 TB this seam is the storage-partitioned
     * join/agg every Iceberg-bucket or JDBC-shard deployment leans on:
     * the exchange Spark skips here is the corpus-sized shuffle. */
-  /** A conf-isolated twin of `s0` (ADVICE r16): ops that must hold a
-    * planner knob at EXECUTION time (the returned DataFrame plans
-    * lazily, so a set/restore around construction would un-set it
-    * before planning) build their frame on this clone instead of
-    * mutating the shared session — later ops' plan shapes stay
-    * order-independent. newSession() starts from the builder's
-    * SparkConf, so the caller's RUNTIME conf.set's are copied over
-    * (a spec toggling e.g. DPP on the parent must see the toggle
-    * honored here). Shares the SparkContext and caches. */
-  private[graft] def confClone(s0: SparkSession): SparkSession = {
-    val s = s0.newSession()
-    s0.conf.getAll.foreach { case (k, v) =>
-      if (s.conf.isModifiable(k))
-        try s.conf.set(k, v) catch { case _: Exception => () }
-    }
-    s
-  }
-
   def scanKeygrouped(s0: SparkSession, d: String): DataFrame = {
-    val s = confClone(s0)
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    val s = GraftSession.confClone(s0,
+      "spark.sql.sources.v2.bucketing.enabled" -> "true")
     s.read.format("graft-seq")
       .option("rows", "100000").option("layout", "tag").load()
       .groupBy(col("tag"))
@@ -2007,9 +1989,8 @@ object Scans extends OpModule {
   }
 
   def scanColstatsCbo(s0: SparkSession, d: String): DataFrame = {
-    val s = confClone(s0)
-    s.conf.set("spark.sql.cbo.enabled", "true")
-    s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    val s = GraftSession.confClone(s0, "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true")
     scanColstatsJoin(s, report = true)
   }
 
@@ -2024,9 +2005,8 @@ object Scans extends OpModule {
   def scanRuntimeFilter(s0: SparkSession, d: String): DataFrame = {
     // conf clone for the same reason as scanKeygrouped: the DPP stats
     // knob must be live when THIS frame plans, and only then
-    val s = confClone(s0)
-    s.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats",
-      "false")
+    val s = GraftSession.confClone(s0,
+      "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false")
     val fact = s.read.format("graft-seq")
       .option("rows", "100000").option("parts", "32").load()
     val dim = s.range(0, 8).select((col("id") * 12500L).as("id"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import StreamRunner.{drain, fresh, run}
 
 /** Streaming sources, sinks, and stream joins (SURVEY.md §2.1 streaming
@@ -44,10 +44,11 @@ object StreamIO extends OpModule {
     * ~1 s per join query at sf0.1 state, which is a few thousand keys).
     * A production job sizes this to key cardinality × executor count
     * once, up front; the checkpoint then keeps it stable for the job's
-    * lifetime. */
-  private def streamSession(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "2")
+    * lifetime. `confs` follow these defaults, so an op's own pair wins.
+    * Built by `GraftSession.derived`, so every call's stream clone reuses
+    * the classes the last one compiled (README "Sessions"). */
+  private def streamSession(s: SparkSession,
+                            confs: (String, String)*): SparkSession = {
     // None of these queries use transformWithState (the only operator
     // needing RocksDB column families), and the per-store open cost of
     // RocksDB dominates at fixture-sized state: the HDFS-backed provider
@@ -62,7 +63,6 @@ object StreamIO extends OpModule {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
       else
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     // Per-batch fixed-cost levers (r9, DevProbe stream_floor2: the full
     // outer join's 3.3 s probe floor → 2.2 s with all four, ~equal
     // contributions). These AvailableNow queries live 1-3 s, so the
@@ -72,15 +72,20 @@ object StreamIO extends OpModule {
     // every batch; the skip-nulls storage shape is the upstream default
     // for new stream-stream join checkpoints; per-query Codahale
     // metrics registration costs more than these micro-runs return.
-    ss.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    ss.conf.set(
-      "spark.sql.streaming.stateStore.formatValidation.enabled", "false")
-    ss.conf.set(
-      "spark.sql.streaming.stateStore.skipNullsForStreamStreamJoins.enabled",
-      "true")
-    ss.conf.set("spark.sql.streaming.metricsEnabled", "false")
-    ss
+    GraftSession.derived(s, Seq(
+      "spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.streaming.stateStore.providerClass" -> provider,
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s",
+      "spark.sql.streaming.stateStore.formatValidation.enabled" -> "false",
+      "spark.sql.streaming.stateStore.skipNullsForStreamStreamJoins.enabled" ->
+        "true",
+      "spark.sql.streaming.metricsEnabled" -> "false") ++ confs: _*)
   }
+
+  /** The trailing no-data micro-batch off, for ops whose output it
+    * cannot change. */
+  private val noDataBatchesOff =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
 
   /** The file-stream source watches a DIRECTORY (new files appear as the
     * unbounded "topic"); the fixture is a single file, so stage it into a
@@ -166,17 +171,17 @@ object StreamIO extends OpModule {
     * shutdown (the tail of the stream, incl. the sentinel user) are
     * correctly ABSENT — that is the timer semantics, not a loss. */
   def streamSessionClose(s0: SparkSession, d: String): DataFrame = {
-    val s = streamSession(s0)
-    // transformWithState keeps per-key state + timers in column
-    // families — RocksDB provider, not the HDFS heap-map provider the
-    // other (join/agg) stream queries prefer at fixture-sized state
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // no-data micro-batches OFF: after the sentinel batch the watermark
-    // jumps to the sentinel era, and a trailing no-data batch would fire
-    // EVERY timer — the deterministic schedule is exactly two data
-    // batches, timers checked once against batch1's max event time
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val s = streamSession(s0,
+      // transformWithState keeps per-key state + timers in column
+      // families — RocksDB provider, not the HDFS heap-map provider the
+      // other (join/agg) stream queries prefer at fixture-sized state
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      // no-data micro-batches OFF: after the sentinel batch the watermark
+      // jumps to the sentinel era, and a trailing no-data batch would fire
+      // EVERY timer — the deterministic schedule is exactly two data
+      // batches, timers checked once against batch1's max event time
+      noDataBatchesOff)
     val (src, nParts) = timerEventsDir(s, d)
     val schema = Tables.read(s, src).schema
     val stream = graft.Tables.normalizeTs(
@@ -204,10 +209,9 @@ object StreamIO extends OpModule {
     * delay — so the dedup here is exact and the oracle is the plain
     * distinct count. */
   def streamDedupWithinWm(s0: SparkSession, d: String): DataFrame = {
-    val s = streamSession(s0)
     // one micro-batch: append mode emits each row when first seen, so a
     // trailing no-data batch would only evict state
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val s = streamSession(s0, noDataBatchesOff)
     val src = dupEventsDir(d)
     val schema = Tables.read(s, src).schema
     drain(graft.Tables.normalizeTs(s.readStream.schema(schema).parquet(src))
@@ -349,7 +353,7 @@ object StreamIO extends OpModule {
     * generated timestamps are configured but the batch count depends on
     * when AvailableNow snapshots the clock is avoided by rowsPerBatch. */
   def sourceRate(s: SparkSession, d: String): DataFrame =
-    drain(s.readStream.format("rate-micro-batch")
+    drain(GraftSession.confClone(s).readStream.format("rate-micro-batch")
       .option("rowsPerBatch", 100)
       .option("numPartitions", 4)
       .option("startTimestamp", 0)
@@ -361,7 +365,8 @@ object StreamIO extends OpModule {
   /** Streaming parquet sink with checkpointed exactly-once commit:
     * filter the event stream, write through the streaming committer,
     * read the result back. */
-  def sinkStream(s: SparkSession, d: String): DataFrame = {
+  def sinkStream(s0: SparkSession, d: String): DataFrame = {
+    val s = GraftSession.confClone(s0)
     val out = fresh("sink_out")
     run(eventsStream(s, d)
       .where(col("event_type") === "purchase")
@@ -373,7 +378,8 @@ object StreamIO extends OpModule {
   /** Exactly-once resume: run a checkpointed job to completion, then
     * restart it against the SAME checkpoint and source — the commit log
     * must show nothing new to process, and the output must not double. */
-  def checkpointRecovery(s: SparkSession, d: String): DataFrame = {
+  def checkpointRecovery(s0: SparkSession, d: String): DataFrame = {
+    val s = GraftSession.confClone(s0)
     val out = fresh("recov_out")
     val ckpt = fresh("recov_ckpt")
     def runOnce(): Unit =
@@ -417,7 +423,6 @@ object StreamIO extends OpModule {
   }
 
   def joinStreamStream(s0: SparkSession, d: String): DataFrame = {
-    val s = streamSession(s0)
     // INNER stream-stream join: every output row is emitted by the data
     // batch that completes the match — the trailing no-data micro-batch
     // only evicts state (a resource action, not an output one), so
@@ -426,7 +431,7 @@ object StreamIO extends OpModule {
     // batches: their null-padded rows are EMITTED by watermark expiry,
     // which is exactly what those batches run. Eviction itself stays
     // covered by the outer ops and the multi-batch MemoryStream specs.
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val s = streamSession(s0, noDataBatchesOff)
     val (clicks, purchases) = clickPurchaseStreams(s, d)
     drain(clicks.join(purchases,
         col("c_user") === col("p_user") &&
@@ -745,8 +750,7 @@ object StreamIO extends OpModule {
     * own that) — state economics are the inner join's. The batch twin
     * is the EXISTS semi join over the complete data. */
   def joinStreamSemi(s0: SparkSession, d: String): DataFrame = {
-    val s = streamSession(s0)
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val s = streamSession(s0, noDataBatchesOff)
     val (clicks, purchases) = clickPurchaseStreams(s, d)
     drain(clicks.join(purchases,
         col("c_user") === col("p_user") &&
@@ -819,7 +823,8 @@ object StreamIO extends OpModule {
     * callback receives (batchDF, batchId); writing to a batchId-keyed
     * directory makes the sink idempotent under replay (the exactly-once
     * recipe for sinks without a transactional commit protocol). */
-  def sinkForeachBatch(s: SparkSession, d: String): DataFrame = {
+  def sinkForeachBatch(s0: SparkSession, d: String): DataFrame = {
+    val s = GraftSession.confClone(s0)
     val out = fresh("feb_out")
     run(eventsStream(s, d)
       .where(col("event_type") === "error")

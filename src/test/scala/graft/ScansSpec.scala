@@ -355,9 +355,8 @@ class ScansSpec extends SparkSpec {
       s"CBO must join the 50-row dim innermost:\n$opt")
     // control: stats off (same cbo confs) — reorder ineligible, the
     // syntactic fact ⋈ fact (on val) stays innermost; rows identical
-    val s2 = graft.operators.Scans.confClone(spark)
-    s2.conf.set("spark.sql.cbo.enabled", "true")
-    s2.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    val s2 = GraftSession.confClone(spark, "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true")
     val off = graft.operators.Scans.scanColstatsJoin(s2, report = false)
     assert(off.collect().map(_.toSeq).toSet == onRows,
       "reorder must never change results")
