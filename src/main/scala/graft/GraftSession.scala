@@ -64,9 +64,8 @@ object GraftSession {
     * like their caller (a spec toggling a knob on the parent sees it
     * honored). Ops that must hold a planner knob at EXECUTION time (the
     * returned DataFrame plans lazily, so a set/restore around
-    * construction would un-set it before planning) and stream queries
-    * that would otherwise start on the caller's session build on this,
-    * so later ops' plan shapes stay order-independent. Shares the
+    * construction would un-set it before planning) build on this, so
+    * later ops' plan shapes stay order-independent. Shares the
     * SparkContext and caches. */
   def confClone(parent: SparkSession, confs: (String, String)*): SparkSession =
     derived(parent, parent.conf.getAll.toSeq.filter { case (k, _) =>

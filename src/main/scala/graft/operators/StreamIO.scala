@@ -353,7 +353,7 @@ object StreamIO extends OpModule {
     * generated timestamps are configured but the batch count depends on
     * when AvailableNow snapshots the clock is avoided by rowsPerBatch. */
   def sourceRate(s: SparkSession, d: String): DataFrame =
-    drain(GraftSession.confClone(s).readStream.format("rate-micro-batch")
+    drain(s.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", 100)
       .option("numPartitions", 4)
       .option("startTimestamp", 0)
@@ -365,8 +365,7 @@ object StreamIO extends OpModule {
   /** Streaming parquet sink with checkpointed exactly-once commit:
     * filter the event stream, write through the streaming committer,
     * read the result back. */
-  def sinkStream(s0: SparkSession, d: String): DataFrame = {
-    val s = GraftSession.confClone(s0)
+  def sinkStream(s: SparkSession, d: String): DataFrame = {
     val out = fresh("sink_out")
     run(eventsStream(s, d)
       .where(col("event_type") === "purchase")
@@ -378,8 +377,7 @@ object StreamIO extends OpModule {
   /** Exactly-once resume: run a checkpointed job to completion, then
     * restart it against the SAME checkpoint and source — the commit log
     * must show nothing new to process, and the output must not double. */
-  def checkpointRecovery(s0: SparkSession, d: String): DataFrame = {
-    val s = GraftSession.confClone(s0)
+  def checkpointRecovery(s: SparkSession, d: String): DataFrame = {
     val out = fresh("recov_out")
     val ckpt = fresh("recov_ckpt")
     def runOnce(): Unit =
@@ -823,8 +821,7 @@ object StreamIO extends OpModule {
     * callback receives (batchDF, batchId); writing to a batchId-keyed
     * directory makes the sink idempotent under replay (the exactly-once
     * recipe for sinks without a transactional commit protocol). */
-  def sinkForeachBatch(s0: SparkSession, d: String): DataFrame = {
-    val s = GraftSession.confClone(s0)
+  def sinkForeachBatch(s: SparkSession, d: String): DataFrame = {
     val out = fresh("feb_out")
     run(eventsStream(s, d)
       .where(col("event_type") === "error")

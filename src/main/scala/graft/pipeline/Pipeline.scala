@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 import graft.operators.StreamRunner
 
 /** The reference's framework surface re-expressed Spark-first
@@ -62,10 +62,9 @@ final class Pipeline private (
 
   /** Run incrementally: write to a parquet sink topic with checkpointed
     * exactly-once commits, started by the stream runner (AvailableNow:
-    * it processes the backlog and terminates) on a conf clone of `spark`,
-    * whose stream clone reuses compiled classes (README "Sessions"). */
+    * it processes the backlog and terminates). */
   def start(spark: SparkSession, sinkPath: String, checkpoint: String): StreamingQuery =
-    StreamRunner.start(apply(source.readStream(GraftSession.confClone(spark)))
+    StreamRunner.start(apply(source.readStream(spark))
       .writeStream.format("parquet").option("path", sinkPath), checkpoint)
 }
 
