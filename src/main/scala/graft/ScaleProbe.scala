@@ -1,107 +1,87 @@
 package graft
 
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.StageUtil
 
 /** 10× scale probe for the text/embedding operator family (the README's
   * "would this survive a scale-up" evidence, reproducible per round).
   *
-  * Synthesizes a corpus 10× the sf0.1 bench fixtures into a temp dir:
-  * each document is cloned 10 times (offset ids) with a clone-specific
-  * suffix token — clones of one source form a true near-dup cluster
-  * (3-shingle Jaccard ≈ (n-2)/(n+2) ≈ 0.93 ≥ τ=0.8), inflating the
-  * verified pair count ~450× (C(10,2)=45 per source doc) — and each
-  * embedding is cloned 10 times unchanged. Then times each probe op via
-  * the same `SparkEntry.queries` entries the gate runs. A probe op is
-  * healthy when its runtime scales with its OUTPUT/WORK (pairs verified,
-  * chunks produced), never with candidate pairs².
+  * Stages the clone tier of a fixture dir (`cloneTier`, 10 copies by
+  * default), then times each probe op with `Probe.timed` via the same
+  * `SparkEntry.queries` entries the gate runs. A probe op is healthy
+  * when its runtime scales with its OUTPUT/WORK (pairs verified, chunks
+  * produced), never with candidate pairs².
   *
-  * Run: `sbt "runMain graft.ScaleProbe"` (env SPARK_GRAFT_CPUS).
+  * Run: `sbt "runMain graft.ScaleProbe [copies] [op,op,...]"` (env
+  * SPARK_GRAFT_SF_DIR, default sf0.1, and SPARK_GRAFT_CPUS); the op list
+  * filters by op name or row label for targeted re-measurement.
   */
 object ScaleProbe {
+  private val k = col("k")
+
+  /** `df`'s rows once per clone k in [0, copies). */
+  private def cloned(df: DataFrame, copies: Int): DataFrame =
+    df.withColumn("k", explode(lit((0 until copies).toArray)))
+
+  /** Stage `tables` (name → rows) as `<dir>/<name>.parquet` in one dir
+    * keyed by `tag` and `src` under `StageUtil.root`: built once per JVM,
+    * wiped when the JVM exits. */
+  private def staged(spark: SparkSession, tag: String, src: String)(
+      tables: => Seq[(String, DataFrame)]): String =
+    StageUtil.staged(s"probe_$tag", src) { dir =>
+      tables.foreach { case (t, df) => df.write.parquet(s"$dir/$t.parquet") }
+    }
+
+  /** The clone tier of fixture dir `src`: every table below holds each
+    * source row once per clone k, ids scaled (id·copies+k) or shifted by
+    * k times a fixed offset, each written as 32 files. Documents gain a
+    * clone suffix token ` v<k>` for k>0: clones of one source form a true
+    * near-dup cluster (3-shingle Jaccard ≈ (n-2)/(n+2) ≈ 0.93 ≥ τ=0.8,
+    * C(copies,2) verified pairs per source doc). Embeddings are cloned
+    * unchanged. lineitem offsets both keys per clone, so the co-supply
+    * graph becomes `copies` DISJOINT clones: node and edge counts grow
+    * ×copies at fixed per-node degree, and superlinear growth would
+    * expose a Σdeg²-shaped shuffle. events/orders/customer give every
+    * clone its own user and customer space (k·10⁷) with timestamps and
+    * nationkey unchanged, so per-entity history stays fixed and lateral
+    * joins stay consistent; supplier follows lineitem's k·10⁶.
+    * A file of 1 part serializes every downstream map stage, hence
+    * `repartition(32)`. perfbench/inputs.py `_clone_sql` mirrors
+    * documents, embeddings and lineitem row for row. */
+  private[graft] def cloneTier(spark: SparkSession, src: String, copies: Int): String = {
+    def scaled(c: String) = (col(c) * copies + k).as(c)
+    def shifted(c: String, by: Long) = (col(c) + k * lit(by)).as(c)
+    val tables: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "documents" -> (_.select(scaled("doc_id"),
+        when(k === 0, col("text"))
+          .otherwise(concat(col("text"), lit(" v"), k)).as("text"),
+        col("lang"), col("source"), col("n_chars"))),
+      "embeddings" -> (_.select(scaled("vec_id"), col("label"), col("embedding"))),
+      "lineitem" -> (_.withColumns(Map("l_orderkey" -> scaled("l_orderkey"),
+        "l_suppkey" -> shifted("l_suppkey", 1000000L))).drop("k")),
+      "events" -> (Tables.normalizeTs(_).select(scaled("event_id"), col("ts"),
+        shifted("user_id", 10000000L), col("event_type"), col("value"), col("props"))),
+      "orders" -> (_.select(scaled("o_orderkey"), shifted("o_custkey", 10000000L),
+        col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
+        col("o_orderpriority"))),
+      "customer" -> (_.withColumn("c_custkey", shifted("c_custkey", 10000000L)).drop("k")),
+      "supplier" -> (_.withColumn("s_suppkey", shifted("s_suppkey", 1000000L)).drop("k")))
+    staged(spark, s"clone$copies", src)(tables.map { case (t, f) =>
+      t -> f(cloned(Tables.read(spark, s"$src/$t.parquet"), copies)).repartition(32)
+    })
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(GraftSession.cpus(32))
 
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val out = java.nio.file.Files.createTempDirectory("graft_probe").toString
     // scale tier: 10× default; 1×/10×/30× build the asymptotics table in
     // SCALE.md (sub-quadratic claims need two growth measurements, not
-    // one). args override env so tiers run from a warm sbt shell:
-    //   runMain graft.ScaleProbe [copies] [op,op,...]
-    val copies = args.headOption
-      .orElse(sys.env.get("SPARK_GRAFT_PROBE_COPIES")).getOrElse("10").toInt
-
-    spark.read.parquet(s"$src/documents.parquet")
-      .withColumn("k", explode(lit((0 until copies).toArray)))
-      .select(
-        (col("doc_id") * copies + col("k")).as("doc_id"),
-        when(col("k") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" v"), col("k"))).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-      .repartition(32)
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/documents.parquet")
-    spark.read.parquet(s"$src/embeddings.parquet")
-      .withColumn("k", explode(lit((0 until copies).toArray)))
-      .select((col("vec_id") * copies + col("k")).as("vec_id"),
-        col("label"), col("embedding"))
-      .repartition(32)
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/embeddings.parquet")
-    // graph scale-up: 10 DISJOINT clones of the co-supply graph (orderkey
-    // and suppkey both offset per clone) — node and edge counts grow 10×
-    // while per-node degree stays fixed, so a healthy graph op grows
-    // ~linearly in edges; superlinear growth would expose a Σdeg²-shaped
-    // shuffle (the wedge materialization this family was rewritten away
-    // from)
-    spark.read.parquet(s"$src/lineitem.parquet")
-      .withColumn("k", explode(lit((0 until copies).toArray)))
-      .withColumn("l_orderkey", col("l_orderkey") * copies + col("k"))
-      .withColumn("l_suppkey", col("l_suppkey") + col("k") * lit(1000000L))
-      .drop("k")
-      .repartition(32)
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/lineitem.parquet")
-
-    // events/orders clones: DISJOINT per-clone user and customer spaces
-    // (entity ids offset by k·10⁷) with timestamps unchanged — entity
-    // count grows ×copies while per-entity history stays fixed, so the
-    // windowed/stateful family (sessionize, SCD-2) must grow ~linearly in
-    // rows with flat per-entity state, and the snapshot+delta ops
-    // (mv_incremental, dim_scd2_incremental) must keep their delta
-    // economics: the probe's first call pays the one-time snapshot
-    // staging, the registered query itself touches delta + staged rows
-    spark.read.parquet(s"$src/events.parquet")
-      .transform(Tables.normalizeTs)
-      .withColumn("k", explode(lit((0 until copies).toArray)))
-      .select((col("event_id") * copies + col("k")).as("event_id"),
-        col("ts"),
-        (col("user_id") + col("k") * lit(10000000L)).as("user_id"),
-        col("event_type"), col("value"), col("props"))
-      .repartition(32)
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/events.parquet")
-    spark.read.parquet(s"$src/orders.parquet")
-      .withColumn("k", explode(lit((0 until copies).toArray)))
-      .select((col("o_orderkey") * copies + col("k")).as("o_orderkey"),
-        (col("o_custkey") + col("k") * lit(10000000L)).as("o_custkey"),
-        col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-        col("o_orderpriority"))
-      .repartition(32)
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/orders.parquet")
-    // customer/supplier clones (r11, for the r10-closing cohort):
-    // custkey offsets match the orders clone (k·10⁷ — lateral joins stay
-    // consistent), suppkey offsets match lineitem (k·10⁶); nationkey is
-    // UNCHANGED, so the nullsafe |nations|-keyed join keeps its constant
-    // output shape while per-key counts grow ×copies
-    spark.read.parquet(s"$src/customer.parquet")
-      .withColumn("k", explode(lit((0 until copies).toArray)))
-      .withColumn("c_custkey", col("c_custkey") + col("k") * lit(10000000L))
-      .drop("k")
-      .repartition(32)
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/customer.parquet")
-    spark.read.parquet(s"$src/supplier.parquet")
-      .withColumn("k", explode(lit((0 until copies).toArray)))
-      .withColumn("s_suppkey", col("s_suppkey") + col("k") * lit(1000000L))
-      .drop("k")
-      .repartition(32)
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/supplier.parquet")
+    // one)
+    val copies = args.headOption.getOrElse("10").toInt
+    val out = cloneTier(spark, src, copies)
 
     val probes = (
       // pair-quadratic-by-construction op: gated OUT at ≥30× (output
@@ -819,38 +799,12 @@ object ScaleProbe {
       // O(|batch|) bounded beams + an append + a flip; the drained
       // serve is the store walk — growth tracks sink_stream_vector's
       "sink_stream_graph")
-    // INTERLEAVED-id graph layout: same `copies` disjoint clones, but
-    // clone k's node ids are s·copies+k, so every community's id range
-    // spans the whole keyspace — the dense path's range-overlap prune is
-    // structurally useless here (every pair of communities overlaps).
-    // This is the fixture that proves the sparse inverted-index regime:
-    // jaccard must stay ~flat on it, because candidates come from shared
-    // witness postings, which never cross disjoint clones.
-    val outI = java.nio.file.Files.createTempDirectory("graft_probe_i").toString
-    spark.read.parquet(s"$src/lineitem.parquet")
-      .withColumn("k", explode(lit((0 until copies).toArray)))
-      .withColumn("l_orderkey", col("l_orderkey") * copies + col("k"))
-      .withColumn("l_suppkey", col("l_suppkey") * copies + col("k"))
-      .drop("k")
-      .repartition(32)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outI/lineitem.parquet")
-
     // optional comma-separated op filter for targeted re-measurement
-    val only = args.drop(1).headOption
-      .orElse(sys.env.get("SPARK_GRAFT_PROBE_OPS"))
-      .map(_.split(",").map(_.trim).toSet)
-    println(f"${"op"}%-24s ${"sec"}%8s ${"rows"}%10s")
-    def probe(name: String, dir: String, label: String): Unit = {
-      if (only.forall(f => f.contains(name) || f.contains(label))) {
-        val t0 = System.nanoTime()
-        // toRdd.count() executes the plan as written (df.count() would
-        // let Catalyst prune branches that counting doesn't need)
-        val rows =
-          try SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-          catch { case e: Throwable => println(s"$label FAILED: $e"); -1L }
-        println(f"$label%-24s ${(System.nanoTime() - t0) / 1e9}%8.1f $rows%10d")
-      }
-    }
+    val only = args.drop(1).headOption.map(_.split(",").map(_.trim).toSet)
+    println(f"${"op"}%-32s ${"sec"}%8s ${"rows"}%10s")
+    def probe(name: String, dir: String, label: String): Unit =
+      if (only.forall(f => f.contains(name) || f.contains(label)))
+        Probe.timed(label)(SparkEntry.queries(name)(spark, dir))
     probes.foreach(n => probe(n, out, n))
     // RocksDB state tier (r14, VERDICT r13 task 7): the chained
     // multi-stateful topologies re-run with the RocksDB provider —
@@ -878,31 +832,35 @@ object ScaleProbe {
         s"hierarchical=${acc.getLong(1)} brute=${acc.getLong(2)} " +
         f"ratio=${acc.getLong(1).toDouble / acc.getLong(2)}%.3f")
     }
+    // INTERLEAVED-id graph layout: same `copies` disjoint clones, but
+    // clone k's node ids are s·copies+k, so every community's id range
+    // spans the whole keyspace — the dense path's range-overlap prune is
+    // structurally useless here (every pair of communities overlaps).
+    // This is the fixture that proves the sparse inverted-index regime:
+    // jaccard must stay ~flat on it, because candidates come from shared
+    // witness postings, which never cross disjoint clones.
+    val outI = staged(spark, s"interleaved$copies", src)(Seq("lineitem" ->
+      cloned(Tables.read(spark, s"$src/lineitem.parquet"), copies)
+        .withColumns(Map("l_orderkey" -> (col("l_orderkey") * copies + k),
+          "l_suppkey" -> (col("l_suppkey") * copies + k)))
+        .drop("k").repartition(32)))
     // triangles first: it warms the interleaved dir's adjacency memo, so
     // the jaccard row below is the MARGINAL candidate-generation cost
     // (comparable to the clustered row, which reuses the main dir's
     // memo) rather than adjacency-build + candidates
     probe("graph_triangles", outI, "graph_tri_interleave")
     probe("graph_jaccard", outI, "graph_jaccard_interleave")
-    // SKEWED-vocabulary ngram tier: every clone carries the same 12-token
-    // boilerplate suffix, so its 4-gram shingles have df = N — the regime
-    // the rarest-first flagship exists for. Reported per ordering WITHOUT
-    // running the candidate join: max prefix posting length and
-    // Σ C(df,2) candidate-pair mass (the cost the ordering controls —
-    // under hash order the boilerplate grams land in ~half the prefixes,
-    // a quadratic mass no one should execute to prove).
     // UPSAMPLE-heavy importance mix: keep one source whole, thin every
     // other source to ~1 doc in 12 — the uniform-token target then hands
     // the thinned sources weights ≫ 1, so the op exercises its
     // explode-into-repeats half (the shape no keep-gate expresses), and
     // emitted rows ≈ corpus-sized stay the linear-growth witness.
     if (only.forall(_.contains("importance_upsample"))) {
-      val outU =
-        java.nio.file.Files.createTempDirectory("graft_probe_u").toString
-      val docs = spark.read.parquet(s"$out/documents.parquet")
-      val first = docs.select(min(col("source"))).head().getString(0)
-      docs.where(col("source") === first || col("doc_id") % 12 === 0)
-        .write.mode(SaveMode.Overwrite).parquet(s"$outU/documents.parquet")
+      val outU = staged(spark, "upsample", out) {
+        val docs = Tables.read(spark, s"$out/documents.parquet")
+        val first = docs.select(min(col("source"))).head().getString(0)
+        Seq("documents" -> docs.where(col("source") === first || col("doc_id") % 12 === 0))
+      }
       probe("llm_sample_importance", outU, "importance_upsample")
     }
     // HOT-KEY heavy-hitter tier (r13, VERDICT task 8): every document
@@ -914,37 +872,39 @@ object ScaleProbe {
     // ≤ cands×partitions rows whatever the distribution (the measured
     // spec twin lives in AggregatesSpec).
     if (only.forall(_.contains("hh_hotkey"))) {
-      val outH =
-        java.nio.file.Files.createTempDirectory("graft_probe_h").toString
-      spark.read.parquet(s"$out/documents.parquet")
-        .withColumn("text",
-          concat(col("text"), lit(" "), expr(
-            "array_join(transform(sequence(1, greatest(1, " +
-              "size(filter(split(text, ' '), x -> x != '')))), " +
-              "i -> 'thehotkey'), ' ')")))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outH/documents.parquet")
+      val outH = staged(spark, "hotkey", out)(Seq("documents" ->
+        Tables.read(spark, s"$out/documents.parquet")
+          .withColumn("text",
+            concat(col("text"), lit(" "), expr(
+              "array_join(transform(sequence(1, greatest(1, " +
+                "size(filter(split(text, ' '), x -> x != '')))), " +
+                "i -> 'thehotkey'), ' ')")))))
       probe("agg_heavy_hitters", outH, "hh_hotkey")
     }
+    // SKEWED-vocabulary ngram tier: every clone carries the same 12-token
+    // boilerplate suffix, so its 4-gram shingles have df = N — the regime
+    // the rarest-first flagship exists for. Reported per ordering WITHOUT
+    // running the candidate join: max prefix posting length and
+    // Σ C(df,2) candidate-pair mass (the cost the ordering controls —
+    // under hash order the boilerplate grams land in ~half the prefixes,
+    // a quadratic mass no one should execute to prove).
     if (only.forall(_.exists(_.startsWith("ngram_skew")))) {
-      val outS =
-        java.nio.file.Files.createTempDirectory("graft_probe_s").toString
       val boiler = " this document is provided as is without warranty of " +
         "any kind either express or implied"
-      spark.read.parquet(s"$src/documents.parquet")
-        .withColumn("k", explode(lit((0 until copies).toArray)))
-        .select(
-          (col("doc_id") * copies + col("k")).as("doc_id"),
-          when(col("k") === 0, concat(col("text"), lit(boiler)))
-            .otherwise(concat(col("text"), lit(" v"), col("k"), lit(boiler)))
-            .as("text"),
-          col("lang"), col("source"), col("n_chars"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outS/documents.parquet")
+      val outS = staged(spark, s"skew$copies", src)(Seq("documents" ->
+        cloned(Tables.read(spark, s"$src/documents.parquet"), copies)
+          .select(
+            (col("doc_id") * copies + k).as("doc_id"),
+            when(k === 0, concat(col("text"), lit(boiler)))
+              .otherwise(concat(col("text"), lit(" v"), k, lit(boiler)))
+              .as("text"),
+            col("lang"), col("source"), col("n_chars"))))
       Seq(true, false).foreach { rarest =>
         val t0 = System.nanoTime()
         val (maxPost, pairMass) =
           operators.LlmExtended.ngramPrefixStats(spark, outS, rarest)
         val tag = if (rarest) "ngram_skew_rarest" else "ngram_skew_hash"
-        println(f"$tag%-24s ${(System.nanoTime() - t0) / 1e9}%8.1f " +
+        println(f"$tag%-32s ${(System.nanoTime() - t0) / 1e9}%8.3f " +
           f"max_posting=$maxPost%d pair_mass=$pairMass%d")
       }
     }

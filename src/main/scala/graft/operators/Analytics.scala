@@ -697,7 +697,8 @@ object Analytics extends OpModule {
   private[graft] def componentLabels(s: SparkSession, d: String): DataFrame =
     coSupplyComponents(s, d)
 
-  /** Probe hook: force the adjacency memo (DevProbe stage bisection). */
+  /** Spec hook: the co-supply adjacency memo alone, so its build can be
+    * forced or timed apart from the op that reads it. */
   private[graft] def adjacencyProbe(s: SparkSession, d: String): DataFrame =
     coSupplyAdjacency(s, d)
 

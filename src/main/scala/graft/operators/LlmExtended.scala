@@ -922,21 +922,15 @@ object LlmExtended extends OpModule {
   /** Rolling-hash document fingerprint: min poly-hash over word
     * 3-shingles (winnowing with window = whole doc). Identical docs share
     * fingerprints; n_same_fp surfaces collision clusters. */
-  /** fp-computation stage of llm_fingerprint (dev bisection hook). */
-  private[graft] def fingerprintFpOnly(s: SparkSession, d: String): DataFrame = {
-    graft.GraftExtensions.register(s)
-    Tables.documents(s, d)
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("fp", expr("array_min(poly_shingles(toks))"))
-      .select(col("doc_id"), col("fp"))
-  }
-
   def fingerprint(s: SparkSession, d: String): DataFrame = {
+    graft.GraftExtensions.register(s)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
     // same rolling word-hash composition as SimHash (hash each word
     // once, compose shingle hashes algebraically); min is unaffected
     // by the distinct step so the shared expression is reused as-is
-    fingerprintFpOnly(s, d)
+    Tables.documents(s, d)
+      .withColumn("toks", split(col("text"), " "))
+      .withColumn("fp", expr("array_min(poly_shingles(toks))"))
       .select(col("doc_id"), col("fp"),
         count(lit(1)).over(w).as("n_same_fp"))
   }

@@ -63,8 +63,8 @@ object StreamIO extends OpModule {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
       else
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    // Per-batch fixed-cost levers (r9, DevProbe stream_floor2: the full
-    // outer join's 3.3 s probe floor → 2.2 s with all four, ~equal
+    // Per-batch fixed-cost levers (r9, bisected on the full outer
+    // stream join: its 3.3 s floor → 2.2 s with all four, ~equal
     // contributions). These AvailableNow queries live 1-3 s, so the
     // 60 s-interval maintenance thread only ever fires its startup pass
     // — pure overhead here (a long-lived job keeps the default);

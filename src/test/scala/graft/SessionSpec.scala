@@ -1,11 +1,7 @@
 package graft
 
-import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Path, Paths}
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -39,18 +35,7 @@ class SessionSpec extends SparkSpec {
   }
 
   test("a second warm call compiles no codegen class and returns the first call's rows") {
-    val java = Paths.get(System.getProperty("java.home"), "bin", "java")
-    // the test JVM's own flags (the --add-opens Spark needs on JDK 17)
-    val flags = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-      .filterNot(_.startsWith("-Xmx"))
-    val child = new ProcessBuilder((Seq(java.toString, "-Xmx1g") ++ flags ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.SessionSpecChild", sf)).asJava)
-      .redirectErrorStream(true).start()
-    val out = Future(new String(child.getInputStream.readAllBytes()))
-    val exited = try child.waitFor(300, SECONDS) finally child.destroyForcibly()
-    assert(exited, "the child JVM did not exit")
-    val printed = Await.result(out, 10.seconds)
-    assert(child.exitValue() == 0, printed)
+    val printed = childJvm("graft.SessionSpecChild", Seq(sf))
     val rows = printed.linesIterator.filter(_.startsWith("op ")).map(_.split(" ").toSeq).toSeq
     assert(rows.map(_(1)) == SessionSpecChild.ops.map(_._1), printed)
     rows.foreach { case Seq(_, op, compiled, same) =>
@@ -59,17 +44,17 @@ class SessionSpec extends SparkSpec {
     }
   }
 
-  test("source lint: only the builder makes a session under operators/ and pipeline/, and none is changed after it is built") {
+  test("source lint: only the builder makes a session under src/main, and none is changed after it is built") {
     val banned = Seq("newSession()", "cloneSession(", "artifact.isolation")
     // a session bound from the builder or an op's helper that calls it
     val bound = """val (\w+) = (?:GraftSession\.(?:derived|confClone)|\w+Session)\(""".r
     val member = """^  (?:private(?:\[\w+\])? )?def """.r
-    val offenders = Seq("src/main/scala/graft/operators", "src/main/scala/graft/pipeline")
-      .flatMap { dir =>
-        scala.util.Using.resource(Files.walk(Paths.get(dir))) { st =>
-          st.iterator.asScala.toSeq.filter(_.toString.endsWith(".scala"))
-            .flatMap(p => lint(p, banned, bound, member))
-        }
+    val offenders =
+      scala.util.Using.resource(Files.walk(Paths.get("src/main/scala/graft"))) { st =>
+        st.iterator.asScala.toSeq
+          .filter(p => p.toString.endsWith(".scala") &&
+            p.getFileName.toString != "GraftSession.scala")
+          .flatMap(p => lint(p, banned, bound, member))
       }
     assert(offenders.isEmpty, s"sessions made or changed outside the builder: $offenders")
   }

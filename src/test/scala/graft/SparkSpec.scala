@@ -1,5 +1,13 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import java.nio.file.Paths
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +20,25 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   /** Smallest fixture dir — unit tests stay fast. */
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `main(args)` in a fresh JVM with this JVM's classpath and flags
+    * (the --add-opens Spark needs on JDK 17) and heap `xmx`; asserts it
+    * exits 0 within `timeout` and returns what it printed. */
+  def childJvm(main: String, args: Seq[String] = Nil, xmx: String = "1g",
+               timeout: FiniteDuration = 300.seconds): String = {
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java")
+    val flags = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filterNot(_.startsWith("-Xmx"))
+    val child = new ProcessBuilder((Seq(java.toString, s"-Xmx$xmx") ++ flags ++
+        Seq("-cp", System.getProperty("java.class.path"), main) ++ args).asJava)
+      .redirectErrorStream(true).start()
+    val out = Future(new String(child.getInputStream.readAllBytes()))
+    val exited = try child.waitFor(timeout.toSeconds, SECONDS) finally child.destroyForcibly()
+    assert(exited, s"the child JVM ($main) did not exit")
+    val printed = Await.result(out, 10.seconds)
+    assert(child.exitValue() == 0, printed)
+    printed
+  }
 
   /** Jobs this thread launches while `f` runs. */
   def jobsDuring(f: => Any): Int = {

@@ -122,35 +122,28 @@ class StageUtilSpec extends SparkSpec {
   }
 
   test("the per-JVM root is deleted when the JVM exits") {
-    val java = Paths.get(System.getProperty("java.home"), "bin", "java")
-    val child = new ProcessBuilder(java.toString, "-Xmx64m", "-cp",
-        System.getProperty("java.class.path"), "graft.StageUtilSpecChild")
-      .redirectErrorStream(true).start()
-    val out = Future(new String(child.getInputStream.readAllBytes()).trim)
-    val exited = try child.waitFor(60, SECONDS) finally child.destroyForcibly()
-    assert(exited, "the child JVM did not exit")
-    val printed = Await.result(out, 10.seconds)
-    assert(child.exitValue() == 0, printed)
+    val printed = childJvm("graft.StageUtilSpecChild", xmx = "64m", timeout = 60.seconds)
     val dir = Paths.get(printed.linesIterator.toSeq.last)
     assert(dir.getParent.getFileName.toString.startsWith("graft_stage"), printed)
     assert(!Files.exists(dir.getParent), s"the root outlived its JVM: ${dir.getParent}")
   }
 
   test("source lint: only StageUtil creates temp dirs, writes markers or builds staging keys") {
-    val root = Paths.get("src/main/scala/graft/operators")
+    // operators/ and the mains beside it; not sources/, where
+    // ManifestCdcSource checks a commit's _SUCCESS on purpose
+    val root = Paths.get("src/main/scala/graft")
     val banned = Seq("createTempDirectory", "\"_GRAFT_", "_SUCCESS\").exists",
       "replaceAll(\"[^A-Za-z0-9]\"")
-    val offenders = scala.util.Using.resource(Files.list(root)) { st =>
-      st.iterator.asScala.toSeq
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "StageUtil.scala")
-        .flatMap { p =>
-          Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (line, i) if banned.exists(line.contains) =>
-              s"${root.relativize(p)}:${i + 1}"
-          }
+    val offenders = Seq(root, root.resolve("operators")).flatMap { dir =>
+      scala.util.Using.resource(Files.list(dir))(_.iterator.asScala.toSeq)
+    }.filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "StageUtil.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if banned.exists(line.contains) =>
+            s"${root.relativize(p)}:${i + 1}"
         }
-    }
+      }
     assert(offenders.isEmpty, s"staging outside StageUtil: $offenders")
   }
 }

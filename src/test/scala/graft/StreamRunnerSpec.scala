@@ -66,21 +66,19 @@ class StreamRunnerSpec extends SparkSpec {
     }
   }
 
-  test("source lint: only the runner starts, names or waits on a stream query under operators/ and pipeline/") {
+  test("source lint: only the runner starts, names or waits on a stream query under src/main") {
     val banned = Seq("format(\"memory\")", "Trigger.AvailableNow",
       "awaitTermination(", "UUID.randomUUID")
-    val offenders = Seq("src/main/scala/graft/operators", "src/main/scala/graft/pipeline")
-      .flatMap { dir =>
-        scala.util.Using.resource(Files.walk(Paths.get(dir))) { st =>
-          st.iterator.asScala.toSeq
-            .filter(p => p.toString.endsWith(".scala") &&
-              p.getFileName.toString != "StreamRunner.scala")
-            .flatMap { p =>
-              Files.readAllLines(p).asScala.zipWithIndex.collect {
-                case (line, i) if banned.exists(line.contains) => s"$p:${i + 1}"
-              }
+    val offenders =
+      scala.util.Using.resource(Files.walk(Paths.get("src/main/scala/graft"))) { st =>
+        st.iterator.asScala.toSeq
+          .filter(p => p.toString.endsWith(".scala") &&
+            p.getFileName.toString != "StreamRunner.scala")
+          .flatMap { p =>
+            Files.readAllLines(p).asScala.zipWithIndex.collect {
+              case (line, i) if banned.exists(line.contains) => s"$p:${i + 1}"
             }
-        }
+          }
       }
     assert(offenders.isEmpty, s"stream runs outside StreamRunner: $offenders")
   }
