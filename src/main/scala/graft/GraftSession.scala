@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.LocalCheckpointFileManager
+
 /** The one local session every main runs on. */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS` as a positive int, `default` when unset; any
@@ -15,8 +17,9 @@ object GraftSession {
 
   /** local[cpus] with as many shuffle partitions, UTC, the fixture read
     * confs (nanosecond timestamps as longs, naive timestamps as
-    * TIMESTAMP) and the RocksDB state store that transformWithState's
-    * column families need. */
+    * TIMESTAMP), the RocksDB state store that transformWithState's
+    * column families need, and the java.nio checkpoint file manager for
+    * the stream queries that start on this session (README "Streams"). */
   def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -26,6 +29,7 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config(Map(LocalCheckpointFileManager.conf))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.{GraftSession, Tables}
+import graft.sources.LocalCheckpointFileManager
 import StreamRunner.{drain, fresh, run}
 
 /** Streaming sources, sinks, and stream joins (SURVEY.md §2.1 streaming
@@ -72,6 +73,9 @@ object StreamIO extends OpModule {
     // every batch; the skip-nulls storage shape is the upstream default
     // for new stream-stream join checkpoints; per-query Codahale
     // metrics registration costs more than these micro-runs return.
+    // The java.nio checkpoint file manager writes every checkpoint file
+    // without the `chmod` and `readlink` child processes Hadoop's local
+    // file system starts (README "Streams").
     GraftSession.derived(s, Seq(
       "spark.sql.shuffle.partitions" -> "2",
       "spark.sql.streaming.stateStore.providerClass" -> provider,
@@ -79,7 +83,8 @@ object StreamIO extends OpModule {
       "spark.sql.streaming.stateStore.formatValidation.enabled" -> "false",
       "spark.sql.streaming.stateStore.skipNullsForStreamStreamJoins.enabled" ->
         "true",
-      "spark.sql.streaming.metricsEnabled" -> "false") ++ confs: _*)
+      "spark.sql.streaming.metricsEnabled" -> "false",
+      LocalCheckpointFileManager.conf) ++ confs: _*)
   }
 
   /** The trailing no-data micro-batch off, for ops whose output it

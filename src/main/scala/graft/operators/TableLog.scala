@@ -43,9 +43,16 @@ private[graft] object TableLog {
       s".${path.getFileName}.", ".tmp")
     try {
       Files.write(tmp, content.getBytes(UTF_8))
-      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      replace(tmp, path)
     } finally Files.deleteIfExists(tmp)
+    ()
+  }
+
+  /** The one atomic rename in graft: `tmp` over `path`, in one directory
+    * (also the java.nio checkpoint file manager's overwrite). */
+  def replace(tmp: Path, path: Path): Unit = {
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
     ()
   }
 
