@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import AnnKit._
 
 /** Round-4 training-corpus operators (SURVEY.md §2.13): benchmark
   * decontamination, context-window sequence packing, deterministic
@@ -401,22 +402,8 @@ object LlmScale extends OpModule {
   private def exactQTop3(s: SparkSession, d: String): DataFrame =
     exactTop3Memo((s, d)) {
       graft.GraftExtensions.register(s)
-      val qvec = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 1e6, 0) as bigint))")
-          .as("qv"))
-      val q = qvec.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("qv").as("qq"))
-      val wExact = Window.partitionBy(col("qid"))
-        .orderBy(col("dist").asc, col("cand_id").asc)
-      qvec.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("cand_id"),
-          expr("squared_distance(qv, qq)").as("dist"))
-        .withColumn("rn", row_number().over(wExact))
-        .where(col("rn") <= 3)
-        .select(col("qid"), col("cand_id"))
-        .localCheckpoint()
+      val qvec = Tables.embeddings(s, d).select(col("vec_id"), lattice().as("qv"))
+      exact(qvec, evalQueries(qvec)).localCheckpoint()
     }
 
   /** Shared Lloyd pipeline (quantized vectors + per-dimension form +
@@ -443,11 +430,7 @@ object LlmScale extends OpModule {
     // qv holds the vector FORM (one array row per vector — what assign
     // folds over); dims re-derives the per-dimension form map-side from
     // the same checkpoint for the recenter aggregates.
-    val qv = emb
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1e6, 0) as bigint))")
-        .as("qv"))
-      .localCheckpoint()
+    val qv = emb.select(col("vec_id"), lattice().as("qv")).localCheckpoint()
     val dims = qv
       .select(col("vec_id"), posexplode(col("qv")))
       .select(col("vec_id"), col("pos").as("dim"), col("col").as("q"))
@@ -685,25 +668,11 @@ object LlmScale extends OpModule {
     // llm_kmeans' reported centroids), collapsed to sorted arrays by the
     // same helper the Lloyd rounds broadcast through
     val cent = centroidArrays(c2).select(col("cid").as("cluster"), col("cv"))
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("cdist").asc, col("cluster").asc)
-    val probes = qvec.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-      .crossJoin(broadcast(cent))
-      .select(col("qid"), col("qq"), col("cluster"),
-        expr("squared_distance(qq, cv)").as("cdist"))
-      .withColumn("pr", row_number().over(wProbe))
-      .where(col("pr") <= 2)
-      .select(col("qid"), col("qq"), col("cluster"))
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    qvec.join(a2, "vec_id")
-      .join(broadcast(probes), "cluster")
+    topK(qvec.join(a2, "vec_id")
+      .join(broadcast(probes(evalQueries(qvec), cent, 2)), "cluster")
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"), col("cluster"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rank", row_number().over(wRank))
-      .where(col("rank") <= 3)
+        expr("squared_distance(qv, qq)").as("dist")), 3, "rank")
       .select(col("qid"), col("rank"), col("cand_id"), col("cluster"),
         col("dist"))
   }
@@ -919,29 +888,13 @@ object LlmScale extends OpModule {
       (col("vec_id") >= 1000000L && col("vec_id") < 1000100L)
     val q = gvec.where(isQ)
       .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val wP = Window.partitionBy(col("qid"))
-      .orderBy(col("cdist").asc, col("cluster").asc)
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("qid"), col("qq"), col("cluster"),
-        expr("squared_distance(qq, cv)").as("cdist"))
-      .withColumn("pr", row_number().over(wP)).where(col("pr") <= 2)
-      .select(col("qid"), col("qq"), col("cluster"))
-    val wR = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val ivf3 = MemoUtil.scratch(gvec.join(ginv, "vec_id")
-      .join(broadcast(probes), "cluster")
+    val ivf3 = MemoUtil.scratch(topK(gvec.join(ginv, "vec_id")
+      .join(broadcast(probes(q, cent, 2)), "cluster")
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wR)).where(col("rn") <= 3)
+        expr("squared_distance(qv, qq)").as("dist")), 3)
       .select(col("qid"), col("cand_id"))
       .localCheckpoint())
-    val ex3 = gvec.crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wR)).where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
     // twin audit: the delta copy of a base query / the source of a
     // delta query, served or not (NULL when the query has no twin)
     val twinOf = when(col("qid") >= 1000000L, col("qid") - 1000000L)
@@ -949,12 +902,9 @@ object LlmScale extends OpModule {
     val tw = ivf3.groupBy(col("qid"))
       .agg(max(when(col("cand_id") === twinOf, 1).otherwise(0))
         .cast("int").as("tw_raw"))
-    ex3.join(ivf3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
+    recall(exact(gvec, q), ivf3)
       .join(tw, "qid")
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"),
+      .select(col("qid"), col("n_hit"), recallAt3,
         when(twinOf.isNotNull, col("tw_raw")).as("twin_in_top3"))
   }
 
@@ -1007,38 +957,18 @@ object LlmScale extends OpModule {
       .select(col("qid"), col("qq"), col("cluster").as("parent_cluster"),
         col("subcell"))
       .localCheckpoint())
-    val wP = Window.partitionBy(col("qid"))
-      .orderBy(col("cdist").asc, col("cell").asc)
-    val probes = q.select(col("qid"), col("qq"))
-      .crossJoin(broadcast(cells))
-      .select(col("qid"), col("qq"), col("cell"),
-        expr("squared_distance(qq, cv)").as("cdist"))
-      .withColumn("pr", row_number().over(wP)).where(col("pr") <= 2)
-      .select(col("qid"), col("qq"), col("cell"))
-    val wR = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val ivf3 = allVec.join(memAll, "vec_id")
-      .join(broadcast(probes), "cell")
+    val qq = q.select(col("qid"), col("qq"))
+    val ivf3 = topK(allVec.join(memAll, "vec_id")
+      .join(broadcast(probes(qq, cells, 2, "cell")), "cell")
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wR)).where(col("rn") <= 3)
+        expr("squared_distance(qv, qq)").as("dist")), 3)
       .select(col("qid"), col("cand_id"))
-    val ex3 = allVec
-      .crossJoin(broadcast(q.select(col("qid"), col("qq"))))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wR)).where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-    ex3.join(ivf3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
+    recall(exact(allVec, qq), ivf3)
       .join(q.select(col("qid"), col("parent_cluster"), col("subcell")),
         "qid")
       .select(col("qid"), col("parent_cluster"), col("subcell"),
-        col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+        col("n_hit"), recallAt3)
   }
 
   // ── llm_ann_ivf_delete ────────────────────────────────────────────────
@@ -1068,28 +998,17 @@ object LlmScale extends OpModule {
     graft.GraftExtensions.register(s)
     val (qvec, _, _, _) = lloyd(s, d)
     val (cent, invFile) = ivfIndex(s, d)
-    val q = qvec.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val wP = Window.partitionBy(col("qid"))
-      .orderBy(col("cdist").asc, col("cluster").asc)
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("qid"), col("qq"), col("cluster"),
-        expr("squared_distance(qq, cv)").as("cdist"))
-      .withColumn("pr", row_number().over(wP)).where(col("pr") <= 2)
-      .select(col("qid"), col("qq"), col("cluster"))
+    val probe = probes(evalQueries(qvec), cent, 2)
     val surv = invFile.where(col("vec_id") % 23 =!= 5)
-    val wR = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val d3 = qvec.join(surv.select(col("vec_id"), col("cluster")),
+    val d3 = topK(qvec.join(surv.select(col("vec_id"), col("cluster")),
         "vec_id")
-      .join(broadcast(probes), "cluster")
+      .join(broadcast(probe), "cluster")
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wR)).where(col("rn") <= 3)
+        expr("squared_distance(qv, qq)").as("dist")), 3)
       .select(col("qid"), col("cand_id"))
     val excl = invFile.where(col("vec_id") % 23 === 5)
-      .join(broadcast(probes.select(col("qid"), col("cluster"))),
+      .join(broadcast(probe.select(col("qid"), col("cluster"))),
         "cluster")
       .where(col("vec_id") =!= col("qid"))
       .groupBy(col("qid")).agg(count(lit(1)).as("n_excluded"))
@@ -1099,23 +1018,9 @@ object LlmScale extends OpModule {
   def annIvfDelete(s: SparkSession, d: String): DataFrame = {
     val (d3, excl) = ivfDeleteParts(s, d)
     val (qvec, _, _, _) = lloyd(s, d)
-    val q = qvec.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val wR = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val ex3 = qvec.where(col("vec_id") % 23 =!= 5)
-      .crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wR)).where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-    ex3.join(d3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
+    recall(exact(qvec.where(col("vec_id") % 23 =!= 5), evalQueries(qvec)), d3)
       .join(excl, Seq("qid"), "left")
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"),
+      .select(col("qid"), col("n_hit"), recallAt3,
         coalesce(col("n_excluded"), lit(0L)).as("n_excluded"))
   }
 
@@ -1162,20 +1067,19 @@ object LlmScale extends OpModule {
     }
   }
 
-  private def copyIvfV1(s: SparkSession, d: String, dst: String): Unit = {
-    val tpl = ivfV1Template(s, d)
-    Seq("centroids", "postings", "vectors").foreach { sub =>
-      StageUtil.copyDir(java.nio.file.Paths.get(tpl, sub),
-        java.nio.file.Paths.get(dst, sub))
+  /** Instantiate a store at `dst` as a file copy of every dataset dir
+    * of a staged v1 template (ivfV1Template, graphV1Template). */
+  private def copyTemplate(tpl: String, dst: String): Unit =
+    new java.io.File(tpl).listFiles().filter(_.isDirectory).foreach { sub =>
+      StageUtil.copyDir(sub.toPath, java.nio.file.Paths.get(dst, sub.getName))
     }
-  }
 
   private[graft] def ivfStoreDir(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
     StageUtil.staged("ivfstore", d) { base =>
       val (qv, _, a2, _) = lloyd(s, d)
       // v1: the trained artifact (file-copied from the per-JVM template)
-      copyIvfV1(s, d, base)
+      copyTemplate(ivfV1Template(s, d), base)
       TableLog.publish(base, "postings;vectors;")
       // v2: the delta commit — appended dirs, v1 files untouched
       val (cent, _) = ivfIndex(s, d)
@@ -1201,6 +1105,11 @@ object LlmScale extends OpModule {
     Seq.tabulate(n)(i => parts.lift(i).toSeq.flatMap(_.split(',')).filter(_.nonEmpty))
   }
 
+  /** The union of a head segment's dataset dirs under the store `dir`. */
+  private def storeRead(s: SparkSession, dir: String,
+                        ps: Seq[String]): DataFrame =
+    ps.map(p => Tables.read(s, s"$dir/$p")).reduce(_ unionByName _)
+
   /** head = "postDirs;vecDirs;delDirs" (comma-separated each). */
   private[graft] def ivfStoreHead(dir: String)
       : (Seq[String], Seq[String], Seq[String]) = {
@@ -1214,11 +1123,7 @@ object LlmScale extends OpModule {
   private[graft] def ivfStoreSweep(s: SparkSession, dir: String): Unit = {
     val (posts, vecs, dels) = ivfStoreHead(dir)
     if (dels.nonEmpty) {
-      val live = posts.map(p => Tables.read(s, s"$dir/$p"))
-        .reduce(_ unionByName _)
-      val tomb = dels.map(p => Tables.read(s, s"$dir/$p"))
-        .reduce(_ unionByName _)
-      live.join(tomb, Seq("vec_id"), "left_anti")
+      storeRead(s, dir, posts).join(storeRead(s, dir, dels), Seq("vec_id"), "left_anti")
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/postings2")
       TableLog.publish(dir, s"postings2;${vecs.mkString(",")};")
     }
@@ -1247,13 +1152,10 @@ object LlmScale extends OpModule {
   private def ivfStoreServeHeadBuild(s: SparkSession, dir: String,
       headRaw: String): DataFrame = {
     val Seq(posts, vecDirs, dels) = headSegments(headRaw, 3)
-    val inv0 = posts.map(p => Tables.read(s, s"$dir/$p"))
-      .reduce(_ unionByName _)
+    val inv0 = storeRead(s, dir, posts)
     val inv = if (dels.isEmpty) inv0
-      else inv0.join(dels.map(p => Tables.read(s, s"$dir/$p"))
-        .reduce(_ unionByName _), Seq("vec_id"), "left_anti")
-    val vecsAll = vecDirs.map(p => Tables.read(s, s"$dir/$p"))
-      .reduce(_ unionByName _)
+      else inv0.join(storeRead(s, dir, dels), Seq("vec_id"), "left_anti")
+    val vecsAll = storeRead(s, dir, vecDirs)
     // live vectors: a store's vector files are swept lazily — liveness
     // is defined by the postings, so truth anti-joins the same sidecar
     val live = if (dels.isEmpty)
@@ -1262,35 +1164,14 @@ object LlmScale extends OpModule {
         "left_semi")
     val cents = centroidArrays(Tables.read(s, s"$dir/centroids"))
       .select(col("cid").as("cluster"), col("cv"))
-    val q = vecsAll.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val wP = Window.partitionBy(col("qid"))
-      .orderBy(col("cdist").asc, col("cluster").asc)
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("qq"), col("cluster"),
-        expr("squared_distance(qq, cv)").as("cdist"))
-      .withColumn("pr", row_number().over(wP)).where(col("pr") <= 2)
-      .select(col("qid"), col("qq"), col("cluster"))
-    val wR = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val ivf3 = vecsAll.join(inv, "vec_id")
-      .join(broadcast(probes), "cluster")
+    val q = evalQueries(vecsAll)
+    val ivf3 = topK(vecsAll.join(inv, "vec_id")
+      .join(broadcast(probes(q, cents, 2)), "cluster")
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wR)).where(col("rn") <= 3)
+        expr("squared_distance(qv, qq)").as("dist")), 3)
       .select(col("qid"), col("cand_id"))
-    val ex3 = live.crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wR)).where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-    ex3.join(ivf3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+    recall(exact(live, q), ivf3).select(col("qid"), col("n_hit"), recallAt3)
   }
 
   /** TIME TRAVEL over the index store (r16; closes the r15 nit "the
@@ -1357,7 +1238,7 @@ object LlmScale extends OpModule {
     graft.GraftExtensions.register(s)
     // fresh store = file copy of the per-JVM v1 template (r17) — the
     // identical artifact the three Spark writes produced per invocation
-    copyIvfV1(s, d, dir)
+    copyTemplate(ivfV1Template(s, d), dir)
     TableLog.publish(dir, "postings;vectors;")
   }
 
@@ -1366,19 +1247,24 @@ object LlmScale extends OpModule {
     * maxFilesPerTrigger=1. Staged once per JVM. */
   private[graft] def streamVectorTopic(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
-    StageUtil.staged("vecstream", d) { base =>
-      val (qv, _, _, _) = lloyd(s, d)
-      val delta = ivfDeltaShard(qv)
-      delta.where(col("new_id") % 2 === 0).coalesce(1)
-        .write.parquet(s"$base/b0")
-      delta.where(col("new_id") % 2 === 1).coalesce(1)
-        .write.parquet(s"$base/b1")
-      StageUtil.stageTopic(java.nio.file.Paths.get(base, "b0"),
-        java.nio.file.Paths.get(base, "topic"), "d0")
-      StageUtil.stageTopic(java.nio.file.Paths.get(base, "b1"),
-        java.nio.file.Paths.get(base, "topic"), "d1")
-    } + "/topic"
+    stageDeltaTopic("vecstream", d)(ivfDeltaShard(lloyd(s, d)._1))
   }
+
+  /** Stage a (new_id, dv) delta shard once per JVM as a two-file topic:
+    * the even and odd new_id halves, one parquet file each, so a
+    * maxFilesPerTrigger=1 stream reads it as two micro-batches. Returns
+    * the topic dir. */
+  private def stageDeltaTopic(prefix: String, d: String)
+                             (delta: => DataFrame): String =
+    StageUtil.staged(prefix, d) { base =>
+      val shard = delta
+      Seq(0, 1).foreach { b =>
+        shard.where(col("new_id") % 2 === b).coalesce(1)
+          .write.parquet(s"$base/b$b")
+        StageUtil.stageTopic(java.nio.file.Paths.get(base, s"b$b"),
+          java.nio.file.Paths.get(base, "topic"), s"d$b")
+      }
+    } + "/topic"
 
   /** One micro-batch's delta commit into the store at `dir`. */
   private[graft] def streamVectorCommit(s: SparkSession, dir: String,
@@ -1420,30 +1306,15 @@ object LlmScale extends OpModule {
                                        dir: String): DataFrame = {
     graft.GraftExtensions.register(s)
     val (posts, vecDirs, _) = ivfStoreHead(dir)
-    val inv = posts.map(p => Tables.read(s, s"$dir/$p"))
-      .reduce(_ unionByName _)
-    val vecsAll = MemoUtil.scratch(vecDirs
-      .map(p => Tables.read(s, s"$dir/$p"))
-      .reduce(_ unionByName _).localCheckpoint())
+    val inv = storeRead(s, dir, posts)
+    val vecsAll = MemoUtil.scratch(storeRead(s, dir, vecDirs).localCheckpoint())
     val cents = centroidArrays(Tables.read(s, s"$dir/centroids"))
       .select(col("cid").as("cluster"), col("cv"))
-    val q = vecsAll.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val wP = Window.partitionBy(col("qid"))
-      .orderBy(col("cdist").asc, col("cluster").asc)
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("qq"), col("cluster"),
-        expr("squared_distance(qq, cv)").as("cdist"))
-      .withColumn("pr", row_number().over(wP)).where(col("pr") <= 2)
-      .select(col("qid"), col("qq"), col("cluster"))
-    val wR = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    vecsAll.join(inv, "vec_id")
-      .join(broadcast(probes), "cluster")
+    topK(vecsAll.join(inv, "vec_id")
+      .join(broadcast(probes(evalQueries(vecsAll), cents, 2)), "cluster")
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rank", row_number().over(wR)).where(col("rank") <= 3)
+        expr("squared_distance(qv, qq)").as("dist")), 3, "rank")
       .select(col("qid"), col("rank"), col("cand_id"))
   }
 
@@ -1501,38 +1372,21 @@ object LlmScale extends OpModule {
   /** ANN quality evaluation as a first-class operator: recall@3 of the
     * learned-quantizer IVF (annIvfKmeans) against the exact brute-force
     * top-3 — the measurement that justifies an approximate index before
-    * pointing it at a corpus. The exact side broadcasts the 10 query
-    * vectors over the checkpointed quantized corpus (N·10 integer
-    * distance folds — the documented brute-force baseline shape); the
-    * IVF side reuses the shared Lloyd memo, so the comparison adds one
-    * corpus pass. Distances, ranks, and hit counts are exact integers;
-    * recall is the only division and rounds once. At 100 TB this runs
+    * pointing it at a corpus. The exact side is the shared `exactQTop3`
+    * memo (the 10 query vectors broadcast over the quantized corpus,
+    * N·10 integer distance folds — the documented brute-force baseline
+    * shape, paid once for every recall row on the lattice); the IVF
+    * side reuses the shared Lloyd memo. Distances, ranks, and hit
+    * counts are exact integers; recall is the only division and rounds
+    * once. At 100 TB this runs
     * over a sampled query set exactly as written — the brute-force side
     * is per-query linear, which is what makes spot-check evaluation
     * affordable while the index serves the full load. */
   def annRecall(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
-    val (qvec, _, _, _) = lloyd(s, d)
-    val q = qvec.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val wExact = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val exact3 = qvec.crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wExact))
-      .where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
     val ivf3 = annIvfKmeans(s, d).select(col("qid"), col("cand_id"))
-    exact3
-      .join(ivf3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+    recall(exactQTop3(s, d), ivf3).select(col("qid"), col("n_hit"), recallAt3)
   }
-
 
   /** Recall-vs-nprobe SWEEP — the tuning curve behind llm_ann_recall's
     * single point (an IVF deployment picks nprobe by exactly this
@@ -1548,50 +1402,25 @@ object LlmScale extends OpModule {
     *
     * At-scale: identical economics to llm_ann_ivf_kmeans with nprobe=4
     * — per-query work ≈ 4·(N/K) — plus the brute exact side that every
-    * recall evaluation pays on its sampled query set. */
+    * recall evaluation pays on its sampled query set (the shared
+    * `exactQTop3` memo). */
   def annRecallSweep(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
     val (qvec, _, a2, c2) = lloyd(s, d)
     val cent = centroidArrays(c2).select(col("cid").as("cluster"), col("cv"))
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("cdist").asc, col("cluster").asc)
-    val pranks = qvec.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-      .crossJoin(broadcast(cent))
-      .select(col("qid"), col("qq"), col("cluster"),
-        expr("squared_distance(qq, cv)").as("cdist"))
-      .withColumn("pr", row_number().over(wProbe))
-      .where(col("pr") <= 4)
-      .select(col("qid"), col("qq"), col("cluster"), col("pr"))
     val cands = MemoUtil.scratch(qvec.join(a2, "vec_id")
-      .join(broadcast(pranks), "cluster")
+      .join(broadcast(probes(evalQueries(qvec), cent, 4)), "cluster")
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"), col("pr"),
         expr("squared_distance(qv, qq)").as("dist"))
       .localCheckpoint())
-    val wExact = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val exact3 = MemoUtil.scratch(qvec
-      .crossJoin(broadcast(qvec.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("qv").as("qq"))))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wExact))
-      .where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-      .localCheckpoint())
+    val exact3 = exactQTop3(s, d)
     Seq(1, 2, 4).map { np =>
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("dist").asc, col("cand_id").asc)
-      val ivf3 = cands.where(col("pr") <= np)
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
+      val ivf3 = topK(cands.where(col("pr") <= np), 3, "rank")
         .select(col("qid"), col("cand_id"))
       val nCand = cands.where(col("pr") <= np)
         .agg(count(lit(1)).as("n_candidates"))
-      exact3
-        .join(ivf3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
+      hits(exact3, ivf3)
         .agg(count(col("hit")).as("n_hits"), count(lit(1)).as("n_truth"))
         .crossJoin(broadcast(nCand))
         .select(lit(np).as("nprobe"), col("n_hits"), col("n_truth"),
@@ -1627,68 +1456,27 @@ object LlmScale extends OpModule {
     * tie-breaks are the shared exact-integer Lloyd lattice, so DuckDB
     * replays the whole comparison. */
   def annFiltered(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     graft.GraftExtensions.register(s)
     val (qvec, _, a2, c2) = lloyd(s, d)
     val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
     val cent = centroidArrays(c2).select(col("cid").as("cluster"), col("cv"))
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("cdist").asc, col("cluster").asc)
-    val probes = qvec.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-      .crossJoin(broadcast(cent))
-      .select(col("qid"), col("qq"), col("cluster"),
-        expr("squared_distance(qq, cv)").as("cdist"))
-      .withColumn("pr", row_number().over(wProbe))
-      .where(col("pr") <= 2)
-      .select(col("qid"), col("qq"), col("cluster"))
     // one candidate pass over the probed cells, label attached — both
     // strategies re-rank these materialized rows
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
     val cand = MemoUtil.scratch(qvec.join(a2, "vec_id")
       .join(labels, "vec_id")
-      .join(broadcast(probes), "cluster")
+      .join(broadcast(probes(evalQueries(qvec), cent, 2)), "cluster")
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"), col("label"),
         expr("squared_distance(qv, qq)").as("dist"))
       .localCheckpoint())
-    val pre = cand.where(col("label") === 3)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
+    val pre = topK(cand.where(col("label") === 3), 3)
       .select(lit("prefilter").as("strategy"), col("qid"), col("cand_id"))
-    val post = cand
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 9 && col("label") === 3)
-      .withColumn("rn2", row_number().over(w))
-      .where(col("rn2") <= 3)
+    val post = topK(topK(cand, 9).where(col("label") === 3), 3, "rn2")
       .select(lit("postfilter").as("strategy"), col("qid"), col("cand_id"))
     // exact FILTERED brute truth: 10 broadcast queries × one corpus pass
-    val q = qvec.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val ex3 = qvec.join(labels, "vec_id").where(col("label") === 3)
-      .crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-    val truth = ex3.groupBy(col("qid")).agg(count(lit(1)).as("n_truth"))
-    val hits = pre.unionByName(post)
-      .join(ex3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("strategy"), col("qid"))
-      .agg(count(lit(1)).as("n_ret"), count(col("hit")).as("n_hit"))
-    // left join from strategy × truth: a strategy returning ZERO rows
-    // for a qid must still report (n_ret 0, recall 0), not vanish
-    Seq("prefilter", "postfilter").toDF("strategy")
-      .crossJoin(broadcast(truth))
-      .join(hits, Seq("strategy", "qid"), "left")
-      .select(col("strategy"), col("qid"),
-        coalesce(col("n_ret"), lit(0L)).as("n_ret"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        col("n_truth"))
-      .withColumn("recall_bp", expr("n_hit * 10000L div n_truth"))
+    val ex3 = exact(qvec.join(labels, "vec_id").where(col("label") === 3),
+      evalQueries(qvec))
+    filtered(pre.unionByName(post), ex3, "prefilter", "postfilter")
   }
 
   // ── llm_kmeans_twolevel ───────────────────────────────────────────────
@@ -2589,26 +2377,11 @@ object LlmScale extends OpModule {
     val base = MemoUtil.scratch(opqBase(s, d)
       .withColumnRenamed("v", "qv").localCheckpoint())
     val rot = base.select(col("vec_id"), expr("fwht64(qv)").as("qv"))
-    val q = base.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val wExact = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val exact3 = MemoUtil.scratch(base.crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wExact))
-      .where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-      .localCheckpoint())
+    val exact3 = MemoUtil.scratch(
+      exact(base, evalQueries(base)).localCheckpoint())
     def recallOf(qvec: DataFrame, label: String): DataFrame =
-      exact3
-        .join(pqTop3From(qvec).select(col("qid"), col("cand_id"))
-          .withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-        .groupBy(col("qid"))
-        .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-        .select(lit(label).as("variant"), col("qid"), col("n_hit"),
-          round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+      recall(exact3, pqTop3From(qvec).select(col("qid"), col("cand_id")))
+        .select(lit(label).as("variant"), col("qid"), col("n_hit"), recallAt3)
     recallOf(base, "plain").unionByName(recallOf(rot, "hadamard"))
   }
 
@@ -2657,10 +2430,7 @@ object LlmScale extends OpModule {
     pqMemo((s, d)) {
       // quantized vector form — single reader (the subvector derivation;
       // the exact re-rank lives in annPq now), so no lineage cut needed
-      pqTop3From(Tables.embeddings(s, d)
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 1e6, 0) as bigint))")
-          .as("qv")))
+      pqTop3From(Tables.embeddings(s, d).select(col("vec_id"), lattice().as("qv")))
         .localCheckpoint()
     }
 
@@ -2722,10 +2492,7 @@ object LlmScale extends OpModule {
 
   def annPq(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
-    val qvec = Tables.embeddings(s, d)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1e6, 0) as bigint))")
-        .as("qv"))
+    val qvec = Tables.embeddings(s, d).select(col("vec_id"), lattice().as("qv"))
     // exact 64-dim distance beside the estimate (30-row probe side)
     pqTop3(s, d)
       .join(qvec.select(col("vec_id").as("qid"), col("qv").as("qq")), "qid")
@@ -2746,12 +2513,7 @@ object LlmScale extends OpModule {
   def annPqRecall(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
     val pq3 = pqTop3(s, d).select(col("qid"), col("cand_id"))
-    exactQTop3(s, d)
-      .join(pq3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+    recall(exactQTop3(s, d), pq3).select(col("qid"), col("n_hit"), recallAt3)
   }
 
   /** Matryoshka (MRL-style) truncated-dimension retrieval eval: rank by
@@ -2770,26 +2532,11 @@ object LlmScale extends OpModule {
   def annMatryoshka(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
     val tvec = Tables.embeddings(s, d)
-      .select(col("vec_id"), expr(
-        "transform(slice(embedding, 1, 8), x -> cast(round(cast(x as double) * 1e6, 0) as bigint))")
-        .as("tv"))
+      .select(col("vec_id"), lattice("slice(embedding, 1, 8)").as("tv"))
     val q = tvec.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("tv").as("tq"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val trunc3 = tvec.crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(tv, tq)").as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-    exactQTop3(s, d)
-      .join(trunc3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+    val trunc3 = exact(tvec, q, "squared_distance(tv, tq)")
+    recall(exactQTop3(s, d), trunc3).select(col("qid"), col("n_hit"), recallAt3)
   }
 
   /** GRAPH-TRAVERSAL ANN (the HNSW/NSW family's representative): a
@@ -2838,12 +2585,7 @@ object LlmScale extends OpModule {
   def annGraph(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
     val pred = beamTop3(annGraphBeam8(s, d)._1)
-    exactQTop3(s, d)
-      .join(pred.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+    recall(exactQTop3(s, d), pred).select(col("qid"), col("n_hit"), recallAt3)
   }
 
   /** BEAM-WIDTH ablation for the graph index — the sibling of
@@ -2864,12 +2606,10 @@ object LlmScale extends OpModule {
     Seq(2, 4, 8).map { b =>
       val pred = if (b == 8) beamTop3(annGraphBeam8(s, d)._1)
                  else beamTop3(annGraphSearchFull(adj, entries, qv, b)._1)
-      ex.join(pred
-          .withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
+      hits(ex, pred)
         .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
         .select(lit(b).as("beam"),
-          lit(16 + 6 * b * 22).as("evals_bound"), col("n_hit"),
-          round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+          lit(16 + 6 * b * 22).as("evals_bound"), col("n_hit"), recallAt3)
     }.reduce(_ unionByName _)
   }
 
@@ -2896,7 +2636,6 @@ object LlmScale extends OpModule {
     * beam-8 walk — the marginal cost is two ≤1100-row/query re-ranks
     * plus the truth pass, corpus-linear like every recall row. */
   def annGraphFiltered(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     graft.GraftExtensions.register(s)
     val (_, _, qv) = annGraphAdjacency(s, d)
     val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
@@ -2913,34 +2652,9 @@ object LlmScale extends OpModule {
     val aware = strat(visited, "aware")
     val post = strat(beam, "postfilter")
     // exact FILTERED brute truth: label-3 corpus × 10 broadcast queries
-    val q = qv.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val wc = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val ex3 = MemoUtil.scratch(qv.join(labels, "vec_id")
-      .where(col("label") === 3)
-      .crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wc)).where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-      .localCheckpoint())
-    val truth = ex3.groupBy(col("qid")).agg(count(lit(1)).as("n_truth"))
-    val hits = aware.unionByName(post)
-      .join(ex3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("strategy"), col("qid"))
-      .agg(count(lit(1)).as("n_ret"), count(col("hit")).as("n_hit"))
-    // strategy × truth left-joined so a qid a strategy misses entirely
-    // still reports (n_ret 0, recall 0) instead of vanishing
-    Seq("aware", "postfilter").toDF("strategy")
-      .crossJoin(broadcast(truth))
-      .join(hits, Seq("strategy", "qid"), "left")
-      .select(col("strategy"), col("qid"),
-        coalesce(col("n_ret"), lit(0L)).as("n_ret"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        col("n_truth"))
-      .withColumn("recall_bp", expr("n_hit * 10000L div n_truth"))
+    val ex3 = MemoUtil.scratch(exact(qv.join(labels, "vec_id")
+      .where(col("label") === 3), evalQueries(qv)).localCheckpoint())
+    filtered(aware.unionByName(post), ex3, "aware", "postfilter")
   }
 
   /** The memoized width-8 walk: (final beam, visited) — both eagerly
@@ -2969,8 +2683,7 @@ object LlmScale extends OpModule {
   private def annGraphSearchFull(adj: DataFrame, entries: DataFrame,
                                  qv: DataFrame, width: Int)
       : (DataFrame, DataFrame) =
-    annGraphSearchBatch(adj, entries, qv, qv.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq")), width)
+    annGraphSearchBatch(adj, entries, qv, evalQueries(qv), width)
 
   // ── llm_ann_graph_incremental ─────────────────────────────────────────
 
@@ -3054,22 +2767,8 @@ object LlmScale extends OpModule {
     graft.GraftExtensions.register(s)
     val (_, _, qv) = annGraphAdjacency(s, d)
     val pred = annGraphDeletePred(s, d)
-    val q = qv.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val wc = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val ex3 = qv.where(col("vec_id") % 23 =!= 5)
-      .crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(qv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(wc)).where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-    ex3.join(pred.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+    recall(exact(qv.where(col("vec_id") % 23 =!= 5), evalQueries(qv)), pred)
+      .select(col("qid"), col("n_hit"), recallAt3)
   }
 
   // ── llm_ann_graph_persisted ───────────────────────────────────────────
@@ -3124,20 +2823,12 @@ object LlmScale extends OpModule {
     }
   }
 
-  private def copyGraphV1(s: SparkSession, d: String, dst: String): Unit = {
-    val tpl = graphV1Template(s, d)
-    Seq("adjacency", "entries", "vectors").foreach { sub =>
-      StageUtil.copyDir(java.nio.file.Paths.get(tpl, sub),
-        java.nio.file.Paths.get(dst, sub))
-    }
-  }
-
   private[graft] def graphStoreDir(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
     StageUtil.staged("graphstore", d) { base =>
       val (_, _, qv) = annGraphAdjacency(s, d)
       // v1: the built graph (file-copied from the per-JVM template)
-      copyGraphV1(s, d, base)
+      copyTemplate(graphV1Template(s, d), base)
       TableLog.publish(base, "adjacency;entries;vectors;")
       // v2: the graft commit — the incremental shard's attachment
       // edges (forward + symmetric back-edges) and its vectors,
@@ -3182,8 +2873,8 @@ object LlmScale extends OpModule {
     // ivfStoreServeHead's single-read shape
     storeHeadMemo((s, dir, raw)) {
       val Seq(adjs, ents, vecDirs, dels) = headSegments(raw, 4)
-      val adj0 = graphStoreRead(s, dir, adjs)
-      val ent0 = graphStoreRead(s, dir, ents)
+      val adj0 = storeRead(s, dir, adjs)
+      val ent0 = storeRead(s, dir, ents)
       // checkpoint only COMPUTED frames (r18): a tombstone-free head's
       // adjacency/entries/vectors are plain parquet unions over immutable
       // store dirs — materializing those into the block manager is a
@@ -3192,12 +2883,12 @@ object LlmScale extends OpModule {
       // frames stay checkpointed: the anti-joins are real compute the
       // walk would otherwise redo per hop.
       val vecsAll =
-        if (vecDirs.size > 1) graphStoreRead(s, dir, vecDirs).localCheckpoint()
-        else graphStoreRead(s, dir, vecDirs)
+        if (vecDirs.size > 1) storeRead(s, dir, vecDirs).localCheckpoint()
+        else storeRead(s, dir, vecDirs)
       val (adj, ent) =
         if (dels.isEmpty) (adj0, ent0)
         else {
-          val tomb = graphStoreRead(s, dir, dels)
+          val tomb = storeRead(s, dir, dels)
           (adj0
             .join(tomb.select(col("vec_id").as("src")), Seq("src"),
               "left_anti")
@@ -3216,23 +2907,19 @@ object LlmScale extends OpModule {
     }
   }
 
-  private def graphStoreRead(s: SparkSession, dir: String,
-                             ps: Seq[String]): DataFrame =
-    ps.map(p => Tables.read(s, s"$dir/$p")).reduce(_ unionByName _)
-
   /** The edge-sweep compaction: drop every tombstone-incident edge
     * (both directions), filter the entry sample, flip the head to drop
     * the sidecar. Idempotent — an already-swept head is a no-op. */
   private[graft] def graphStoreSweep(s: SparkSession, dir: String): Unit = {
     val (adjs, ents, vecs, dels) = graphStoreHead(dir)
     if (dels.nonEmpty) {
-      val tomb = graphStoreRead(s, dir, dels)
-      graphStoreRead(s, dir, adjs)
+      val tomb = storeRead(s, dir, dels)
+      storeRead(s, dir, adjs)
         .join(tomb.select(col("vec_id").as("src")), Seq("src"), "left_anti")
         .join(tomb.select(col("vec_id").as("dst")), Seq("dst"), "left_anti")
         .select(col("src"), col("dst"))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/adjacency2")
-      graphStoreRead(s, dir, ents)
+      storeRead(s, dir, ents)
         .join(tomb, Seq("vec_id"), "left_anti")
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/entries2")
       TableLog.publish(dir, s"adjacency2;entries2;${vecs.mkString(",")};")
@@ -3261,22 +2948,8 @@ object LlmScale extends OpModule {
       val live = vecsAll.join(
         adj.select(col("src").as("vec_id")).distinct(),
         Seq("vec_id"), "left_semi")
-      val q = vecsAll.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("qv").as("qq"))
-      val wc = Window.partitionBy(col("qid"))
-        .orderBy(col("dist").asc, col("cand_id").asc)
-      val ex3 = live.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("cand_id"),
-          expr("squared_distance(qv, qq)").as("dist"))
-        .withColumn("rn", row_number().over(wc)).where(col("rn") <= 3)
-        .select(col("qid"), col("cand_id"))
-      ex3.join(pred.withColumn("hit", lit(1)), Seq("qid", "cand_id"),
-          "left")
-        .groupBy(col("qid"))
-        .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-        .select(col("qid"), col("n_hit"),
-          round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+      recall(exact(live, evalQueries(vecsAll)), pred)
+        .select(col("qid"), col("n_hit"), recallAt3)
         .localCheckpoint()
     }
   }
@@ -3313,27 +2986,16 @@ object LlmScale extends OpModule {
     storeFilteredMemo((s, dir, rawHead)) {
       val (adj, _, vecsAll, _, visited) = graphStoreWalk(s, dir, rawHead)
       val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-      val wc = Window.partitionBy(col("qid"))
-        .orderBy(col("dist").asc, col("cand_id").asc)
-      val aware = visited
+      val aware = topK(visited
         .join(labels, visited("node") === labels("vec_id"))
         .where(col("label") === 3)
-        .select(col("qid"), col("node").as("cand_id"), col("dist"))
-        .withColumn("rn", row_number().over(wc)).where(col("rn") <= 3)
+        .select(col("qid"), col("node").as("cand_id"), col("dist")), 3)
         .select(col("qid"), col("cand_id"))
       val live = vecsAll.join(
         adj.select(col("src").as("vec_id")).distinct(),
         Seq("vec_id"), "left_semi")
-      val q = vecsAll.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("qv").as("qq"))
-      val ex3 = live.join(labels, "vec_id")
-        .where(col("label") === 3)
-        .crossJoin(broadcast(q))
-        .where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("cand_id"),
-          expr("squared_distance(qv, qq)").as("dist"))
-        .withColumn("rn", row_number().over(wc)).where(col("rn") <= 3)
-        .select(col("qid"), col("cand_id"))
+      val ex3 = exact(live.join(labels, "vec_id").where(col("label") === 3),
+        evalQueries(vecsAll))
       (aware.localCheckpoint(), ex3.localCheckpoint())
     }
   }
@@ -3345,17 +3007,7 @@ object LlmScale extends OpModule {
   private[graft] def graphStoreServeFiltered(s: SparkSession, d: String,
                                              dir: String): DataFrame = {
     val (aware, ex3) = graphStoreFilteredParts(s, d, dir)
-    val truth = ex3.groupBy(col("qid")).agg(count(lit(1)).as("n_truth"))
-    val hits = aware
-      .join(ex3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_ret"), count(col("hit")).as("n_hit"))
-    truth.join(hits, Seq("qid"), "left")
-      .select(col("qid"),
-        coalesce(col("n_ret"), lit(0L)).as("n_ret"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        col("n_truth"))
-      .withColumn("recall_bp", expr("n_hit * 10000L div n_truth"))
+    filtered(aware, ex3)
   }
 
   def annGraphPersistedFiltered(s: SparkSession, d: String): DataFrame = {
@@ -3415,7 +3067,7 @@ object LlmScale extends OpModule {
     graft.GraftExtensions.register(s)
     // fresh store = file copy of the per-JVM v1 template (r17) — the
     // identical artifact the three Spark writes produced per invocation
-    copyGraphV1(s, d, dir)
+    copyTemplate(graphV1Template(s, d), dir)
     TableLog.publish(dir, "adjacency;entries;vectors;")
   }
 
@@ -3423,19 +3075,8 @@ object LlmScale extends OpModule {
     * two REAL offset-tracked micro-batches under maxFilesPerTrigger=1. */
   private[graft] def streamGraphTopic(s: SparkSession, d: String): String = {
     graft.GraftExtensions.register(s)
-    StageUtil.staged("graphstream", d) { base =>
-      val (_, _, qv) = annGraphAdjacency(s, d)
-      val delta = graphDelta(qv)
-        .select(col("qid").as("new_id"), col("qq").as("dv"))
-      delta.where(col("new_id") % 2 === 0).coalesce(1)
-        .write.parquet(s"$base/b0")
-      delta.where(col("new_id") % 2 === 1).coalesce(1)
-        .write.parquet(s"$base/b1")
-      StageUtil.stageTopic(java.nio.file.Paths.get(base, "b0"),
-        java.nio.file.Paths.get(base, "topic"), "d0")
-      StageUtil.stageTopic(java.nio.file.Paths.get(base, "b1"),
-        java.nio.file.Paths.get(base, "topic"), "d1")
-    } + "/topic"
+    stageDeltaTopic("graphstream", d)(graphDelta(annGraphAdjacency(s, d)._3)
+      .select(col("qid").as("new_id"), col("qq").as("dv")))
   }
 
   /** One micro-batch's graft commit into the store at `dir`. */
@@ -3717,10 +3358,7 @@ object LlmScale extends OpModule {
     * every recall row uses — corpus-linear, never a pair space. */
   def annSq8(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
-    val qv = Tables.embeddings(s, d)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1e6, 0) as bigint))")
-        .as("qv"))
+    val qv = Tables.embeddings(s, d).select(col("vec_id"), lattice().as("qv"))
     val rng = qv
       .select(posexplode(col("qv")).as(Seq("dim", "x")))
       .groupBy(col("dim"))
@@ -3739,23 +3377,8 @@ object LlmScale extends OpModule {
           |                DIV element_at(r, i + 1).step)
           |    * element_at(r, i + 1).step
           |  + element_at(r, i + 1).step DIV 2)""".stripMargin).as("rv"))
-    val q = qv.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("cand_id").asc)
-    val sq3 = recon.crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        expr("squared_distance(rv, qq)").as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
-      .select(col("qid"), col("cand_id"))
-    exactQTop3(s, d)
-      .join(sq3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+    val sq3 = exact(recon, evalQueries(qv), "squared_distance(rv, qq)")
+    recall(exactQTop3(s, d), sq3).select(col("qid"), col("n_hit"), recallAt3)
   }
 
   /** ColBERT-style LATE-INTERACTION retrieval (MaxSim) — the scoring
@@ -3778,15 +3401,10 @@ object LlmScale extends OpModule {
     * op is the re-rank pass over their union. */
   def colbertMaxsim(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
-    val qv = Tables.embeddings(s, d)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1e6, 0) as bigint))")
-        .as("qv"))
-    val q = qv.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("qv").as("qq"))
+    val qv = Tables.embeddings(s, d).select(col("vec_id"), lattice().as("qv"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("maxsim").desc, col("cand_id").asc)
-    qv.crossJoin(broadcast(q))
+    qv.crossJoin(broadcast(evalQueries(qv)))
       .where(col("vec_id") =!= col("qid"))
       // maxsim8 (custom codegen'd Expression): the 8×8×8 dot/max/sum
       // fold fused in one native loop — the three-deep SQL-HOF spelling
@@ -3823,9 +3441,7 @@ object LlmScale extends OpModule {
       """aggregate(transform(sequence(0, 7),
         |  i -> IF(element_at(embedding, i + 1) > 0, shiftleft(1, i), 0)),
         |0, (a, x) -> a + x)""".stripMargin
-    Tables.embeddings(s, d).select(col("vec_id"),
-      expr("transform(embedding, x -> cast(round(cast(x as double) * 1e6, 0) as bigint))")
-        .as("qv"),
+    Tables.embeddings(s, d).select(col("vec_id"), lattice().as("qv"),
       expr(cellE).as("cell"))
   }
 
@@ -3935,12 +3551,7 @@ object LlmScale extends OpModule {
   def annPqResidualRecall(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
     val r3 = pqResidualTop3(s, d).select(col("qid"), col("cand_id"))
-    exactQTop3(s, d)
-      .join(r3.withColumn("hit", lit(1)), Seq("qid", "cand_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("k"), count(col("hit")).as("n_hit"))
-      .select(col("qid"), col("n_hit"),
-        round(col("n_hit") / col("k").cast("double"), 4).as("recall_at_3"))
+    recall(exactQTop3(s, d), r3).select(col("qid"), col("n_hit"), recallAt3)
   }
 
 

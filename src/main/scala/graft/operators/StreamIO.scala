@@ -350,6 +350,7 @@ object StreamIO extends OpModule {
       input.addData(events.drop(3))
       q.processAllAvailable()
       q.stop()
+      StreamRunner.release(q)
     })
   }
 

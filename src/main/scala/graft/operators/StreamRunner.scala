@@ -2,7 +2,10 @@ package graft.operators
 
 import java.util.UUID
 
+import org.apache.spark.scheduler.SparkListener
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** The one stream runner (README "Streams"): every stream query under
@@ -35,12 +38,14 @@ private[graft] object StreamRunner {
     * still running then is stopped and fails: the rows it has landed are
     * a partial result, never one to check or time. */
   def await(q: StreamingQuery): Unit =
-    if (!q.awaitTermination(timeoutMs)) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream query ${Option(q.name).getOrElse(q.id)} did not finish " +
-          s"within ${timeoutMs / 1000} s; stopped")
-    }
+    try {
+      if (!q.awaitTermination(timeoutMs)) {
+        q.stop()
+        throw new IllegalStateException(
+          s"stream query ${Option(q.name).getOrElse(q.id)} did not finish " +
+            s"within ${timeoutMs / 1000} s; stopped")
+      }
+    } finally release(q)
 
   def run(w: DataStreamWriter[Row], ckpt: String = fresh("ckpt")): Unit =
     await(start(w, ckpt))
@@ -58,5 +63,39 @@ private[graft] object StreamRunner {
       go(df.writeStream.format("memory").queryName(name).outputMode(mode))
       s.table(name)
     } finally s.catalog.dropTempView(name)
+  }
+
+  /** Unregister the listener bus of a finished query's cloned session.
+    * Spark runs every stream query on a clone of its session, and a
+    * stateful query asks the clone's `streams` for the state-store
+    * coordinator, which registers the clone's StreamingQueryListenerBus
+    * on the SparkContext's listener bus; Spark never unregisters it, so
+    * each stateful call would leave one there for the JVM's life. */
+  def release(q: StreamingQuery): Unit = q match {
+    case w: StreamingQueryWrapper =>
+      val e = w.streamingQuery
+      val clone = cloneOf.invoke(e).asInstanceOf[classic.SparkSession]
+      val mine = manager.get(clone.sessionState)
+      if (mine != null && (mine ne manager.get(e.sparkSession.sessionState)))
+        clone.sparkContext.removeSparkListener(
+          managerBus.invoke(mine).asInstanceOf[SparkListener])
+    case _ =>
+  }
+
+  // Spark keeps all three out of reach: a query's cloned session, a
+  // session's lazily made query manager (null until first asked for)
+  // and that manager's listener bus
+  private val cloneOf =
+    classOf[StreamExecution].getMethod("sparkSessionForStream")
+  private val manager = {
+    val f = Class.forName("org.apache.spark.sql.internal.SessionState")
+      .getDeclaredField("streamingQueryManager")
+    f.setAccessible(true)
+    f
+  }
+  private val managerBus = {
+    val m = classOf[classic.StreamingQueryManager].getDeclaredMethod("listenerBus")
+    m.setAccessible(true)
+    m
   }
 }

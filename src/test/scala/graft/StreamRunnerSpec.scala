@@ -29,6 +29,23 @@ class StreamRunnerSpec extends SparkSpec {
     assert(e.getMessage.contains("stub_query"), e.getMessage)
   }
 
+  test("await: a stateful query leaves no listener bus on the SparkContext (pipeline_curation, four warm calls)") {
+    // its dedup state reaches the query's cloned session's `streams`,
+    // which registers that clone's bus; the runner unregisters it
+    def buses(): Int = {
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      org.apache.spark.StreamBuses(spark.sparkContext)
+    }
+    def call(): Unit = {
+      PipelineOps.pipelineCuration(spark, sf).collect()
+      MemoUtil.dropScratch()
+    }
+    call()
+    val warm = buses()
+    (1 to 4).foreach(_ => call())
+    assert(buses() == warm)
+  }
+
   /** Dirs directly under the staging root that are not stagings (a
     * staging carries the marker and lives for the JVM's life). */
   private def perCallDirs(): Set[Path] =
